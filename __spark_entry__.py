@@ -1482,8 +1482,8 @@ def q_decontam(spark, sf_dir):
     method, whose KS-derived probabilities are already hashed by the
     detect_default / detect_multi_mc / detect_stream_mc oracles over the
     same kernel and windows — the standalone column query added no
-    coverage beyond them (tests/test_columnar.py still pins ks_stat_col
-    against the NumPy oracle point-wise).
+    coverage beyond them (the column form, ks_stat_col, is retired with
+    it).
 
     Round-13 rider (the changelog -> snapshot_diff precedent): the same
     report is computed a SECOND time through the split-block Bloom

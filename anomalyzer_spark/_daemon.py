@@ -20,7 +20,10 @@ otherwise. Semantics are preserved — a genuinely modified/replaced
 archive (e.g. an ``addPyFile`` zip overwritten mid-session) still
 invalidates; an untouched pyspark.zip stops being re-parsed per task.
 Skipped instances keep serving their previously cached directory, which
-is byte-identical while the archive is unchanged.
+is byte-identical while the archive is unchanged. The last-seen
+(mtime_ns, size) is kept PER IMPORTER INSTANCE: one archive has an
+importer per package path inside it, and each holds its own cached
+directory, so after a change every one of them must re-read it.
 
 Requires ``anomalyzer_spark`` to be importable in the worker Python
 environment — already a hard requirement of this library's UDF kernels
@@ -33,11 +36,12 @@ behavior is correct, only slower.
 from __future__ import annotations
 
 import os
+import weakref
 import zipimport
 
 from pyspark import daemon as _daemon
 
-_seen: dict[str, tuple[int, int]] = {}
+_seen: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 _orig_invalidate = zipimport.zipimporter.invalidate_caches
 
 
@@ -47,9 +51,9 @@ def _invalidate_caches(self):  # noqa: ANN001 - zipimporter instance
         key = (st.st_mtime_ns, st.st_size)
     except OSError:
         return _orig_invalidate(self)
-    if _seen.get(self.archive) == key:
+    if _seen.get(self) == key:
         return None  # unchanged archive: cached directory stays valid
-    _seen[self.archive] = key
+    _seen[self] = key
     return _orig_invalidate(self)
 
 

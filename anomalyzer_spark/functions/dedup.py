@@ -1253,27 +1253,30 @@ def keep_best(
     ``text_profile`` or ``model_score`` from ``quality.score_quality``);
     ``groups`` is ``duplicate_groups``' (id, group_id, group_size)
     frame — ONE row per id (``duplicate_groups``' output invariant; an
-    id listed under two groups is off-contract, see below). Returns the
-    KEPT rows of ``df`` — one winner per group (highest score, smallest
-    id on ties: deterministic), plus every document not in any group.
-    Schema and columns pass through.
+    id listed under two groups is off-contract, see below). ``df`` ids
+    must be UNIQUE too: a grouped id that repeats in ``df`` joins one
+    score row per copy, the copies rank against each other, and the id
+    lands among the losers — EVERY copy is dropped, the winner's
+    included. Returns the KEPT rows of ``df`` — one winner per group
+    (highest score, smallest id on ties: deterministic), plus every
+    document not in any group. Schema and columns pass through.
 
     Plan shape (r16): a kept row is exactly a row that is NOT a ranked
-    LOSER of a duplicate group, so the selection is ONE broadcast
-    anti-join of ``df`` against the loser ids (rank > 1 in the
-    winner-per-group window). The r15 form computed the same set as
+    LOSER of a duplicate group, so the selection is ONE left-anti join of
+    ``df`` against the loser ids (rank > 1 in the winner-per-group
+    window). No broadcast hint is given: the physical plan is a
+    SortMergeJoin LeftAnti, with both ``df`` and the loser frame
+    exchanged on the id. The r15 form computed the same set as
     semi-join(winners) ∪ anti-join(group members) — two corpus-side
     joins, a union, and a second evaluation of the ``groups`` subtree
     (Catalyst plans each reference separately); under the one-row-per-id
-    contract the two are row-identical (multiplicity included: every
-    ``df`` row is kept iff its id has no loser row — parity-pinned in
-    tests/test_functions.py). At 100 TB the corpus still shuffles zero
-    times — the loser frame is bounded by duplicate COPIES (the cluster
-    sizes), strictly smaller than the old anti-join's group-member
-    frame, and the window partitions remain duplicate groups. The
-    off-contract case (one id in two groups, winning one and losing the
-    other) would now be dropped where the old form kept it — that input
-    violates the documented groups contract either way.
+    contract the two are row-identical (parity-pinned in
+    tests/test_functions.py). The loser frame is bounded by duplicate
+    COPIES (the cluster sizes), strictly smaller than the old anti-join's
+    group-member frame, and the window partitions remain duplicate
+    groups. The off-contract case (one id in two groups, winning one and
+    losing the other) would now be dropped where the old form kept it —
+    that input violates the documented groups contract either way.
     """
     from pyspark.sql.window import Window
 

@@ -1,11 +1,19 @@
 """Pure-column implementations of the deterministic tests.
 
-fence / magnitude / cdf / ks_stat (reference: /root/reference/algorithms.go
-73-93, 231-252, 209-227, 255-288) re-expressed as Spark Column expressions
-over an ``array<double>`` tail-window column. Everything here is JVM-side
-(higher-order array functions + arithmetic) — no Python in the hot path, so
-Catalyst/codegen can optimize and the cost per key is independent of total
-data volume.
+fence / magnitude / cdf (reference: /root/reference/algorithms.go 73-93,
+231-252, 209-227) re-expressed as Spark Column expressions. Each test has
+ONE builder here, taking its window statistics as input Columns; the
+callers decide how those statistics are computed:
+
+  * ``detect`` stages them as named ``_cx_*`` columns over the per-key
+    ``array<double>`` tail window (``stage1_cols`` / ``stage2_cols``,
+    read back by ``staged_probs``);
+  * ``detect_rolling`` passes window-frame aggregates ending at each row
+    (rolling.py).
+
+Everything here is JVM-side (higher-order array functions + arithmetic) —
+no Python in the hot path, so Catalyst/codegen can optimize and the cost
+per key is independent of total data volume.
 
 The window column is the per-key tail of the series in ascending
 (ts, tiebreak) order, bounded to ``conf.window_size`` points (SURVEY.md
@@ -13,6 +21,8 @@ The window column is the per-key tail of the series in ascending
 """
 
 from __future__ import annotations
+
+from collections.abc import Mapping
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -32,48 +42,56 @@ def _cap01(x: Column) -> Column:
     return F.greatest(F.least(x, F.lit(1.0)), F.lit(0.0))
 
 
-class WindowSlices:
-    """Shared active/reference slices over the tail vector.
+def fence(act_mean: Column, conf: AnomalyzerConf) -> Column:
+    """FenceTest (algorithms.go:73-93): distance of active mean from bounds,
+    sharpened by weightExp(·, 10) = (10^x - 1)/9."""
+    if conf.lower_bound is None:
+        distance = act_mean / F.lit(float(conf.upper_bound))
+    else:
+        half = (conf.upper_bound - conf.lower_bound) / 2.0
+        mid = conf.lower_bound + half
+        distance = F.abs(act_mean - F.lit(mid)) / F.lit(half)
+    return (F.pow(F.lit(10.0), _cap01(distance)) - 1.0) / 9.0
 
-    Mirrors ``extractWindows`` (algorithms.go:56-69): shrink-to-fit sizes,
-    and a per-test minimum reference size expressed as a NULL guard. Building
-    these once and reusing them across tests keeps the shared sub-expressions
-    (sizes, slices, means) to a single computation in the generated plan.
-    """
 
-    def __init__(self, vec: Column, conf: AnomalyzerConf):
-        self.vec = vec
-        self.conf = conf
-        self.n = F.size(vec)
-        # activeSize = min(activeSize, n); refSize = min(refSize, n - activeSize)
-        self.act_n = F.least(F.lit(conf.active_size), self.n)
-        self.ref_n = F.least(F.lit(conf.reference_size), self.n - self.act_n)
-        self.active = F.slice(vec, self.n - self.act_n + 1, conf.active_size)
-        self.reference = F.when(
-            self.ref_n > 0,
-            F.slice(vec, self.n - self.act_n - self.ref_n + 1, self.ref_n),
-        ).otherwise(F.array().cast("array<double>"))
-        self.active_mean = _mean(self.active)
-        self.ref_mean = _mean(self.reference)
+def magnitude(act_mean: Column, ref_mean: Column, ref_n: Column) -> Column:
+    """MagnitudeTest (algorithms.go:231-252). NULL when the reference window
+    is empty (minRefSize=1); raw (un-capped) value, Eval caps it."""
+    return F.when(ref_n < 1, F.lit(None).cast("double")).otherwise(
+        F.when(ref_mean == 0.0,
+               F.when(act_mean == 0.0, 0.0).otherwise(1.0)).otherwise(
+            F.abs(act_mean - ref_mean) / ref_mean))
 
-        # |first differences| for the cdf test (govector Diff().Apply(abs))
-        self.adiffs = F.when(
-            self.n > 1,
-            F.zip_with(
-                F.slice(vec, 2, self.n - 1),
-                F.slice(vec, 1, self.n - 1),
-                lambda a, b: F.abs(a - b),
-            ),
-        ).otherwise(F.array().cast("array<double>"))
-        nd = F.size(self.adiffs)
-        self.dact_n = F.least(F.lit(conf.active_size), nd)
-        # diff-based tests use referenceSize - 1 (algorithms.go:111, 211)
-        self.dref_n = F.least(F.lit(conf.reference_size - 1), nd - self.dact_n)
-        self.dactive = F.slice(self.adiffs, nd - self.dact_n + 1, conf.active_size)
-        self.dreference = F.when(
-            self.dref_n > 0,
-            F.slice(self.adiffs, nd - self.dact_n - self.dref_n + 1, self.dref_n),
-        ).otherwise(F.array().cast("array<double>"))
+
+def cdf(dact_mean: Column, dref_mean: Column, dref_n: Column, dref: Column,
+        conf: AnomalyzerConf) -> Column:
+    """CDFTest (algorithms.go:209-227): reference-window ECDF of |diffs|
+    (``dref``, ``dref_n`` points) evaluated at (mean(active diffs) -
+    mean(ref diffs)), tails rescaled to 1. ECDF is right-continuous:
+    F(q) = #{x <= q} / n. NULL below ``active_size`` reference diffs."""
+    q = dact_mean - dref_mean
+    pct = F.size(F.filter(dref, lambda x: x <= q)) / dref_n
+    return F.when(dref_n < conf.active_size, F.lit(None).cast("double")).otherwise(
+        2.0 * F.abs(F.lit(0.5) - pct))
+
+
+def deterministic_probs(
+    conf: AnomalyzerConf, stats: Mapping[str, Column]
+) -> dict[str, Column]:
+    """Raw prob columns of the deterministic tests in ``conf.methods``, in
+    fence / magnitude / cdf order. ``stats`` maps the window-statistic names
+    (act_mean, ref_mean, ref_n; dact_mean, dref_mean, dref_n, dref for cdf)
+    to Columns; only the requested tests' entries are read."""
+    probs: dict[str, Column] = {}
+    if "fence" in conf.methods:
+        probs["fence"] = fence(stats["act_mean"], conf)
+    if "magnitude" in conf.methods:
+        probs["magnitude"] = magnitude(
+            stats["act_mean"], stats["ref_mean"], stats["ref_n"])
+    if "cdf" in conf.methods:
+        probs["cdf"] = cdf(stats["dact_mean"], stats["dref_mean"],
+                           stats["dref_n"], stats["dref"], conf)
+    return probs
 
 
 # --------------------------------------------------------------------------
@@ -94,18 +112,40 @@ _P = "_cx_"
 
 
 def stage1_cols(vec: Column, conf: AnomalyzerConf) -> dict[str, Column]:
-    """Shared window stats straight off the tail vector."""
-    s = WindowSlices(vec, conf)
+    """Shared window stats straight off the tail vector.
+
+    Mirrors ``extractWindows`` (algorithms.go:56-69): shrink-to-fit sizes,
+    and a per-test minimum reference size expressed as a NULL guard in the
+    test builders.
+    """
+    n = F.size(vec)
+    # activeSize = min(activeSize, n); refSize = min(refSize, n - activeSize)
+    act_n = F.least(F.lit(conf.active_size), n)
+    ref_n = F.least(F.lit(conf.reference_size), n - act_n)
+    active = F.slice(vec, n - act_n + 1, conf.active_size)
+    reference = F.when(
+        ref_n > 0, F.slice(vec, n - act_n - ref_n + 1, ref_n),
+    ).otherwise(F.array().cast("array<double>"))
+    # |first differences| for the cdf test (govector Diff().Apply(abs))
+    adiffs = F.when(
+        n > 1,
+        F.zip_with(
+            F.slice(vec, 2, n - 1),
+            F.slice(vec, 1, n - 1),
+            lambda a, b: F.abs(a - b),
+        ),
+    ).otherwise(F.array().cast("array<double>"))
     return {
-        f"{_P}act_mean": s.active_mean,
-        f"{_P}ref_mean": s.ref_mean,
-        f"{_P}ref_n": s.ref_n,
-        f"{_P}adiffs": s.adiffs,
+        f"{_P}act_mean": _mean(active),
+        f"{_P}ref_mean": _mean(reference),
+        f"{_P}ref_n": ref_n,
+        f"{_P}adiffs": adiffs,
     }
 
 
 def stage2_cols(conf: AnomalyzerConf) -> dict[str, Column]:
-    """Diff-window stats reading the named stage-1 columns."""
+    """Diff-window stats reading the named stage-1 columns. The diff-based
+    tests use referenceSize - 1 (algorithms.go:111, 211)."""
     ad = F.col(f"{_P}adiffs")
     nd = F.size(ad)
     dact_n = F.least(F.lit(conf.active_size), nd)
@@ -122,86 +162,8 @@ def stage2_cols(conf: AnomalyzerConf) -> dict[str, Column]:
     }
 
 
-def staged_fence_prob(conf: AnomalyzerConf) -> Column:
-    x = F.col(f"{_P}act_mean")
-    if conf.lower_bound is None:
-        distance = x / F.lit(float(conf.upper_bound))
-    else:
-        half = (conf.upper_bound - conf.lower_bound) / 2.0
-        mid = conf.lower_bound + half
-        distance = F.abs(x - F.lit(mid)) / F.lit(half)
-    return (F.pow(F.lit(10.0), _cap01(distance)) - 1.0) / 9.0
-
-
-def staged_magnitude_prob(conf: AnomalyzerConf) -> Column:
-    am, rm, rn = (F.col(f"{_P}act_mean"), F.col(f"{_P}ref_mean"),
-                  F.col(f"{_P}ref_n"))
-    return F.when(rn < 1, F.lit(None).cast("double")).otherwise(
-        F.when(rm == 0.0, F.when(am == 0.0, 0.0).otherwise(1.0)).otherwise(
-            F.abs(am - rm) / rm))
-
-
-def staged_cdf_prob(conf: AnomalyzerConf) -> Column:
-    q = F.col(f"{_P}dact_mean") - F.col(f"{_P}dref_mean")
-    drn = F.col(f"{_P}dref_n")
-    pct = F.size(F.filter(F.col(f"{_P}dref"), lambda x: x <= q)) / drn
-    return F.when(drn < conf.active_size, F.lit(None).cast("double")).otherwise(
-        2.0 * F.abs(F.lit(0.5) - pct))
-
-
-def fence_prob(s: WindowSlices) -> Column:
-    """FenceTest (algorithms.go:73-93): distance of active mean from bounds,
-    sharpened by weightExp(·, 10) = (10^x - 1)/9."""
-    conf = s.conf
-    x = s.active_mean
-    if conf.lower_bound is None:
-        distance = x / F.lit(float(conf.upper_bound))
-    else:
-        half = (conf.upper_bound - conf.lower_bound) / 2.0
-        mid = conf.lower_bound + half
-        distance = F.abs(x - F.lit(mid)) / F.lit(half)
-    return (F.pow(F.lit(10.0), _cap01(distance)) - 1.0) / 9.0
-
-
-def magnitude_prob(s: WindowSlices) -> Column:
-    """MagnitudeTest (algorithms.go:231-252). NULL when the reference window
-    is empty (minRefSize=1); raw (un-capped) value, Eval caps it."""
-    pdiff = F.abs(s.active_mean - s.ref_mean) / s.ref_mean
-    return F.when(s.ref_n < 1, F.lit(None).cast("double")).otherwise(
-        F.when(s.ref_mean == 0.0, F.when(s.active_mean == 0.0, 0.0).otherwise(1.0)).otherwise(
-            pdiff
-        )
-    )
-
-
-def cdf_prob(s: WindowSlices) -> Column:
-    """CDFTest (algorithms.go:209-227): reference-window ECDF of |diffs|
-    evaluated at (mean(active diffs) - mean(ref diffs)), tails rescaled to 1.
-    ECDF is right-continuous: F(q) = #{x <= q} / n."""
-    q = _mean(s.dactive) - _mean(s.dreference)
-    percentile = F.size(F.filter(s.dreference, lambda x: x <= q)) / F.size(s.dreference)
-    out = 2.0 * F.abs(F.lit(0.5) - percentile)
-    return F.when(s.dref_n < s.conf.active_size, F.lit(None).cast("double")).otherwise(out)
-
-
-def ks_stat_col(s: WindowSlices) -> Column:
-    """KsStat (algorithms.go:255-288): ECDFs of both windows evaluated on an
-    evenly spaced (n1+n2)-point grid between the pooled min and max; the
-    statistic is the max absolute gap. Grid uses mn + i*step (oracle.py
-    docstring pins this formula). NULL when n1 % n2 != 0 or windows short."""
-    n1, n2 = s.ref_n, s.act_n
-    g = n1 + n2
-    mn = F.least(F.array_min(s.reference), F.array_min(s.active))
-    mx = F.greatest(F.array_max(s.reference), F.array_max(s.active))
-    step = (mx - mn) / (g - 1).cast("double")
-    ref, act = s.reference, s.active
-    gaps = F.transform(
-        F.sequence(F.lit(0), g - 1),
-        lambda i: F.abs(
-            F.size(F.filter(act, lambda x: x <= mn + step * i)) / n2.cast("double")
-            - F.size(F.filter(ref, lambda x: x <= mn + step * i)) / n1.cast("double")
-        ),
-    )
-    return F.when(
-        (s.ref_n < s.conf.active_size) | (n1 % n2 != 0), F.lit(None).cast("double")
-    ).otherwise(F.array_max(gaps))
+def staged_probs(conf: AnomalyzerConf) -> dict[str, Column]:
+    """``deterministic_probs`` reading the named stage-1/stage-2 columns."""
+    names = ("act_mean", "ref_mean", "ref_n",
+             "dact_mean", "dref_mean", "dref_n", "dref")
+    return deterministic_probs(conf, {n: F.col(f"{_P}{n}") for n in names})

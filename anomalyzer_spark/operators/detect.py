@@ -34,7 +34,7 @@ from pyspark.sql.window import Window
 
 from ..config import AnomalyzerConf
 from . import columnar
-from .combine import combined_prob, merge_probs
+from .combine import combined_prob, merge_probs, weight_col
 from .kernel import MC_METHODS, key_str_col, mc_probs_udf
 
 DETERMINISTIC = {"fence", "magnitude", "cdf"}
@@ -127,17 +127,32 @@ def tail_window(
     ).withColumn("vec", F.col("_pts._v")).drop("_pts")
 
 
-def _staged_probs(
-    tails: DataFrame, keys: list[str], conf: AnomalyzerConf, key_str: Column
+def _merged_probs(
+    df: DataFrame,
+    keys: list[str],
+    ts_col: str,
+    value_col: str,
+    conf: AnomalyzerConf,
+    tiebreak_cols: list[str] | None,
+    horizon,
+    horizon_anchor,
+    skew_salts: int | None,
 ) -> tuple[DataFrame, dict[str, Column]]:
-    """Stage the shared window stats as named columns across projections,
-    then return (staged frame, per-test prob columns reading them).
+    """Shared body of ``detect`` / ``detect_by_test``: tail window → staged
+    window stats → per-test probs as named ``_p_<test>`` columns → combiner
+    entries. Returns (frame of keys, n_points, last_ts, _p_*; merged
+    entries reading those columns).
 
     Staging matters: interpreted higher-order expressions are excluded from
     subexpression elimination, so one flat tree re-evaluates every shared
     slice/mean per reference — measured 10-15x slower (columnar.py notes).
+    The raw probs are staged too: the combiner references each several
+    times (cap, weight, numerator, denominator, gate).
     """
-    deterministic = [m for m in conf.methods if m in DETERMINISTIC]
+    tails = tail_window(
+        df, keys, ts_col, value_col, conf.window_size, tiebreak_cols, horizon,
+        horizon_anchor, skew_salts,
+    )
     carry = [*keys, "n_points", "last_ts"]
     mc = tuple(m for m in conf.methods if m in MC_METHODS)
     staged = tails
@@ -151,7 +166,7 @@ def _staged_probs(
         # small the aggregated frame is.
         staged = staged.repartition(
             tails.sparkSession.sparkContext.defaultParallelism)
-    if deterministic:
+    if any(m in DETERMINISTIC for m in conf.methods):
         s1 = columnar.stage1_cols(F.col("vec"), conf)
         staged = staged.select(
             *carry, "vec", *[c.alias(n) for n, c in s1.items()])
@@ -161,19 +176,15 @@ def _staged_probs(
                 *carry, "vec", *[F.col(n) for n in s1],
                 *[c.alias(n) for n, c in s2.items()])
 
-    probs: dict[str, Column] = {}
-    if "fence" in conf.methods:
-        probs["fence"] = columnar.staged_fence_prob(conf)
-    if "magnitude" in conf.methods:
-        probs["magnitude"] = columnar.staged_magnitude_prob(conf)
-    if "cdf" in conf.methods:
-        probs["cdf"] = columnar.staged_cdf_prob(conf)
+    probs = columnar.staged_probs(conf)
     if mc:
-        kernel = mc_probs_udf(conf, mc)
-        st = kernel(F.col("vec"), key_str)
+        st = mc_probs_udf(conf, mc)(F.col("vec"), key_str_col(keys))
         for m in mc:
             probs[m] = st.getField(m)
-    return staged, probs
+    withp = staged.select(
+        *carry, *[c.alias(f"_p_{m}") for m, c in probs.items()])
+    merged = merge_probs({m: F.col(f"_p_{m}") for m in probs}, conf.methods)
+    return withp, merged
 
 
 def detect(
@@ -193,18 +204,9 @@ def detect(
     two-phase tail-N for hot-key skew (see ``tail_window``).
     """
     conf = conf or AnomalyzerConf()
-    tails = tail_window(
-        df, keys, ts_col, value_col, conf.window_size, tiebreak_cols, horizon,
-        horizon_anchor, skew_salts,
-    )
-    staged, probs = _staged_probs(tails, keys, conf, key_str_col(keys))
-    # stage the raw per-test probs too: the combiner references each several
-    # times (cap, weight, numerator, denominator, gate)
-    withp = staged.select(
-        *keys, "n_points", "last_ts",
-        *[c.alias(f"_p_{m}") for m, c in probs.items()])
-    merged = merge_probs(
-        {m: F.col(f"_p_{m}") for m in probs}, conf.methods)
+    withp, merged = _merged_probs(
+        df, keys, ts_col, value_col, conf, tiebreak_cols, horizon,
+        horizon_anchor, skew_salts)
     prob = combined_prob(merged, conf, F.col("n_points"))
     return withp.select(*keys, "n_points", "last_ts", prob.alias("prob"))
 
@@ -262,18 +264,9 @@ def detect_by_test(
     + the combined prob, per key. Columns: prob_<entry>, weight_<entry>,
     prob (highrank/lowrank folded into 'rank')."""
     conf = conf or AnomalyzerConf()
-    tails = tail_window(
-        df, keys, ts_col, value_col, conf.window_size, tiebreak_cols, horizon,
-        horizon_anchor, skew_salts,
-    )
-    staged, probs = _staged_probs(tails, keys, conf, key_str_col(keys))
-    withp = staged.select(
-        *keys, "n_points", "last_ts",
-        *[c.alias(f"_p_{m}") for m, c in probs.items()])
-    merged = merge_probs(
-        {m: F.col(f"_p_{m}") for m in probs}, conf.methods)
-    from .combine import weight_col
-
+    withp, merged = _merged_probs(
+        df, keys, ts_col, value_col, conf, tiebreak_cols, horizon,
+        horizon_anchor, skew_salts)
     cols = [*keys, "n_points", "last_ts"]
     for name, p in merged.items():
         cols.append(p.alias(f"prob_{name}"))

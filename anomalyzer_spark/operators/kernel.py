@@ -64,19 +64,8 @@ def mc_probs_udf(conf: AnomalyzerConf, methods: tuple[str, ...]):
                 # digest-free (oracle.perms_for_tests / LazyPerms)
                 perms = oracle.LazyPerms(conf, k, want, len(v))
                 for m in MC_METHODS:
-                    if m not in want:
-                        out[m].append(None)
-                    elif m == "diff":
-                        out[m].append(oracle.diff_test(v, conf, k, perms))
-                    elif m == "highrank":
-                        out[m].append(oracle.rank_test(
-                            v, conf, k, reverse=False, perms=perms))
-                    elif m == "lowrank":
-                        out[m].append(oracle.rank_test(
-                            v, conf, k, reverse=True, perms=perms))
-                    else:
-                        out[m].append(oracle.bootstrap_ks_test(
-                            v, conf, k, perms))
+                    out[m].append(oracle.method_prob(m, v, conf, k, perms)
+                                  if m in want else None)
             yield pd.DataFrame(out, dtype="float64")
 
     return _kernel
@@ -85,7 +74,7 @@ def mc_probs_udf(conf: AnomalyzerConf, methods: tuple[str, ...]):
 def key_str_col(key_cols: list[str]) -> Column:
     """'|'-joined key string — the per-key component of the permutation-hash
     preimage. NULL key components become the sentinel 'None' (matching the
-    streaming path's Python ``str(None)``, detect_stream._merge_and_eval —
+    streaming path's Python ``str(None)``, detect_stream.detect_stream —
     a NULL-keyed series must draw the same MC permutation stream in batch
     and streaming; bare concat_ws would silently SKIP the component).
     DuckDB reproduces it with ``concat_ws('|', coalesce(k::VARCHAR,

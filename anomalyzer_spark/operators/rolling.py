@@ -10,9 +10,11 @@ shrink-to-fit (algorithms.go:56-69) exactly:
     active_n(p)    = min(a, p+1)          == frame (-(a-1), 0) clipped
     reference_n(p) = min(r, p+1 - act_n)  == frame (-(a+r-1), -a) clipped
 
-Deterministic tests only (magnitude / fence / cdf): these are pure window
-aggregates — no arrays for the means, a bounded ``collect_list`` frame only
-for the cdf ECDF (the predicate depends on the current row's query point).
+Deterministic tests only (magnitude / fence / cdf — columnar.py's
+builders, fed frame aggregates instead of staged array stats): these are
+pure window aggregates — no arrays for the means, a bounded
+``collect_list`` frame only for the cdf ECDF (the predicate depends on the
+current row's query point).
 The Monte-Carlo tests would cost O(perm·window) per ROW rather than per key
 — callers who want them rolling should downsample first (see resample.py)
 or accept the kernel cost explicitly; this operator refuses them.
@@ -45,6 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..config import AnomalyzerConf
+from . import columnar
 from .combine import combined_prob, merge_probs
 
 ROLLING_METHODS = ("magnitude", "fence", "cdf")
@@ -132,41 +135,23 @@ def _prob_exprs(w: Window, v: Column, conf: AnomalyzerConf):
     w_act = w.rowsBetween(-(a - 1), 0)
     w_ref = w.rowsBetween(-(a + r - 1), -a)
 
-    probs: dict[str, Column] = {}
-    act_mean = F.avg(v).over(w_act)
-    ref_n = F.count(v).over(w_ref)
-    ref_mean = F.avg(v).over(w_ref)
-
-    if "fence" in conf.methods:
-        if conf.lower_bound is None:
-            distance = act_mean / F.lit(float(conf.upper_bound))
-        else:
-            half = (conf.upper_bound - conf.lower_bound) / 2.0
-            mid = conf.lower_bound + half
-            distance = F.abs(act_mean - F.lit(mid)) / F.lit(half)
-        capped = F.greatest(F.least(distance, F.lit(1.0)), F.lit(0.0))
-        probs["fence"] = (F.pow(F.lit(10.0), capped) - 1.0) / 9.0
-
-    if "magnitude" in conf.methods:
-        probs["magnitude"] = F.when(ref_n < 1, F.lit(None).cast("double")).otherwise(
-            F.when(ref_mean == 0.0,
-                   F.when(act_mean == 0.0, 0.0).otherwise(1.0))
-            .otherwise(F.abs(act_mean - ref_mean) / ref_mean)
-        )
-
+    stats = {
+        "act_mean": F.avg(v).over(w_act),
+        "ref_n": F.count(v).over(w_ref),
+        "ref_mean": F.avg(v).over(w_ref),
+    }
     if "cdf" in conf.methods:
         # |first difference| stream, then frames of sizes (a, r-1) over it
         d = F.abs(v - F.lag(v, 1).over(w))
         wd_act = w.rowsBetween(-(a - 1), 0)
         wd_ref = w.rowsBetween(-(a + (r - 1) - 1), -a)
-        dact_mean = F.avg(d).over(wd_act)
-        dref_mean = F.avg(d).over(wd_ref)
-        dref_n = F.count(d).over(wd_ref)
-        dref_arr = F.collect_list(d).over(wd_ref)
-        q = dact_mean - dref_mean
-        pct = F.size(F.filter(dref_arr, lambda x: x <= q)) / dref_n
-        probs["cdf"] = F.when(dref_n < a, F.lit(None).cast("double")).otherwise(
-            2.0 * F.abs(F.lit(0.5) - pct))
+        stats.update(
+            dact_mean=F.avg(d).over(wd_act),
+            dref_mean=F.avg(d).over(wd_ref),
+            dref_n=F.count(d).over(wd_ref),
+            dref=F.collect_list(d).over(wd_ref),
+        )
+    probs = columnar.deterministic_probs(conf, stats)
 
     merged = merge_probs(probs, conf.methods)
     n_points = F.count(v).over(w_all)

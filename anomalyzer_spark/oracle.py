@@ -375,6 +375,28 @@ def bootstrap_ks_test(v: np.ndarray, conf: AnomalyzerConf, key: str,
 # ------------------------------------------------------------- combiner ----
 
 
+def method_prob(method: str, v: np.ndarray, conf: AnomalyzerConf,
+                key: str = "", perms=None) -> float | None:
+    """Raw (un-capped) prob of one configured method; None is the
+    reference's NA. The one method→test mapping, shared by
+    ``eval_by_test`` and the batch MC kernel (operators/kernel.py, which
+    passes its lazily batched ``perms``)."""
+    if method == "magnitude":
+        return magnitude_test(v, conf)
+    if method == "fence":
+        return fence_test(v, conf)
+    if method == "cdf":
+        return cdf_test(v, conf)
+    if method in ("highrank", "lowrank"):
+        return rank_test(v, conf, key, reverse=method == "lowrank",
+                         perms=perms)
+    if method == "diff":
+        return diff_test(v, conf, key, perms)
+    if method == "ks":
+        return bootstrap_ks_test(v, conf, key, perms)
+    raise ValueError(method)  # pragma: no cover — config validation forbids this
+
+
 def eval_by_test(v: np.ndarray, conf: AnomalyzerConf, key: str = ""):
     """Per-test probs + weights (anomalyze.go:195-221).
 
@@ -383,22 +405,7 @@ def eval_by_test(v: np.ndarray, conf: AnomalyzerConf, key: str = ""):
     """
     probmap: dict[str, float] = {}
     for method in conf.methods:
-        if method == "magnitude":
-            p = magnitude_test(v, conf)
-        elif method == "fence":
-            p = fence_test(v, conf)
-        elif method == "cdf":
-            p = cdf_test(v, conf)
-        elif method == "highrank":
-            p = rank_test(v, conf, key, reverse=False)
-        elif method == "lowrank":
-            p = rank_test(v, conf, key, reverse=True)
-        elif method == "diff":
-            p = diff_test(v, conf, key)
-        elif method == "ks":
-            p = bootstrap_ks_test(v, conf, key)
-        else:  # pragma: no cover — config validation forbids this
-            raise ValueError(method)
+        p = method_prob(method, v, conf, key)
         if p is None:
             continue
         p = cap(p)

@@ -19,6 +19,8 @@ arithmetic on top of the scan).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -39,6 +41,21 @@ NANO_TS_COLS: dict[str, tuple[str, ...]] = {
 #: scan-spread sibling of anomalyzer.batch.bytesPerCheckpointPartition)
 SPREAD_BYTES_CONF = "anomalyzer.batch.bytesPerSpreadPartition"
 _SPREAD_BYTES_DEFAULT = 256 * 1024
+
+
+def _input_bytes(path: str) -> int:
+    """On-disk bytes of a file, or of every file under a directory at any
+    depth (``k=v/`` partition dirs included). Hidden ``.``-prefixed entries
+    (checksum files) are skipped. Walking the tree, unlike globbing, takes
+    the path literally, so ``[`` or ``*`` in it match nothing else."""
+    if not os.path.isdir(path):
+        return os.path.getsize(path)
+    size = 0
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(".")]
+        size += sum(os.path.getsize(os.path.join(root, f))
+                    for f in files if not f.startswith("."))
+    return size
 
 
 def spread_partitions(
@@ -74,11 +91,7 @@ def spread_partitions(
         except ValueError:
             bytes_per_partition = _SPREAD_BYTES_DEFAULT
     try:
-        import glob as _glob
-        import os as _os
-
-        size = sum(_os.path.getsize(p) for p in _glob.glob(f"{path}/*")
-                   ) if _os.path.isdir(path) else _os.path.getsize(path)
+        size = _input_bytes(path)
     except OSError:
         return spark.sparkContext.defaultParallelism
     n = -(-size // max(1, bytes_per_partition))

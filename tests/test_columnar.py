@@ -1,5 +1,5 @@
-"""Pure-column test expressions must match the NumPy oracle exactly
-(same doubles — both sides use identical formulas)."""
+"""The staged pure-column test expressions ``detect`` runs must match the
+NumPy oracle exactly (same doubles — both sides use identical formulas)."""
 
 import numpy as np
 import pytest
@@ -33,21 +33,20 @@ CONFS = [
 
 
 def _spark_probs_all(spark, vecs, conf):
-    """One job: every test vector as a row."""
+    """One job: every test vector as a row, staged the way ``detect``
+    stages its tail windows (stage-1 stats, stage-2 diff stats, probs)."""
     df = spark.createDataFrame(
         [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
         "i: int, vec: array<double>",
     )
-    s = columnar.WindowSlices(F.col("vec"), conf)
-    cols = {}
-    if "fence" in conf.methods:
-        cols["fence"] = columnar.fence_prob(s)
-    cols["magnitude"] = columnar.magnitude_prob(s)
+    s1 = columnar.stage1_cols(F.col("vec"), conf)
+    staged = df.select("i", "vec", *[c.alias(n) for n, c in s1.items()])
     if "cdf" in conf.methods:
-        cols["cdf"] = columnar.cdf_prob(s)
-    if "ks" in conf.methods:
-        cols["ks_stat"] = columnar.ks_stat_col(s)
-    rows = df.select("i", *[c.alias(k) for k, c in cols.items()]).collect()
+        s2 = columnar.stage2_cols(conf)
+        staged = staged.select(
+            "i", "vec", *s1, *[c.alias(n) for n, c in s2.items()])
+    probs = columnar.staged_probs(conf)
+    rows = staged.select("i", *[c.alias(k) for k, c in probs.items()]).collect()
     return {r["i"]: r.asDict() for r in rows}
 
 
@@ -71,9 +70,3 @@ def test_columnar_matches_oracle(spark, conf):
                 assert got["cdf"] is None, (vec, "cdf")
             else:
                 assert got["cdf"] == pytest.approx(exp, abs=1e-12), (vec, "cdf")
-        if "ks" in conf.methods:
-            exp = oracle.ks_stat(v, conf)
-            if exp is None:
-                assert got["ks_stat"] is None, (vec, "ks_stat")
-            else:
-                assert got["ks_stat"] == pytest.approx(exp, abs=1e-12), (vec, "ks_stat")

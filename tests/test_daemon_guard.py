@@ -65,6 +65,31 @@ def test_guard_invalidates_modified_archive(tmp_path, monkeypatch):
     assert calls == [zpath, zpath, zpath]
 
 
+def test_guard_invalidates_every_importer_of_archive(tmp_path, monkeypatch):
+    """One archive has several live importers (one per package path in
+    it), each with its own cached directory: a changed archive must reach
+    all of them, not just the first to be asked."""
+    zpath = str(tmp_path / "pkg.zip")
+    _make_zip(zpath, b"one")
+    importers = [zipimport.zipimporter(zpath) for _ in range(4)]
+
+    calls = []
+    monkeypatch.setattr(_daemon, "_orig_invalidate",
+                        lambda self: calls.append(self))
+    monkeypatch.setattr(_daemon, "_seen", {})
+
+    for zi in importers:
+        _daemon._invalidate_caches(zi)
+    for zi in importers:  # untouched: every importer skips
+        _daemon._invalidate_caches(zi)
+    assert calls == importers
+
+    _make_zip(zpath, b"two-with-longer-payload")
+    for zi in importers:
+        _daemon._invalidate_caches(zi)
+    assert calls == importers * 2
+
+
 def test_guard_preserves_reload_semantics(tmp_path):
     """End-to-end through the REAL patched method: a module imported from
     a zip still picks up a changed archive after invalidate_caches()."""

@@ -85,6 +85,31 @@ def test_detect_by_test_surface(spark):
     assert row["prob"] > 0.5  # the reference's own assertion
 
 
+def test_detect_by_test_prob_equals_detect(spark):
+    """detect and detect_by_test share one body: under a conf mixing MC
+    and deterministic tests their combined prob is identical per key,
+    including keys too short for some tests (NA entries)."""
+    conf = AnomalyzerConf(
+        active_size=2, methods=("magnitude", "ks", "cdf", "highrank", "fence"),
+        upper_bound=8.0, perm_count=100, seed=5,
+    )
+    rng = np.random.default_rng(3)
+    rows = []
+    for ki, n in enumerate([30, 30, 12, 5, 2, 1]):
+        vals = rng.normal(4, 1, n)
+        if ki % 2 == 0:
+            vals[-2:] += 6
+        rows.extend((f"key{ki}", t, float(v)) for t, v in enumerate(vals))
+    df = spark.createDataFrame(pd.DataFrame(rows, columns=["k", "ts", "value"]))
+
+    plain = {r["k"]: r["prob"] for r in detect(df, ["k"], conf=conf).collect()}
+    by_test = {r["k"]: r["prob"]
+               for r in detect_by_test(df, ["k"], conf=conf).collect()}
+    assert len(plain) == 6
+    assert by_test == plain
+    assert any(p > 0.0 for p in plain.values())
+
+
 def test_detect_events_table(spark, sf_dir):
     """Smoke on driver data: runs, sane schema, probs in [0,1]."""
     from anomalyzer_spark.sources import load_table

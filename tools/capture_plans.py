@@ -3,10 +3,12 @@
 Usage: python tools/capture_plans.py <out_dir> [query ...]
 
 Writes <out_dir>/<query>.txt with the formatted physical plan of each
-query (default: the bench HEADLINE set). Streaming-drill queries execute
-eagerly at construction; their captured plan is the returned frame's
-(memory-sink read + final-state selection), same as what the bench's
-plan fingerprint hashes.
+query (default: the bench HEADLINE set), and prints one
+``<query> <bench.plan_fingerprint>`` line per query on stdout, so a
+before/after plan check is a diff of two captured outputs.
+Streaming-drill queries execute eagerly at construction; their captured
+plan is the returned frame's (memory-sink read + final-state selection),
+same as what the bench's plan fingerprint hashes.
 """
 
 from __future__ import annotations
@@ -35,6 +37,7 @@ def main() -> None:
         with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
             f.write(plan)
         print(f"# wrote {name}", file=sys.stderr)
+        print(name, bench.plan_fingerprint(df), flush=True)
     spark.stop()
 
 
