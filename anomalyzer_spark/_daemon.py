@@ -26,11 +26,15 @@ importer per package path inside it, and each holds its own cached
 directory, so after a change every one of them must re-read it.
 
 Requires ``anomalyzer_spark`` to be importable in the worker Python
-environment — already a hard requirement of this library's UDF kernels
-(cloudpickle references ``anomalyzer_spark.oracle`` by module name), so
-this adds no new deployment constraint. Workers on platforms without
-the daemon (Windows) simply never load this module; the unpatched
-behavior is correct, only slower.
+environment, as the library's UDF kernels already do (cloudpickle
+references ``anomalyzer_spark.oracle`` by module name). When it is not,
+every Python task fails with ``No module named 'anomalyzer_spark'`` —
+user UDFs included — so ``session.get_spark`` puts the package's parent
+directory on the workers' PYTHONPATH (``spark.executorEnv.PYTHONPATH``).
+A session built elsewhere must do the same, or install the package on
+the workers. Workers on platforms without the daemon (Windows) simply
+never load this module; the unpatched behavior is correct, only
+slower.
 """
 
 from __future__ import annotations

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import conf_scope
+from ..sources.layout import DYNAMIC_OVERWRITE, drop_emptied_partitions
 from .similarity import (_codes_sql, _lut_sql, absmax_scale, adc_dist,
                          adc_rank_refine, checked_width, cosine,
                          dequantize_col, nearest_cells, quantize_code_expr)
@@ -443,13 +445,10 @@ def apply_diff_to_index(
     # partitions the write replaces — materializing first avoids reading
     # half-overwritten inputs (classic self-overwrite hazard)
     rewrite = rewrite.localCheckpoint(eager=True)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    with conf_scope(spark, DYNAMIC_OVERWRITE):
         (rewrite.write.mode("overwrite").partitionBy("cell").parquet(path))
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # a cell whose every vector was removed has no rewrite rows
+    drop_emptied_partitions(
+        spark, path, "cell", affected,
+        {r["cell"] for r in rewrite.select("cell").distinct().collect()})
     return len(affected)

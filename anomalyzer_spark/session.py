@@ -49,6 +49,10 @@ def _persistent_rdd_ids(spark: SparkSession) -> set[int]:
     return {int(k) for k in jmap.keySet().toArray()}
 
 
+#: directory holding the ``anomalyzer_spark`` package
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__)))
+
 #: conf key for compact_checkpoint's bytes-per-partition divisor (the
 #: batch sibling of anomalyzer.streaming.bytesPerStatePartition)
 COMPACT_BYTES_CONF = "anomalyzer.batch.bytesPerCheckpointPartition"
@@ -137,6 +141,25 @@ def checkpoint_scope(spark: SparkSession):
                 jmap.get(k).unpersist(False)
 
 
+@contextlib.contextmanager
+def conf_scope(spark: SparkSession, settings: dict[str, str | None]):
+    """Set session confs for the body of a ``with`` block, then restore
+    each one's previous value (unset when it had none). A None value
+    leaves its key untouched."""
+    active = {k: v for k, v in settings.items() if v is not None}
+    prev = {k: spark.conf.get(k, None) for k in active}
+    for k, v in active.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def _build(app: str, cpus: str, shuffle_partitions: int | None):
     builder = (
         SparkSession.builder.appName(app)
@@ -167,10 +190,14 @@ def _build(app: str, cpus: str, shuffle_partitions: int | None):
         # Python workers: guard the per-task importlib.invalidate_caches
         # against re-parsing pyspark.zip's central directory every task
         # (~0.65 s wall / ~0.24 s CPU per task on distribution installs —
-        # see _daemon.py). The package is importable wherever the UDF
-        # kernels already run (they reference anomalyzer_spark.oracle by
-        # module name), so this adds no deployment constraint.
+        # see _daemon.py). The daemon module, like the UDF kernels that
+        # reference anomalyzer_spark.oracle by module name, must import
+        # in the workers: put the package's parent directory on their
+        # PYTHONPATH (Spark appends it after its own pyspark entries), so
+        # a driver that found the package through sys.path, from any
+        # cwd, still runs Python tasks.
         .config("spark.python.daemon.module", "anomalyzer_spark._daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()

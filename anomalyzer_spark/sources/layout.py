@@ -20,8 +20,14 @@ sortWithinPartitions + write options) — no custom committers.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import conf_scope
+
+#: session conf scoping every partial rewrite below to the partitions
+#: its frame has rows for
+DYNAMIC_OVERWRITE = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
 
 #: bits per dimension in the z-value; 2 dims × 21 bits = 42-bit z fits a
 #: long with room to spare, and 2^21 distinct quantiles per dimension is
@@ -63,6 +69,21 @@ def write_sized_parquet(
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
     return n_per_file
+
+
+def drop_emptied_partitions(spark: SparkSession, path: str, col: str,
+                            affected: list, kept: set) -> None:
+    """Delete ``<path>/<col>=<v>`` for every ``v`` in ``affected`` that
+    is not in ``kept``. A dynamic partition overwrite never touches a
+    partition its frame has no rows for, so a rewritten partition that
+    emptied out keeps its stale files unless deleted here. Goes through
+    the path's Hadoop filesystem, so it works off the local disk too."""
+    jvm = spark._jvm
+    hconf = spark._jsc.hadoopConfiguration()
+    for v in affected:
+        if v not in kept:
+            p = jvm.org.apache.hadoop.fs.Path(f"{path}/{col}={v}")
+            p.getFileSystem(hconf).delete(p, True)
 
 
 def zvalue(cols: list[str | Column], bits: int = _ZBITS) -> Column:
@@ -417,28 +438,14 @@ def refresh_shards(
     merged = (stored.where(~F.col("shard").isin(affected))
               .unionByName(new_man)).localCheckpoint(eager=True)
 
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    with conf_scope(spark, DYNAMIC_OVERWRITE):
         write_sized_parquet(rewrite, f"{path}/data", target_mb=target_mb,
                             partition_by=[shard_col], mode="overwrite")
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-    # dynamic overwrite never touches a partition the rewrite frame has
-    # no rows for — an affected shard that emptied out must be deleted
-    # explicitly or its stale files survive with no manifest row
-    still = {r["shard"] for r in new_man.select("shard").collect()}
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    for s in affected:
-        if s not in still:
-            p = jvm.org.apache.hadoop.fs.Path(
-                f"{path}/data/{shard_col}={s}")
-            p.getFileSystem(hconf).delete(p, True)
+    # an affected shard that emptied out would keep its stale files with
+    # no manifest row
+    drop_emptied_partitions(
+        spark, f"{path}/data", shard_col, affected,
+        {r["shard"] for r in new_man.select("shard").collect()})
 
     merged.coalesce(1).write.mode("overwrite").parquet(f"{path}/manifest")
     return len(affected)
@@ -514,15 +521,8 @@ def compact_shards(
             F.col(shard_col), *[F.col(c) for c in order_by])
     rewrite = rewrite.localCheckpoint(eager=True)
 
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    with conf_scope(spark, DYNAMIC_OVERWRITE):
         write_sized_parquet(rewrite, f"{path}/data", target_mb=target_mb,
                             partition_by=[shard_col], mode="overwrite",
                             compression_ratio=compression_ratio)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     return len(affected)

@@ -14,6 +14,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import conf_scope
+
 
 def adaptive_state_partitions(
     spark: SparkSession,
@@ -142,15 +144,12 @@ def drain_available_now(
     # (planning happens inside start/awaitTermination; the restore runs
     # before any caller-side post-processing plans, so downstream batch
     # plans keep the session's partitioning).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions",
-                       str(int(state_partitions)))
-    _nodata_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev_nodata = spark.conf.get(_nodata_key, None)
-    if no_data_batch is not None:
-        spark.conf.set(_nodata_key, "true" if no_data_batch else "false")
-    try:
+    parts = None if state_partitions is None else str(int(state_partitions))
+    nodata = (None if no_data_batch is None
+              else "true" if no_data_batch else "false")
+    with conf_scope(spark, {
+            "spark.sql.shuffle.partitions": parts,
+            "spark.sql.streaming.noDataMicroBatches.enabled": nodata}):
         q = (
             build(stream).writeStream.format("memory")
             .queryName(query_name)
@@ -159,12 +158,4 @@ def drain_available_now(
             .start()
         )
         q.awaitTermination()
-    finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if no_data_batch is not None:
-            if prev_nodata is None:
-                spark.conf.unset(_nodata_key)
-            else:
-                spark.conf.set(_nodata_key, prev_nodata)
     return spark.table(query_name)

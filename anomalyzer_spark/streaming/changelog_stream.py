@@ -49,6 +49,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
 from ..functions.changelog import _is_delete, latest_changes
+from ..session import conf_scope
+from ..sources.layout import DYNAMIC_OVERWRITE, drop_emptied_partitions
 
 __all__ = ["changelog_upsert_stream", "read_snapshot", "init_snapshot",
            "vacuum_tombstones", "run_changelog_stream_on_dir"]
@@ -116,21 +118,10 @@ def changelog_upsert_stream(
             store.unionByName(b), keys, sequence_col,
             tiebreak_cols=[*tiebreak_cols, "_deleted"],
         ).localCheckpoint(eager=True)  # self-overwrite hazard
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", None)
-        try:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic")
+        with conf_scope(spark, DYNAMIC_OVERWRITE):
             (merged.repartition(len(affected), F.col("_bucket"))
              .write.mode("overwrite").partitionBy("_bucket")
              .parquet(snap_dir))
-        finally:
-            if prev is None:
-                spark.conf.unset(
-                    "spark.sql.sources.partitionOverwriteMode")
-            else:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev)
 
     return (
         changes_stream.writeStream.foreachBatch(handle)
@@ -210,26 +201,12 @@ def vacuum_tombstones(
             .where(~dead)
             .repartition(len(affected), F.col("_bucket"))
             .localCheckpoint(eager=True))  # self-overwrite hazard
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    try:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic")
+    with conf_scope(spark, DYNAMIC_OVERWRITE):
         (keep.write.mode("overwrite").partitionBy("_bucket")
          .parquet(snap_dir))
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev)
-    still = {r["_bucket"] for r in
-             keep.select("_bucket").distinct().collect()}
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    for b in affected:
-        if b not in still:
-            p = jvm.org.apache.hadoop.fs.Path(f"{snap_dir}/_bucket={b}")
-            p.getFileSystem(hconf).delete(p, True)
+    drop_emptied_partitions(
+        spark, snap_dir, "_bucket", affected,
+        {r["_bucket"] for r in keep.select("_bucket").distinct().collect()})
     return len(affected)
 
 

@@ -41,8 +41,8 @@ tests/test_streaming.py on multi-batch splits in both arrival orders.
 State at 100 TB: the store is the corpus' (cell, id, vector) rows ×
 ``n_assign`` — O(in-horizon corpus), partitioned by cell so the
 broadcast candidate join prunes store files to the batch's touched
-cells. ``retention_batches`` / ``compact_every`` reuse minhash_stream's
-eviction + crash-safe generation-fold protocol verbatim.
+cells. ``retention_batches`` / ``compact_every`` bound it under the
+eviction + crash-safe generation-fold protocol of ``_store``.
 """
 
 from __future__ import annotations
@@ -51,14 +51,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.similarity import checked_width, cosine, nearest_cells
-from .minhash_stream import (_compact_component, _latest_gen,
-                             _read_component, _sweep_live)
+from ._store import batch_path, bound_state, horizon, read_component
 
 __all__ = ["semantic_dedup_stream", "semantic_pairs_store",
            "semantic_groups_store", "run_semantic_stream_on_dir"]
-
-_COMPONENTS = ("vectors", "sem_pairs")
-
 
 def semantic_dedup_stream(
     spark: SparkSession,
@@ -86,8 +82,7 @@ def semantic_dedup_stream(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        min_live = (batch_id - retention_batches + 1
-                    if retention_batches is not None else None)
+        min_live = horizon(batch_id, retention_batches)
         new = checked_width(batch_df, vec_col, dim,
                             "semantic_dedup_stream centroids")
         assigned = new.select(
@@ -98,13 +93,13 @@ def semantic_dedup_stream(
         vec_schema = assigned.schema
         # 1. extend the store first (replay-idempotent overwrite)
         (assigned.write.mode("overwrite").partitionBy("cell")
-         .parquet(f"{store_dir}/vectors/batch_id={batch_id}"))
+         .parquet(batch_path(store_dir, "vectors", batch_id)))
         # 2. candidates: broadcast the batch against the store by cell —
         #    the store is scanned (cell-pruned), never shuffled
-        store = _read_component(
+        store = read_component(
             spark, store_dir, "vectors", vec_schema, min_live)
         new_a = spark.read.schema(vec_schema).parquet(
-            f"{store_dir}/vectors/batch_id={batch_id}")
+            batch_path(store_dir, "vectors", batch_id))
         pairs = (
             store.alias("s")
             .join(F.broadcast(new_a.alias("n")), "cell")
@@ -122,19 +117,13 @@ def semantic_dedup_stream(
             .dropDuplicates(["id_a", "id_b"])
         )
         (pairs.write.mode("overwrite")
-         .parquet(f"{store_dir}/sem_pairs/batch_id={batch_id}"))
+         .parquet(batch_path(store_dir, "sem_pairs", batch_id)))
         # 3. bound state (shared eviction/compaction protocol)
-        if min_live is not None:
-            folded = {n: _latest_gen(f"{store_dir}/compacted/{n}")[1]
-                      for n in _COMPONENTS}
-            _sweep_live(store_dir, min_live, folded,
-                        components=_COMPONENTS)
-        if compact_every is not None and \
-                (batch_id + 1) % compact_every == 0:
-            _compact_component(spark, store_dir, "vectors", vec_schema,
-                               min_live, batch_id, ("cell",))
-            _compact_component(spark, store_dir, "sem_pairs",
-                               pairs.schema, min_live, batch_id)
+        bound_state(
+            spark, store_dir, batch_id,
+            {"vectors": vec_schema, "sem_pairs": pairs.schema},
+            min_live=min_live, compact_every=compact_every,
+            partition_cols={"vectors": ("cell",)})
 
     return (
         vec_stream.writeStream.foreachBatch(handle)
@@ -153,7 +142,7 @@ def semantic_pairs_store(
     """All semantic near-dup pairs accumulated so far: (id_a, id_b,
     cos_sim) — equals batch ``semantic_pairs`` (same model, no cap) over
     every vector ingested; an empty typed frame before any batch."""
-    pairs = _read_component(spark, store_dir, "sem_pairs", None, None)
+    pairs = read_component(spark, store_dir, "sem_pairs", None)
     if pairs is None:
         return spark.createDataFrame(
             [], f"id_a {id_type}, id_b {id_type}, cos_sim double")
@@ -173,7 +162,7 @@ def semantic_groups_store(
     components per call (the ``minhash_groups_store`` read-cost note)."""
     from ..functions.dedup import duplicate_groups
 
-    ing = _read_component(spark, store_dir, "vectors", None, None)
+    ing = read_component(spark, store_dir, "vectors", None)
     if ing is None:
         return spark.createDataFrame(
             [], f"`{id_col}` {id_type}, group_id {id_type}, "

@@ -4,19 +4,20 @@ urls so far", "top domains so far", "p99 doc length so far", and "what
 does this stream share with release N" are a kilobyte parquet read at
 any point in a stream's life, never a corpus rescan.
 
-Same ``foreachBatch``-plus-store shape as ``minhash_stream`` (and the
-same live/compacted directory protocol, imported from there): each
-micro-batch writes its own ``hll_profile`` / ``mg_profile`` under
-``batch_id=N`` (overwrite ⇒ at-least-once replay is a no-op), and the
-store's current value is the MERGE of the newest complete compacted
-generation plus the live batch directories. Compaction
-(``compact_every=C``) folds the current state into one merged profile
-generation — for HLL the fold is register-wise max (fully associative
-AND idempotent, so stream-final state equals the one-shot batch profile
-of everything ingested, exactly — pinned); for MG the fold is the
-mergeable-summaries merge (guarantees compose; fold GROUPING may change
-which near-threshold keys survive, so the pins are the containment /
-completeness guarantees plus exact equality in the uncompacted case).
+Same ``foreachBatch``-plus-store shape as ``minhash_stream``, on the
+generational store protocol of ``_store``: each micro-batch writes its
+own ``hll_profile`` / ``mg_profile`` under ``batch_id=N`` (overwrite ⇒
+at-least-once replay is a no-op), and the store's current value is the
+MERGE of the newest complete compacted generation plus the live batch
+directories. Compaction (``compact_every=C``) folds the current state
+into one merged profile generation (a folded generation: no
+``batch_id`` column) — for HLL the fold is register-wise max (fully
+associative AND idempotent, so stream-final state equals the one-shot
+batch profile of everything ingested, exactly — pinned); for MG the
+fold is the mergeable-summaries merge (guarantees compose; fold
+GROUPING may change which near-threshold keys survive, so the pins are
+the containment / completeness guarantees plus exact equality in the
+uncompacted case).
 
 Batch jobs share the store through ``sketch_ingest`` (the
 ``minhash_increment`` pattern): a scheduled daily profiling job and a
@@ -33,13 +34,13 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.sketch import (
     _merge_mg_union, bottomk_profile, hll_profile, kll_profile,
     merge_bottomk, merge_hll, merge_kll, mg_profile,
 )
-from .minhash_stream import _latest_gen, _live_batch_ids, _sweep_live
+from ._store import batch_path, bound_state, next_batch_id, read_component
 
 __all__ = ["bottomk_sketch_store", "hll_sketch_store",
            "kll_sketch_store", "mg_sketch_store",
@@ -113,16 +114,6 @@ def _ensure_meta(store_dir: str, p: int, mg_k: int,
             json.dump(meta, f)
 
 
-def _next_batch_id(store_dir: str) -> int:
-    last = -1
-    for name in _COMPONENTS:
-        ids = _live_batch_ids(f"{store_dir}/{name}")
-        if ids:
-            last = max(last, ids[-1])
-        last = max(last, _latest_gen(f"{store_dir}/compacted/{name}")[1])
-    return last + 1
-
-
 def sketch_ingest(
     spark: SparkSession,
     df: DataFrame,
@@ -176,118 +167,57 @@ def sketch_ingest(
                  bk_k if bk_cols is not None else None,
                  group_ddl=group_ddl)
     if batch_id is None:
-        batch_id = _next_batch_id(store_dir)
-    (hll_profile(df, cols, p=p, group_cols=group_cols)
-     .write.mode("overwrite")
-     .parquet(f"{store_dir}/hll/batch_id={batch_id}"))
-    (mg_profile(df, cols, k=mg_k, group_cols=group_cols)
-     .write.mode("overwrite")
-     .parquet(f"{store_dir}/mg/batch_id={batch_id}"))
+        batch_id = next_batch_id(store_dir, _COMPONENTS)
+    profiles = {
+        "hll": hll_profile(df, cols, p=p, group_cols=group_cols),
+        "mg": mg_profile(df, cols, k=mg_k, group_cols=group_cols),
+    }
+    folds = {"hll": lambda u: merge_hll([u]),
+             "mg": lambda u: _merge_mg_union(u, mg_k)}
     if num_cols is not None:
-        (kll_profile(df, num_cols, k=kll_k, group_cols=group_cols)
-         .write.mode("overwrite")
-         .parquet(f"{store_dir}/kll/batch_id={batch_id}"))
+        profiles["kll"] = kll_profile(df, num_cols, k=kll_k,
+                                      group_cols=group_cols)
+        folds["kll"] = lambda u: merge_kll([u], k=kll_k)
     if bk_cols is not None:
-        (bottomk_profile(df, bk_cols, k=bk_k, group_cols=group_cols)
-         .write.mode("overwrite")
-         .parquet(f"{store_dir}/bk/batch_id={batch_id}"))
-    if compact_every is not None and (batch_id + 1) % compact_every == 0:
-        # fold current state into one merged-profile generation (same
-        # crash-safe gen/_folded.json protocol as the minhash store)
-        _compact_fold(spark, store_dir, "hll", batch_id,
-                      lambda u: merge_hll([u.drop("batch_id")]))
-        _compact_fold(spark, store_dir, "mg", batch_id,
-                      lambda u: _merge_mg_union(u.drop("batch_id"), mg_k))
-        if num_cols is not None:
-            _compact_fold(spark, store_dir, "kll", batch_id,
-                          lambda u: merge_kll([u.drop("batch_id")],
-                                              k=kll_k))
-        if bk_cols is not None:
-            _compact_fold(spark, store_dir, "bk", batch_id,
-                          lambda u: merge_bottomk([u.drop("batch_id")],
-                                                  k=bk_k))
-        _sweep_live(store_dir, 0, {
-            n: _latest_gen(f"{store_dir}/compacted/{n}")[1]
-            for n in _COMPONENTS}, components=_COMPONENTS)
+        profiles["bk"] = bottomk_profile(df, bk_cols, k=bk_k,
+                                         group_cols=group_cols)
+        folds["bk"] = lambda u: merge_bottomk([u], k=bk_k)
+    for name, prof in profiles.items():
+        prof.write.mode("overwrite").parquet(
+            batch_path(store_dir, name, batch_id))
+    # fold the current state into one merged-profile generation per
+    # component every compact_every batches
+    bound_state(spark, store_dir, batch_id,
+                {name: _schema(store_dir, name) for name in folds},
+                compact_every=compact_every, folds=folds)
 
 
-def _compact_fold(spark, store_dir, name, upto, fold) -> None:
-    """Write compacted/<name>/gen=<upto> = fold(current state). Unlike
-    minhash's row-preserving compaction, the generation holds the MERGED
-    profile (bounded rows), which is itself a valid profile frame; the
-    complete-generation manifest protocol is identical."""
-    import json
+def _schema(store_dir: str, name: str) -> StructType:
+    """The component's FULL data schema, persisted group columns
+    included."""
+    base = {"hll": _HLL_DDL, "mg": _MG_DDL, "kll": _KLL_DDL,
+            "bk": _BK_DDL}[name]
+    gddl = (_load_meta(store_dir) or {}).get("group_ddl", "")
+    return StructType.fromDDL(f"{gddl}, {base}" if gddl else base)
 
-    comp_dir = f"{store_dir}/compacted/{name}"
-    gen_path = f"{comp_dir}/gen={upto}"
-    if (os.path.isfile(f"{gen_path}/_SUCCESS")
-            and os.path.isfile(f"{gen_path}/_folded.json")):
-        return
-    cur = _read_sketch(spark, store_dir, name)
+
+def _merged(spark: SparkSession, store_dir: str, name: str,
+            merge) -> DataFrame:
+    """``merge`` of one component's current state (newest generation ∪
+    newer live batches); an empty frame typed with the store's full
+    schema when the component holds nothing, so empties union/join with
+    downstream frames."""
+    schema = _schema(store_dir, name)
+    cur = read_component(spark, store_dir, name, schema, folded=True)
     if cur is None:
-        return
-    fold(cur).coalesce(1).write.mode("overwrite").parquet(gen_path)
-    with open(f"{gen_path}/_folded.json", "w") as f:
-        json.dump({"max_folded": upto}, f)
-    import glob
-    import shutil
-    for b in _live_batch_ids(f"{store_dir}/{name}"):
-        if b <= upto:
-            shutil.rmtree(f"{store_dir}/{name}/batch_id={b}",
-                          ignore_errors=True)
-    for pth in glob.glob(f"{comp_dir}/gen=*"):
-        if os.path.isdir(pth) and pth != gen_path:
-            shutil.rmtree(pth, ignore_errors=True)
-
-
-def _typed_empty(spark: SparkSession, store_dir: str,
-                 name: str) -> DataFrame:
-    """Empty frame typed with the store's FULL schema (incl. persisted
-    group columns), so empties union/join with downstream frames."""
-    base = {"hll": _HLL_DDL, "mg": _MG_DDL, "kll": _KLL_DDL,
-            "bk": _BK_DDL}[name]
-    meta = _load_meta(store_dir) or {}
-    gddl = meta.get("group_ddl", "")
-    return spark.createDataFrame([], f"{gddl}, {base}" if gddl else base)
-
-
-def _read_sketch(
-    spark: SparkSession, store_dir: str, name: str,
-) -> DataFrame | None:
-    """Union of the newest complete generation and newer live batch
-    dirs, with ``batch_id`` attached and the data schema pinned (the
-    partition-inference lesson from the minhash store)."""
-    base = {"hll": _HLL_DDL, "mg": _MG_DDL, "kll": _KLL_DDL,
-            "bk": _BK_DDL}[name]
-    meta = _load_meta(store_dir) or {}
-    gddl = meta.get("group_ddl", "")
-    ddl = f"{gddl}, {base}" if gddl else base
-    full = ddl + ", batch_id bigint"
-    live_dir = f"{store_dir}/{name}"
-    gen_path, folded = _latest_gen(f"{store_dir}/compacted/{name}")
-    parts: list[DataFrame] = []
-    if gen_path is not None:
-        # a generation holds one folded profile with no batch_id column
-        parts.append(spark.read.schema(ddl).parquet(gen_path)
-                     .withColumn("batch_id", F.lit(folded)))
-    if [b for b in _live_batch_ids(live_dir) if b > folded]:
-        parts.append(spark.read.schema(full).parquet(live_dir)
-                     .where(F.col("batch_id") > folded))
-    if not parts:
-        return None
-    out = parts[0]
-    for prt in parts[1:]:
-        out = out.unionByName(prt)
-    return out
+        return spark.createDataFrame([], schema)
+    return merge(cur.drop("batch_id"))
 
 
 def hll_sketch_store(spark: SparkSession, store_dir: str) -> DataFrame:
     """Current merged HLL profile — feed to ``sketch.hll_estimate``.
     Empty store returns an empty typed frame."""
-    cur = _read_sketch(spark, store_dir, "hll")
-    if cur is None:
-        return _typed_empty(spark, store_dir, "hll")
-    return merge_hll([cur.drop("batch_id")])
+    return _merged(spark, store_dir, "hll", lambda u: merge_hll([u]))
 
 
 def mg_sketch_store(
@@ -306,10 +236,8 @@ def mg_sketch_store(
         k = meta["mg_k"]
     elif k is None:
         k = 64
-    cur = _read_sketch(spark, store_dir, "mg")
-    if cur is None:
-        return _typed_empty(spark, store_dir, "mg")
-    return _merge_mg_union(cur.drop("batch_id"), k)
+    return _merged(spark, store_dir, "mg",
+                   lambda u: _merge_mg_union(u, k))
 
 
 def kll_sketch_store(
@@ -330,10 +258,7 @@ def kll_sketch_store(
         k = meta["kll_k"]
     elif k is None:
         k = 256
-    cur = _read_sketch(spark, store_dir, "kll")
-    if cur is None:
-        return _typed_empty(spark, store_dir, "kll")
-    return merge_kll([cur.drop("batch_id")], k=k)
+    return _merged(spark, store_dir, "kll", lambda u: merge_kll([u], k=k))
 
 
 def bottomk_sketch_store(
@@ -354,10 +279,8 @@ def bottomk_sketch_store(
         k = meta["bk_k"]
     elif k is None:
         k = 256
-    cur = _read_sketch(spark, store_dir, "bk")
-    if cur is None:
-        return _typed_empty(spark, store_dir, "bk")
-    return merge_bottomk([cur.drop("batch_id")], k=k)
+    return _merged(spark, store_dir, "bk",
+                   lambda u: merge_bottomk([u], k=k))
 
 
 def run_sketch_stream_on_dir(

@@ -141,3 +141,24 @@ def test_empty_diff_touches_nothing(spark, models, tmp_path):
     assert ann_index.apply_diff_to_index(
         spark, path, empty, e, cents, books) == 0
     assert _snapshot(spark, path) == before
+
+
+def test_emptied_cell_is_removed(spark, models, tmp_path):
+    """Removing every vector of one cell must drop that cell from the
+    index: the dynamic overwrite never touches a partition the rewrite
+    has no rows for, so the emptied cell needs an explicit delete."""
+    e, cents, books = models
+    path = str(tmp_path / "idx6")
+    ann_index.build_ivfpq_index(e, path, cents, books)
+    cell = (spark.read.parquet(path).groupBy("cell").count()
+            .orderBy("count", "cell").first()["cell"])
+    gone = [r["neighbor_id"] for r in spark.read.parquet(path)
+            .where(F.col("cell") == cell).select("neighbor_id").collect()]
+    diff = spark.createDataFrame([(i, "removed") for i in gone],
+                                 "vec_id long, status string")
+    new = e.where(~F.col("vec_id").isin(gone))
+    assert ann_index.apply_diff_to_index(
+        spark, path, diff, new, cents, books) == 1
+    fresh_path = str(tmp_path / "fresh6")
+    ann_index.build_ivfpq_index(new, fresh_path, cents, books)
+    assert _snapshot(spark, path) == _snapshot(spark, fresh_path)

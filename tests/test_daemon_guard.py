@@ -132,3 +132,37 @@ def test_detect_kernel_runs_through_daemon(spark, sf_dir):
                  AnomalyzerConf(active_size=2),
                  tiebreak_cols=["event_id"]).collect()
     assert len(out) > 0 and all(0.0 <= r["prob"] <= 1.0 for r in out)
+
+
+_FOREIGN_CWD_DRIVER = """
+import sys
+sys.path.insert(0, {root!r})
+import pandas as pd
+from pyspark.sql.functions import pandas_udf
+from anomalyzer_spark.session import get_spark
+
+spark = get_spark("foreign-cwd")
+
+@pandas_udf("long")
+def plus_one(s: pd.Series) -> pd.Series:
+    return s + 1
+
+print("ROWS", [r[0] for r in spark.range(3).select(plus_one("id")).collect()])
+spark.stop()
+"""
+
+
+def test_python_tasks_run_from_a_foreign_cwd(tmp_path):
+    """A driver that imports the package through sys.path, from a cwd
+    that is not the repository and with no PYTHONPATH, must still run
+    Python tasks: the workers import the daemon module by name, so the
+    session has to put the package on their path."""
+    import subprocess
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(_daemon.__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_DRIVER_MEM="1g", SPARK_GRAFT_CPUS="1")
+    proc = subprocess.run(
+        [sys.executable, "-c", _FOREIGN_CWD_DRIVER.format(root=root)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600)
+    assert "ROWS [1, 2, 3]" in proc.stdout, proc.stderr[-3000:]

@@ -104,3 +104,18 @@ def test_string_keyed_store_roundtrip(spark, sf_dir, tmp_path):
     # empty increment on the same store still types from its frame
     empty = minhash_increment(spark, d.where(F.lit(False)), store, **_P)
     assert empty.schema["id_a"].dataType.simpleString() == "string"
+
+
+def test_increment_at_compaction_tick_returns_its_pairs(spark, tmp_path):
+    """The increment that triggers a compaction must still return the
+    pairs it introduced, although the tick folds its live pair dir into
+    a generation before the read."""
+    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    first = spark.createDataFrame([(1, text)], "doc_id long, text string")
+    second = spark.createDataFrame([(2, text + " lambda")],
+                                   "doc_id long, text string")
+    store = str(tmp_path / "store")
+    kw = dict(_P, num_hashes=32, bands=8, compact_every=2)
+    assert minhash_increment(spark, first, store, **kw).count() == 0
+    got = minhash_increment(spark, second, store, **kw).collect()
+    assert [(r["id_a"], r["id_b"]) for r in got] == [(1, 2)]

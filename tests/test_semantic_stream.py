@@ -120,8 +120,8 @@ def test_semantic_stream_retention_and_compaction(spark, fixture, tmp_path):
 
     from anomalyzer_spark.streaming import (run_semantic_stream_on_dir,
                                             semantic_pairs_store)
-    from anomalyzer_spark.streaming.minhash_stream import (_latest_gen,
-                                                           _live_batch_ids)
+    from anomalyzer_spark.streaming._store import (latest_gen,
+                                                   live_batch_ids)
 
     e, cents = fixture
     sdir = str(tmp_path / "in")
@@ -135,12 +135,12 @@ def test_semantic_stream_retention_and_compaction(spark, fixture, tmp_path):
     min_live = K - H
 
     for name in ("vectors", "sem_pairs"):
-        live = _live_batch_ids(f"{store}/{name}")
+        live = live_batch_ids(store, name)
         assert all(b >= min_live for b in live), (name, live)
         assert len(live) < C, (name, live)
         gens = glob.glob(f"{store}/compacted/{name}/gen=*")
         assert len(gens) == 1, gens
-        gen_path, folded = _latest_gen(f"{store}/compacted/{name}")
+        gen_path, folded = latest_gen(store, name)
         assert gen_path is not None and folded == K - 1
 
     surv = spark.read.parquet(f"{store}/compacted/vectors/gen={K-1}")

@@ -672,8 +672,8 @@ def test_minhash_stream_retention_and_compaction(spark, sf_dir, tmp_path):
     from anomalyzer_spark.sources import load_table
     from anomalyzer_spark.streaming import (
         minhash_pairs_store, run_minhash_stream_on_dir)
-    from anomalyzer_spark.streaming.minhash_stream import (
-        _latest_gen, _live_batch_ids)
+    from anomalyzer_spark.streaming._store import (
+        latest_gen, live_batch_ids)
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     sdir = str(tmp_path / "mh_ret_in")
@@ -687,7 +687,7 @@ def test_minhash_stream_retention_and_compaction(spark, sf_dir, tmp_path):
     min_live = K - H  # last batch_id is K-1; horizon keeps ids >= K-H
 
     for name in ("buckets", "shingles", "pairs"):
-        live = _live_batch_ids(f"{store}/{name}")
+        live = live_batch_ids(store, name)
         # (a) nothing older than the horizon survives as live state
         assert all(b >= min_live for b in live), (name, live)
         # (b) bounded: compaction at batch K-1 folded everything ≤ K-1,
@@ -695,7 +695,7 @@ def test_minhash_stream_retention_and_compaction(spark, sf_dir, tmp_path):
         assert len(live) < C, (name, live)
         gens = glob.glob(f"{store}/compacted/{name}/gen=*")
         assert len(gens) == 1, gens
-        gen_path, folded = _latest_gen(f"{store}/compacted/{name}")
+        gen_path, folded = latest_gen(store, name)
         assert gen_path is not None and folded == K - 1
 
     # eviction actually happened: the surviving corpus is a strict subset
