@@ -11,9 +11,13 @@ Deviations from the reference (documented, deliberate):
     ``lower_bound=None`` means "one-sided fence"; a test returning NULL means
     "not applicable / insufficient data" and is skipped by the combiner.
   * ``seed`` is new: the reference uses the unseeded global RNG for its
-    permutation tests (govector ``Shuffle``); we derive a per-key seed from
-    ``crc32(key)`` XOR this value so results are reproducible and the NumPy
-    oracle and the Spark kernel agree bit-for-bit.
+    permutation tests (govector ``Shuffle``). Under the default hash spec
+    (``perm_spec="hash"``) replicate r of a key's permutation is the
+    argsort of ``md5(f"{seed}|{key}|{test_id}|{r}|{j}")`` over positions
+    j (oracle.perm_matrix), so results are reproducible and the NumPy
+    oracle, the Spark kernel and the DuckDB SQL oracle agree bit-for-bit.
+  * ``perm_count`` must be at least 0; 0 selects the reference's default
+    of 500 (anomalyze.go:77-81), a negative count is rejected.
 """
 
 from __future__ import annotations
@@ -42,11 +46,12 @@ class AnomalyzerConf:
     #: permutation stream spec for the Monte-Carlo tests (ours; the
     #: reference uses an unseeded global RNG). "hash" = md5-argsort per
     #: position (SURVEY §2.6.9): engine-portable, value-hash oracle-able
-    #: in DuckDB SQL, ~7 ms/key — the correctness-contract default.
+    #: in DuckDB SQL — the correctness-contract default.
     #: "fast" = one md5 per (key, test) seeding a vectorized counter RNG
-    #: (NumPy Philox): same determinism and statistical validity, ~8×
-    #: the throughput at 100k keys (tools/scale_sweep.py, BASELINE.md), but
-    #: NOT reproducible in SQL — use for production scale, not oracles.
+    #: (NumPy Philox): same determinism and statistical validity, but NOT
+    #: reproducible in SQL — use for production scale, not oracles. Batch
+    #: kernel CPU per key at the defaults (one ks test, 4-core x86-64
+    #: host): ~0.7 ms "hash", ~0.2 ms "fast".
     perm_spec: str = "hash"
     reference_size: int = field(init=False)
 
@@ -81,6 +86,10 @@ class AnomalyzerConf:
                     f"UpperBound ({self.upper_bound}) was lower than the LowerBound ({lb})"
                 )
 
+        if self.perm_count < 0:
+            raise ValueError(
+                f"perm_count must be at least 0, got {self.perm_count} "
+                "(0 selects the default of 500)")
         if {"highrank", "lowrank", "ks", "diff"} & set(methods):
             if self.perm_count == 0:  # anomalyze.go:77-81
                 object.__setattr__(self, "perm_count", 500)

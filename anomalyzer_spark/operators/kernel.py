@@ -3,10 +3,16 @@
 The four permutation-based tests (diff, highrank, lowrank, bootstrap-ks —
 /root/reference/algorithms.go:105-205, 290-309) are not expressible as
 closed-form SQL, so they run as ONE Arrow-batched ``pandas_udf`` over the
-per-key tail-window array. The per-key payload is tiny (act+ref points,
-default perm_count=500), so kernel cost is O(perm_count · n log n) ≈
-microseconds per key; parallelism comes from the number of keys — the
-100 TB axis (SURVEY.md §2.5, §4.3).
+per-key tail-window array. Under the default hash spec a key costs
+``perm_count · n`` md5 digests per test (2,500 at the reference defaults)
+plus a (perm_count, n) argsort, so the work is set by how many NumPy calls
+that takes, not by arithmetic. The kernel therefore groups each Arrow
+batch's keys by window length and runs every test once per BLOCK of
+equal-length keys (``oracle.mc_block``): one digest pass, one argsort and
+one vectorized test per block instead of per key. Window guards depend on
+the length alone, so a group whose tests all return NA is never digested.
+Parallelism comes from the number of keys — the 100 TB axis (SURVEY.md
+§2.5, §4.3).
 
 The kernel shares its math with the NumPy oracle (``anomalyzer_spark.oracle``)
 — oracle and engine are literally the same code, keyed identically by the
@@ -35,6 +41,13 @@ from ..config import AnomalyzerConf
 
 MC_METHODS = ("diff", "highrank", "lowrank", "ks")
 
+#: digest rows (keys × tests × perm_count × n) per block of equal-length
+#: keys. The round loop's per-call NumPy overhead is amortized by this
+#: size (14 keys at perm_count=500, n=5, one test), and the bound keeps a
+#: block's (keys, perm_count, n) intermediates cache-sized for long
+#: windows.
+DIGEST_BUDGET = 36_000
+
 _RESULT_TYPE = StructType(
     [StructField(m, DoubleType(), nullable=True) for m in MC_METHODS]
 )
@@ -53,22 +66,32 @@ def mc_probs_udf(conf: AnomalyzerConf, methods: tuple[str, ...]):
     @F.pandas_udf(_RESULT_TYPE)
     def _kernel(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.DataFrame]:
         for vecs, keys in it:
-            out = {m: [] for m in MC_METHODS}
-            for vec, key in zip(vecs, keys):
-                v = np.asarray(vec, dtype=np.float64)
-                k = str(key)
-                # all requested tests' permutation matrices in ONE
-                # vectorized md5 batch — the md5 loop was ~65% of kernel
-                # CPU; LazyPerms defers the batch until the first test
-                # passes its window guard, so too-short vectors stay
-                # digest-free (oracle.perms_for_tests / LazyPerms)
-                perms = oracle.LazyPerms(conf, k, want, len(v))
-                for m in MC_METHODS:
-                    out[m].append(oracle.method_prob(m, v, conf, k, perms)
-                                  if m in want else None)
-            yield pd.DataFrame(out, dtype="float64")
+            yield pd.DataFrame(_batch_probs(conf, want, list(vecs),
+                                            [str(k) for k in keys]))
 
     return _kernel
+
+
+def _batch_probs(conf: AnomalyzerConf, want: tuple[str, ...],
+                 vecs: list, keys: list[str]) -> dict[str, np.ndarray]:
+    """MC probs of one Arrow batch, NaN (→ NULL) where a test is not
+    requested or returns NA: keys grouped by window length, each group
+    cut into blocks of at most DIGEST_BUDGET digest rows."""
+    out = {m: np.full(len(vecs), np.nan) for m in MC_METHODS}
+    lens = np.array([len(v) for v in vecs], dtype=np.int64)
+    for n in np.unique(lens).tolist():
+        tests = tuple(m for m in want if oracle.mc_window(m, n, conf))
+        if not tests:
+            continue
+        rows = np.flatnonzero(lens == n)
+        per = max(1, DIGEST_BUDGET // (len(tests) * conf.perm_count * n))
+        for lo in range(0, len(rows), per):
+            blk = rows[lo : lo + per]
+            V = np.array([vecs[i] for i in blk], dtype=np.float64)
+            probs = oracle.mc_block(V, conf, [keys[i] for i in blk], tests)
+            for m, p in probs.items():
+                out[m][blk] = p
+    return out
 
 
 def key_str_col(key_cols: list[str]) -> Column:

@@ -4,8 +4,9 @@ Every statistical test of the reference (lytics/anomalyzer) is reimplemented
 here, faithful to the Go code at /root/reference/algorithms.go and
 anomalyze.go, including the quirks catalogued in SURVEY.md §2.6. This module
 is the single source of truth for semantics: the Spark kernel
-(operators/kernel.py) imports these functions and runs them per key, and the
-test suite cross-checks the pure-column Spark expressions against them.
+(operators/kernel.py) runs the Monte-Carlo tests from here over blocks of
+equal-length keys (``mc_block``), and the test suite cross-checks the
+pure-column Spark expressions against them.
 
 Pinned govector semantics (the dep is not vendored in the reference tree;
 SURVEY.md §7.4 requires pinning):
@@ -34,13 +35,15 @@ selected by ``AnomalyzerConf.perm_spec``:
   driver's DuckDB gate verify the Monte-Carlo tests end-to-end.
 * ``"fast"`` (production scale): one md5 per (key, test) seeds a
   counter-based Philox generator that draws all permutations vectorized —
-  same determinism, ~8× the throughput at 100k keys (BASELINE.md round-4
-  sweep), not SQL-expressible (``perm_matrix_fast``).
+  same determinism, ~3.5× less batch-kernel CPU per key than the hash
+  spec at the defaults (0.2 vs 0.7 ms on a 4-core x86-64 host), not
+  SQL-expressible (``perm_matrix_fast``).
 """
 
 from __future__ import annotations
 
 import hashlib
+from functools import partial
 
 import numpy as np
 
@@ -66,16 +69,23 @@ def extract_windows(v: np.ndarray, ref_size: int, active_size: int, min_ref_size
 
 
 def rank(v: np.ndarray) -> np.ndarray:
-    """0-based min-rank (see module docstring)."""
-    s = np.sort(v)
-    return np.searchsorted(s, v, side="left").astype(np.float64)
+    """0-based min-rank along the last axis (see module docstring):
+    ``searchsorted(sort(v), v, side="left")`` per row. NumPy sorts NaN
+    last, so a NaN ranks after every number."""
+    v = np.asarray(v)
+    nan = np.isnan(v)
+    return np.where(nan, (~nan).sum(axis=-1, keepdims=True),
+                    _rank_rows(v))
 
 
 def _rank_rows(m: np.ndarray) -> np.ndarray:
-    """Row-wise 0-based min-rank for a (P, n) matrix, vectorized."""
-    s = np.sort(m, axis=1)
-    # searchsorted has no batched form; count strictly-smaller via broadcast.
-    return (s[:, None, :] < m[:, :, None]).sum(axis=2).astype(np.float64)
+    """Row-wise 0-based min-rank over the last axis by counting the
+    strictly smaller entries. A NaN ranks 0 here, unlike in ``rank``: the
+    permutation side of the diff test counts this way."""
+    out = np.zeros(m.shape)
+    for j in range(m.shape[-1]):
+        out += m[..., j, None] < m
+    return out
 
 
 def ecdf_at(sample: np.ndarray, q: float) -> float:
@@ -84,9 +94,10 @@ def ecdf_at(sample: np.ndarray, q: float) -> float:
 
 
 def rel_diff(v: np.ndarray) -> np.ndarray:
-    """(x[i+1] - x[i]) / x[i] (govector RelDiff as used at algorithms.go:107)."""
+    """(x[i+1] - x[i]) / x[i] along the last axis (govector RelDiff as used
+    at algorithms.go:107)."""
     with np.errstate(divide="ignore", invalid="ignore"):
-        return (v[1:] - v[:-1]) / v[:-1]
+        return (v[..., 1:] - v[..., :-1]) / v[..., :-1]
 
 
 def diff(v: np.ndarray) -> np.ndarray:
@@ -151,24 +162,58 @@ def cdf_test(v: np.ndarray, conf: AnomalyzerConf) -> float | None:
 
 def ks_stat(v: np.ndarray, conf: AnomalyzerConf) -> float | None:
     """algorithms.go:255-288 — grid-interpolated two-sample KS statistic."""
-    w = extract_windows(v, conf.reference_size, conf.active_size, conf.active_size)
+    w = mc_window("ks", len(v), conf)
     if w is None:
         return None
-    reference, active = w
-    n1, n2 = len(reference), len(active)
-    if n1 % n2 != 0:  # quirk §2.6.6
+    return float(_ks_observed(np.asarray(v)[None], *w)[0])
+
+
+def _ks_observed(V: np.ndarray, n1: int, n2: int) -> np.ndarray:
+    """``ks_stat`` of each row of V over its last n1 + n2 points. The grid
+    ends are Python's ``min``/``max`` of the two windows' extremes, and
+    the CDF counts follow ``np.searchsorted(side="right")``, which sorts a
+    NaN grid point after every value (the per-key spec's NaN handling)."""
+    n = V.shape[-1]
+    ref, act = V[..., n - n2 - n1 : n - n2], V[..., n - n2 :]
+    rmin, amin, rmax, amax = ref.min(-1), act.min(-1), ref.max(-1), act.max(-1)
+    return _ks_rows(ref, act, np.where(amin < rmin, amin, rmin),
+                    np.where(amax > rmax, amax, rmax), nan_grid_counts_all=True)
+
+
+def _ks_rows(ref: np.ndarray, act: np.ndarray, mn: np.ndarray,
+             mx: np.ndarray, *, nan_grid_counts_all: bool = False) -> np.ndarray:
+    """KS statistic per row over the last axis: the largest gap between the
+    two empirical CDFs on n1 + n2 points evenly spaced from mn to mx
+    (algorithms.go:255-288, ``interpolate`` at 312-323)."""
+    n1, n2 = ref.shape[-1], act.shape[-1]
+    g = n1 + n2
+    step = (mx - mn) / (g - 1)
+    grid = mn[..., None] + step[..., None] * np.arange(g, dtype=np.float64)
+    ref_le = sum(ref[..., j, None] <= grid for j in range(n1))
+    act_le = sum(act[..., j, None] <= grid for j in range(n2))
+    if nan_grid_counts_all:
+        nan = np.isnan(grid)
+        ref_le = np.where(nan, n1, ref_le)
+        act_le = np.where(nan, n2, act_le)
+    return np.max(np.abs(act_le / n2 - ref_le / n1), axis=-1)
+
+
+def mc_window(test: str, n: int, conf: AnomalyzerConf) -> tuple[int, int] | None:
+    """(reference, active) window lengths of an MC test on an n-point
+    vector, or None when the test returns NA before drawing a single
+    permutation. The answer depends on n alone, so it holds for a whole
+    block of equal-length keys: callers check it first and digest only
+    the keys and tests that pass."""
+    ref = conf.reference_size
+    if test == "diff":  # windows over the n - 1 relative differences
+        n, ref = n - 1, ref - 1
+    act = min(conf.active_size, n)
+    ref = min(ref, n - act)
+    if ref < conf.active_size:
         return None
-    mn = min(reference.min(), active.min())
-    mx = max(reference.max(), active.max())
-    grid = _interpolate(mn, mx, n1 + n2)
-    ref_cdf = np.searchsorted(np.sort(reference), grid, side="right") / n1
-    act_cdf = np.searchsorted(np.sort(active), grid, side="right") / n2
-    return float(np.max(np.abs(act_cdf - ref_cdf)))
-
-
-def _interpolate(mn: float, mx: float, npoints: int) -> np.ndarray:
-    step = (mx - mn) / (npoints - 1)
-    return mn + step * np.arange(npoints, dtype=np.float64)
+    if test == "ks" and ref % act != 0:  # quirk §2.6.6
+        return None
+    return ref, act
 
 
 def perm_matrix(
@@ -181,29 +226,41 @@ def perm_matrix(
     Spark passes ``concat_ws('|', *keys)``, DuckDB builds the identical
     preimage with ``concat``.
     """
-    return perm_matrices(conf_seed, key, (test,), perm_count, n)[test]
+    return perm_matrices(conf_seed, [key], (test,), perm_count, n)[test][0]
 
 
 def perm_matrices(
-    conf_seed: int, key: str, tests: tuple[str, ...], perm_count: int, n: int
+    conf_seed: int, keys: list[str], tests: tuple[str, ...],
+    perm_count: int, n: int,
 ) -> dict[str, np.ndarray]:
-    """Permutation matrices for SEVERAL tests of one key in one vectorized
-    md5 pass (_md5vec.perm_digest_batch) — the per-digest cost drops ~3×
-    when the whole perm_count·n·len(tests) digest batch amortizes the 64
-    vectorized MD5 rounds, which is why the MC kernel asks for all its
-    tests at once. Results are byte-identical to the hashlib loop
-    (tests/test_oracle_properties.py pins both paths): lexicographic order
-    of the fixed-width lowercase hex digest == byte order of the raw
-    16-byte digest == numeric order of the 128-bit integer, and 'stable'
-    pins tie order to ascending j (matching DuckDB's list_sort over
-    (hash, j) structs; md5 ties never occur in practice anyway)."""
-    prefixes = [
-        f"{conf_seed}|{key}|{_TEST_ID[t]}|".encode() for t in tests]
+    """Stacked (len(keys), perm_count, n) permutation matrices of several
+    tests for a block of equal-length keys, from ONE vectorized md5 pass
+    over every (test, key) prefix (_md5vec.perm_digest_batch). Results
+    are byte-identical to the hashlib loop (tests/test_oracle_properties.py
+    pins both paths): lexicographic order of the fixed-width lowercase hex
+    digest == byte order of the raw 16-byte digest == numeric order of the
+    128-bit integer, and the stable sort pins tie order to ascending j
+    (matching DuckDB's list_sort over (hash, j) structs; md5 ties never
+    occur in practice anyway)."""
+    prefixes = [f"{conf_seed}|{k}|{_TEST_ID[t]}|".encode()
+                for t in tests for k in keys]
     digests = _md5vec.perm_digest_batch(prefixes, perm_count, n)
-    return {
-        t: np.argsort(digests[i], axis=1, kind="stable")
-        for i, t in enumerate(tests)
-    }
+    order = digest_order(digests).reshape(len(tests), len(keys), perm_count, n)
+    return dict(zip(tests, order))
+
+
+def digest_order(digests: np.ndarray) -> np.ndarray:
+    """Stable argsort of 'S16' digests along the last axis, in byte order.
+    The first 8 bytes read as a big-endian uint64 give that order wherever
+    they differ; only rows where two digests tie on them are sorted again
+    on all 16 bytes."""
+    hi = np.ascontiguousarray(digests).view(">u8")[..., ::2].astype(np.uint64)
+    order = np.argsort(hi, axis=-1, kind="stable")
+    ranked = np.take_along_axis(hi, order, axis=-1)
+    tie = (ranked[..., 1:] == ranked[..., :-1]).any(axis=-1)
+    if tie.any():
+        order[tie] = np.argsort(digests[tie], axis=-1, kind="stable")
+    return order
 
 
 def perm_matrix_fast(
@@ -217,8 +274,9 @@ def perm_matrix_fast(
     the hash spec and statistically uniform over S_n, but NOT expressible
     in SQL — correctness-contract queries use ``perm_matrix`` ("hash");
     this path exists because the hash spec costs ~perm_count·n md5 calls
-    per key (~7 ms), which dominates Monte-Carlo detect at 100k+ key
-    cardinality (tools/scale_sweep.py measures both).
+    per key and test (~0.7 ms of CPU at the defaults), which dominates
+    Monte-Carlo detect at 100k+ key cardinality (tools/scale_sweep.py
+    measures both).
 
     VERSION PIN: determinism rides on NumPy's ``Generator.permuted`` +
     Philox stream, which NEP 19 only guarantees within a NumPy version. A
@@ -238,138 +296,121 @@ def perm_matrix_fast(
         np.tile(np.arange(n, dtype=np.int64), (perm_count, 1)), axis=1)
 
 
-def perms_for(
-    conf: AnomalyzerConf, key: str, test: str, n: int
-) -> np.ndarray:
-    """Permutation matrix per the conf's ``perm_spec`` dispatch."""
-    fn = perm_matrix if conf.perm_spec == "hash" else perm_matrix_fast
-    return fn(conf.seed, key, test, conf.perm_count, n)
-
-
-def perms_for_tests(
-    conf: AnomalyzerConf, key: str, tests: tuple[str, ...], n: int
+def perm_block(
+    conf: AnomalyzerConf, keys: list[str], tests: tuple[str, ...], n: int
 ) -> dict[str, np.ndarray]:
-    """All requested tests' permutation matrices for one key — the hash
-    spec computes them in one vectorized md5 batch (the MC kernel's hot
-    path); the fast spec is already one Philox draw per test."""
+    """Stacked (len(keys), perm_count, n) permutation matrices per test by
+    the conf's ``perm_spec``: the hash spec digests the whole block in one
+    pass; the fast spec is one Philox draw per (key, test)."""
     if conf.perm_spec == "hash":
-        return perm_matrices(conf.seed, key, tests, conf.perm_count, n)
-    return {t: perm_matrix_fast(conf.seed, key, t, conf.perm_count, n)
-            for t in tests}
+        return perm_matrices(conf.seed, keys, tests, conf.perm_count, n)
+    return {t: np.stack([perm_matrix_fast(conf.seed, k, t, conf.perm_count, n)
+                         for k in keys]) for t in tests}
 
 
-class LazyPerms:
-    """Batched-but-LAZY permutation matrices for one key.
+# Each MC test below takes a block of K keys of one length n: V (K, n)
+# values and perms (K, perm_count, n) permutation indices. The caller has
+# checked the test's mc_window for n. The per-key forms further down are
+# K=1 calls into them.
 
-    The MC tests early-exit (return None, zero digest work) on vectors too
-    short for their windows — so the batch must not be computed before
-    those guards run. Tests index this object AFTER their guards; the
-    first access computes ALL requested tests in one vectorized pass
-    (keys where one test's window fits almost always fit the others'),
-    later accesses are dict lookups. A key whose every test early-exits
-    never pays a single digest.
-    """
-
-    __slots__ = ("_conf", "_key", "_tests", "_n", "_mats")
-
-    def __init__(self, conf: AnomalyzerConf, key: str,
-                 tests: tuple[str, ...], n: int) -> None:
-        self._conf, self._key, self._tests, self._n = conf, key, tests, n
-        self._mats: dict[str, np.ndarray] | None = None
-
-    def __getitem__(self, test: str) -> np.ndarray:
-        if self._mats is None:
-            self._mats = perms_for_tests(
-                self._conf, self._key, self._tests, self._n)
-        return self._mats[test]
-
-
-def rank_test(v: np.ndarray, conf: AnomalyzerConf, key: str, *,
-              reverse: bool, perms=None) -> float | None:
-    """highrank/lowrank (algorithms.go:142-205).
+def rank_block(V: np.ndarray, conf: AnomalyzerConf, perms: np.ndarray, *,
+               reverse: bool) -> np.ndarray:
+    """highrank/lowrank (algorithms.go:142-205), (K,) probs.
 
     p = fraction of permutations whose active rank-sum is below (highrank)
     or above (lowrank) the observed active rank-sum. Shuffles the ENTIRE
     retained vector (quirk §2.6.2) — which, under our always-truncate spec,
     is exactly the act+ref window.
     """
-    ranks = rank(v)
-    w = extract_windows(ranks, conf.reference_size, conf.active_size, conf.active_size)
-    if w is None:
-        return None
-    _, active = w
-    active_sum = float(active.sum())
-    act_n = len(active)
-
-    # rank(perm(v)) == perm(rank(v)): reuse the observed ranks. ``perms``
-    # (the kernel's lazy batch) is only indexed AFTER the window guard —
-    # short vectors must stay digest-free.
-    test = "lowrank" if reverse else "highrank"
-    idx = perms[test] if perms is not None else perms_for(
-        conf, key, test, len(v))
-    perm_sums = ranks[idx[:, -act_n:]].sum(axis=1)
+    _, act = mc_window("highrank", V.shape[-1], conf)
+    ranks = rank(V)
+    active_sum = ranks[:, -act:].sum(axis=1)
+    # rank(perm(v)) == perm(rank(v)): reuse the observed ranks
+    perm_sums = np.take_along_axis(
+        ranks[:, None, :], perms[:, :, -act:], axis=2).sum(axis=2)
     if reverse:
-        significant = int((perm_sums > active_sum).sum())
+        significant = (perm_sums > active_sum[:, None]).sum(axis=1)
     else:
-        significant = int((perm_sums < active_sum).sum())
+        significant = (perm_sums < active_sum[:, None]).sum(axis=1)
     return significant / conf.perm_count
 
 
-def diff_test(v: np.ndarray, conf: AnomalyzerConf, key: str,
-              perms=None) -> float | None:
-    """algorithms.go:105-140 — permutation test on ranks of |RelDiff|.
+def diff_block(V: np.ndarray, conf: AnomalyzerConf,
+               perms: np.ndarray) -> np.ndarray:
+    """algorithms.go:105-140 — permutation test on ranks of |RelDiff|,
+    (K,) probs.
 
     Each replicate re-shuffles the RAW vector then recomputes reldiff+rank
     (differencing is not permutation-equivariant, so no rank-reuse shortcut).
     """
-    with np.errstate(divide="ignore", invalid="ignore"):
-        obs = rank(np.abs(rel_diff(v)))
-    w = extract_windows(obs, conf.reference_size - 1, conf.active_size, conf.active_size)
-    if w is None:
-        return None
-    _, active = w
-    active_sum = float(active.sum())
-    act_n = len(active)
-
-    idx = perms["diff"] if perms is not None else perms_for(
-        conf, key, "diff", len(v))
-    perm = v[idx]  # (P, n)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        d = np.abs((perm[:, 1:] - perm[:, :-1]) / perm[:, :-1])
-    perm_ranks = _rank_rows(d)
-    perm_sums = perm_ranks[:, -act_n:].sum(axis=1)
-    significant = int((perm_sums < active_sum).sum())
+    _, act = mc_window("diff", V.shape[-1], conf)
+    active_sum = rank(np.abs(rel_diff(V)))[:, -act:].sum(axis=1)
+    perm = np.take_along_axis(V[:, None, :], perms, axis=2)
+    perm_sums = _rank_rows(np.abs(rel_diff(perm)))[..., -act:].sum(axis=-1)
+    significant = (perm_sums < active_sum[:, None]).sum(axis=1)
     return significant / conf.perm_count
+
+
+def ks_block(V: np.ndarray, conf: AnomalyzerConf,
+             perms: np.ndarray) -> np.ndarray:
+    """algorithms.go:290-309 — p = fraction of permutations with KS <
+    observed, (K,) probs."""
+    n = V.shape[-1]
+    n1, n2 = mc_window("ks", n, conf)
+    obs = _ks_observed(V, n1, n2)
+    win = np.take_along_axis(V[:, None, :], perms[:, :, n - n1 - n2 :], axis=2)
+    ks = _ks_rows(win[..., :n1], win[..., n1:], win.min(axis=-1),
+                  win.max(axis=-1))
+    significant = (ks < obs[:, None]).sum(axis=1)
+    return significant / conf.perm_count
+
+
+_BLOCK_TESTS = {
+    "diff": diff_block,
+    "highrank": partial(rank_block, reverse=False),
+    "lowrank": partial(rank_block, reverse=True),
+    "ks": ks_block,
+}
+
+
+def mc_block(V: np.ndarray, conf: AnomalyzerConf, keys: list[str],
+             tests: tuple[str, ...], perms=None) -> dict[str, np.ndarray]:
+    """(K,) probs of each MC test for a block of K keys of one length:
+    V (K, n) values, ``keys`` their '|'-joined key strings. Every test
+    must pass its mc_window for n. ``perms`` maps a test to stacked
+    (K, perm_count, n) permutations; by default one perm_block pass draws
+    them for all tests at once."""
+    if perms is None:
+        perms = perm_block(conf, keys, tests, V.shape[-1])
+    return {t: _BLOCK_TESTS[t](V, conf, perms[t]) for t in tests}
+
+
+def _mc_test(test: str, v: np.ndarray, conf: AnomalyzerConf, key: str,
+             perms) -> float | None:
+    v = np.asarray(v)
+    if mc_window(test, len(v), conf) is None:
+        return None
+    stacked = None if perms is None else {test: np.asarray(perms[test])[None]}
+    return float(mc_block(v[None], conf, [key], (test,), stacked)[test][0])
+
+
+def rank_test(v: np.ndarray, conf: AnomalyzerConf, key: str, *,
+              reverse: bool, perms=None) -> float | None:
+    """highrank/lowrank of one key (``rank_block``). ``perms`` optionally
+    maps the test to this key's (perm_count, n) permutation matrix."""
+    return _mc_test("lowrank" if reverse else "highrank", v, conf, key, perms)
+
+
+def diff_test(v: np.ndarray, conf: AnomalyzerConf, key: str,
+              perms=None) -> float | None:
+    """diff test of one key (``diff_block``)."""
+    return _mc_test("diff", v, conf, key, perms)
 
 
 def bootstrap_ks_test(v: np.ndarray, conf: AnomalyzerConf, key: str,
                       perms=None) -> float | None:
-    """algorithms.go:290-309 — p = fraction of permutations with KS < observed."""
-    obs = ks_stat(v, conf)
-    if obs is None:
-        return None
-    n = len(v)
-    act = min(conf.active_size, n)
-    refs = min(conf.reference_size, n - act)
-    n1, n2 = refs, act
-
-    idx = perms["ks"] if perms is not None else perms_for(
-        conf, key, "ks", n)
-    perm = v[idx][:, n - act - refs :]  # windows of each permutation
-    ref = perm[:, :n1]
-    active = perm[:, n1:]
-    mn = perm.min(axis=1)
-    mx = perm.max(axis=1)
-    g = n1 + n2
-    step = (mx - mn) / (g - 1)
-    grid = mn[:, None] + step[:, None] * np.arange(g)[None, :]  # (P, g)
-    sref = np.sort(ref, axis=1)
-    sact = np.sort(active, axis=1)
-    ref_cdf = (sref[:, None, :] <= grid[:, :, None]).sum(axis=2) / n1
-    act_cdf = (sact[:, None, :] <= grid[:, :, None]).sum(axis=2) / n2
-    ks = np.max(np.abs(act_cdf - ref_cdf), axis=1)
-    significant = int((ks < obs).sum())
-    return significant / conf.perm_count
+    """bootstrap KS test of one key (``ks_block``)."""
+    return _mc_test("ks", v, conf, key, perms)
 
 
 # ------------------------------------------------------------- combiner ----
@@ -378,9 +419,10 @@ def bootstrap_ks_test(v: np.ndarray, conf: AnomalyzerConf, key: str,
 def method_prob(method: str, v: np.ndarray, conf: AnomalyzerConf,
                 key: str = "", perms=None) -> float | None:
     """Raw (un-capped) prob of one configured method; None is the
-    reference's NA. The one method→test mapping, shared by
-    ``eval_by_test`` and the batch MC kernel (operators/kernel.py, which
-    passes its lazily batched ``perms``)."""
+    reference's NA. The one method→test mapping of ``eval_by_test``; the
+    batch MC kernel (operators/kernel.py) calls ``mc_block`` directly.
+    ``perms`` optionally maps an MC test to this key's (perm_count, n)
+    permutation matrix."""
     if method == "magnitude":
         return magnitude_test(v, conf)
     if method == "fence":

@@ -8,9 +8,15 @@ for the pandas kernels).
 from __future__ import annotations
 
 import contextlib
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+#: the package logger: every fallback that would otherwise be silent
+#: (a measurement that could not be taken, a default used in its place)
+#: is logged here
+LOG = logging.getLogger("anomalyzer_spark")
 
 
 def get_spark(app: str = "anomalyzer-spark", shuffle_partitions: int | None = None):
@@ -101,6 +107,8 @@ def compact_checkpoint(df, *, bytes_per_partition: int | None = None):
             if int(info.id()) in new_ids:
                 size += int(info.memSize()) + int(info.diskSize())
     except Exception:  # never let sizing break the query path
+        LOG.warning("compact_checkpoint: checkpoint size unreadable; "
+                    "keeping the inherited partitioning", exc_info=True)
         return out
     cur = out.rdd.getNumPartitions()
     n = max(1, min(cur, -(-size // max(1, bytes_per_partition))))

@@ -24,6 +24,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import LOG
+
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -92,8 +94,11 @@ def spread_partitions(
             bytes_per_partition = _SPREAD_BYTES_DEFAULT
     try:
         size = _input_bytes(path)
-    except OSError:
-        return spark.sparkContext.defaultParallelism
+    except OSError as e:
+        n = spark.sparkContext.defaultParallelism
+        LOG.warning("spread_partitions: cannot size %s (%s); using "
+                    "defaultParallelism=%d", path, e, n)
+        return n
     n = -(-size // max(1, bytes_per_partition))
     return max(1, min(spark.sparkContext.defaultParallelism, int(n)))
 

@@ -46,6 +46,13 @@ def test_perm_count_default_restored():
     assert c.perm_count == 500
 
 
+def test_negative_perm_count_rejected():
+    """A negative count used to pass validation and fail later inside the
+    MC test (a zero-size reduction in a Spark Python worker)."""
+    with pytest.raises(ValueError, match="perm_count"):
+        AnomalyzerConf(methods=("magnitude", "ks"), perm_count=-5)
+
+
 def test_sensitivity_default_restored():
     c = AnomalyzerConf(active_size=2, methods=("magnitude",), sensitivity=0.0)
     assert c.sensitivity == 0.1

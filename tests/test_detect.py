@@ -191,3 +191,89 @@ def test_detect_skew_salts_splits_hot_key_same_result(spark):
     # to skew_salts tasks instead of one — and windows by (k, _salt)
     assert re.search(r"Exchange hashpartitioning\(k#\d+, _salt#", salted_plan)
     assert re.search(r"windowspecdefinition\(k#\d+, _salt#", salted_plan)
+
+
+def _mc_parity_rows():
+    """(k1, k2, ts, value) rows: four keys of every length 1..window (10
+    at active_size=2), rounded values so ranks tie, one key with a NULL
+    component and one whose key string needs a two-block md5 preimage."""
+    rng = np.random.default_rng(21)
+    series = [(f"k{n}_{i}", i, n) for n in range(1, 11) for i in range(4)]
+    series += [("nul", None, 10), ("L" * 60, 1, 10)]
+    rows = []
+    for k1, k2, n in series:
+        vals = np.round(rng.normal(3, 1, n), 1)
+        rows.extend((k1, k2, t, float(v)) for t, v in enumerate(vals))
+    return rows
+
+
+def _mc_expected(rows, conf):
+    """oracle.method_prob per key over its last window_size points."""
+    by_key: dict = {}
+    for k1, k2, _, v in rows:  # rows are in ts order per key
+        by_key.setdefault((k1, k2), []).append(v)
+    out = {}
+    for (k1, k2), vals in by_key.items():
+        v = np.asarray(vals[-conf.window_size:])
+        kstr = f"{k1}|{k2}"
+        out[(k1, k2)] = {m: oracle.method_prob(m, v, conf, kstr)
+                         for m in ("diff", "highrank", "lowrank", "ks")}
+    return out
+
+
+@pytest.mark.parametrize("perm_spec", ["hash", "fast"])
+def test_mc_kernel_blocks_match_oracle_exactly(spark, perm_spec):
+    """The batch kernel runs the MC tests over blocks of equal-length keys;
+    with small Arrow batches mixing every window length (lengths where ks
+    is NA by the n1 % n2 quirk but rank is not, and where diff is NA), a
+    NULL key component and a two-block key, every per-test prob equals
+    the per-key oracle bit for bit."""
+    from anomalyzer_spark.session import conf_scope
+
+    conf = AnomalyzerConf(
+        active_size=2, methods=("diff", "highrank", "lowrank", "ks"),
+        perm_count=40, seed=9, perm_spec=perm_spec)
+    rows = _mc_parity_rows()
+    df = spark.createDataFrame(
+        rows, "k1 string, k2 long, ts long, value double")
+    with conf_scope(spark, {
+            "spark.sql.execution.arrow.maxRecordsPerBatch": "8"}):
+        got = {(r["k1"], r["k2"]): r for r in
+               detect_by_test(df, ["k1", "k2"], conf=conf).collect()}
+    exp = _mc_expected(rows, conf)
+    assert set(got) == set(exp)
+    for key, e in exp.items():
+        r = got[key]
+        assert r["prob_diff"] == e["diff"], key
+        assert r["prob_ks"] == e["ks"], key
+        ranks = [p for p in (e["highrank"], e["lowrank"]) if p is not None]
+        assert r["prob_rank"] == (max(ranks) if ranks else None), key
+    # the input covers both NA splits named above
+    assert exp[("k4_0", 0)]["ks"] is not None
+    assert exp[("k4_0", 0)]["diff"] is None
+    assert exp[("k5_0", 0)]["ks"] is None
+    assert exp[("k5_0", 0)]["highrank"] is not None
+
+
+def test_mc_batch_splits_blocks_exactly(monkeypatch):
+    """A digest budget small enough to cut each length group into several
+    blocks (and to leave one key per block) changes no prob."""
+    from anomalyzer_spark.operators import kernel
+
+    conf = AnomalyzerConf(
+        active_size=2, methods=("diff", "highrank", "lowrank", "ks"),
+        perm_count=40, seed=9)
+    rows = _mc_parity_rows()
+    exp = _mc_expected(rows, conf)
+    keys = list(exp)
+    vecs = [[v for k1, k2, _, v in rows if (k1, k2) == key][-conf.window_size:]
+            for key in keys]
+    kstrs = [f"{k1}|{k2}" for k1, k2 in keys]
+    for budget in (kernel.DIGEST_BUDGET, 3000, 1):
+        monkeypatch.setattr(kernel, "DIGEST_BUDGET", budget)
+        got = kernel._batch_probs(conf, kernel.MC_METHODS, vecs, kstrs)
+        for i, key in enumerate(keys):
+            for m in kernel.MC_METHODS:
+                want = exp[key][m]
+                assert (np.isnan(got[m][i]) if want is None
+                        else got[m][i] == want), (budget, key, m)

@@ -818,6 +818,32 @@ def test_compact_checkpoint_derives_partitions_from_bytes(spark):
     assert out2.count() == 4000
 
 
+def test_compact_checkpoint_logs_unreadable_size(spark, monkeypatch, caplog):
+    """When the block manager's storage info cannot be read,
+    compact_checkpoint keeps the inherited partitioning and says so on
+    the package logger."""
+    from anomalyzer_spark.session import compact_checkpoint
+
+    real = spark.sparkContext._jsc
+
+    class NoStorageInfo:
+        def getPersistentRDDs(self):
+            return real.getPersistentRDDs()
+
+        def sc(self):
+            raise RuntimeError("storage info unavailable")
+
+    df = spark.range(0, 400, 1, 4)
+    monkeypatch.setattr(spark.sparkContext, "_jsc", NoStorageInfo())
+    with caplog.at_level("WARNING", logger="anomalyzer_spark"):
+        out = compact_checkpoint(df)
+    monkeypatch.undo()
+    assert out.rdd.getNumPartitions() == 4
+    assert out.count() == 400
+    assert any(r.name == "anomalyzer_spark" and "compact_checkpoint"
+               in r.getMessage() for r in caplog.records)
+
+
 def test_lsh_params_math():
     """collision_prob at the threshold must meet the stated recall for the
     parameters lsh_params returns, and be monotone in similarity."""

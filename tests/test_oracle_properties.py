@@ -245,6 +245,44 @@ def test_md5vec_accepts_overwide_padded_matrix():
     assert (got == want).all()
 
 
+def test_digest_order_equals_bytewise_stable_argsort():
+    """digest_order sorts on the first 8 bytes as a big-endian uint64 and
+    falls back to all 16 bytes only where those tie: digests whose first
+    8 bytes collide (drawn from a 2-value alphabet), full duplicates,
+    high bytes and trailing NUL bytes all order exactly like NumPy's
+    stable argsort of the 'S16' array."""
+    rng = np.random.default_rng(3)
+    raw = rng.integers(0, 256, size=(400, 9, 16), dtype=np.uint8)
+    head = rng.integers(0, 2, size=(400, 9, 1), dtype=np.uint8)
+    raw[:200, :, :8] = head[:200] * np.uint8(0xF0)   # first-word ties
+    raw[:100, :, 8:14] = head[:100] * np.uint8(0x80)  # deeper ties
+    raw[100:150, 4] = raw[100:150, 2]                # full duplicates
+    raw[150:200, :, 15] = 0                          # trailing NULs
+    digests = raw.view("S16")[..., 0]
+    got = oracle.digest_order(digests)
+    want = np.argsort(digests, axis=-1, kind="stable")
+    assert (got == want).all()
+
+
+def test_perm_digest_batch_mixed_prefix_lengths():
+    """One batch over prefixes of 0-70 bytes (every offset mod 4, one-
+    and two-block messages) gives hashlib's digest for every entry."""
+    import hashlib
+
+    from anomalyzer_spark import _md5vec
+
+    rng = np.random.default_rng(4)
+    prefixes = [bytes(rng.integers(32, 127, size=k, dtype=np.uint8))
+                for k in (0, 1, 2, 3, 17, 17, 44, 53, 55, 56, 63, 64, 70)]
+    P, n = 12, 11
+    got = _md5vec.perm_digest_batch(prefixes, P, n)
+    want = np.array([[[hashlib.md5(p + f"{r}|{j}".encode()).digest()
+                       for j in range(n)] for r in range(P)]
+                     for p in prefixes], dtype="S16")
+    assert got.shape == (len(prefixes), P, n)
+    assert (got.view(np.uint8) == want.view(np.uint8)).all()
+
+
 def test_perm_matrix_identical_to_hashlib_loop():
     """The vectorized hash-spec perm matrix equals the original hashlib
     digest loop exactly — same argsort input ordering, same stable ties."""
@@ -264,9 +302,12 @@ def test_perm_matrix_identical_to_hashlib_loop():
 
 
 def test_perm_matrices_batch_equals_single():
-    """perms_for_tests' batched digests equal per-test perm_matrix calls."""
+    """perm_matrices' one digest pass over a block of keys (one of them a
+    two-block preimage) equals per-(key, test) perm_matrix calls."""
     tests = ("diff", "highrank", "lowrank", "ks")
-    batch = oracle.perm_matrices(42, "batchkey", tests, 30, 11)
+    keys = ["batchkey", "k2", "x" * 60]
+    batch = oracle.perm_matrices(42, keys, tests, 30, 11)
     for t in tests:
-        single = oracle.perm_matrix(42, "batchkey", t, 30, 11)
-        assert (batch[t] == single).all(), t
+        for i, k in enumerate(keys):
+            single = oracle.perm_matrix(42, k, t, 30, 11)
+            assert (batch[t][i] == single).all(), (t, k)

@@ -44,10 +44,13 @@ def test_conf_override_and_default(spark, tmp_path):
         spark.conf.unset(SPREAD_BYTES_CONF)
 
 
-def test_missing_path_falls_back_to_parallelism(spark, tmp_path):
+def test_missing_path_falls_back_to_parallelism(spark, tmp_path, caplog):
     missing = str(tmp_path / "nope.parquet")
-    assert spread_partitions(spark, missing) == \
-        spark.sparkContext.defaultParallelism
+    with caplog.at_level("WARNING", logger="anomalyzer_spark"):
+        assert spread_partitions(spark, missing) == \
+            spark.sparkContext.defaultParallelism
+    assert any(r.name == "anomalyzer_spark" and missing in r.getMessage()
+               for r in caplog.records)
 
 
 def test_directory_input_sums_files(spark, tmp_path):
