@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from anomalyzer_spark import AnomalyzerConf, detect, detect_by_test
 from anomalyzer_spark.functions import dedup, similarity, text
 from anomalyzer_spark.operators.asof import asof_join
-from anomalyzer_spark.session import compact_checkpoint
+from anomalyzer_spark.session import materialize
 from anomalyzer_spark.sources import load_table, spread_partitions
 
 # ---------------------------------------------------------------------------
@@ -183,7 +183,7 @@ def q_text_pipeline(spark, sf_dir):
                  F.lit(" A\u030a fin\x7f")).alias("text"))
     # the normalized frame feeds THREE scan legs (chunking + tfidf's two
     # frequency aggregates) — materialize the Arrow NFC stage once
-    # (eager localCheckpoint, the dedup-LSH pattern; measured 2.5→2.0 s
+    # (eager checkpoint, the dedup-LSH pattern; measured 2.5→2.0 s
     # warm at sf0.1, 3× cold, values unchanged). r15 optimization: the
     # checkpoint stores the TOKENIZED form — the three legs consumed
     # only the word_tokens stream, so each used to re-run the tokenizer
@@ -191,9 +191,9 @@ def q_text_pipeline(spark, sf_dir):
     # materialization and the legs window/explode the persisted arrays
     # (tokens_col fast path — identical values by construction).
     from anomalyzer_spark.functions.text import word_tokens as _wt
-    norm = text.normalize_text(planted).select(
-        "doc_id", _wt(F.col("text")).alias("tokens")) \
-        .localCheckpoint(eager=True)
+    norm = materialize(text.normalize_text(planted).select(
+        "doc_id", _wt(F.col("text")).alias("tokens")),
+        reason="text_pipeline.tokens")
     ch = text.chunk_windows(norm, size=24, stride=12, tokens_col="tokens")
     chstats = ch.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_chunks"),
@@ -412,8 +412,8 @@ def q_bm25(spark, sf_dir):
     # feed both the scorer (tokens_col) and the stats aggregate from it
     # — the documented persist-once recipe (tokenize_docs /
     # bm25_corpus_stats), parity-pinned identical to the from-text path.
-    tk = retrieval.tokenize_docs(d.select("doc_id", "text")) \
-        .select("doc_id", "tokens").localCheckpoint(eager=True)
+    tk = materialize(retrieval.tokenize_docs(d.select("doc_id", "text"))
+                     .select("doc_id", "tokens"), reason="bm25.tokens")
     lex = retrieval.bm25_topk(
         tk, q, k=BM25_K, tokens_col="tokens",
         corpus_stats=retrieval.bm25_corpus_stats(tk, tokens_col="tokens"))
@@ -567,7 +567,7 @@ def q_semantic_pairs(spark, sf_dir):
         threshold=SEM_THRESHOLD, n_clusters=IVF_CLUSTERS, centroids=cents)
     # two consumers below (CC edges + the output join): pin the pair job
     # to one run — duplicate_groups checkpoints only its own edge frame.
-    pairs = pairs.localCheckpoint(eager=True)
+    pairs = materialize(pairs, reason="semantic_pairs.pairs")
     groups = dedup.duplicate_groups(
         e.select("vec_id"), pairs, "vec_id").where(F.col("group_size") > 1)
     return (
@@ -607,16 +607,15 @@ def q_data_pipeline(spark, sf_dir):
         ~F.col("is_duplicate")).select("doc_id")
     stats = text.text_stats(d, "text", "doc_id")
     langs = text.lang_id(d, "text", "doc_id").select("doc_id", "lang_pred")
-    surv = (
+    # surv feeds FIVE legs (per-lang agg, sample counts, vocab, LM
+    # training, LM scoring) — materialize the join/filter pyramid once
+    # (same trade as text_pipeline's NFC checkpoint)
+    surv = materialize(
         d.join(keep, "doc_id", "left_semi")
         .join(stats, "doc_id")
         .join(langs, "doc_id")
-        .where(F.col("quality_score") >= 0.4)
-        # surv feeds FIVE legs (per-lang agg, sample counts, vocab, LM
-        # training, LM scoring) — materialize the join/filter pyramid
-        # once (same trade as text_pipeline's NFC checkpoint)
-        .localCheckpoint(eager=True)
-    )
+        .where(F.col("quality_score") >= 0.4),
+        reason="data_pipeline.survivors")
     per_lang = surv.groupBy("lang_pred").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.col("n_tokens")).alias("total_tokens"),
@@ -693,12 +692,12 @@ def q_data_pipeline(spark, sf_dir):
     # the encode (Arrow/Python) and the packed chunks each feed TWO
     # legs (stats + round-trip) — materialize once each, so the BPE
     # pass and the packing assembly run once, not per leg
-    ids = _bpe.bpe_ids(enc, BPE_VOCAB) \
-        .select("doc_id", "token_ids", "n_tokens") \
-        .localCheckpoint(eager=True)
-    pk = packing.pack_token_ids(
-        ids.select("doc_id", "token_ids"), PT_CAP, n_shards=8, seed=42) \
-        .localCheckpoint(eager=True)
+    ids = materialize(_bpe.bpe_ids(enc, BPE_VOCAB)
+                      .select("doc_id", "token_ids", "n_tokens"),
+                      reason="data_pipeline.token_ids")
+    pk = materialize(packing.pack_token_ids(
+        ids.select("doc_id", "token_ids"), PT_CAP, n_shards=8, seed=42),
+        reason="data_pipeline.packed")
     pos_sum = F.aggregate(
         F.zip_with(F.col("input_ids"),
                    F.sequence(F.lit(1), F.size("input_ids")),
@@ -926,7 +925,7 @@ def q_curation_pipeline(spark, sf_dir):
     _, samp_full = _curation_pipeline_core(spark, sf_dir)
     # the rider legs fan out SIX reads of the sampled corpus (FFD,
     # nq_lang, split, and the r15 tf/kb/cs knobs) — materialize samp
-    # once with an eager localCheckpoint so the full slot still scans
+    # once with an eager checkpoint so the full slot still scans
     # the corpus exactly ONCE; without this the knob riders re-derived
     # the redact+sample pyramid per leg (12 corpus scans — the pin
     # caught it in-round). r15 optimizations: (a) the pack stage ALSO
@@ -940,19 +939,15 @@ def q_curation_pipeline(spark, sf_dir):
     # identical values) instead of shipping the full redacted text to
     # seven consumers. The core keeps its lazy one-scan plan for the
     # pin; this slot's plan reads only ExistingRDD.
-    # r16: compact_checkpoint — the scalars-only checkpoint inherits the
-    # corpus scan's split count (32 partitions for a few thousand rows),
-    # so every rider leg paid a stage of 32 near-empty tasks per
-    # exchange; the partition count now derives from the checkpoint's
-    # measured bytes (guide §2.5 scale-adaptive partitioning; measured
-    # kb 0.83→0.50 s, cs 1.12→0.33 s isolated). Consumers are joins/
-    # windows/aggregates over scalars — exactly compact_checkpoint's
-    # light-per-row contract.
-    samp = compact_checkpoint(samp_full.select(
+    # r16: compact=True — the riders are joins/windows/aggregates over
+    # scalars, so the partition count follows the checkpoint's bytes,
+    # not the corpus scan's 32 splits (measured kb 0.83→0.50 s,
+    # cs 1.12→0.33 s isolated).
+    samp = materialize(samp_full.select(
         "doc_id", "lang", "n_pii",
         F.size(word_tokens(F.col("text"))).cast("long").alias("_n_toks"),
         F.length("text").alias("_q"),
-    ))
+    ), reason="curation_pipeline.sample", compact=True)
     out = _curation_pack(samp, length_col="_n_toks")
     bins = packing.pack_bins_ffd(samp, CURATION_CAP,
                                  length_col="_n_toks",
@@ -1535,14 +1530,14 @@ def q_decontam(spark, sf_dir):
     # suite 8-gram shingles + the fuzzy lane's 3-gram signatures AND its
     # candidate re-shingle — five normalization passes in one plan).
     # Materialize (doc_id, text, words) ONCE per lap (eager
-    # localCheckpoint, inside the timed region); the word arrays feed
+    # checkpoint, inside the timed region); the word arrays feed
     # the fuzzy lane (train_words_col) and the shared gram frame below
     # — identical output by construction (parity-pinned); sharing TWO
     # lanes' words was measured 5% slower in r13, but at five passes
     # the trade flips (measured: see OPTIMIZATION_r15.md).
-    dw = d.select("doc_id", "text",
-                  normalized_words(F.col("text")).alias("words")) \
-        .localCheckpoint(eager=True)
+    dw = materialize(d.select(
+        "doc_id", "text", normalized_words(F.col("text")).alias("words")),
+        reason="decontam.words")
     # round-16 optimization (guide §1.2 — don't compute things twice):
     # the three exact-gram lanes each re-derived the corpus 8-gram frame
     # from the word arrays (three staged zip_with shingle trees + three
@@ -1553,12 +1548,11 @@ def q_decontam(spark, sf_dir):
     # feed all three lanes the SAME frame via train_grams= — identical
     # by construction (the frame IS each lane's derivation), and each
     # lane keeps its own prefilter/join/aggregate, so the oracle still
-    # attests them independently. compact_checkpoint: the gram frame is
-    # join/agg fodder (light per-row work downstream), so its partition
-    # count derives from its measured bytes, not the corpus scan's
-    # split count (VERDICT r15 item 5).
-    tg = compact_checkpoint(
-        _grams(dw, "text", "doc_id", 8, "doc_id", words_col="words"))
+    # attests them independently. compact=True: the gram frame is
+    # join/agg fodder (VERDICT r15 item 5).
+    tg = materialize(
+        _grams(dw, "text", "doc_id", 8, "doc_id", words_col="words"),
+        reason="decontam.grams", compact=True)
     ev = dw.where(F.col("doc_id") % 97 == 0).select("doc_id", "text")
     plain = decontam.contamination(dw, ev, n=8, train_grams=tg)
     fl = bloom_mod.build_bloom(

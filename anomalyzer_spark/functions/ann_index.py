@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..session import conf_scope
+from ..session import conf_scope, materialize as _materialize
 from ..sources.layout import DYNAMIC_OVERWRITE, drop_emptied_partitions
 from .similarity import (_codes_sql, _lut_sql, absmax_scale, adc_dist,
                          adc_rank_refine, checked_width, cosine,
@@ -148,14 +148,10 @@ def search_ivfpq_index(
     d = len(codebooks[0][0])
     # the staged query frame (cell assignment + ADC lookup tables) is used
     # TWICE per call — the probe-cell collect and the join side — so
-    # materialize it once with an eager localCheckpoint: lifetime is tied
-    # to the returned frame (no cache leak per call in a serving loop),
-    # and both consumers read the computed partitions instead of
-    # recomputing the literal-model expressions. (localCheckpoint
-    # truncates lineage; under executor loss the query batch would need
-    # resubmitting — the right trade for a small, per-call query side.)
+    # materialize it once instead of recomputing the literal-model
+    # expressions per consumer
     queries = checked_width(queries, vec_col, m * d, "IVF-PQ models")
-    qstaged = (
+    qstaged = _materialize(
         queries.select(
             F.col(query_id_col).alias("query_id"),
             nearest_cells(vec_col, centroids, n_probe).alias("_cells"),
@@ -163,9 +159,8 @@ def search_ivfpq_index(
               for s in range(m)],
         )
         .select("query_id", "_cells",
-                F.expr(_lut_sql(codebooks)).alias("_lut"))
-        .localCheckpoint(eager=True)
-    )
+                F.expr(_lut_sql(codebooks)).alias("_lut")),
+        reason="search_ivfpq_index.queries")
     q = qstaged.select(
         "query_id", "_lut", F.explode("_cells").alias("cell"))
     probe_cells = sorted(
@@ -311,9 +306,9 @@ def ingest_ivfpq_stream(
     ``search_ivfpq_index``'s ``cell IN (...)`` filter partition-prunes the
     streamed index exactly like a batch-built one; the extra ``batch_id``
     discovery level changes nothing for the reader. (Search-side note:
-    ``search_ivfpq_index`` localCheckpoints its staged query frame per
-    call — serving loops wrap calls in ``session.checkpoint_scope`` to
-    drop those blocks deterministically.)
+    ``search_ivfpq_index`` materializes (see ``session.materialize``)
+    its staged query frame per call — serving loops wrap calls in
+    ``session.checkpoint_scope`` to drop those blocks deterministically.)
 
     Models are FROZEN by design: retraining centroids/codebooks on drifted
     data is an offline rebuild (``build_ivfpq_index``), not an append —
@@ -441,10 +436,9 @@ def apply_diff_to_index(
         .select(*keep))
     rewrite = survivors.unionByName(
         new_rows.where(F.col("cell").isin(affected)).select(*keep))
-    # localCheckpoint BEFORE the overwrite: the plan reads the very
-    # partitions the write replaces — materializing first avoids reading
-    # half-overwritten inputs (classic self-overwrite hazard)
-    rewrite = rewrite.localCheckpoint(eager=True)
+    # materialize BEFORE the overwrite: the plan reads the very
+    # partitions the write replaces (self-overwrite hazard)
+    rewrite = _materialize(rewrite, reason="apply_diff_to_index.rewrite")
     with conf_scope(spark, DYNAMIC_OVERWRITE):
         (rewrite.write.mode("overwrite").partitionBy("cell").parquet(path))
     # a cell whose every vector was removed has no rewrite rows

@@ -38,6 +38,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import materialize as _materialize
+
 
 def normalized(text: Column) -> Column:
     """lowercase, non-alnum → space, collapse whitespace, trim (shared with
@@ -462,17 +464,15 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash + banded LSH + exact verification.
 
-    ``materialize`` (batch frames): localCheckpoint the thrice-read
-    intermediates (bucket rows, candidate list, candidate shingles) —
-    Catalyst emits no ReusedExchange across the self-join/verify legs, so
-    the signature and shingle folds would otherwise re-run per consumer
-    (measured 2.7× the CPU at sf0.1). Pass ``materialize=False`` to build
-    the frame without running any jobs (plan inspection; the eager
-    checkpoints truncate explain output at ExistingRDD scans).
-    Checkpoint blocks are reclaimed when the frame is garbage-collected;
-    a long-lived serving loop should wrap each call in
-    ``session.checkpoint_scope`` to release them deterministically per
-    iteration (bounded-storage test in tests/test_functions.py).
+    ``materialize`` (batch frames): materializes (see
+    ``session.materialize``) the thrice-read intermediates (bucket rows,
+    candidate list, candidate shingles) — Catalyst emits no
+    ReusedExchange across the self-join/verify legs, so the signature and
+    shingle folds would otherwise re-run per consumer (measured 2.7× the
+    CPU at sf0.1). Pass ``materialize=False`` to build the frame without
+    running any jobs (plan inspection; the eager checkpoints truncate
+    explain output at ExistingRDD scans). Serving loops: see
+    ``session.checkpoint_scope``.
 
     Pipeline: signature → split into ``bands`` bands of num_hashes/bands rows
     → band bucket = md5(band index || minhashes) → self-join per bucket for
@@ -510,18 +510,15 @@ def minhash_lsh_pairs(
             .where(F.col("_bn") <= max_bucket_size)
             .drop("_bn")
         )
-    materialize = materialize and not df.isStreaming
     if materialize:
         # materialize the bucket rows once: Catalyst does NOT reuse the
         # signature subtree across the self-join's two sides (no
         # ReusedExchange — verified, 0 in the plan), so without this the
         # interpreted minhash fold — the pipeline's dominant CPU — runs
         # once per side. (id, bucket-hash) rows are a tiny fraction of the
-        # corpus. Same localCheckpoint pattern/trade as
-        # ann_index.search_ivfpq_index's twice-read query frame; skipped
-        # on streaming frames, which cannot checkpoint (the streaming
-        # store path materializes its buckets as parquet instead).
-        buckets = buckets.localCheckpoint(eager=True)
+        # corpus. (The streaming store path materializes its buckets as
+        # parquet instead.)
+        buckets = _materialize(buckets, reason="minhash_lsh_pairs.buckets")
     cand = (
         buckets.alias("x")
         .join(buckets.alias("y"), "bucket")
@@ -535,7 +532,7 @@ def minhash_lsh_pairs(
         # cand feeds three consumers (both legs of the id semi-join union
         # and the verify join) — materialize the candidate list (tiny:
         # ∝ true near-dups) instead of running the bucket self-join 3×
-        cand = cand.localCheckpoint(eager=True)
+        cand = _materialize(cand, reason="minhash_lsh_pairs.candidates")
 
     # Exact verification touches only candidate docs: semi-join the corpus
     # down BEFORE recomputing shingles, so verify cost scales with the
@@ -556,7 +553,7 @@ def minhash_lsh_pairs(
         # sh feeds verify's two join legs (id_a side, id_b side) — same
         # no-ReusedExchange story, so the semi-join + shingle fold would
         # run twice; candidate-scoped, so the materialized frame is small
-        sh = sh.localCheckpoint(eager=True)
+        sh = _materialize(sh, reason="minhash_lsh_pairs.shingles")
     return verify_jaccard_pairs(sh, cand, threshold, id_col)
 
 
@@ -583,9 +580,7 @@ def duplicate_groups(
     (label := label's label) so deep chains converge in O(log diameter)
     rounds instead of O(diameter). No driver-side graph state; a Catalyst
     plan cannot express the loop, so the loop lives here, truncating
-    lineage per round (reliable ``checkpoint()`` when the session has a
-    checkpoint dir — survives executor loss on a real cluster —
-    ``localCheckpoint`` otherwise).
+    lineage per round (see ``session.materialize``).
 
     Raises a ``RuntimeWarning`` if the loop exhausts ``max_iterations``
     without converging (partially-merged components would silently keep
@@ -664,21 +659,12 @@ def _propagate_labels(edges: DataFrame, max_iterations: int) -> DataFrame:
     edge directions). Returns (id, label) for edge-touched nodes ONLY."""
     import warnings
 
-    spark = edges.sparkSession
-    reliable = spark.sparkContext.getCheckpointDir() is not None
-
-    def _ckpt(frame: DataFrame) -> DataFrame:
-        # materialize + truncate lineage each round: without this, round i
-        # re-executes all prior rounds and the plan grows unboundedly.
-        return frame.checkpoint(eager=True) if reliable \
-            else frame.localCheckpoint(eager=True)
-
     # materialize the edge list ONCE before iterating: edges is typically
     # the most expensive lineage in the query (LSH bucket self-join +
     # exact verification over the corpus), and every propagation round
     # joins against it — without this, each of the O(log diameter) rounds
     # would re-execute candidate generation from scratch.
-    edges = _ckpt(edges)
+    edges = _materialize(edges, reason="duplicate_groups.edges")
     labels = (edges.select(F.col("src").alias("id")).distinct()
               .withColumn("label", F.col("id")))
     converged = False
@@ -705,7 +691,10 @@ def _propagate_labels(edges: DataFrame, max_iterations: int) -> DataFrame:
                 F.least("label", F.coalesce("_llabel", "label")).alias("label"),
             )
         )
-        new_labels = _ckpt(new_labels)
+        # truncate lineage each round: without this, round i re-executes
+        # all prior rounds and the plan grows unboundedly
+        new_labels = _materialize(new_labels,
+                                  reason="duplicate_groups.labels")
         # convergence probe = one extra driver job per check; pointer
         # jumping converges in O(log diameter) rounds, so probing every
         # OTHER round (and on the last) halves the probe jobs at the cost
@@ -993,8 +982,9 @@ def simhash_weighted(
     InferFiltersFromGenerate lesson) → one (doc, word) tf aggregate.
     That postings frame feeds BOTH the document-frequency aggregate and
     the weighted fold, with no ReusedExchange between them — so
-    ``materialize=True`` (default) eagerly localCheckpoints it (the
-    bm25 precedent; pass False for a lazy plan-only frame). df comes
+    ``materialize=True`` (default) eagerly materializes it (see
+    ``session.materialize``; the bm25 precedent; pass False for a lazy
+    plan-only frame). df comes
     back as a word-keyed shuffle join (vocabulary is unbounded — no
     broadcast), the 32 bit contributions are computed ONCE per posting
     into a staged array, and the per-document fold is 32 exact integer
@@ -1008,11 +998,8 @@ def simhash_weighted(
            .select(F.col(id_col), F.explode_outer("_w").alias("word"))
            .where(F.col("word").isNotNull() & (F.col("word") != "")))
     tf = tok.groupBy(id_col, "word").agg(F.count(F.lit(1)).alias("tf"))
-    if materialize and not df.isStreaming:
-        # the streaming guard every sibling pair generator carries —
-        # an unconditional checkpoint raised before the downstream
-        # isStreaming guards could even run (r14 review)
-        tf = tf.localCheckpoint(eager=True)
+    if materialize:
+        tf = _materialize(tf, reason="simhash_weighted.tf")
     if corpus_stats is not None:
         n_docs = int(corpus_stats[0])
         if n_docs < 1:
@@ -1163,11 +1150,11 @@ def hamming_pairs(
     blocks = hamming_blocks(sigs, sig_col, id_col,
                             bits=bits, max_hamming=max_hamming)
 
-    if materialize and not sigs.isStreaming:
+    if materialize:
         # no ReusedExchange across the block self-join — materialize the
         # (id, sig, block) rows once so the signature computation (the CPU
         # of this operator) runs once, not per join side
-        blocks = blocks.localCheckpoint(eager=True)
+        blocks = _materialize(blocks, reason="hamming_pairs.blocks")
     x, y = blocks.alias("x"), blocks.alias("y")
     ham = F.bit_count(F.col(f"x.{sig_col}").bitwiseXOR(F.col(f"y.{sig_col}")))
     return (
@@ -1848,11 +1835,12 @@ def shared_value_pairs(
     (id, n_values, value); returns (id_a, id_b, shared_fps, overlap) with
     overlap = shared / min(n_a, n_b) rounded to 6.
 
-    ``materialize`` localCheckpoints the exploded frame ONCE: it feeds the
-    ``max_df`` count and BOTH self-join sides, and Catalyst gives the
-    self-join no ReusedExchange — without it an expensive upstream (the
-    winnowing window, an FFT fingerprint kernel, a frame decode) re-runs
-    per consumer (the ``hamming_pairs``/``minhash_lsh_pairs`` lesson).
+    ``materialize`` materializes (see ``session.materialize``) the
+    exploded frame ONCE: it feeds the ``max_df`` count and BOTH self-join
+    sides, and Catalyst gives the self-join no ReusedExchange — without
+    it an expensive upstream (the winnowing window, an FFT fingerprint
+    kernel, a frame decode) re-runs per consumer (the
+    ``hamming_pairs``/``minhash_lsh_pairs`` lesson).
     ``max_df`` drops values present in more than ``max_df`` rows BEFORE
     the self-join (boilerplate / silence = hot join keys = quadratic
     fan-out), via a grouped count + semi-join — no broadcast assumption
@@ -1869,8 +1857,8 @@ def shared_value_pairs(
     count and the reported overlap, never inflate them."""
     if min_shared < 1:
         raise ValueError("min_shared must be >= 1")
-    if materialize and not ex.isStreaming:
-        ex = ex.localCheckpoint(eager=True)
+    if materialize:
+        ex = _materialize(ex, reason="shared_value_pairs.exploded")
     if max_df is not None:
         keep = (ex.groupBy(val_col).agg(F.count(F.lit(1)).alias("_df"))
                 .where(F.col("_df") <= max_df).select(val_col))

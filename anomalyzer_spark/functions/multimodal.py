@@ -30,6 +30,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import materialize as _materialize
+
 #: magic prefixes → format tag (the usual suspects; extend as needed)
 MAGIC = {
     b"\x89PNG": "png",
@@ -859,7 +861,7 @@ def audio_matches(df: DataFrame, content_col: str = "content",
     distinct subfingerprints — the audio cell of the dedup matrix
     (text: simhash/minhash; images: dhash; fragments:
     text.fingerprint_matches — the same ``dedup.shared_value_pairs``
-    containment join, which localCheckpoints the exploded frame once so
+    containment join, which materializes the exploded frame once so
     the FFT fingerprint kernel runs ONE Arrow pass, not once per
     self-join side). ``max_df`` drops subfingerprints present in more
     than ``max_df`` clips before the join (silence/constant-tone frames
@@ -926,11 +928,10 @@ def video_matches(df: DataFrame, content_col: str = "content",
         F.col("frame").alias("content"))
     sigs = dhash_image(fid_df, "content", "doc_id") \
         .where(F.col("dhash64").isNotNull()).select("doc_id", "dhash64")
-    if not sigs.isStreaming:
-        # sigs feeds the per-clip counts AND the pair join: without this
-        # the demux + decode Arrow kernels (the cost of the operator)
-        # would run once per consumer
-        sigs = sigs.localCheckpoint(eager=True)
+    # sigs feeds the per-clip counts AND the pair join: without this the
+    # demux + decode Arrow kernels (the cost of the operator) would run
+    # once per consumer
+    sigs = _materialize(sigs, reason="video_matches.signatures")
     # per-clip decodable-frame counts (the overlap denominator);
     # shiftrightunsigned = exact integer unpack (double division would
     # round across the boundary for fids past 2^53)

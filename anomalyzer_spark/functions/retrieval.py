@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from anomalyzer_spark.functions.text import word_token_count, word_tokens
+from anomalyzer_spark.session import materialize as _materialize
 
 __all__ = ["bm25_corpus_stats", "bm25_topk", "hybrid_topk", "rrf_fuse",
            "tokenize_docs"]
@@ -125,11 +126,12 @@ def bm25_topk(
     no ReusedExchange (they prune different columns — the ``tfidf``
     precedent); unlike ``tfidf``, here the shared frame is BOUNDED
     (docs-containing-query-terms rows, not the corpus), so
-    ``materialize=True`` (default) eagerly localCheckpoints it — the
-    LSH-pair-generator precedent — buying one fewer corpus scan and one
-    fewer postings shuffle at the cost of running the postings job at
-    DataFrame-build time. Pass ``materialize=False`` for a lazy,
-    plan-only frame. DuckDB value parity in tests/test_retrieval.py.
+    ``materialize=True`` (default) eagerly materializes it (see
+    ``session.materialize``) — the LSH-pair-generator precedent — buying
+    one fewer corpus scan and one fewer postings shuffle at the cost of
+    running the postings job at DataFrame-build time. Pass
+    ``materialize=False`` for a lazy, plan-only frame. DuckDB value
+    parity in tests/test_retrieval.py.
     """
     if k < 1:
         raise ValueError("k must be >= 1")
@@ -165,7 +167,7 @@ def bm25_topk(
         .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
     )
     if materialize:
-        postings = postings.localCheckpoint(eager=True)
+        postings = _materialize(postings, reason="bm25_topk.postings")
     # Corpus constants: the one unavoidable second scan leg (map-only,
     # column-pruned to text, one tokenization per row). At production
     # scale N/avgdl are corpus METADATA — recomputed once per corpus

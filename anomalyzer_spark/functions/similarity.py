@@ -38,6 +38,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import materialize as _materialize
+
 
 def collision_prob(sim: float, n_planes: int, bands: int) -> float:
     """P(a pair at cosine ``sim`` becomes an LSH candidate).
@@ -809,17 +811,16 @@ def cosine_pairs(
     ``threshold`` similarity is found with at least this probability
     (more-similar pairs with strictly higher probability).
 
-    ``materialize`` (LSH path, batch frames): localCheckpoint the
-    (id, band, bucket) rows once before the self-join — Catalyst emits no
-    ReusedExchange across the two sides, so the signature fold would
-    otherwise run per side. Only the BUCKET KEYS are materialized, never
-    the vectors (bands× replicated embeddings would pin corpus-scale
-    blocks); vectors are re-attached candidate-scoped afterwards. Pass
-    ``materialize=False`` for plan inspection without running jobs (the
-    checkpoint truncates the plan at an ExistingRDD scan and is eager).
-    Long-lived serving loops: wrap each call in
-    ``session.checkpoint_scope`` to release the checkpoint blocks
-    deterministically per iteration instead of waiting on Python GC.
+    ``materialize`` (LSH path, batch frames): materializes (see
+    ``session.materialize``) the (id, band, bucket) rows once before the
+    self-join — Catalyst emits no ReusedExchange across the two sides, so
+    the signature fold would otherwise run per side. Only the BUCKET KEYS
+    are materialized, never the vectors (bands× replicated embeddings
+    would pin corpus-scale blocks); vectors are re-attached
+    candidate-scoped afterwards. Pass ``materialize=False`` for plan
+    inspection without running jobs (the checkpoint truncates the plan at
+    an ExistingRDD scan and is eager). Serving loops: see
+    ``session.checkpoint_scope``.
 
     The exact path is O(n²) and exists for small-scale recall checks only;
     it REFUSES corpora larger than ``max_exact_rows`` (cheap bounded probe:
@@ -832,8 +833,8 @@ def cosine_pairs(
         planes = hyperplanes(dim, n_planes, seed)
         b = lsh_buckets(df, id_col=id_col, vec_col=vec_col, planes=planes,
                         bands=bands).select(id_col, "band", "bucket")
-        if materialize and not df.isStreaming:
-            b = b.localCheckpoint(eager=True)
+        if materialize:
+            b = _materialize(b, reason="cosine_pairs.buckets")
         pair_ids = (
             b.alias("x")
             .join(b.alias("y"), ["band", "bucket"])
@@ -1006,7 +1007,7 @@ def semantic_pairs(
         F.explode(
             nearest_cells(vec_col, centroids, n_assign)).alias("cell"),
     )
-    if materialize and not df.isStreaming:
+    if materialize:
         # the assignment expression (n_clusters interpreted cosine folds
         # per row — HOFs never reach codegen) would otherwise re-execute
         # per consumer: the hot-cell probe and BOTH self-join sides
@@ -1014,9 +1015,8 @@ def semantic_pairs(
         # cosine_pairs precedent). Unlike the LSH path this materializes
         # the vector column too: within-cell candidates are dense, so
         # re-attaching vectors candidate-scoped would join against the
-        # full pair fan-out — the worse trade here. Eager: builds run
-        # jobs; pass materialize=False for plan-only inspection.
-        assigned = assigned.localCheckpoint(eager=True)
+        # full pair fan-out — the worse trade here.
+        assigned = _materialize(assigned, reason="semantic_pairs.assigned")
     if max_cell_rows is not None:
         # bounded probe first (one tiny aggregate job): the cap exists for
         # pathological density, so in the common no-hot-cell case the

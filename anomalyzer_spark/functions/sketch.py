@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize as _materialize
+
 __all__ = ["hll_estimate", "hll_overlap", "hll_profile", "merge_hll",
            "merge_mg", "mg_profile",
            "kll_profile", "kll_profile_sharded", "merge_kll",
@@ -315,9 +317,10 @@ def mg_profile(
     survivor subtraction, per-column totals) and Catalyst gives them no
     ReusedExchange (the bm25/tfidf precedent), which would mean three
     corpus scans — so ``materialize=True`` (default) eagerly
-    localCheckpoints it: one corpus scan, one count exchange, and every
-    consumer reads the (O(distinct values), distributed) checkpoint.
-    Pass ``materialize=False`` for a lazy plan-only frame.
+    materializes it (see ``session.materialize``): one corpus scan, one
+    count exchange, and every consumer reads the (O(distinct values),
+    distributed) checkpoint. Pass ``materialize=False`` for a lazy
+    plan-only frame.
 
     ``group_cols=["domain"]`` keeps one summary PER GROUP (top urls per
     domain — the grouped-tops monitor): group keys become frame columns
@@ -342,7 +345,7 @@ def mg_profile(
          .where(F.col("key").isNotNull()))
     counts = u.groupBy(*keys, "key").agg(F.count(F.lit(1)).alias("cnt"))
     if materialize:
-        counts = counts.localCheckpoint(eager=True)
+        counts = _materialize(counts, reason="mg_profile.counts")
     n = counts.groupBy(*keys).agg(F.sum("cnt").alias("n"))
     survivors, thr = _mg_compress(counts, k, keys)
     # metadata per key combination (covers every profiled one, including
@@ -588,8 +591,8 @@ def merge_kll(profiles: list[DataFrame], *, k: int = 256) -> DataFrame:
     cur = (u.where(F.col("item").isNotNull())
            .groupBy(*keys, "level", "item")
            .agg(F.sum("cnt").alias("cnt")))
-    cur = cur.localCheckpoint(eager=True)
-    meta = meta.localCheckpoint(eager=True)
+    cur = _materialize(cur, reason="merge_kll.levels")
+    meta = _materialize(meta, reason="merge_kll.meta")
     epoch = 0
     while True:
         over = (cur.groupBy(*keys, "level")
@@ -623,8 +626,8 @@ def merge_kll(profiles: list[DataFrame], *, k: int = 256) -> DataFrame:
         cur = (rest.unionByName(promoted)
                .groupBy(*keys, "level", "item")
                .agg(F.sum("cnt").alias("cnt")))
-        cur = cur.localCheckpoint(eager=True)
-        meta = meta.localCheckpoint(eager=True)
+        cur = _materialize(cur, reason="merge_kll.levels")
+        meta = _materialize(meta, reason="merge_kll.meta")
         epoch += 1
     out = cur.join(F.broadcast(meta), keys) \
         .select(*keys, "level", "item", "cnt", "n", "err")

@@ -1022,7 +1022,7 @@ def fingerprint_matches(
     scores high).
 
     Scale: fingerprint explode → ``dedup.shared_value_pairs`` (the shared
-    containment join: one localCheckpoint of the exploded frame — the
+    containment join: one materialization of the exploded frame — the
     winnowing window would otherwise re-run per self-join side — then
     equi-join on the fingerprint value + grouped count, never all-pairs;
     ``max_df`` drops boilerplate fingerprints before the join)."""

@@ -10,6 +10,7 @@ from __future__ import annotations
 import contextlib
 import logging
 import os
+import time
 
 from pyspark.sql import SparkSession
 
@@ -59,76 +60,79 @@ def _persistent_rdd_ids(spark: SparkSession) -> set[int]:
 _PACKAGE_PARENT = os.path.dirname(
     os.path.dirname(os.path.abspath(__file__)))
 
-#: conf key for compact_checkpoint's bytes-per-partition divisor (the
-#: batch sibling of anomalyzer.streaming.bytesPerStatePartition)
-COMPACT_BYTES_CONF = "anomalyzer.batch.bytesPerCheckpointPartition"
-_COMPACT_BYTES_DEFAULT = 64 * 1024 * 1024
+#: bytes one partition of a ``materialize(..., compact=True)`` frame
+#: holds (the AQE advisory-size class)
+COMPACT_PARTITION_BYTES = 64 * 1024 * 1024
 
 
-def compact_checkpoint(df, *, bytes_per_partition: int | None = None):
-    """Eager ``localCheckpoint`` whose DOWNSTREAM partition count derives
-    from the checkpoint's MEASURED size instead of the input's split
-    count — the batch sibling of ``streaming.adaptive_state_partitions``.
+def materialize(df, *, reason: str, compact: bool = False):
+    """Eagerly checkpoint ``df``: the package's one lineage cut.
 
-    A checkpointed intermediate inherits its parent's partitioning, which
-    is sized for the SOURCE scan, not for the (usually far smaller)
-    checkpoint: a few thousand scalar rows spread over 32 splits make
-    every downstream stage pay 32 tasks of scheduling for microseconds of
-    work each — and at 100 TB the same constant under-partitions. After
-    materializing, this reads the persisted blocks' size from the block
-    manager and coalesces to ``ceil(bytes / bytes_per_partition)``
-    clamped to [1, current partitions] (``coalesce`` is a narrow
-    dependency — no shuffle; when the derived count is not smaller, the
-    frame is returned unchanged). The divisor is conf-parameterised
-    (``anomalyzer.batch.bytesPerCheckpointPartition``, default 64 MiB —
-    the AQE advisory-size class), so production tunes it per cluster.
+    With a checkpoint dir set (``sparkContext.setCheckpointDir``) this is
+    a reliable ``checkpoint``, whose files survive executor loss; without
+    one it is a ``localCheckpoint`` into executor block storage, which a
+    lost executor takes with it. A streaming frame cannot checkpoint and
+    is returned unchanged.
 
-    Use it for checkpoints whose consumers do LIGHT per-row work (joins,
-    aggregates, filters over scalars) — for a checkpoint feeding
-    CPU-heavy per-row expressions, fewer partitions also means fewer
-    cores on that work, so keep the plain ``localCheckpoint`` there.
-    Values/schema are untouched: ``coalesce`` only merges partitions.
-    (Classic-session only: reads the block manager through private py4j
-    handles, like the streaming sibling.)"""
+    ``compact=True`` coalesces (narrow, no shuffle) to
+    ``ceil(bytes / COMPACT_PARTITION_BYTES)`` partitions, clamped to
+    [1, current], from the local checkpoint's measured block bytes — the
+    batch sibling of ``streaming.adaptive_state_partitions``. A
+    checkpoint otherwise inherits the SOURCE scan's split count: a few
+    thousand scalar rows over 32 splits make every downstream stage pay
+    32 near-empty tasks. Use it where consumers do LIGHT per-row work
+    (joins, aggregates, filters over scalars); CPU-heavy consumers want
+    the cores. A reliable checkpoint stores no blocks, so there (as when
+    the size is unreadable) the inherited partitioning is kept.
+
+    Logs one DEBUG record per call: reason, mode, partitions, bytes
+    (compact only) and ms. Classic sessions only: the checkpoint dir and
+    block sizes are read through the SparkContext."""
+    if df.isStreaming:
+        return df
     spark = df.sparkSession
-    if bytes_per_partition is None:
+    sc = spark.sparkContext
+    reliable = sc.getCheckpointDir() is not None
+    t0 = time.perf_counter()
+    before = _persistent_rdd_ids(spark) if compact else set()
+    out = df.checkpoint(eager=True) if reliable \
+        else df.localCheckpoint(eager=True)
+    size = None
+    new_ids = _persistent_rdd_ids(spark) - before if compact else set()
+    if new_ids:
         try:
-            bytes_per_partition = int(
-                spark.conf.get(COMPACT_BYTES_CONF, None)
-                or _COMPACT_BYTES_DEFAULT)
-        except ValueError:
-            bytes_per_partition = _COMPACT_BYTES_DEFAULT
-    before = _persistent_rdd_ids(spark)
-    out = df.localCheckpoint(eager=True)
-    new_ids = _persistent_rdd_ids(spark) - before
-    size = 0
-    try:
-        for info in spark.sparkContext._jsc.sc().getRDDStorageInfo():
-            if int(info.id()) in new_ids:
-                size += int(info.memSize()) + int(info.diskSize())
-    except Exception:  # never let sizing break the query path
-        LOG.warning("compact_checkpoint: checkpoint size unreadable; "
-                    "keeping the inherited partitioning", exc_info=True)
-        return out
-    cur = out.rdd.getNumPartitions()
-    n = max(1, min(cur, -(-size // max(1, bytes_per_partition))))
-    return out.coalesce(n) if n < cur else out
+            size = sum(int(i.memSize()) + int(i.diskSize())
+                       for i in sc._jsc.sc().getRDDStorageInfo()
+                       if int(i.id()) in new_ids)
+        except Exception:  # never let sizing break the query path
+            LOG.warning("materialize: checkpoint size unreadable; "
+                        "keeping the inherited partitioning", exc_info=True)
+        else:
+            cur = out.rdd.getNumPartitions()
+            n = max(1, min(cur, -(-size // COMPACT_PARTITION_BYTES)))
+            out = out.coalesce(n) if n < cur else out
+    if LOG.isEnabledFor(logging.DEBUG):
+        LOG.debug("materialize %s: mode=%s partitions=%d bytes=%s ms=%.1f",
+                  reason, "reliable" if reliable else "local",
+                  out.rdd.getNumPartitions(), size,
+                  (time.perf_counter() - t0) * 1e3)
+    return out
 
 
 @contextlib.contextmanager
 def checkpoint_scope(spark: SparkSession):
-    """Bound the storage of eager ``localCheckpoint`` frames to a scope.
+    """Bound the storage of eager local-checkpoint frames to a scope.
 
     The LSH/SimHash pair generators, ``cosine_pairs``, and
-    ``search_ivfpq_index`` localCheckpoint intermediates EAGERLY (Catalyst
+    ``search_ivfpq_index`` materialize intermediates EAGERLY (Catalyst
     gives their self-joins no ReusedExchange; see dedup.py/similarity.py).
-    Those checkpoint blocks are normally reclaimed only when the
+    Their local checkpoint blocks are normally reclaimed only when the
     ContextCleaner garbage-collects the Python frame reference — fine for
     per-query sessions, but a long-lived serving session calling these in
     a loop accumulates blocks between GC cycles. Wrap each serving
     iteration in this scope and every RDD persisted INSIDE it (which is
-    what a localCheckpoint is under the hood) is explicitly unpersisted on
-    exit:
+    what a local checkpoint is under the hood) is explicitly unpersisted
+    on exit:
 
         with checkpoint_scope(spark):
             pairs = minhash_lsh_pairs(docs, ...)
@@ -138,7 +142,12 @@ def checkpoint_scope(spark: SparkSession):
     closes — a checkpointed frame has no lineage left to recompute from
     once its blocks are dropped. RDDs already persisted before entry are
     left untouched; anything the scope body itself persisted on purpose
-    should be persisted OUTSIDE the scope."""
+    should be persisted OUTSIDE the scope.
+
+    Only local checkpoint blocks are freed. With a checkpoint dir set,
+    ``materialize`` writes reliable checkpoint FILES, which persist no
+    blocks; their removal is governed by Spark's
+    ``spark.cleaner.referenceTracking.cleanCheckpoints``."""
     before = _persistent_rdd_ids(spark)
     try:
         yield

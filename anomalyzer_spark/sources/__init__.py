@@ -40,7 +40,7 @@ NANO_TS_COLS: dict[str, tuple[str, ...]] = {
 
 
 #: conf key for spread_partitions' bytes-per-partition divisor (the
-#: scan-spread sibling of anomalyzer.batch.bytesPerCheckpointPartition)
+#: scan-spread sibling of session.COMPACT_PARTITION_BYTES)
 SPREAD_BYTES_CONF = "anomalyzer.batch.bytesPerSpreadPartition"
 _SPREAD_BYTES_DEFAULT = 256 * 1024
 
@@ -84,7 +84,7 @@ def spread_partitions(
     The divisor is conf-parameterised (``SPREAD_BYTES_CONF``, default
     256 KiB of COMPRESSED parquet ≈ ~1 MiB of rows — micro-task
     overhead amortized while tiny fixtures still spread); production
-    tunes it per cluster alongside the checkpoint divisor."""
+    tunes it per cluster."""
     if bytes_per_partition is None:
         try:
             bytes_per_partition = int(

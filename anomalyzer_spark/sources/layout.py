@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import conf_scope
+from ..session import conf_scope, materialize as _materialize
 
 #: session conf scoping every partial rewrite below to the partitions
 #: its frame has rows for
@@ -430,13 +430,14 @@ def refresh_shards(
     # materialize BEFORE any overwrite: self-overwrite hazard (the
     # manifest merge below reads the directory the write replaces), and
     # the frame is read twice (data write + manifest recompute)
-    rewrite = rewrite.localCheckpoint(eager=True)
+    rewrite = _materialize(rewrite, reason="refresh_shards.rewrite")
 
     new_man = shard_manifest(rewrite, shard_col, token_col=token_col,
                              checksum_cols=checksum_cols)
     stored = spark.read.parquet(f"{path}/manifest")
-    merged = (stored.where(~F.col("shard").isin(affected))
-              .unionByName(new_man)).localCheckpoint(eager=True)
+    merged = _materialize(
+        stored.where(~F.col("shard").isin(affected)).unionByName(new_man),
+        reason="refresh_shards.manifest")
 
     with conf_scope(spark, DYNAMIC_OVERWRITE):
         write_sized_parquet(rewrite, f"{path}/data", target_mb=target_mb,
@@ -519,7 +520,7 @@ def compact_shards(
     if order_by:
         rewrite = rewrite.sortWithinPartitions(
             F.col(shard_col), *[F.col(c) for c in order_by])
-    rewrite = rewrite.localCheckpoint(eager=True)
+    rewrite = _materialize(rewrite, reason="compact_shards.rewrite")
 
     with conf_scope(spark, DYNAMIC_OVERWRITE):
         write_sized_parquet(rewrite, f"{path}/data", target_mb=target_mb,

@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
 from ..functions.changelog import _is_delete, latest_changes
-from ..session import conf_scope
+from ..session import conf_scope, materialize as _materialize
 from ..sources.layout import DYNAMIC_OVERWRITE, drop_emptied_partitions
 
 __all__ = ["changelog_upsert_stream", "read_snapshot", "init_snapshot",
@@ -114,10 +114,10 @@ def changelog_upsert_stream(
         store = _read_buckets(spark, snap_dir, b.schema, affected)
         # _deleted as the FINAL tiebreak: an equal-sequence delete/upsert
         # clash (feed violation) resolves to the tombstone, every time
-        merged = latest_changes(
+        merged = _materialize(latest_changes(
             store.unionByName(b), keys, sequence_col,
             tiebreak_cols=[*tiebreak_cols, "_deleted"],
-        ).localCheckpoint(eager=True)  # self-overwrite hazard
+        ), reason="changelog_upsert_stream.merge")  # self-overwrite hazard
         with conf_scope(spark, DYNAMIC_OVERWRITE):
             (merged.repartition(len(affected), F.col("_bucket"))
              .write.mode("overwrite").partitionBy("_bucket")
@@ -197,10 +197,11 @@ def vacuum_tombstones(
                       df.where(dead).select("_bucket").distinct().collect())
     if not affected:
         return 0
-    keep = (df.where(F.col("_bucket").isin(affected))
-            .where(~dead)
-            .repartition(len(affected), F.col("_bucket"))
-            .localCheckpoint(eager=True))  # self-overwrite hazard
+    keep = _materialize(  # self-overwrite hazard
+        df.where(F.col("_bucket").isin(affected))
+        .where(~dead)
+        .repartition(len(affected), F.col("_bucket")),
+        reason="vacuum_tombstones.keep")
     with conf_scope(spark, DYNAMIC_OVERWRITE):
         (keep.write.mode("overwrite").partitionBy("_bucket")
          .parquet(snap_dir))

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.drift import (
     category_profile, histogram_profile, psi_report)
+from ..session import materialize as _materialize
 
 __all__ = ["run_drift_stream_on_dir"]
 
@@ -72,12 +73,12 @@ def run_drift_stream_on_dir(
     if schema is None:
         schema = spark.read.parquet(input_dir).schema
     # materialize the tiny baselines once — each batch joins against
-    # them; localCheckpoint frees them from upstream lineage for the
-    # lifetime of the monitor
+    # them, free of their upstream lineage, for the monitor's lifetime
     if baseline is not None:
-        baseline = baseline.localCheckpoint(eager=True)
+        baseline = _materialize(baseline, reason="drift_stream.baseline")
     if cat_baseline is not None:
-        cat_baseline = cat_baseline.localCheckpoint(eager=True)
+        cat_baseline = _materialize(cat_baseline,
+                                    reason="drift_stream.cat_baseline")
 
     reports: list = []
 

@@ -796,23 +796,26 @@ def test_checkpoint_scope_bounds_serving_loop_storage(spark):
     keep.unpersist()
 
 
-def test_compact_checkpoint_derives_partitions_from_bytes(spark):
-    """session.compact_checkpoint (r16): a small checkpointed frame
-    coalesces to a byte-derived partition count (1 here) regardless of
-    the input's split count, with values and schema untouched; a divisor
-    small enough that the measured size spans it keeps >1 partition."""
-    from anomalyzer_spark.session import compact_checkpoint
+def test_compact_checkpoint_derives_partitions_from_bytes(spark,
+                                                          monkeypatch):
+    """session.materialize(compact=True) (r16): a small checkpointed
+    frame coalesces to a byte-derived partition count (1 here)
+    regardless of the input's split count, with values and schema
+    untouched; a divisor small enough that the measured size spans it
+    keeps >1 partition."""
+    from anomalyzer_spark import session
 
     df = spark.range(0, 4000, 1, 16).select(
         F.col("id").alias("doc_id"), (F.col("id") % 7).alias("v"))
     assert df.rdd.getNumPartitions() == 16
-    out = compact_checkpoint(df)
+    out = session.materialize(df, reason="test", compact=True)
     assert out.rdd.getNumPartitions() == 1
     assert out.columns == df.columns
     assert sorted(map(tuple, out.collect())) == \
         sorted(map(tuple, df.collect()))
     # a tiny divisor: derived count > 1 but never above the input's
-    out2 = compact_checkpoint(df, bytes_per_partition=1024)
+    monkeypatch.setattr(session, "COMPACT_PARTITION_BYTES", 1024)
+    out2 = session.materialize(df, reason="test", compact=True)
     n2 = out2.rdd.getNumPartitions()
     assert 1 < n2 <= 16
     assert out2.count() == 4000
@@ -820,27 +823,34 @@ def test_compact_checkpoint_derives_partitions_from_bytes(spark):
 
 def test_compact_checkpoint_logs_unreadable_size(spark, monkeypatch, caplog):
     """When the block manager's storage info cannot be read,
-    compact_checkpoint keeps the inherited partitioning and says so on
-    the package logger."""
-    from anomalyzer_spark.session import compact_checkpoint
+    materialize(compact=True) keeps the inherited partitioning and says
+    so on the package logger."""
+    from anomalyzer_spark.session import materialize
 
     real = spark.sparkContext._jsc
 
     class NoStorageInfo:
+        def getCheckpointDir(self):
+            return real.sc().getCheckpointDir()
+
+        def getRDDStorageInfo(self):
+            raise RuntimeError("storage info unavailable")
+
+    class Jsc:
         def getPersistentRDDs(self):
             return real.getPersistentRDDs()
 
         def sc(self):
-            raise RuntimeError("storage info unavailable")
+            return NoStorageInfo()
 
     df = spark.range(0, 400, 1, 4)
-    monkeypatch.setattr(spark.sparkContext, "_jsc", NoStorageInfo())
+    monkeypatch.setattr(spark.sparkContext, "_jsc", Jsc())
     with caplog.at_level("WARNING", logger="anomalyzer_spark"):
-        out = compact_checkpoint(df)
+        out = materialize(df, reason="test", compact=True)
     monkeypatch.undo()
     assert out.rdd.getNumPartitions() == 4
     assert out.count() == 400
-    assert any(r.name == "anomalyzer_spark" and "compact_checkpoint"
+    assert any(r.name == "anomalyzer_spark" and "materialize"
                in r.getMessage() for r in caplog.records)
 
 
