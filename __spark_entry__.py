@@ -1258,6 +1258,7 @@ def q_ivfpq_topk(spark, sf_dir):
     the driver value hash."""
     from anomalyzer_spark.functions.ann_index import (
         compact_ingested_index, ingest_ivfpq_stream, search_ivfpq_index)
+    from anomalyzer_spark.streaming._drain import drain
     e = _embs(spark, sf_dir)
     sample = e.where(F.col("vec_id") < IVF_SAMPLE_N) \
         .select("vec_id", "embedding").collect()
@@ -1267,12 +1268,10 @@ def q_ivfpq_topk(spark, sf_dir):
     tmp = _query_tmp("ivfpq_ingest")
     corpus = e.select("vec_id", "embedding")
     corpus.repartition(3).write.mode("overwrite").parquet(f"{tmp}/corpus")
-    cstream = (spark.readStream.schema(corpus.schema)
-               .option("maxFilesPerTrigger", 1).parquet(f"{tmp}/corpus"))
-    ingest = ingest_ivfpq_stream(
-        spark, cstream, f"{tmp}/ingested", cents, books, f"{tmp}/ckpt",
-        quantized_refine=True)
-    ingest.awaitTermination()
+    drain(spark, f"{tmp}/corpus", lambda s: ingest_ivfpq_stream(
+        spark, s, f"{tmp}/ingested", cents, books, f"{tmp}/ckpt",
+        quantized_refine=True),
+        schema=corpus.schema, max_files_per_trigger=1)
     compact_ingested_index(spark, f"{tmp}/ingested", f"{tmp}/index")
     qset = e.where(F.col("vec_id") < 20)
     out = search_ivfpq_index(
@@ -2160,30 +2159,28 @@ def q_kafka_parse(spark, sf_dir):
     availableNow. PERMISSIVE malformed handling (all-NULL struct) is part
     of the checked contract."""
     from anomalyzer_spark.sources.kafka import parse_json_values
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(f"{sf_dir}/events*.parquet")
-    # wire values via to_json (correct escaping of quotes/backslashes and
-    # NULL handling — a hand-concatenated JSON string desyncs from the
-    # oracle the moment a regenerated fixture ships a NULL or a quote)
-    wire = stream.select(
-        F.when(F.col("event_id") % 97 == 0, F.lit("not-json"))
-        .otherwise(F.to_json(F.struct(
-            F.col("event_id"),
-            F.col("event_type"),
-            F.get_json_object("props", "$.k").cast("bigint").alias("k"),
-        ))).cast("binary").alias("value"),
-        F.col("event_id").alias("kafka_key"),
-    )
-    parsed = parse_json_values(
-        wire, "event_id long, event_type string, k long")
-    q = (
-        parsed.writeStream.format("memory")
-        .queryName("q_kafka_parse_mem")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    from anomalyzer_spark.streaming._drain import drain, memory_sink
+
+    def parse(stream):
+        # wire values via to_json (correct escaping of quotes/backslashes
+        # and NULL handling — a hand-concatenated JSON string desyncs from
+        # the oracle the moment a regenerated fixture ships a NULL or a
+        # quote)
+        wire = stream.select(
+            F.when(F.col("event_id") % 97 == 0, F.lit("not-json"))
+            .otherwise(F.to_json(F.struct(
+                F.col("event_id"),
+                F.col("event_type"),
+                F.get_json_object("props", "$.k").cast("bigint").alias("k"),
+            ))).cast("binary").alias("value"),
+            F.col("event_id").alias("kafka_key"),
+        )
+        return memory_sink(parse_json_values(
+            wire, "event_id long, event_type string, k long"),
+            "q_kafka_parse_mem")
+
+    drain(spark, f"{sf_dir}/events*.parquet", parse,
+          schema=spark.read.parquet(f"{sf_dir}/events.parquet").schema)
     return spark.table("q_kafka_parse_mem")
 
 

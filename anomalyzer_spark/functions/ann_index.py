@@ -25,6 +25,7 @@ from pyspark.sql.window import Window
 
 from ..session import conf_scope, materialize as _materialize
 from ..sources.layout import DYNAMIC_OVERWRITE, drop_emptied_partitions
+from ..streaming._drain import batch_sink
 from .similarity import (_codes_sql, _lut_sql, absmax_scale, adc_dist,
                          adc_rank_refine, checked_width, cosine,
                          dequantize_col, nearest_cells, quantize_code_expr)
@@ -270,12 +271,8 @@ def serve_ivfpq_stream(
             .parquet(f"{out_path}/batch_id={batch_id}")
         )
 
-    return (
-        query_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
+    return batch_sink(query_stream, handle, checkpoint=checkpoint_path,
+                      trigger=trigger)
 
 
 def ingest_ivfpq_stream(
@@ -331,12 +328,8 @@ def ingest_ivfpq_stream(
             .parquet(f"{index_path}/batch_id={batch_id}")
         )
 
-    return (
-        corpus_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
+    return batch_sink(corpus_stream, handle, checkpoint=checkpoint_path,
+                      trigger=trigger)
 
 
 def compact_ingested_index(

@@ -1,30 +1,45 @@
-"""Shared file-stream drain helper for the *_on_dir streaming runners.
+"""The one file-stream drain behind every ``run_*_on_dir`` runner.
 
-One implementation of the drain-to-memory-sink boilerplate (schema read,
-optional per-trigger file cap, availableNow trigger, await) so fixture
-encoding changes are handled in ONE place: legacy TIMESTAMP(NANOS)
-columns (bigint via nanosAsLong) are normalized to µs TimestampType here
-when the caller names its event-time columns.
+``drain`` is the only entry point that turns a parquet path into a
+drained stream: schema read (only when none is given), per-trigger file
+cap, epoch-ns probe, session-conf scope, start and await.
+``file_stream`` is its un-started source, ``memory_sink`` /
+``batch_sink`` start the two sink shapes, and ``final_state`` selects
+an Update-mode memory sink's last row per key.
+
+Each drain logs one DEBUG record on the ``anomalyzer_spark`` logger
+(computed only when DEBUG is on) summarizing ``recentProgress``:
+``triggers``; summed ``durationMs`` of ``addBatch``, ``walCommit``,
+``queryPlanning`` and ``triggerExecution``; summed ``numInputRows``;
+the last trigger's state ``numRowsTotal`` / ``memoryUsedBytes`` (0 when
+stateless); and the drain's wall ms. Spark keeps only the last
+``spark.sql.streaming.numRecentProgressUpdates`` (default 100)
+triggers, so a longer drain's record covers its last 100.
 """
 
 from __future__ import annotations
 
-from typing import Callable
+import logging
+import time
+from typing import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.window import Window
 
-from ..session import conf_scope
+from ..session import LOG, conf_scope
+
+#: compressed input bytes per state partition of an adaptive drain
+STATE_PARTITION_BYTES = 64 * 1024 * 1024
+
+#: the ``durationMs`` phases the progress record sums
+_PHASES = ("addBatch", "walCommit", "queryPlanning", "triggerExecution")
 
 
-def adaptive_state_partitions(
-    spark: SparkSession,
-    input_path: str,
-    *,
-    bytes_per_partition: int | None = None,
-) -> int:
+def adaptive_state_partitions(spark: SparkSession, input_path: str) -> int:
     """Scale-adaptive shuffle/state partition count for a file-stream
-    drain: ``ceil(input_bytes / bytes_per_partition)`` clamped to
+    drain: ``ceil(input_bytes / STATE_PARTITION_BYTES)`` clamped to
     ``[1, spark.sql.shuffle.partitions]``.
 
     Stateful streaming queries pin their state-store partition count from
@@ -36,24 +51,15 @@ def adaptive_state_partitions(
     input's actual byte size (one filesystem content summary, no data
     read) makes the drill scale-adaptive per guide §2; the session
     conf stays the upper bound so a production deployment that sets
-    thousands of shuffle partitions caps there, and the knob is
-    parameterised via ``anomalyzer.streaming.bytesPerStatePartition``
-    (default 64 MiB of input per state partition).
+    thousands of shuffle partitions caps there.
 
     Caveats (r15 advice): classic sessions only — the filesystem handle
     comes through private py4j internals (``spark._jvm``/``spark._jsc``)
     that do not exist under Spark Connect. And the summary measures
     COMPRESSED on-disk bytes, so heavily compressed text carries more
-    decompressed state per partition than the divisor suggests — lower
-    ``bytesPerStatePartition`` (or raise the session cap) if state-store
-    commit sizes matter at scale.
+    decompressed state per partition than the divisor suggests — raise
+    the session cap if state-store commit sizes matter at scale.
     """
-    if bytes_per_partition is None:
-        bytes_per_partition = int(spark.conf.get(
-            "anomalyzer.streaming.bytesPerStatePartition",
-            str(64 * 1024 * 1024)))
-    if bytes_per_partition <= 0:
-        raise ValueError("bytes_per_partition must be positive")
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(input_path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -66,7 +72,145 @@ def adaptive_state_partitions(
     for st in (matches or []):
         nbytes += fs.getContentSummary(st.getPath()).getLength()
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(1, min(cap, -(-int(nbytes) // bytes_per_partition)))
+    return max(1, min(cap, -(-int(nbytes) // STATE_PARTITION_BYTES)))
+
+
+def file_stream(
+    spark: SparkSession,
+    input_path: str,
+    *,
+    schema=None,
+    max_files_per_trigger: int | None = None,
+    ns_ts_cols: Sequence[str] = (),
+) -> DataFrame:
+    """The parquet file stream over ``input_path``, not yet started.
+
+    ``schema`` defaults to the input's parquet schema (a footer read).
+
+    ``ns_ts_cols``: event-time columns that legacy fixtures may store as
+    INT64 TIMESTAMP(NANOS). A bigint column is ambiguous — it could be
+    legitimate epoch-µs (timeutil's documented integer contract) — so the
+    encoding is PROBED from a handful of sampled values (epoch-ns values
+    are ~1e18, epoch-µs ~1e15; the 5e17 split is unambiguous for any
+    timestamp between 1985 and the year 17,000) instead of assumed. The
+    probe is a LIMIT over the single column — at scale that is one
+    column-pruned read of the first row groups, never a full-input
+    aggregation (an abs()/max() probe would defeat parquet stats and scan
+    everything per runner invocation)."""
+    if schema is None:
+        schema = spark.read.parquet(input_path).schema
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    stream = reader.parquet(input_path)
+    dtypes = dict(stream.dtypes)
+    for c in ns_ts_cols:
+        if dtypes.get(c) == "bigint":
+            # any non-null sample discriminates: both encodings put every
+            # value of a column on the same side of 5e17 (a mixed column
+            # would be a corrupt fixture, not an encoding choice) — and we
+            # assert exactly that, so a pre-1985 head row can't silently
+            # misclassify a ns column as µs
+            sample = (spark.read.schema(schema).parquet(input_path)
+                      .select(F.col(c)).where(F.col(c).isNotNull())
+                      .limit(8).collect())
+            sides = {abs(r[0]) > 5 * 10**17 for r in sample}
+            if len(sides) > 1:
+                raise ValueError(
+                    f"column {c!r} mixes epoch-ns and epoch-µs magnitudes "
+                    f"in its sampled head — corrupt fixture, refusing to "
+                    f"guess the encoding")
+            if sides == {True}:
+                stream = stream.withColumn(
+                    c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+    return stream
+
+
+def progress_summary(progress: Sequence) -> dict:
+    """Summary of a query's ``recentProgress`` (``StreamingQueryProgress``
+    records): trigger count, summed phase ``durationMs`` and
+    ``numInputRows``, and the last trigger's total state rows/bytes."""
+    state = progress[-1].stateOperators if progress else []
+    return {
+        "triggers": len(progress),
+        **{f"{p}_ms": sum(pr.durationMs.get(p, 0) for pr in progress)
+           for p in _PHASES},
+        "input_rows": sum(pr.numInputRows or 0 for pr in progress),
+        "state_rows": sum(op.numRowsTotal for op in state),
+        "state_bytes": sum(op.memoryUsedBytes for op in state),
+    }
+
+
+def drain(
+    spark: SparkSession,
+    input_path: str,
+    start: Callable[[DataFrame], StreamingQuery],
+    *,
+    schema=None,
+    max_files_per_trigger: int | None = None,
+    ns_ts_cols: Sequence[str] = (),
+    state_partitions: int | None = None,
+    no_data_batch: bool | None = None,
+) -> StreamingQuery:
+    """Hand ``file_stream(input_path)`` to ``start``, which returns the
+    started availableNow query; await it and log its progress record.
+    Returns the terminated query.
+
+    Session confs set for the drain only (restored after it; the stream
+    clones the session conf at start):
+
+    * ``nanosAsLong=true``: TIMESTAMP(NANOS) inputs read as bigint for
+      the ``ns_ts_cols`` probe;
+    * ``state_partitions`` → ``spark.sql.shuffle.partitions``, which a
+      stateful query pins its state-store partition count from;
+    * ``no_data_batch=False`` → ``noDataMicroBatches.enabled=false``:
+      skips the trailing empty batch availableNow fires so watermarked
+      operators can flush final windows — pure fixed overhead (a full
+      trigger) for an Update-mode keyed aggregation with NO watermark.
+      Leave it ``None`` for any watermarked/append-mode drain.
+
+    Concurrency caveat (r15 advice): the confs are SESSION-wide, so a
+    query planned CONCURRENTLY on the same SparkSession inherits them —
+    drain on a dedicated ``spark.newSession()`` in that case.
+    """
+    parts = None if state_partitions is None else str(int(state_partitions))
+    nodata = (None if no_data_batch is None
+              else "true" if no_data_batch else "false")
+    t0 = time.perf_counter()
+    with conf_scope(spark, {
+            "spark.sql.legacy.parquet.nanosAsLong": "true",
+            "spark.sql.shuffle.partitions": parts,
+            "spark.sql.streaming.noDataMicroBatches.enabled": nodata}):
+        q = start(file_stream(spark, input_path, schema=schema,
+                              max_files_per_trigger=max_files_per_trigger,
+                              ns_ts_cols=ns_ts_cols))
+        q.awaitTermination()
+    if LOG.isEnabledFor(logging.DEBUG):
+        summary = progress_summary(q.recentProgress)
+        LOG.debug("drain %s: %s ms=%.1f", q.name or input_path,
+                  " ".join(f"{k}={v}" for k, v in summary.items()),
+                  (time.perf_counter() - t0) * 1e3)
+    return q
+
+
+def memory_sink(frame: DataFrame, query_name: str,
+                output_mode: str = "append") -> StreamingQuery:
+    """Start ``frame`` into the availableNow memory sink ``query_name``."""
+    return (frame.writeStream.format("memory").queryName(query_name)
+            .outputMode(output_mode).trigger(availableNow=True).start())
+
+
+def batch_sink(stream: DataFrame, handle, *, checkpoint: str | None = None,
+               query_name: str | None = None,
+               trigger: dict | None = None) -> StreamingQuery:
+    """Start ``stream`` into the ``foreachBatch`` handler ``handle``;
+    ``trigger`` holds writeStream trigger kwargs (default availableNow)."""
+    writer = stream.writeStream.foreachBatch(handle)
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    if query_name:
+        writer = writer.queryName(query_name)
+    return writer.trigger(**(trigger or {"availableNow": True})).start()
 
 
 def drain_available_now(
@@ -81,81 +225,24 @@ def drain_available_now(
     state_partitions: int | None = None,
     no_data_batch: bool | None = None,
 ) -> DataFrame:
-    """Stream ``input_path`` (parquet) through ``build`` and drain with
-    availableNow into a memory sink; returns the sink table (every emitted
-    row — Update-mode callers select final state themselves).
-
-    ``ns_ts_cols``: event-time columns that legacy fixtures may store as
-    INT64 TIMESTAMP(NANOS). A bigint column is ambiguous — it could be
-    legitimate epoch-µs (timeutil's documented integer contract) — so the
-    encoding is PROBED from a handful of sampled values (epoch-ns values
-    are ~1e18, epoch-µs ~1e15; the 5e17 split is unambiguous for any
-    timestamp between 1985 and the year 17,000) instead of assumed. The
-    probe is a LIMIT over the single column — at scale that is one
-    column-pruned read of the first row groups, never a full-input
-    aggregation (an abs()/max() probe would defeat parquet stats and scan
-    everything per runner invocation).
-
-    ``no_data_batch=False`` disables the trailing NO-DATA micro-batch
-    for this drain (r16; scoped exactly like ``state_partitions``): after
-    the last data trigger, availableNow fires one extra empty batch so
-    watermark-driven operators can emit final results — pure fixed
-    overhead (a full trigger's planning + offset/commit I/O) for a keyed
-    aggregation in Update mode with NO watermark, which emits nothing in
-    it. Leave it ``None`` (Spark default, on) for any watermarked/
-    append-mode drain — those NEED the extra batch to flush final
-    windows.
-
-    Concurrency caveat (r15 advice): ``state_partitions`` is scoped by
-    temporarily setting the SESSION-wide ``spark.sql.shuffle.partitions``
-    for the duration of the drain (restored in a finally). Any query
-    planned CONCURRENTLY on the same SparkSession during the drain
-    silently inherits the override — fine for this repo's
-    single-threaded drills/benches/tests; a shared production session
-    running concurrent batch work should drain on a dedicated session
-    (``spark.newSession()``) instead.
-    """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch = spark.read.parquet(input_path)
-    reader = spark.readStream.schema(batch.schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-    dtypes = dict(stream.dtypes)
-    for c in ns_ts_cols:
-        if dtypes.get(c) == "bigint":
-            # any non-null sample discriminates: both encodings put every
-            # value of a column on the same side of 5e17 (a mixed column
-            # would be a corrupt fixture, not an encoding choice) — and we
-            # assert exactly that, so a pre-1985 head row can't silently
-            # misclassify a ns column as µs
-            sample = (batch.select(F.col(c)).where(F.col(c).isNotNull())
-                      .limit(8).collect())
-            sides = {abs(r[0]) > 5 * 10**17 for r in sample}
-            if len(sides) > 1:
-                raise ValueError(
-                    f"column {c!r} mixes epoch-ns and epoch-µs magnitudes "
-                    f"in its sampled head — corrupt fixture, refusing to "
-                    f"guess the encoding")
-            if sides == {True}:
-                stream = stream.withColumn(
-                    c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    # state_partitions scopes spark.sql.shuffle.partitions to THIS drain
-    # (planning happens inside start/awaitTermination; the restore runs
-    # before any caller-side post-processing plans, so downstream batch
-    # plans keep the session's partitioning).
-    parts = None if state_partitions is None else str(int(state_partitions))
-    nodata = (None if no_data_batch is None
-              else "true" if no_data_batch else "false")
-    with conf_scope(spark, {
-            "spark.sql.shuffle.partitions": parts,
-            "spark.sql.streaming.noDataMicroBatches.enabled": nodata}):
-        q = (
-            build(stream).writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    """``drain`` ``input_path`` through ``build`` into a memory sink;
+    returns the sink table (every emitted row — Update-mode callers
+    select final state with ``final_state``)."""
+    drain(spark, input_path,
+          lambda s: memory_sink(build(s), query_name, output_mode),
+          max_files_per_trigger=max_files_per_trigger,
+          ns_ts_cols=ns_ts_cols, state_partitions=state_partitions,
+          no_data_batch=no_data_batch)
     return spark.table(query_name)
+
+
+def final_state(updates: DataFrame, keys: Sequence[str],
+                *order: Column) -> DataFrame:
+    """Each key's first row under ``order`` — the final state of an
+    Update-mode memory sink, which keeps every update of every key."""
+    w = Window.partitionBy(*keys).orderBy(*order)
+    return (
+        updates.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .drop("_rn")
+    )

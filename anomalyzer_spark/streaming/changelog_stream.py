@@ -51,6 +51,7 @@ from pyspark.sql.utils import AnalysisException
 from ..functions.changelog import _is_delete, latest_changes
 from ..session import conf_scope, materialize as _materialize
 from ..sources.layout import DYNAMIC_OVERWRITE, drop_emptied_partitions
+from ._drain import batch_sink, drain
 
 __all__ = ["changelog_upsert_stream", "read_snapshot", "init_snapshot",
            "vacuum_tombstones", "run_changelog_stream_on_dir"]
@@ -123,12 +124,8 @@ def changelog_upsert_stream(
              .write.mode("overwrite").partitionBy("_bucket")
              .parquet(snap_dir))
 
-    return (
-        changes_stream.writeStream.foreachBatch(handle)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start())
+    return batch_sink(changes_stream, handle, checkpoint=checkpoint_path,
+                      query_name=query_name, trigger=trigger)
 
 
 def read_snapshot(
@@ -227,18 +224,13 @@ def run_changelog_stream_on_dir(
     max_files_per_trigger: int = 1,
     query_name: str = "changelog_stream_result",
 ) -> DataFrame:
-    """Drain a parquet directory of CDC files (availableNow, one file
-    per micro-batch by default), maintaining the snapshot store;
-    returns the final current snapshot."""
-    if schema is None:
-        schema = spark.read.parquet(input_dir).schema
-    src = (spark.readStream.schema(schema)
-           .option("maxFilesPerTrigger", max_files_per_trigger)
-           .parquet(input_dir))
-    q = changelog_upsert_stream(
-        spark, src, store_dir, checkpoint_path, keys, sequence_col,
+    """Drain a parquet directory of CDC files (``_drain.drain``,
+    availableNow, one file per micro-batch by default), maintaining the
+    snapshot store; returns the final current snapshot."""
+    drain(spark, input_dir, lambda s: changelog_upsert_stream(
+        spark, s, store_dir, checkpoint_path, keys, sequence_col,
         op_col=op_col, delete_values=delete_values,
         tiebreak_cols=tiebreak_cols, n_buckets=n_buckets,
-        query_name=query_name)
-    q.awaitTermination()
+        query_name=query_name),
+        schema=schema, max_files_per_trigger=max_files_per_trigger)
     return read_snapshot(spark, store_dir)

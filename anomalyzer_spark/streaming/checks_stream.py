@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.checks import verify_checks
+from ._drain import batch_sink, drain
 
 __all__ = ["run_checks_stream_on_dir"]
 
@@ -34,14 +35,13 @@ def run_checks_stream_on_dir(
     max_files_per_trigger: int = 1,
     query_name: str = "checks_stream_result",
 ) -> DataFrame:
-    """Drain parquet files from ``input_dir`` (availableNow), running
-    the declared checks on each micro-batch; returns the monitor frame.
-    Every row equals the offline ``verify_checks`` report of that batch
-    alone (pinned in tests/test_streaming.py)."""
+    """Drain parquet files from ``input_dir`` (``_drain.drain``,
+    availableNow), running the declared checks on each micro-batch;
+    returns the monitor frame. Every row equals the offline
+    ``verify_checks`` report of that batch alone (pinned in
+    tests/test_streaming.py)."""
     if not checks:
         raise ValueError("run_checks_stream_on_dir needs checks")
-    if schema is None:
-        schema = spark.read.parquet(input_dir).schema
 
     reports: list = []
 
@@ -51,16 +51,9 @@ def run_checks_stream_on_dir(
                             r["metric"], r["value"], r["threshold"],
                             r["passed"]))
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-        .writeStream.foreachBatch(_handle)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spark, input_dir,
+          lambda s: batch_sink(s, _handle, query_name=query_name),
+          schema=schema, max_files_per_trigger=max_files_per_trigger)
     return spark.createDataFrame(
         reports, "batch_id long, check string, column string, "
                  "metric string, value double, threshold double, "

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pipeline import CurationConfig, curate
+from ._drain import batch_sink, drain, file_stream
 
 __all__ = ["batch_union_equals_offline", "run_curation_stream_on_dir",
            "run_curation_stream_with_dedup_on_dir"]
@@ -67,9 +68,10 @@ def run_curation_stream_on_dir(
     max_files_per_trigger: int = 1,
     available_now: bool = True,
 ):
-    """Stream parquet documents from ``input_dir`` through ``curate(cfg)``
-    into idempotent ``batch_id=N`` parquet directories under
-    ``output_dir``. Returns the started query (caller awaits/stops).
+    """Stream parquet documents from ``input_dir`` (``_drain.file_stream``)
+    through ``curate(cfg)`` into idempotent ``batch_id=N`` parquet
+    directories under ``output_dir``. Returns the started query (caller
+    awaits/stops).
 
     ``schema`` defaults to the directory's existing parquet schema (one
     driver-side read of footers — the stream itself needs an explicit
@@ -77,26 +79,22 @@ def run_curation_stream_on_dir(
     stops — the batch-replay mode the equivalence test uses; pass False
     for a continuously running ingest.
     """
-    if schema is None:
-        schema = spark.read.parquet(input_dir).schema
+    return batch_sink(
+        file_stream(spark, input_dir, schema=schema,
+                    max_files_per_trigger=max_files_per_trigger),
+        _curate_batch(output_dir, cfg, eval_df), checkpoint=checkpoint_dir,
+        # Spark's default trigger: each micro-batch as soon as one ends
+        trigger=None if available_now else {"processingTime": "0 seconds"})
 
-    def _handle(batch_df, batch_id):
+
+def _curate_batch(output_dir, cfg, eval_df=None):
+    """foreachBatch handler: ``curate(cfg)`` each micro-batch into its
+    own ``batch_id=N`` directory (a replay overwrites it)."""
+    def handle(batch_df, batch_id):
         out = curate(batch_df, cfg, eval_df=eval_df).output
         out.write.mode("overwrite").parquet(
             f"{output_dir}/batch_id={batch_id}")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    writer = (
-        stream.writeStream.foreachBatch(_handle)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return handle
 
 
 def run_curation_stream_with_dedup_on_dir(
@@ -167,10 +165,10 @@ def run_curation_stream_with_dedup_on_dir(
     # 1. map-shaped stages per micro-batch (normalize + profile gates),
     #    dedup stripped — it moves to the cross-batch stores below
     map_cfg = dataclasses.replace(cfg, dedup=None)
-    q = run_curation_stream_on_dir(
-        spark, input_dir, output_dir, checkpoint_dir, map_cfg,
-        schema=schema, max_files_per_trigger=max_files_per_trigger)
-    q.awaitTermination()
+    drain(spark, input_dir,
+          lambda s: batch_sink(s, _curate_batch(output_dir, map_cfg),
+                               checkpoint=checkpoint_dir),
+          schema=schema, max_files_per_trigger=max_files_per_trigger)
     union = spark.read.parquet(f"{output_dir}/batch_id=*")
 
     # 2. cross-batch EXACT dedup: drain the curated batch dirs through

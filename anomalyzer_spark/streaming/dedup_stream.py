@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.dedup import normalized
+from ._drain import (adaptive_state_partitions, drain_available_now,
+                     final_state)
 
 
 def dedup_stream(
@@ -121,8 +123,6 @@ def run_dedup_stream_on_dir(
     of per-batch state commits changes). Pass an int to pin it, or
     ``None`` to keep the session default.
     """
-    from ._drain import adaptive_state_partitions, drain_available_now
-
     if state_partitions == "auto":
         state_partitions = adaptive_state_partitions(spark, input_path)
     res = drain_available_now(
@@ -136,12 +136,5 @@ def run_dedup_stream_on_dir(
         # fixed overhead — final state is identical without it (r16;
         # measured per-batch breakdown in OPTIMIZATION_r16.md)
         no_data_batch=False)
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("content_hash").orderBy(
-        F.col("group_size").desc(), F.col("canonical_id").asc())
-    return (
-        res.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return final_state(res, ["content_hash"], F.col("group_size").desc(),
+                       F.col("canonical_id").asc())

@@ -40,6 +40,7 @@ from pyspark.sql.types import (
 
 from .. import oracle
 from ..config import AnomalyzerConf
+from ._drain import drain, final_state, memory_sink
 
 
 def detect_stream(
@@ -152,31 +153,17 @@ def run_stream_on_dir(
     query_name: str = "detect_stream_result",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Drain a parquet file/dir through ``detect_stream`` (availableNow) and
-    return the FINAL per-key rows as a batch DataFrame.
+    """Drain a parquet file/dir through ``detect_stream`` (``_drain.drain``,
+    availableNow, Update-mode memory sink) and return the FINAL per-key
+    rows as a batch DataFrame.
 
     The memory sink keeps every update; the final state of each key is the
     row with the highest ``total_seen`` (strictly increasing per key).
     """
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-    out = detect_stream(stream, keys, ts_col, value_col, conf, tiebreak_col)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.table(query_name)
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(*keys).orderBy(F.col("total_seen").desc())
-    return (
-        res.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    drain(spark, input_path,
+          lambda s: memory_sink(
+              detect_stream(s, keys, ts_col, value_col, conf, tiebreak_col),
+              query_name, "update"),
+          schema=schema, max_files_per_trigger=max_files_per_trigger)
+    return final_state(spark.table(query_name), keys,
+                       F.col("total_seen").desc())

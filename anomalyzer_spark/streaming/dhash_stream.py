@@ -42,6 +42,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from ..functions.dedup import hamming_blocks
 from ..functions.multimodal import dhash_image
+from ._drain import batch_sink, drain
 from ._store import batch_path, bound_state, horizon, read_component
 
 __all__ = ["dhash_dedup_stream", "dhash_pairs_store",
@@ -132,12 +133,8 @@ def dhash_dedup_stream(
             min_live=min_live, compact_every=compact_every,
             partition_cols={"blocks": ("pfx",)})
 
-    return (
-        img_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
+    return batch_sink(img_stream, handle, checkpoint=checkpoint_path,
+                      trigger=trigger)
 
 
 def dhash_pairs_store(spark: SparkSession, store_dir: str,
@@ -167,15 +164,11 @@ def run_dhash_stream_on_dir(
     compact_every: int | None = None,
 ) -> DataFrame:
     """Drain a parquet file/dir through ``dhash_dedup_stream``
-    (availableNow) and return the accumulated pair state."""
-    batch = spark.read.parquet(input_path)
-    reader = spark.readStream.schema(batch.schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-    q = dhash_dedup_stream(
-        spark, stream, store_dir, checkpoint_path, content_col, id_col,
+    (``_drain.drain``, availableNow) and return the accumulated pair
+    state."""
+    drain(spark, input_path, lambda s: dhash_dedup_stream(
+        spark, s, store_dir, checkpoint_path, content_col, id_col,
         max_hamming=max_hamming, retention_batches=retention_batches,
-        compact_every=compact_every)
-    q.awaitTermination()
+        compact_every=compact_every),
+        max_files_per_trigger=max_files_per_trigger)
     return dhash_pairs_store(spark, store_dir, id_col)

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from ..functions.drift import (
     category_profile, histogram_profile, psi_report)
 from ..session import materialize as _materialize
+from ._drain import batch_sink, drain
 
 __all__ = ["run_drift_stream_on_dir"]
 
@@ -46,9 +47,10 @@ def run_drift_stream_on_dir(
     max_files_per_trigger: int = 1,
     query_name: str = "drift_stream_result",
 ) -> DataFrame:
-    """Drain parquet files from ``input_dir`` (availableNow), PSI-ing
-    each micro-batch against the baseline; returns the batch report
-    frame ``(batch_id, column, psi, old_rows, new_rows)``.
+    """Drain parquet files from ``input_dir`` (``_drain.drain``,
+    availableNow), PSI-ing each micro-batch against the baseline;
+    returns the batch report frame ``(batch_id, column, psi, old_rows,
+    new_rows)``.
 
     * ``bounds`` (required) — column -> (lo, hi) bin bounds for the
       numeric ``cols``; MUST be the baseline snapshot's (that is the
@@ -70,8 +72,6 @@ def run_drift_stream_on_dir(
         raise ValueError("numeric baseline given but cols is empty")
     if (cat_baseline is None) != (categories is None):
         raise ValueError("categories and cat_baseline go together")
-    if schema is None:
-        schema = spark.read.parquet(input_dir).schema
     # materialize the tiny baselines once — each batch joins against
     # them, free of their upstream lineage, for the monitor's lifetime
     if baseline is not None:
@@ -103,16 +103,9 @@ def run_drift_stream_on_dir(
             reports.append((int(batch_id), r["column"], r["psi"],
                             r["old_rows"], r["new_rows"]))
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-        .writeStream.foreachBatch(_handle)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spark, input_dir,
+          lambda s: batch_sink(s, _handle, query_name=query_name),
+          schema=schema, max_files_per_trigger=max_files_per_trigger)
     return spark.createDataFrame(
         reports, "batch_id long, column string, psi double, "
                  "old_rows long, new_rows long")

@@ -53,6 +53,7 @@ from pyspark.sql.types import (DoubleType, LongType, StructField,
 from ..functions.dedup import hamming_blocks
 from ..functions.multimodal import (_FRAME_ID_BITS, audio_fingerprint,
                                     dhash_image, frame_sample)
+from ._drain import batch_sink, drain
 from ._store import batch_path, bound_state, horizon, read_component
 
 __all__ = ["audio_dedup_stream", "audio_pairs_store",
@@ -159,12 +160,8 @@ def audio_dedup_stream(
                     min_live=min_live, compact_every=compact_every,
                     partition_cols={"fps": ("pfx",)})
 
-    return (
-        clip_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
+    return batch_sink(clip_stream, handle, checkpoint=checkpoint_path,
+                      trigger=trigger)
 
 
 def audio_pairs_store(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -192,17 +189,13 @@ def run_audio_stream_on_dir(
     **fp_kwargs,
 ) -> DataFrame:
     """Drain a parquet file/dir through ``audio_dedup_stream``
-    (availableNow) and return the accumulated pair state."""
-    batch = spark.read.parquet(input_path)
-    reader = spark.readStream.schema(batch.schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-    q = audio_dedup_stream(
-        spark, stream, store_dir, checkpoint_path, content_col, id_col,
+    (``_drain.drain``, availableNow) and return the accumulated pair
+    state."""
+    drain(spark, input_path, lambda s: audio_dedup_stream(
+        spark, s, store_dir, checkpoint_path, content_col, id_col,
         min_shared=min_shared, retention_batches=retention_batches,
-        compact_every=compact_every, **fp_kwargs)
-    q.awaitTermination()
+        compact_every=compact_every, **fp_kwargs),
+        max_files_per_trigger=max_files_per_trigger)
     return audio_pairs_store(spark, store_dir)
 
 
@@ -331,12 +324,8 @@ def video_dedup_stream(
                     min_live=min_live, compact_every=compact_every,
                     partition_cols={"fblocks": ("pfx",)})
 
-    return (
-        clip_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
+    return batch_sink(clip_stream, handle, checkpoint=checkpoint_path,
+                      trigger=trigger)
 
 
 def video_pairs_store(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -366,15 +355,11 @@ def run_video_stream_on_dir(
     compact_every: int | None = None,
 ) -> DataFrame:
     """Drain a parquet file/dir through ``video_dedup_stream``
-    (availableNow) and return the accumulated pair state."""
-    batch = spark.read.parquet(input_path)
-    reader = spark.readStream.schema(batch.schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-    q = video_dedup_stream(
-        spark, stream, store_dir, checkpoint_path, content_col, id_col,
+    (``_drain.drain``, availableNow) and return the accumulated pair
+    state."""
+    drain(spark, input_path, lambda s: video_dedup_stream(
+        spark, s, store_dir, checkpoint_path, content_col, id_col,
         n_frames=n_frames, max_hamming=max_hamming, min_shared=min_shared,
-        retention_batches=retention_batches, compact_every=compact_every)
-    q.awaitTermination()
+        retention_batches=retention_batches, compact_every=compact_every),
+        max_files_per_trigger=max_files_per_trigger)
     return video_pairs_store(spark, store_dir)

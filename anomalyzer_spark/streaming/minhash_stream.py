@@ -58,6 +58,7 @@ from pyspark.sql.types import DoubleType, StructField, StructType
 from ..functions.dedup import (
     minhash_band_buckets, verify_jaccard_pairs, word_shingles,
 )
+from ._drain import batch_sink, drain
 from ._store import (batch_path, bound_state, horizon, latest_gen,
                      next_batch_id, publish_gen, read_component)
 
@@ -300,12 +301,8 @@ def minhash_dedup_stream(
             compact_every=compact_every,
             materialize_groups=materialize_groups)
 
-    return (
-        doc_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
+    return batch_sink(doc_stream, handle, checkpoint=checkpoint_path,
+                      trigger=trigger)
 
 
 def minhash_pairs_store(
@@ -411,16 +408,12 @@ def run_minhash_stream_on_dir(
     materialize_groups: bool = False,
 ) -> DataFrame:
     """Drain a parquet file/dir through ``minhash_dedup_stream``
-    (availableNow) and return the accumulated pair state."""
-    batch = spark.read.parquet(input_path)
-    reader = spark.readStream.schema(batch.schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-    q = minhash_dedup_stream(
-        spark, stream, store_dir, checkpoint_path, text_col, id_col,
+    (``_drain.drain``, availableNow) and return the accumulated pair
+    state."""
+    drain(spark, input_path, lambda s: minhash_dedup_stream(
+        spark, s, store_dir, checkpoint_path, text_col, id_col,
         k=k, num_hashes=num_hashes, bands=bands, threshold=threshold,
         retention_batches=retention_batches, compact_every=compact_every,
-        materialize_groups=materialize_groups)
-    q.awaitTermination()
+        materialize_groups=materialize_groups),
+        max_files_per_trigger=max_files_per_trigger)
     return minhash_pairs_store(spark, store_dir)

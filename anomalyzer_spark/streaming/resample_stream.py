@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._drain import drain_available_now
+
 
 def resample_stream(
     df: DataFrame,
@@ -88,8 +90,6 @@ def run_resample_stream_on_dir(
     identical — the batch-equivalence test and the driver oracle both
     encode that cutoff).
     """
-    from ._drain import drain_available_now
-
     return drain_available_now(
         spark, input_path,
         lambda s: resample_stream(s, keys, ts_col, value_col,

@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.similarity import checked_width, cosine, nearest_cells
+from ._drain import batch_sink, drain
 from ._store import batch_path, bound_state, horizon, read_component
 
 __all__ = ["semantic_dedup_stream", "semantic_pairs_store",
@@ -125,12 +126,8 @@ def semantic_dedup_stream(
             min_live=min_live, compact_every=compact_every,
             partition_cols={"vectors": ("cell",)})
 
-    return (
-        vec_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
+    return batch_sink(vec_stream, handle, checkpoint=checkpoint_path,
+                      trigger=trigger)
 
 
 def semantic_pairs_store(
@@ -189,16 +186,12 @@ def run_semantic_stream_on_dir(
     compact_every: int | None = None,
 ) -> DataFrame:
     """Drain a parquet file/dir through ``semantic_dedup_stream``
-    (availableNow) and return the accumulated pair state."""
-    batch = spark.read.parquet(input_path)
-    reader = spark.readStream.schema(batch.schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-    q = semantic_dedup_stream(
-        spark, stream, store_dir, checkpoint_path, centroids,
+    (``_drain.drain``, availableNow) and return the accumulated pair
+    state."""
+    drain(spark, input_path, lambda s: semantic_dedup_stream(
+        spark, s, store_dir, checkpoint_path, centroids,
         id_col=id_col, vec_col=vec_col, threshold=threshold,
         n_assign=n_assign, retention_batches=retention_batches,
-        compact_every=compact_every)
-    q.awaitTermination()
+        compact_every=compact_every),
+        max_files_per_trigger=max_files_per_trigger)
     return semantic_pairs_store(spark, store_dir)

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.sessions import session_stream
+from ._drain import drain_available_now
 
 
 def run_session_stream_on_dir(
@@ -34,8 +35,6 @@ def run_session_stream_on_dir(
     end+gap; sessions still open at the final watermark are withheld
     (emitted ⊂ batch sessions — the oracle encodes the same cutoff).
     """
-    from ._drain import drain_available_now
-
     return drain_available_now(
         spark, input_path,
         lambda s: session_stream(s, keys, ts_col, gap_seconds=gap_seconds,

@@ -40,6 +40,7 @@ from ..functions.sketch import (
     _merge_mg_union, bottomk_profile, hll_profile, kll_profile,
     merge_bottomk, merge_hll, merge_kll, mg_profile,
 )
+from ._drain import batch_sink, drain
 from ._store import batch_path, bound_state, next_batch_id, read_component
 
 __all__ = ["bottomk_sketch_store", "hll_sketch_store",
@@ -301,19 +302,13 @@ def run_sketch_stream_on_dir(
     schema=None,
     max_files_per_trigger: int = 1,
 ) -> None:
-    """Drain parquet files from ``input_dir`` (availableNow) through the
-    sketch store: one ``sketch_ingest`` per micro-batch. Read results
-    with ``hll_sketch_store`` / ``mg_sketch_store`` /
-    ``kll_sketch_store`` / ``bottomk_sketch_store`` (+
+    """Drain parquet files from ``input_dir`` (``_drain.drain``,
+    availableNow) through the sketch store: one ``sketch_ingest`` per
+    micro-batch. Read results with ``hll_sketch_store`` /
+    ``mg_sketch_store`` / ``kll_sketch_store`` / ``bottomk_sketch_store`` (+
     ``sketch.hll_estimate`` / ``kll_quantiles`` / ``bottomk_jaccard``).
     ``num_cols`` adds the KLL quantile leg; ``bk_cols`` the bottom-k
     set-sample leg."""
-    if schema is None:
-        schema = spark.read.parquet(input_dir).schema
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", max_files_per_trigger)
-              .parquet(input_dir))
-
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
@@ -323,8 +318,6 @@ def run_sketch_stream_on_dir(
                       mg_k=mg_k, kll_k=kll_k, bk_k=bk_k,
                       compact_every=compact_every)
 
-    q = (stream.writeStream.foreachBatch(handle)
-         .option("checkpointLocation", checkpoint_path)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    drain(spark, input_dir,
+          lambda s: batch_sink(s, handle, checkpoint=checkpoint_path),
+          schema=schema, max_files_per_trigger=max_files_per_trigger)

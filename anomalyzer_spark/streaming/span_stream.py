@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..functions.dedup import (duplicate_spans_from_gram_stats,
                                gram_occurrences, strip_spans_frame)
+from ._drain import drain_available_now, final_state
 
 __all__ = ["span_gram_stream", "run_span_gram_stream_on_dir",
            "strip_spans_with_store"]
@@ -83,22 +84,13 @@ def run_span_gram_stream_on_dir(
     adds occurrences), tie-broken by smallest ``canon`` (monotonically
     non-increasing).
     """
-    from pyspark.sql.window import Window
-
-    from ._drain import drain_available_now
-
     res = drain_available_now(
         spark, input_path,
         lambda s: span_gram_stream(s, text_col, id_col, min_len=min_len),
         query_name, output_mode="update",
         max_files_per_trigger=max_files_per_trigger)
-    w = Window.partitionBy("gram_hash").orderBy(
-        F.col("n_occ").desc(), F.col("canon").asc())
-    return (
-        res.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return final_state(res, ["gram_hash"],
+                       F.col("n_occ").desc(), F.col("canon").asc())
 
 
 def strip_spans_with_store(

@@ -161,7 +161,6 @@ def test_untouched_buckets_not_rewritten(spark, tmp_path):
     assert touched == 1 and same == len(stamp) - 1
 
 
-@pytest.mark.slow
 def test_init_snapshot_seeds_base(spark, tmp_path):
     base = spark.createDataFrame(
         [(k, f"base-{k}", 0) for k in range(10)], "k long, v string, seq long")

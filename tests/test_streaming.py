@@ -1237,25 +1237,16 @@ def test_curation_stream_cross_batch_strip_spans(spark, sf_dir, tmp_path):
     assert _SPAN_PASSAGE in by_id[5] and _SPAN_PASSAGE not in by_id[700]
 
 
-def test_adaptive_state_partitions_derivation(spark, tmp_path):
-    """ceil(bytes / divisor) clamped to [1, session shuffle partitions]:
-    kilobyte inputs get ONE state partition, the session conf is the
-    production upper bound, and the divisor is conf-parameterised."""
+def test_adaptive_state_partitions_derivation(spark, tmp_path,
+                                             monkeypatch):
+    """ceil(bytes / STATE_PARTITION_BYTES) clamped to [1, session shuffle
+    partitions]: kilobyte inputs get ONE state partition and the session
+    conf is the production upper bound."""
+    from anomalyzer_spark.streaming import _drain
     from anomalyzer_spark.streaming._drain import adaptive_state_partitions
 
     sdir = str(tmp_path / "tiny_in")
     spark.range(10).write.mode("overwrite").parquet(sdir)
-    assert adaptive_state_partitions(spark, sdir) == 1
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert adaptive_state_partitions(
-        spark, sdir, bytes_per_partition=1) == cap
-    spark.conf.set("anomalyzer.streaming.bytesPerStatePartition", "1")
-    try:
-        assert adaptive_state_partitions(spark, sdir) == cap
-    finally:
-        spark.conf.unset("anomalyzer.streaming.bytesPerStatePartition")
-    with pytest.raises(ValueError, match="positive"):
-        adaptive_state_partitions(spark, sdir, bytes_per_partition=0)
     # GLOB inputs (file-stream sources accept them; getContentSummary
     # does not — r15 regression: curate_stream drains out/batch_id=*):
     # glob bytes == the summed per-dir bytes, and no matches -> 1
@@ -1263,9 +1254,12 @@ def test_adaptive_state_partitions_derivation(spark, tmp_path):
         spark.range(5).write.mode("overwrite").parquet(
             str(tmp_path / f"batch_id={b}"))
     glob = str(tmp_path / "batch_id=*")
+    assert adaptive_state_partitions(spark, sdir) == 1
     assert adaptive_state_partitions(spark, glob) == 1
-    assert adaptive_state_partitions(spark, glob, bytes_per_partition=1) \
-        == cap
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    monkeypatch.setattr(_drain, "STATE_PARTITION_BYTES", 1)
+    assert adaptive_state_partitions(spark, sdir) == cap
+    assert adaptive_state_partitions(spark, glob) == cap
     assert adaptive_state_partitions(
         spark, str(tmp_path / "nothing=*")) == 1
 
