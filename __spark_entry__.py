@@ -1703,10 +1703,8 @@ def q_detect_stream(spark, sf_dir):
     """Structured Streaming detect drained over the events table
     (availableNow); must equal batch detect → same SQL oracle."""
     from anomalyzer_spark.streaming import run_stream_on_dir
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     res = run_stream_on_dir(
-        spark, f"{sf_dir}/events*.parquet", schema, ["event_type"],
+        spark, f"{sf_dir}/events*.parquet", None, ["event_type"],
         "ts", "value", DET_CONF, "event_id",
         query_name="q_detect_stream_mem")
     return _round6(res.select("event_type", "n_points", "prob"), "prob")
@@ -1718,10 +1716,8 @@ def q_detect_stream_mc(spark, sf_dir):
     detect bit-for-bit, including the hash-permutation MC tests — so the
     streaming path shares the full MC SQL oracle."""
     from anomalyzer_spark.streaming import run_stream_on_dir
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     res = run_stream_on_dir(
-        spark, f"{sf_dir}/events*.parquet", schema, ["event_type"],
+        spark, f"{sf_dir}/events*.parquet", None, ["event_type"],
         "ts", "value", DEFAULT_CONF, "event_id",
         query_name="q_detect_stream_mc_mem")
     return _round6(res.select("event_type", "n_points", "prob"), "prob")
@@ -2439,10 +2435,10 @@ def _detect_sql(key: str, conf: AnomalyzerConf, bytest: bool = False,
         f"  (CASE WHEN p_{_ENT[e]} IS NOT NULL THEN {wref[e]} "
         f"END)::DOUBLE AS weight_{e}," for e in entries)
 
-    # NULL key components → 'None' sentinel, matching kernel.key_str_col
-    # and the streaming path's str(None). Documented collision: a literal
-    # string key 'None' draws the same permutation stream as a NULL key
-    # (see key_str_col docstring).
+    # NULL key components → 'None' sentinel, matching kernel.key_str_col,
+    # which batch and streaming detect both use. Documented collision: a
+    # literal string key 'None' draws the same permutation stream as a
+    # NULL key (see key_str_col docstring).
     kpre = (f", '{conf.seed}|' || concat_ws('|', "
             + ", ".join(f"coalesce({c}::VARCHAR, 'None')" for c in key_cols)
             + ") || '|' AS kpre" if mc else "")

@@ -3,10 +3,10 @@
 Every statistical test of the reference (lytics/anomalyzer) is reimplemented
 here, faithful to the Go code at /root/reference/algorithms.go and
 anomalyze.go, including the quirks catalogued in SURVEY.md §2.6. This module
-is the single source of truth for semantics: the Spark kernel
-(operators/kernel.py) runs the Monte-Carlo tests from here over blocks of
-equal-length keys (``mc_block``), and the test suite cross-checks the
-pure-column Spark expressions against them.
+is the single source of truth for semantics: the batch MC kernel
+(operators/kernel.py) and streaming ``detect_stream`` run the Monte-Carlo
+tests from here over blocks of equal-length keys (``mc_probs``), and the
+test suite cross-checks the pure-column Spark expressions against them.
 
 Pinned govector semantics (the dep is not vendored in the reference tree;
 SURVEY.md §7.4 requires pinning):
@@ -385,6 +385,37 @@ def mc_block(V: np.ndarray, conf: AnomalyzerConf, keys: list[str],
     return {t: _BLOCK_TESTS[t](V, conf, perms[t]) for t in tests}
 
 
+#: digest rows (keys × tests × perm_count × n) per block of equal-length
+#: keys. The round loop's per-call NumPy overhead is amortized by this
+#: size (14 keys at perm_count=500, n=5, one test), and the bound keeps a
+#: block's (keys, perm_count, n) intermediates cache-sized for long
+#: windows.
+DIGEST_BUDGET = 36_000
+
+
+def mc_probs(conf: AnomalyzerConf, tests: tuple[str, ...], vecs: list,
+             keys: list[str]) -> dict[str, np.ndarray]:
+    """(len(vecs),) probs of each MC test in ``tests`` for many keys of
+    any lengths, NaN where the test returns NA: keys grouped by window
+    length, each group cut into blocks of at most DIGEST_BUDGET digest
+    rows (``mc_block``). A length whose tests all return NA is never
+    digested. The batch MC kernel and ``eval_probs`` both run here."""
+    out = {t: np.full(len(vecs), np.nan) for t in tests}
+    lens = np.array([len(v) for v in vecs], dtype=np.int64)
+    for n in np.unique(lens).tolist():
+        live = tuple(t for t in tests if mc_window(t, n, conf))
+        if not live:
+            continue
+        rows = np.flatnonzero(lens == n)
+        per = max(1, DIGEST_BUDGET // (len(live) * conf.perm_count * n))
+        for lo in range(0, len(rows), per):
+            blk = rows[lo : lo + per]
+            V = np.array([vecs[i] for i in blk], dtype=np.float64)
+            for t, p in mc_block(V, conf, [keys[i] for i in blk], live).items():
+                out[t][blk] = p
+    return out
+
+
 def _mc_test(test: str, v: np.ndarray, conf: AnomalyzerConf, key: str,
              perms) -> float | None:
     v = np.asarray(v)
@@ -419,8 +450,8 @@ def bootstrap_ks_test(v: np.ndarray, conf: AnomalyzerConf, key: str,
 def method_prob(method: str, v: np.ndarray, conf: AnomalyzerConf,
                 key: str = "", perms=None) -> float | None:
     """Raw (un-capped) prob of one configured method; None is the
-    reference's NA. The one method→test mapping of ``eval_by_test``; the
-    batch MC kernel (operators/kernel.py) calls ``mc_block`` directly.
+    reference's NA. The one method→test mapping of ``eval_by_test``;
+    ``mc_probs`` runs the MC tests of many keys at once.
     ``perms`` optionally maps an MC test to this key's (perm_count, n)
     permutation matrix."""
     if method == "magnitude":
@@ -439,15 +470,14 @@ def method_prob(method: str, v: np.ndarray, conf: AnomalyzerConf,
     raise ValueError(method)  # pragma: no cover — config validation forbids this
 
 
-def eval_by_test(v: np.ndarray, conf: AnomalyzerConf, key: str = ""):
-    """Per-test probs + weights (anomalyze.go:195-221).
-
-    Returns (probmap, weightmap); highrank/lowrank merged into 'rank' via max;
-    NA (None) results dropped; probs capped to [0,1].
-    """
+def _probmap(conf: AnomalyzerConf, prob_of) -> dict[str, float]:
+    """Capped probs by test name (anomalyze.go:195-221) from
+    ``prob_of(method)``, the raw prob or None (NA) of each configured
+    method: NA results dropped, highrank/lowrank merged into 'rank' via
+    max."""
     probmap: dict[str, float] = {}
     for method in conf.methods:
-        p = method_prob(method, v, conf, key)
+        p = prob_of(method)
         if p is None:
             continue
         p = cap(p)
@@ -455,7 +485,16 @@ def eval_by_test(v: np.ndarray, conf: AnomalyzerConf, key: str = ""):
             probmap["rank"] = max(probmap.get("rank", 0.0), p)
         else:
             probmap[method] = p
+    return probmap
 
+
+def eval_by_test(v: np.ndarray, conf: AnomalyzerConf, key: str = ""):
+    """Per-test probs + weights (anomalyze.go:195-221).
+
+    Returns (probmap, weightmap); highrank/lowrank merged into 'rank' via max;
+    NA (None) results dropped; probs capped to [0,1].
+    """
+    probmap = _probmap(conf, lambda m: method_prob(m, v, conf, key))
     weightmap = {m: get_weight(m, p) for m, p in probmap.items()}
     return probmap, weightmap
 
@@ -468,16 +507,43 @@ def get_weight(name: str, prob: float) -> float:
     return 0.5
 
 
-def eval_prob(v: np.ndarray, conf: AnomalyzerConf, key: str = "") -> float:
-    """Full Eval (anomalyze.go:145-192): delay gate, per-test probs,
-    magnitude sensitivity hard gate, dynamic weights, weighted mean."""
-    if conf.delay and len(v) < conf.window_size:
-        return 0.0
-    probmap, weightmap = eval_by_test(v, conf, key)
+def _weighted(probmap: dict[str, float], conf: AnomalyzerConf) -> float:
+    """Magnitude sensitivity hard gate, dynamic weights, weighted mean
+    (anomalyze.go:170-192)."""
     if "magnitude" in probmap and probmap["magnitude"] < conf.sensitivity:
         return 0.0  # hard gate, anomalyze.go:173-175
+    weightmap = {m: get_weight(m, p) for m, p in probmap.items()}
     num = sum(probmap[m] * weightmap[m] for m in probmap)
     den = sum(weightmap.values())
     if den == 0.0:
         return 0.0
     return num / den
+
+
+def eval_prob(v: np.ndarray, conf: AnomalyzerConf, key: str = "") -> float:
+    """Full Eval (anomalyze.go:145-192): delay gate, per-test probs,
+    magnitude sensitivity hard gate, dynamic weights, weighted mean."""
+    if conf.delay and len(v) < conf.window_size:
+        return 0.0
+    return _weighted(eval_by_test(v, conf, key)[0], conf)
+
+
+def eval_probs(vecs: list, conf: AnomalyzerConf,
+               keys: list[str]) -> np.ndarray:
+    """``eval_prob`` of many keys at once, bit-identical to one call per
+    key: the MC tests of every key run through ``mc_probs`` (one digest
+    pass and one vectorized test per block of equal-length keys), the
+    closed-form tests and the combiner per key."""
+    vecs = [np.asarray(v, dtype=np.float64) for v in vecs]
+    live = [i for i, v in enumerate(vecs)
+            if not (conf.delay and len(v) < conf.window_size)]
+    mc = mc_probs(conf, tuple(m for m in conf.methods if m in _TEST_ID),
+                  [vecs[i] for i in live], [keys[i] for i in live])
+    out = np.zeros(len(vecs))
+    for j, i in enumerate(live):
+        def prob_of(m, v=vecs[i], j=j):
+            if m not in mc:
+                return method_prob(m, v, conf)
+            return None if np.isnan(mc[m][j]) else float(mc[m][j])
+        out[i] = _weighted(_probmap(conf, prob_of), conf)
+    return out

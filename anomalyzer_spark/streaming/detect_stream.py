@@ -2,22 +2,62 @@
 
 ``Push(x)`` (reference /root/reference/anomalyze.go:134-140) appends one
 point and re-evaluates. Here the same contract runs distributed and
-incremental: a keyed stream of points flows into per-key bounded state
+incremental: a keyed stream of points flows into bounded per-key windows
 (the last ``window_size`` points, the §2.6.2 truncation spec — the
 reference's unbounded ``Push`` growth is a bug we do not reproduce), and
-every micro-batch emits the refreshed anomaly probability per key touched.
+every micro-batch emits the refreshed anomaly probability of each key it
+touched.
 
-Implementation: ``applyInPandasWithState`` with per-key group state holding
-the (ts, tiebreak, value) window and the cumulative point count; an
-optional processing-time timeout expires idle keys (``state_ttl_ms``).
-Per-key compute is the same seeded NumPy kernel as batch ``detect``
-(anomalyzer_spark.oracle) — batch and stream agree bit-for-bit on
-identical input, which is the equivalence test's assertion.
+Bucketed state. ``applyInPandasWithState`` pays a fixed Python cost per
+GROUP (state JSON, Arrow slice, pandas frame, state pickle), several
+times the cost of one key's merge and eval, so the stream does not make
+each key its own group: it groups by ``pmod(xxhash64(keys...),
+n_buckets)`` with ``n_buckets = BUCKETS_PER_STATE_PARTITION`` × the
+state partition count (``spark.sql.shuffle.partitions`` when the query
+is built). A bucket's state holds its member keys as parallel arrays:
+the key values (one array per key column, of that column's type), the
+window lengths, the flattened (ts, tiebreak, value) windows, each key's
+cumulative point count and its last-update processing time, plus the
+bucket count itself. The per-bucket function splits the new rows by key,
+merges, sorts by (ts, tiebreak) and truncates every touched key's window
+in one vectorized pass, then evaluates all touched windows with one
+``oracle.eval_probs`` call: the Monte-Carlo tests run over blocks of
+equal-length keys, the same ``oracle.mc_probs`` path as the batch
+kernel. Results are bit-identical to ``oracle.eval_prob`` per key, and
+the MC key string is ``kernel.key_str_col`` computed in Spark, so batch
+and stream draw the same permutation streams for every key type. One
+key-type limit: a floating-point key reaches pandas with NULL and NaN
+both as NaN, so the stream keeps one window (emitted as NULL) for the
+two, where batch ``detect`` keeps two.
 
-Out-of-order handling: the state window is re-sorted by (ts, tiebreak) on
-every merge, so in-batch disorder and cross-batch disorder WITHIN the
-retained window are corrected. Points older than the retained window are
-dropped (they cannot displace already-truncated history) — a documented
+Write amplification. Each trigger rewrites the whole state of every
+bucket it touches. A dense stream, where every key reports each interval
+(the reference's metric-monitoring case), touches every key anyway and
+rewrites nothing extra. A sparse stream also rewrites the untouched keys
+of each touched bucket: with k of K keys touched per trigger it rewrites
+a share 1 - (1 - 1/n_buckets)^k of the state (about k/n_buckets while k
+is small, all of it once k is a few times n_buckets) where one group per
+key rewrote k/K.
+
+TTL (``state_ttl_ms``) is per key: a key idle longer than the TTL is
+dropped the next time its bucket is touched (before the new rows merge,
+so an expired key that gets a new point starts from an empty window and
+a zero count). A bucket none of whose keys was touched for the TTL
+expires whole through the processing-time timeout.
+
+Restarts. The state schema is the bucketed one, so a checkpoint written
+by the per-key form fails Spark's state schema check at restart. The
+bucket count is stored in each bucket and checked whenever a bucket with
+state is touched or times out: a restart under a different
+``spark.sql.shuffle.partitions`` (Spark keeps the checkpoint's state
+partitions, but the bucket count comes from the live conf) raises an
+error naming both counts instead of orphaning the old windows. A new
+bucket that has no state yet cannot be checked.
+
+Out-of-order handling: a window is re-sorted by (ts, tiebreak) on every
+merge, so in-batch disorder and cross-batch disorder WITHIN the retained
+window are corrected. Points older than the retained window are dropped
+(they cannot displace already-truncated history) — a documented
 deviation; the reference has no notion of event time at all.
 """
 
@@ -33,6 +73,7 @@ from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
+    IntegralType,
     LongType,
     StructField,
     StructType,
@@ -40,7 +81,82 @@ from pyspark.sql.types import (
 
 from .. import oracle
 from ..config import AnomalyzerConf
+from ..operators.kernel import key_str_col
 from ._drain import drain, final_state, memory_sink
+
+#: state buckets per state partition. On a 4-core x86-64 host, with 300
+#: dense keys over 4 state partitions, ×4 had the lowest trigger wall of
+#: ×1, ×4 and ×16 and cut CPU per trigger by a third; ×1 cut CPU further
+#: but hashes few buckets onto the partitions unevenly and rewrites more
+#: untouched keys on sparse streams (measurements in CHANGES.md)
+BUCKETS_PER_STATE_PARTITION = 4
+
+#: per-key state arrays after the bucket count and the key columns
+_KEY_FIELDS = ("lens", "ts", "tb", "value", "total_seen", "last_ms")
+
+
+def _py_values(col: pd.Series, integral: bool) -> list:
+    """A key column's values as the Python objects the state stores, None
+    for NULL. An integral key arrives as its decimal string (see
+    ``detect_stream``) and is parsed back to an exact int."""
+    if integral:
+        return [None if v is None else int(v) for v in col.tolist()]
+    return col.astype(object).where(col.notna(), None).tolist()
+
+
+def _merge_bucket(old: tuple | None, new: pd.DataFrame,
+                  integral: list[bool], window: int, now_ms: int,
+                  ttl_ms: int | None):
+    """Merge one trigger's rows into a bucket's state.
+
+    ``old`` is the state tuple without the bucket count (key arrays, then
+    ``_KEY_FIELDS``), or None; ``new`` holds the rows, key column ``k{i}``
+    integral when ``integral[i]``. Returns (state tuple, touched key
+    indices, the first new row of each touched key, flattened ts and value
+    windows, window offsets, lengths, cumulative counts)."""
+    n_keys = len(integral)
+    if old is None:
+        old = ([],) * n_keys + ([],) * len(_KEY_FIELDS)
+    key_vals = [list(c) for c in old[:n_keys]]
+    lens, ts, tb, val, seen, last = (
+        np.asarray(a, dt) for a, dt in zip(old[n_keys:], (
+            np.int64, np.int64, np.int64, np.float64, np.int64, np.int64)))
+    if ttl_ms:  # drop the keys idle longer than the TTL, then merge
+        live = now_ms - last <= ttl_ms
+        rows = np.repeat(live, lens)
+        ts, tb, val = ts[rows], tb[rows], val[rows]
+        lens, seen, last = lens[live], seen[live], last[live]
+        key_vals = [[v for v, k in zip(c, live) if k] for c in key_vals]
+    index = {k: i for i, k in enumerate(zip(*key_vals))}
+    n_old = len(lens)
+    ids = list(zip(*[_py_values(new[f"k{i}"], f)
+                     for i, f in enumerate(integral)]))
+    kidx = np.fromiter((index.setdefault(k, len(index)) for k in ids),
+                       np.int64, len(ids))
+    touched, first = np.unique(kidx, return_index=True)
+    for r in first[touched >= n_old]:
+        for c, v in zip(key_vals, ids[r]):
+            c.append(v)
+    n = len(index)
+    # merge → sort by (key, ts, tiebreak) → keep each key's last window
+    kidx = np.concatenate([np.repeat(np.arange(n_old), lens), kidx])
+    ts = np.concatenate([ts, new["ts"].to_numpy(np.int64)])
+    tb = np.concatenate([tb, new["tb"].to_numpy(np.int64)])
+    val = np.concatenate([val, new["value"].to_numpy(np.float64)])
+    order = np.lexsort((tb, ts, kidx))
+    counts = np.bincount(kidx, minlength=n)
+    lens = np.minimum(counts, window)
+    ends = np.cumsum(counts)
+    keep = order[np.arange(len(order)) >= (ends - lens)[kidx[order]]]
+    ts, tb, val = ts[keep], tb[keep], val[keep]
+    added = np.bincount(kidx[len(kidx) - len(new):], minlength=n)
+    seen = np.concatenate([seen, np.zeros(n - n_old, np.int64)]) + added
+    last = np.concatenate([last, np.zeros(n - n_old, np.int64)])
+    last[touched] = now_ms
+    state = (*key_vals, lens.tolist(), ts.tolist(), tb.tolist(),
+             val.tolist(), seen.tolist(), last.tolist())
+    offsets = np.cumsum(lens) - lens
+    return state, touched, first, ts, val, offsets, lens, seen
 
 
 def detect_stream(
@@ -52,7 +168,7 @@ def detect_stream(
     tiebreak_col: str | None = None,
     state_ttl_ms: int | None = None,
 ) -> DataFrame:
-    """Streaming ``detect``: one output row per key per micro-batch.
+    """Streaming ``detect``: one output row per touched key per micro-batch.
 
     ``df`` must be a streaming DataFrame. Timestamps are normalized to
     int64 (epoch-µs for TimestampType, kept as-is for integer columns);
@@ -60,27 +176,40 @@ def detect_stream(
     ``total_seen`` is the cumulative point count (use the max row per key
     for the final state of a drained stream).
 
-    ``state_ttl_ms``: drop a key's window state this long after its last
-    update (processing time). At unbounded key cardinality (100 TB streams:
+    ``state_ttl_ms``: drop a key's window this long after its last update
+    (processing time), the next time its hash bucket is touched; idle
+    buckets expire whole. At unbounded key cardinality (100 TB streams:
     user ids, session ids) state must expire or the store grows forever —
-    the reference never faces this because each Anomalyzer is one in-process
-    series. None = keep state indefinitely.
+    the reference never faces this because each Anomalyzer is one
+    in-process series. None = keep state indefinitely.
     """
     conf = conf or AnomalyzerConf()
     from ..timeutil import epoch_us_col
 
+    n_buckets = BUCKETS_PER_STATE_PARTITION * int(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     ts_expr = epoch_us_col(df, ts_col)
     tb_expr = (
         F.col(tiebreak_col).cast("long") if tiebreak_col else F.lit(0).cast("long")
     )
+    key_types = [df.schema[k].dataType for k in keys]
     prepared = df.select(
-        *[F.col(k) for k in keys],
+        F.pmod(F.xxhash64(*[F.col(k) for k in keys]),
+               F.lit(n_buckets)).cast("int").alias("bucket"),
+        # Arrow hands pandas an integral column that holds a NULL as
+        # float64, which is inexact above 2**53: integral keys travel to
+        # and from the bucket function as strings
+        *[(F.col(k).cast("string") if isinstance(t, IntegralType)
+           else F.col(k)).alias(f"k{i}") for i, (k, t) in enumerate(
+               zip(keys, key_types))],
+        key_str_col(keys).alias("kstr"),
         ts_expr.alias("ts"),
         tb_expr.alias("tb"),
         F.col(value_col).cast("double").alias("value"),
     )
     out_schema = StructType(
-        [StructField(f"k{i}", prepared.schema[k].dataType) for i, k in enumerate(keys)]
+        [StructField(f"k{i}", prepared.schema[f"k{i}"].dataType)
+         for i in range(len(keys))]
         + [
             StructField("n_points", LongType()),
             StructField("last_ts", LongType()),
@@ -88,46 +217,46 @@ def detect_stream(
             StructField("prob", DoubleType()),
         ]
     )
-    state_schema = StructType([
-        StructField("ts", ArrayType(LongType())),
-        StructField("tb", ArrayType(LongType())),
-        StructField("value", ArrayType(DoubleType())),
-        StructField("total_seen", LongType()),
-    ])
-    n_keys = len(keys)
+    state_schema = StructType(
+        [StructField("n_buckets", LongType())]
+        + [StructField(f"k{i}", ArrayType(t)) for i, t in enumerate(key_types)]
+        + [StructField(f, ArrayType(t)) for f, t in zip(_KEY_FIELDS, (
+            LongType(), LongType(), LongType(), DoubleType(), LongType(),
+            LongType()))]
+    )
+    integral = [isinstance(t, IntegralType) for t in key_types]
+    key_cols = [f"k{i}" for i in range(len(keys))]
 
-    def fn(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
+    def fn(bucket, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
+        if state.exists and state.get[0] != n_buckets:
+            raise RuntimeError(
+                f"detect_stream state bucket {bucket[0]} was written with "
+                f"{state.get[0]} buckets, but this query hashes keys into "
+                f"{n_buckets} ({BUCKETS_PER_STATE_PARTITION} per state "
+                f"partition): restart with the spark.sql.shuffle.partitions "
+                f"the checkpoint was started with, or a new checkpoint")
         if state.hasTimedOut:
             state.remove()
             return
         new = pd.concat(list(pdfs), ignore_index=True)
-        ts = new["ts"].to_numpy(np.int64)
-        tb = new["tb"].to_numpy(np.int64)
-        val = new["value"].to_numpy(np.float64)
-        seen = len(new)
-        if state.exists:
-            ts0, tb0, val0, seen0 = state.get
-            ts = np.concatenate([np.asarray(ts0, np.int64), ts])
-            tb = np.concatenate([np.asarray(tb0, np.int64), tb])
-            val = np.concatenate([np.asarray(val0, np.float64), val])
-            seen += int(seen0)
-        # merge → sort by (ts, tiebreak) → truncate to the window → eval
-        order = np.lexsort((tb, ts))[-conf.window_size:]
-        ts, tb, val = ts[order], tb[order], val[order]
-        kstr = "|".join(str(k) for k in key[:n_keys])
-        prob = oracle.eval_prob(val, conf, kstr)
-        state.update((ts.tolist(), tb.tolist(), val.tolist(), seen))
+        merged, touched, first, ts, val, offsets, lens, seen = _merge_bucket(
+            state.get[1:] if state.exists else None, new, integral,
+            conf.window_size, state.getCurrentProcessingTimeMs(), state_ttl_ms)
+        starts, ns = offsets[touched], lens[touched]
+        probs = oracle.eval_probs(
+            [val[a : a + m] for a, m in zip(starts.tolist(), ns.tolist())],
+            conf, new["kstr"].to_numpy()[first].tolist())
+        state.update((n_buckets, *merged))
         if state_ttl_ms:
             state.setTimeoutDuration(state_ttl_ms)
-        yield pd.DataFrame({
-            **{f"k{i}": [key[i]] for i in range(n_keys)},
-            "n_points": [len(val)],
-            "last_ts": [int(ts[-1])],
-            "total_seen": [int(seen)],
-            "prob": [float(prob)],
-        })
+        out = new[key_cols].iloc[first].reset_index(drop=True)
+        out["n_points"] = ns
+        out["last_ts"] = ts[starts + ns - 1]
+        out["total_seen"] = seen[touched]
+        out["prob"] = probs
+        yield out
 
-    out = prepared.groupBy(*keys).applyInPandasWithState(
+    out = prepared.groupBy("bucket").applyInPandasWithState(
         fn,
         outputStructType=out_schema,
         stateStructType=state_schema,
@@ -136,7 +265,8 @@ def detect_stream(
                      else GroupStateTimeout.NoTimeout),
     )
     return out.select(
-        *[F.col(f"k{i}").alias(k) for i, k in enumerate(keys)],
+        *[F.col(f"k{i}").cast(t).alias(k)
+          for i, (k, t) in enumerate(zip(keys, key_types))],
         "n_points", "last_ts", "total_seen", "prob",
     )
 
@@ -144,7 +274,7 @@ def detect_stream(
 def run_stream_on_dir(
     spark,
     input_path: str,
-    schema: StructType,
+    schema: StructType | None,
     keys: list[str],
     ts_col: str = "ts",
     value_col: str = "value",
@@ -155,7 +285,8 @@ def run_stream_on_dir(
 ) -> DataFrame:
     """Drain a parquet file/dir through ``detect_stream`` (``_drain.drain``,
     availableNow, Update-mode memory sink) and return the FINAL per-key
-    rows as a batch DataFrame.
+    rows as a batch DataFrame. ``schema`` None reads the input's parquet
+    schema inside the drain's conf scope.
 
     The memory sink keeps every update; the final state of each key is the
     row with the highest ``total_seen`` (strictly increasing per key).

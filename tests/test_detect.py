@@ -269,9 +269,9 @@ def test_mc_batch_splits_blocks_exactly(monkeypatch):
     vecs = [[v for k1, k2, _, v in rows if (k1, k2) == key][-conf.window_size:]
             for key in keys]
     kstrs = [f"{k1}|{k2}" for k1, k2 in keys]
-    for budget in (kernel.DIGEST_BUDGET, 3000, 1):
-        monkeypatch.setattr(kernel, "DIGEST_BUDGET", budget)
-        got = kernel._batch_probs(conf, kernel.MC_METHODS, vecs, kstrs)
+    for budget in (oracle.DIGEST_BUDGET, 3000, 1):
+        monkeypatch.setattr(oracle, "DIGEST_BUDGET", budget)
+        got = oracle.mc_probs(conf, kernel.MC_METHODS, vecs, kstrs)
         for i, key in enumerate(keys):
             for m in kernel.MC_METHODS:
                 want = exp[key][m]

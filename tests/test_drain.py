@@ -185,3 +185,25 @@ def test_continuous_curation_runs_until_stopped(spark, tmp_path):
         assert got == set(range(6))
     finally:
         q.stop()
+
+
+def test_detect_stream_slots_leave_session_conf_unchanged(spark, sf_dir):
+    """The ``detect_stream`` / ``detect_stream_mc`` entry slots read their
+    input schema inside the drain's conf scope: every session conf,
+    nanosAsLong included, is the same after the slot as before it."""
+    import __spark_entry__ as entry_mod
+
+    before = spark.conf.get(NANOS, None)
+    spark.conf.set(NANOS, "false")
+    try:
+        qs = entry_mod.queries()
+        for name in ("detect_stream", "detect_stream_mc"):
+            conf0 = spark.conf.getAll
+            assert qs[name](spark, sf_dir).count() > 0
+            assert spark.conf.getAll == conf0, name
+            assert spark.conf.get(NANOS) == "false"
+    finally:
+        if before is None:
+            spark.conf.unset(NANOS)
+        else:
+            spark.conf.set(NANOS, before)

@@ -146,3 +146,30 @@ def test_eval_weights():
     assert weights["fence"] == 5.0
     assert weights["cdf"] == 0.5
     assert "rank" in probs  # highrank/lowrank merged
+
+
+@pytest.mark.parametrize("conf", [
+    AnomalyzerConf(active_size=2, perm_count=60, lower_bound=0.0,
+                   upper_bound=20.0, methods=("magnitude", "fence", "cdf",
+                                              "diff", "highrank", "lowrank",
+                                              "ks")),
+    AnomalyzerConf(active_size=2, perm_count=60, perm_spec="fast"),
+    AnomalyzerConf(active_size=1, perm_count=40, delay=True,
+                   methods=("highrank", "lowrank", "ks")),
+], ids=["all-tests", "mc-fast", "delay"])
+@pytest.mark.parametrize("budget", [None, 1], ids=["budget", "one-per-block"])
+def test_eval_probs_equals_eval_prob_per_key(monkeypatch, conf, budget):
+    """The batched evaluation streaming detect uses returns, for windows of
+    mixed lengths (several keys per length, lengths where MC tests are NA),
+    exactly what ``eval_prob`` returns key by key."""
+    if budget is not None:
+        monkeypatch.setattr(oracle, "DIGEST_BUDGET", budget)
+    rng = np.random.default_rng(17)
+    lengths = [1, 2, 3, 5, 5, 6, 7, 7, 7, 9, conf.window_size,
+               conf.window_size]
+    vecs = [rng.normal(10, 3, n) for n in lengths]
+    keys = [f"k{i}|{n}" for i, n in enumerate(lengths)]
+    got = oracle.eval_probs(vecs, conf, keys)
+    want = [oracle.eval_prob(v, conf, k) for v, k in zip(vecs, keys)]
+    assert got.tolist() == want
+    assert oracle.eval_probs([], conf, []).tolist() == []

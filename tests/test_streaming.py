@@ -1330,3 +1330,264 @@ def test_dedup_stream_no_data_batch_off_same_state(spark, sf_dir,
     assert sorted(map(key, off.collect())) == \
         sorted(map(key, on.collect()))
     assert spark.conf.get(key_, None) == prev
+
+
+# ---- bucketed detect_stream state ----------------------------------------
+
+KV_SCHEMA = "k1 string, k2 long, ts long, eid long, value double"
+
+
+def _drain_detect(spark, sdir, ckpt, conf, keys, *, state_partitions,
+                  state_ttl_ms=None):
+    """Drain ``sdir`` through ``detect_stream`` on checkpoint ``ckpt`` with
+    ``state_partitions`` state partitions; return every emitted row."""
+    from anomalyzer_spark.streaming import detect_stream
+    from anomalyzer_spark.streaming._drain import drain
+
+    rows = []
+
+    def start(s):
+        out = detect_stream(s, keys, "ts", "value", conf, "eid",
+                            state_ttl_ms=state_ttl_ms)
+        return (out.writeStream
+                .foreachBatch(lambda bdf, _: rows.extend(bdf.collect()))
+                .outputMode("update").option("checkpointLocation", ckpt)
+                .trigger(availableNow=True).start())
+
+    drain(spark, sdir, start, schema=KV_SCHEMA, max_files_per_trigger=1,
+          state_partitions=state_partitions, no_data_batch=False)
+    return rows
+
+
+def _points(keys, n, start_ts=0, seed=0):
+    """``n`` points of every (k1, k2) key in ``keys``, keys interleaved,
+    at ts ``start_ts`` onward."""
+    import pandas as pd
+
+    rng = np.random.default_rng(seed)
+    ts = np.repeat(np.arange(start_ts, start_ts + n), len(keys))
+    return pd.DataFrame({
+        "k1": [k1 for _ in range(n) for k1, _ in keys],
+        "k2": pd.array([k2 for _ in range(n) for _, k2 in keys], "Int64"),
+        "ts": ts, "eid": ts, "value": rng.normal(10, 2, len(ts))})
+
+
+#: Monte-Carlo tests only: batch and stream compute every prob in NumPy
+MC_ONLY_CONF = AnomalyzerConf(active_size=2, perm_count=100,
+                              methods=("diff", "highrank", "lowrank", "ks"))
+
+
+@pytest.mark.parametrize("conf", [MC_CONF, MC_FAST_CONF, MC_ONLY_CONF],
+                         ids=["mc", "mc-fast", "mc-only"])
+def test_stream_null_multi_column_keys_equal_batch(spark, tmp_path, conf):
+    """Three triggers of a stream keyed by (string, long), both with NULL
+    components and several keys per hash bucket, end equal to batch
+    ``detect``: the stream keys its MC permutations by the same
+    ``key_str_col`` string (NULL -> 'None'), keeps NULL keys apart from
+    'None' and integers above 2**53 exact. Bit-for-bit under the MC-only
+    conf; with magnitude in the conf the JVM's columnar fold may differ
+    from NumPy's in the last bit."""
+    keys = [(k1, k2) for k1 in ("x", "y", None, "None")
+            for k2 in (1, 2, None, 2**60 + 1)]
+    sdir = str(tmp_path / "nk_in")
+    os.makedirs(sdir)
+    parts = [_points(keys, 6, 0, 1), _points(keys[::2], 3, 6, 2),
+             _points(keys, 4, 9, 3)]
+    for i, p in enumerate(parts):
+        # out of order inside the file: the window re-sorts
+        p.sample(frac=1, random_state=i).to_parquet(
+            f"{sdir}/p{i}.parquet", index=False)
+    rows = _drain_detect(spark, sdir, str(tmp_path / "nk_ck"), conf,
+                         ["k1", "k2"], state_partitions=2)
+    final = {}
+    for r in rows:
+        k = (r["k1"], r["k2"])
+        if k not in final or r["total_seen"] > final[k]["total_seen"]:
+            final[k] = r
+    batch = {(r["k1"], r["k2"]): r for r in detect(
+        spark.read.schema(KV_SCHEMA).parquet(sdir), ["k1", "k2"], "ts",
+        "value", conf, tiebreak_cols=["eid"]).collect()}
+    assert set(final) == set(batch) == set(keys)
+    exact = conf is MC_ONLY_CONF
+    for k, b in batch.items():
+        s = final[k]
+        assert (s["n_points"], s["last_ts"]) == (b["n_points"], b["last_ts"]), k
+        assert s["total_seen"] == (13 if k in keys[::2] else 10), k
+        assert s["prob"] == (b["prob"] if exact
+                             else pytest.approx(b["prob"], abs=1e-12)), k
+    assert any(0.0 < b["prob"] for b in batch.values())
+
+
+def test_stream_restart_from_per_key_checkpoint_fails(spark, tmp_path):
+    """A checkpoint written by the per-key layout (one group per key, state
+    ts/tb/value/total_seen) fails the restart through Spark's state schema
+    check instead of reading foreign state."""
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
+    from pyspark.sql.types import (ArrayType, DoubleType, LongType,
+                                   StructField, StructType)
+    from pyspark.sql.utils import StreamingQueryException
+
+    from anomalyzer_spark.streaming._drain import drain
+
+    sdir, ckpt = str(tmp_path / "pk_in"), str(tmp_path / "pk_ck")
+    os.makedirs(sdir)
+    _points([("a", 1), ("b", 2)], 4).to_parquet(f"{sdir}/p0.parquet",
+                                                index=False)
+    per_key_state = StructType([
+        StructField("ts", ArrayType(LongType())),
+        StructField("tb", ArrayType(LongType())),
+        StructField("value", ArrayType(DoubleType())),
+        StructField("total_seen", LongType()),
+    ])
+
+    def per_key(key, pdfs, state):
+        new = pd.concat(list(pdfs))
+        state.update((new["ts"].tolist(), new["eid"].tolist(),
+                      new["value"].tolist(), len(new)))
+        yield pd.DataFrame({"k1": [key[0]], "k2": [key[1]],
+                            "total_seen": [len(new)]})
+
+    drain(spark, sdir, lambda s: (
+        s.groupBy("k1", "k2").applyInPandasWithState(
+            per_key, "k1 string, k2 long, total_seen long", per_key_state,
+            "Update", GroupStateTimeout.NoTimeout)
+        .writeStream.foreachBatch(lambda bdf, _: bdf.count())
+        .outputMode("update")
+        .option("checkpointLocation", ckpt).trigger(availableNow=True)
+        .start()), schema=KV_SCHEMA, state_partitions=2)
+    _points([("a", 1)], 2, 4).to_parquet(f"{sdir}/p1.parquet", index=False)
+    with pytest.raises(StreamingQueryException,
+                       match="STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE"):
+        _drain_detect(spark, sdir, ckpt, MC_CONF, ["k1", "k2"],
+                      state_partitions=2)
+
+
+def test_stream_restart_under_other_partition_count_fails(spark, tmp_path):
+    """The bucket count is stored in each bucket: a restart whose live
+    spark.sql.shuffle.partitions gives another bucket count fails naming
+    both counts, instead of hashing keys away from their windows."""
+    from pyspark.sql.utils import StreamingQueryException
+
+    from anomalyzer_spark.streaming.detect_stream import (
+        BUCKETS_PER_STATE_PARTITION as M)
+
+    sdir, ckpt = str(tmp_path / "np_in"), str(tmp_path / "np_ck")
+    os.makedirs(sdir)
+    keys = [(f"s{i}", i) for i in range(12)]
+    _points(keys, 3).to_parquet(f"{sdir}/p0.parquet", index=False)
+    _drain_detect(spark, sdir, ckpt, DET_CONF, ["k1", "k2"],
+                  state_partitions=2)
+    _points(keys, 1, 3).to_parquet(f"{sdir}/p1.parquet", index=False)
+    with pytest.raises(StreamingQueryException,
+                       match=f"written with {2 * M} buckets.* into {3 * M}"):
+        _drain_detect(spark, sdir, ckpt, DET_CONF, ["k1", "k2"],
+                      state_partitions=3)
+    # the same partition count resumes the stored windows
+    rows = _drain_detect(spark, sdir, ckpt, DET_CONF, ["k1", "k2"],
+                         state_partitions=2)
+    assert sorted((r["k1"], r["n_points"], r["total_seen"]) for r in rows) \
+        == sorted((k1, 4, 4) for k1, _ in keys)
+
+
+def test_stream_ttl_drops_idle_key_inside_bucket(spark, tmp_path):
+    """Per-key TTL inside one hash bucket, over two availableNow drains on
+    one checkpoint: after a pause longer than the TTL, touching the bucket
+    drops its idle key from the bucket state, and an expired key that gets
+    a new point starts from an empty window."""
+    import time
+
+    from anomalyzer_spark.streaming.detect_stream import (
+        BUCKETS_PER_STATE_PARTITION as M)
+
+    cands = spark.createDataFrame([(f"c{i}",) for i in range(40)], "k1 string")
+    bucket = {r["k1"]: r["b"] for r in cands.select(
+        "k1", F.pmod(F.xxhash64("k1", F.lit(None).cast("long")),
+                     F.lit(M)).alias("b")).collect()}
+    a = next(k for k in bucket if k != "c0" and bucket[k] == bucket["c0"])
+    idle, active = ("c0", None), (a, None)
+
+    conf = AnomalyzerConf(active_size=2, methods=("magnitude", "cdf"))
+    sdir, ckpt = str(tmp_path / "ttl_b_in"), str(tmp_path / "ttl_b_ck")
+    os.makedirs(sdir)
+    _points([idle, active], 5).to_parquet(f"{sdir}/p0.parquet", index=False)
+    ttl_ms = 1500
+    first = _drain_detect(spark, sdir, ckpt, conf, ["k1", "k2"],
+                          state_partitions=1, state_ttl_ms=ttl_ms)
+    assert sorted((r["k1"], r["n_points"]) for r in first) == \
+        sorted([(idle[0], 5), (active[0], 5)])
+    time.sleep(2 * ttl_ms / 1000)
+    _points([active], 1, 5).to_parquet(f"{sdir}/p1.parquet", index=False)
+    second = _drain_detect(spark, sdir, ckpt, conf, ["k1", "k2"],
+                           state_partitions=1, state_ttl_ms=ttl_ms)
+    assert [(r["k1"], r["n_points"], r["total_seen"]) for r in second] == \
+        [(active[0], 1, 1)]
+    state = (spark.read.format("statestore").load(ckpt)
+             .where(F.col("key.bucket") == bucket["c0"]).collect())
+    assert len(state) == 1
+    assert state[0]["value"]["groupState"]["k0"] == [active[0]]
+
+
+def test_merge_bucket_equals_per_key_merge():
+    """The vectorized bucket merge keeps, for every key, exactly the window
+    the per-key merge keeps (concatenate old then new, stable sort by
+    (ts, tiebreak), last ``window`` points) — ties and disorder included —
+    and leaves untouched keys as they were."""
+    import pandas as pd
+
+    from anomalyzer_spark.streaming.detect_stream import _merge_bucket
+
+    rng = np.random.default_rng(3)
+    window, n_old = 5, 6
+    old_keys = [f"o{i}" for i in range(n_old)]
+    old = {k: (np.sort(rng.integers(0, 8, m)), rng.integers(0, 2, m),
+               rng.normal(size=m)) for k, m in zip(old_keys, [0, 1, 3, 5, 5, 2])}
+    old = {k: w for k, w in old.items() if len(w[0])}
+    for k, (t, b, v) in old.items():  # stored windows are sorted
+        o = np.lexsort((b, t))
+        old[k] = (t[o], b[o], v[o])
+    def flat(i):
+        return [x for w in old.values() for x in w[i].tolist()]
+
+    # key values, lens, ts, tb, value, total_seen, last_ms
+    state = ([*old], [len(w[0]) for w in old.values()], flat(0), flat(1),
+             flat(2), [len(w[0]) + 7 for w in old.values()],
+             [100] * len(old))
+    new_keys = ["o1", "o2", "o4", "n0", "n1", "o2", "n0", "n0", "o4"] * 2
+    new = pd.DataFrame({
+        "k0": new_keys, "ts": rng.integers(0, 10, len(new_keys)),
+        "tb": rng.integers(0, 2, len(new_keys)),
+        "value": rng.normal(size=len(new_keys))})
+    merged, touched, first, ts, val, offsets, lens, seen = _merge_bucket(
+        state, new, [False], window, 200, None)
+    keys_out = merged[0]
+    assert keys_out == [*old, "n0", "n1"]
+    assert merged[-1] == [100 if k not in set(new_keys) else 200
+                          for k in keys_out]
+    for i, k in enumerate(keys_out):
+        mine = new[new.k0 == k]
+        t0, b0, v0 = old.get(k, (np.array([], np.int64),) * 2
+                             + (np.array([]),))
+        t = np.concatenate([t0, mine.ts.to_numpy()])
+        b = np.concatenate([b0, mine.tb.to_numpy()])
+        v = np.concatenate([v0, mine.value.to_numpy()])
+        o = np.lexsort((b, t))[-window:]
+        a, m = offsets[i], lens[i]
+        assert ts[a:a + m].tolist() == t[o].tolist(), k
+        assert val[a:a + m].tolist() == v[o].tolist(), k
+        assert seen[i] == (len(t0) + 7 if k in old else 0) + len(mine), k
+    assert [keys_out[i] for i in touched] == sorted(
+        set(new_keys), key=keys_out.index)
+    assert all(new.k0[f] == keys_out[i] for i, f in zip(touched, first))
+
+    # state_ttl_ms: every stored key was idle longer than the TTL, so the
+    # untouched ones are dropped and the touched ones restart empty
+    merged, touched, _, ts, _, offsets, lens, seen = _merge_bucket(
+        state, new, [False], window, 200, 99)
+    assert merged[0] == ["o1", "o2", "o4", "n0", "n1"]
+    for i, k in enumerate(merged[0]):
+        mine = new[new.k0 == k]
+        o = np.lexsort((mine.tb.to_numpy(), mine.ts.to_numpy()))[-window:]
+        assert ts[offsets[i]:offsets[i] + lens[i]].tolist() == \
+            mine.ts.to_numpy()[o].tolist(), k
+        assert seen[i] == len(mine), k
