@@ -15,29 +15,41 @@ each key its own group: it groups by ``pmod(xxhash64(keys...),
 n_buckets)`` with ``n_buckets = BUCKETS_PER_STATE_PARTITION`` × the
 state partition count (``spark.sql.shuffle.partitions`` when the query
 is built). A bucket's state holds its member keys as parallel arrays:
-the key values (one array per key column, of that column's type), the
-window lengths, the flattened (ts, tiebreak, value) windows, each key's
-cumulative point count and its last-update processing time, plus the
-bucket count itself. The per-bucket function splits the new rows by key,
-merges, sorts by (ts, tiebreak) and truncates every touched key's window
-in one vectorized pass, then evaluates all touched windows with one
-``oracle.eval_probs`` call: the Monte-Carlo tests run over blocks of
-equal-length keys, the same ``oracle.mc_probs`` path as the batch
-kernel. Results are bit-identical to ``oracle.eval_prob`` per key, and
-the MC key string is ``kernel.key_str_col`` computed in Spark, so batch
-and stream draw the same permutation streams for every key type. One
-key-type limit: a floating-point key reaches pandas with NULL and NaN
-both as NaN, so the stream keeps one window (emitted as NULL) for the
-two, where batch ``detect`` keeps two.
+the key values (one array per key column, of that column's type), and
+the raw bytes of one NumPy array each for the window lengths, the
+flattened (ts, tiebreak, value) windows, each key's cumulative point
+count and its last-update processing time, plus the bucket count
+itself. Bytes, not Spark arrays: PySpark pickles the state to and from
+the JVM each time a bucket is touched, and one bytes object per field
+costs a copy where an array costs one Python object per point. The
+per-bucket function splits the new rows by key, merges, sorts by (ts,
+tiebreak) and truncates every touched key's window in one vectorized
+pass, then evaluates all touched windows with one ``oracle.eval_probs``
+call: the Monte-Carlo tests run over blocks of equal-length keys, the
+same ``oracle.mc_probs`` path as the batch kernel. Results are
+bit-identical to ``oracle.eval_prob`` per key, and the MC key string is
+``kernel.key_str_col`` computed in Spark, so batch and stream draw the
+same permutation streams for every key type.
+Integral and floating-point key components travel to the bucket
+function as their Spark string casts and are parsed back there: Arrow
+hands pandas a NULL in such a column as NaN, which would turn an
+integral key to float64 (inexact above 2**53) and put a NULL float key
+in the window of a NaN one.
 
 Write amplification. Each trigger rewrites the whole state of every
-bucket it touches. A dense stream, where every key reports each interval
-(the reference's metric-monitoring case), touches every key anyway and
-rewrites nothing extra. A sparse stream also rewrites the untouched keys
-of each touched bucket: with k of K keys touched per trigger it rewrites
-a share 1 - (1 - 1/n_buckets)^k of the state (about k/n_buckets while k
-is small, all of it once k is a few times n_buckets) where one group per
-key rewrote k/K.
+bucket it touches. A dense stream, where every key reports each
+interval, touches every key anyway and rewrites nothing extra. A sparse
+stream also rewrites the untouched keys of each touched bucket: with k
+of K keys touched per trigger it rewrites a share 1 - (1 - 1/n_buckets)^k
+of the state (all of it once k is a few times n_buckets) where one group
+per key rewrote k/K. With the state as bytes that rewrite costs less
+than the groups it saves at the scale measured: on 4 state partitions,
+20k keys with 1% touched per trigger (``tools/stream_sparse_drill.py``)
+spent 1.42 s CPU per trigger against 1.83 s for one group per key
+(medians of 10 alternating pairs). The rewrite grows with the total key
+count and the saving with the touched count, so a stream with far more
+keys per state partition, or a smaller touched share, can cross over;
+no stream that large was measured.
 
 TTL (``state_ttl_ms``) is per key: a key idle longer than the TTL is
 dropped the next time its bucket is touched (before the new rows merge,
@@ -72,8 +84,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
+    BinaryType,
     DoubleType,
-    IntegralType,
     LongType,
     StructField,
     StructType,
@@ -84,43 +96,63 @@ from ..config import AnomalyzerConf
 from ..operators.kernel import key_str_col
 from ._drain import drain, final_state, memory_sink
 
-#: state buckets per state partition. On a 4-core x86-64 host, with 300
-#: dense keys over 4 state partitions, ×4 had the lowest trigger wall of
-#: ×1, ×4 and ×16 and cut CPU per trigger by a third; ×1 cut CPU further
-#: but hashes few buckets onto the partitions unevenly and rewrites more
-#: untouched keys on sparse streams (measurements in CHANGES.md)
-BUCKETS_PER_STATE_PARTITION = 4
+#: state buckets per state partition, chosen on CPU per trigger. On a
+#: 4-core x86-64 host, over 6 seeds of 300 dense keys and 3 runs of a
+#: sparse stream (20k keys, 1% touched per trigger), ×1 spent the least
+#: CPU of ×1, ×4 and ×16 on both (measurements in CHANGES.md). Spark
+#: hash-partitions the bucket ids, so at ×1 some state partitions hold
+#: two buckets and others none; that showed in neither CPU nor latency.
+BUCKETS_PER_STATE_PARTITION = 1
 
-#: per-key state arrays after the bucket count and the key columns
-_KEY_FIELDS = ("lens", "ts", "tb", "value", "total_seen", "last_ms")
+#: per-key state fields after the bucket count and the key columns, each
+#: the raw bytes of one NumPy array of its dtype: a trigger pickles and
+#: the JVM copies one bytes object per field, not one object per point
+_KEY_FIELDS = (("lens", "<i8"), ("ts", "<i8"), ("tb", "<i8"),
+               ("value", "<f8"), ("total_seen", "<i8"), ("last_ms", "<i8"))
+
+#: the one NaN object every NaN key component is mapped to: a dict finds a
+#: tuple holding it by identity, where two distinct NaN objects differ
+_NAN = float("nan")
+
+#: parsers of the key components that travel as strings (see
+#: ``detect_stream``), by Spark type name; a float32 key is parsed to the
+#: value its state array reads back as
+_PARSE = {
+    "bigint": int, "int": int, "smallint": int, "tinyint": int,
+    "double": float, "float": lambda v: float(np.float32(v)),
+}
 
 
-def _py_values(col: pd.Series, integral: bool) -> list:
+def _canon(v):
+    return _NAN if v != v else v
+
+
+def _py_values(col: pd.Series, parse) -> list:
     """A key column's values as the Python objects the state stores, None
-    for NULL. An integral key arrives as its decimal string (see
-    ``detect_stream``) and is parsed back to an exact int."""
-    if integral:
-        return [None if v is None else int(v) for v in col.tolist()]
-    return col.astype(object).where(col.notna(), None).tolist()
+    for NULL. A component that travels as its string (``parse`` not None)
+    is parsed back to an exact int or float, NaN as ``_NAN``."""
+    if parse is None:
+        return col.astype(object).where(col.notna(), None).tolist()
+    return [None if v is None else _canon(parse(v)) for v in col.tolist()]
 
 
-def _merge_bucket(old: tuple | None, new: pd.DataFrame,
-                  integral: list[bool], window: int, now_ms: int,
-                  ttl_ms: int | None):
+def _merge_bucket(old: tuple | None, new: pd.DataFrame, parse: list,
+                  window: int, now_ms: int, ttl_ms: int | None):
     """Merge one trigger's rows into a bucket's state.
 
     ``old`` is the state tuple without the bucket count (key arrays, then
     ``_KEY_FIELDS``), or None; ``new`` holds the rows, key column ``k{i}``
-    integral when ``integral[i]``. Returns (state tuple, touched key
-    indices, the first new row of each touched key, flattened ts and value
-    windows, window offsets, lengths, cumulative counts)."""
-    n_keys = len(integral)
+    a string parsed by ``parse[i]`` when that is not None. Returns (state
+    tuple, touched key indices, the first new row of each touched key,
+    flattened ts and value windows, window offsets, lengths, cumulative
+    counts)."""
+    n_keys = len(parse)
     if old is None:
-        old = ([],) * n_keys + ([],) * len(_KEY_FIELDS)
-    key_vals = [list(c) for c in old[:n_keys]]
+        old = ([],) * n_keys + (b"",) * len(_KEY_FIELDS)
+    key_vals = [list(c) if p is None else [_canon(v) for v in c]
+                for c, p in zip(old[:n_keys], parse)]
     lens, ts, tb, val, seen, last = (
-        np.asarray(a, dt) for a, dt in zip(old[n_keys:], (
-            np.int64, np.int64, np.int64, np.float64, np.int64, np.int64)))
+        np.frombuffer(b, dt) for b, (_, dt) in zip(old[n_keys:], _KEY_FIELDS))
     if ttl_ms:  # drop the keys idle longer than the TTL, then merge
         live = now_ms - last <= ttl_ms
         rows = np.repeat(live, lens)
@@ -129,8 +161,8 @@ def _merge_bucket(old: tuple | None, new: pd.DataFrame,
         key_vals = [[v for v, k in zip(c, live) if k] for c in key_vals]
     index = {k: i for i, k in enumerate(zip(*key_vals))}
     n_old = len(lens)
-    ids = list(zip(*[_py_values(new[f"k{i}"], f)
-                     for i, f in enumerate(integral)]))
+    ids = list(zip(*[_py_values(new[f"k{i}"], p)
+                     for i, p in enumerate(parse)]))
     kidx = np.fromiter((index.setdefault(k, len(index)) for k in ids),
                        np.int64, len(ids))
     touched, first = np.unique(kidx, return_index=True)
@@ -153,8 +185,8 @@ def _merge_bucket(old: tuple | None, new: pd.DataFrame,
     seen = np.concatenate([seen, np.zeros(n - n_old, np.int64)]) + added
     last = np.concatenate([last, np.zeros(n - n_old, np.int64)])
     last[touched] = now_ms
-    state = (*key_vals, lens.tolist(), ts.tolist(), tb.tolist(),
-             val.tolist(), seen.tolist(), last.tolist())
+    state = (*key_vals, *(a.astype(dt).tobytes() for a, (_, dt) in zip(
+        (lens, ts, tb, val, seen, last), _KEY_FIELDS)))
     offsets = np.cumsum(lens) - lens
     return state, touched, first, ts, val, offsets, lens, seen
 
@@ -193,15 +225,16 @@ def detect_stream(
         F.col(tiebreak_col).cast("long") if tiebreak_col else F.lit(0).cast("long")
     )
     key_types = [df.schema[k].dataType for k in keys]
+    parse = [_PARSE.get(t.simpleString()) for t in key_types]
     prepared = df.select(
         F.pmod(F.xxhash64(*[F.col(k) for k in keys]),
                F.lit(n_buckets)).cast("int").alias("bucket"),
         # Arrow hands pandas an integral column that holds a NULL as
-        # float64, which is inexact above 2**53: integral keys travel to
-        # and from the bucket function as strings
-        *[(F.col(k).cast("string") if isinstance(t, IntegralType)
-           else F.col(k)).alias(f"k{i}") for i, (k, t) in enumerate(
-               zip(keys, key_types))],
+        # float64, inexact above 2**53, and a float column's NULL as NaN:
+        # integral and float keys travel to and from the bucket function
+        # as strings ('NaN' for NaN, NULL as None)
+        *[(F.col(k).cast("string") if p else F.col(k)).alias(f"k{i}")
+          for i, (k, p) in enumerate(zip(keys, parse))],
         key_str_col(keys).alias("kstr"),
         ts_expr.alias("ts"),
         tb_expr.alias("tb"),
@@ -220,11 +253,8 @@ def detect_stream(
     state_schema = StructType(
         [StructField("n_buckets", LongType())]
         + [StructField(f"k{i}", ArrayType(t)) for i, t in enumerate(key_types)]
-        + [StructField(f, ArrayType(t)) for f, t in zip(_KEY_FIELDS, (
-            LongType(), LongType(), LongType(), DoubleType(), LongType(),
-            LongType()))]
+        + [StructField(f, BinaryType()) for f, _ in _KEY_FIELDS]
     )
-    integral = [isinstance(t, IntegralType) for t in key_types]
     key_cols = [f"k{i}" for i in range(len(keys))]
 
     def fn(bucket, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
@@ -240,7 +270,7 @@ def detect_stream(
             return
         new = pd.concat(list(pdfs), ignore_index=True)
         merged, touched, first, ts, val, offsets, lens, seen = _merge_bucket(
-            state.get[1:] if state.exists else None, new, integral,
+            state.get[1:] if state.exists else None, new, parse,
             conf.window_size, state.getCurrentProcessingTimeMs(), state_ttl_ms)
         starts, ns = offsets[touched], lens[touched]
         probs = oracle.eval_probs(

@@ -1338,7 +1338,7 @@ KV_SCHEMA = "k1 string, k2 long, ts long, eid long, value double"
 
 
 def _drain_detect(spark, sdir, ckpt, conf, keys, *, state_partitions,
-                  state_ttl_ms=None):
+                  state_ttl_ms=None, schema=KV_SCHEMA):
     """Drain ``sdir`` through ``detect_stream`` on checkpoint ``ckpt`` with
     ``state_partitions`` state partitions; return every emitted row."""
     from anomalyzer_spark.streaming import detect_stream
@@ -1354,7 +1354,7 @@ def _drain_detect(spark, sdir, ckpt, conf, keys, *, state_partitions,
                 .outputMode("update").option("checkpointLocation", ckpt)
                 .trigger(availableNow=True).start())
 
-    drain(spark, sdir, start, schema=KV_SCHEMA, max_files_per_trigger=1,
+    drain(spark, sdir, start, schema=schema, max_files_per_trigger=1,
           state_partitions=state_partitions, no_data_batch=False)
     return rows
 
@@ -1416,6 +1416,47 @@ def test_stream_null_multi_column_keys_equal_batch(spark, tmp_path, conf):
         assert s["prob"] == (b["prob"] if exact
                              else pytest.approx(b["prob"], abs=1e-12)), k
     assert any(0.0 < b["prob"] for b in batch.values())
+
+
+def test_stream_float_keys_keep_nan_and_null_apart(spark, tmp_path):
+    """Float key components travel to the bucket function as strings, so a
+    NULL and a NaN component stay two keys wherever they hash, as in batch
+    ``detect``, and a float32 key keeps one window across triggers."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = "k1 double, k2 float, ts long, eid long, value double"
+    keys = [(k1, k2) for k1 in (None, float("nan"), 1.5, -2.0**60)
+            for k2 in (None, float("nan"), 0.1)]
+    sdir = str(tmp_path / "fk_in")
+    os.makedirs(sdir)
+    rng = np.random.default_rng(5)
+    for i, n in enumerate((5, 3)):
+        ts = np.repeat(np.arange(5 * i, 5 * i + n), len(keys))
+        pq.write_table(pa.table({
+            "k1": pa.array([k for _ in range(n) for k, _ in keys], pa.float64()),
+            "k2": pa.array([k for _ in range(n) for _, k in keys], pa.float32()),
+            "ts": ts, "eid": ts, "value": rng.normal(10, 2, len(ts))}),
+            f"{sdir}/p{i}.parquet")
+    rows = _drain_detect(spark, sdir, str(tmp_path / "fk_ck"), MC_ONLY_CONF,
+                         ["k1", "k2"], state_partitions=2, schema=schema)
+
+    def key(r):  # NaN as a string, so that equal keys compare equal
+        return tuple(None if v is None else repr(v) for v in (r["k1"], r["k2"]))
+
+    final = {}
+    for r in rows:
+        if key(r) not in final or r["total_seen"] > final[key(r)]["total_seen"]:
+            final[key(r)] = r
+    batch = {key(r): r for r in detect(
+        spark.read.schema(schema).parquet(sdir), ["k1", "k2"], "ts", "value",
+        MC_ONLY_CONF, tiebreak_cols=["eid"]).collect()}
+    assert len(batch) == len(keys)
+    assert set(final) == set(batch)
+    for k, b in batch.items():
+        s = final[k]
+        assert (s["n_points"], s["total_seen"], s["prob"]) == \
+            (b["n_points"], 8, b["prob"]), k
 
 
 def test_stream_restart_from_per_key_checkpoint_fails(spark, tmp_path):
@@ -1535,7 +1576,8 @@ def test_merge_bucket_equals_per_key_merge():
     and leaves untouched keys as they were."""
     import pandas as pd
 
-    from anomalyzer_spark.streaming.detect_stream import _merge_bucket
+    from anomalyzer_spark.streaming.detect_stream import (_KEY_FIELDS,
+                                                          _merge_bucket)
 
     rng = np.random.default_rng(3)
     window, n_old = 5, 6
@@ -1549,21 +1591,22 @@ def test_merge_bucket_equals_per_key_merge():
     def flat(i):
         return [x for w in old.values() for x in w[i].tolist()]
 
-    # key values, lens, ts, tb, value, total_seen, last_ms
-    state = ([*old], [len(w[0]) for w in old.values()], flat(0), flat(1),
-             flat(2), [len(w[0]) + 7 for w in old.values()],
-             [100] * len(old))
+    # key values, then the bytes of lens, ts, tb, value, total_seen, last_ms
+    state = ([*old], *(np.asarray(a, dt).tobytes() for a, (_, dt) in zip((
+        [len(w[0]) for w in old.values()], flat(0), flat(1), flat(2),
+        [len(w[0]) + 7 for w in old.values()], [100] * len(old)),
+        _KEY_FIELDS)))
     new_keys = ["o1", "o2", "o4", "n0", "n1", "o2", "n0", "n0", "o4"] * 2
     new = pd.DataFrame({
         "k0": new_keys, "ts": rng.integers(0, 10, len(new_keys)),
         "tb": rng.integers(0, 2, len(new_keys)),
         "value": rng.normal(size=len(new_keys))})
     merged, touched, first, ts, val, offsets, lens, seen = _merge_bucket(
-        state, new, [False], window, 200, None)
+        state, new, [None], window, 200, None)
     keys_out = merged[0]
     assert keys_out == [*old, "n0", "n1"]
-    assert merged[-1] == [100 if k not in set(new_keys) else 200
-                          for k in keys_out]
+    assert np.frombuffer(merged[-1], "<i8").tolist() == [
+        100 if k not in set(new_keys) else 200 for k in keys_out]
     for i, k in enumerate(keys_out):
         mine = new[new.k0 == k]
         t0, b0, v0 = old.get(k, (np.array([], np.int64),) * 2
@@ -1583,7 +1626,7 @@ def test_merge_bucket_equals_per_key_merge():
     # state_ttl_ms: every stored key was idle longer than the TTL, so the
     # untouched ones are dropped and the touched ones restart empty
     merged, touched, _, ts, _, offsets, lens, seen = _merge_bucket(
-        state, new, [False], window, 200, 99)
+        state, new, [None], window, 200, 99)
     assert merged[0] == ["o1", "o2", "o4", "n0", "n1"]
     for i, k in enumerate(merged[0]):
         mine = new[new.k0 == k]

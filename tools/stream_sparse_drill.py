@@ -48,8 +48,10 @@ DDL = "series STRING, ts BIGINT, event_id BIGINT, value DOUBLE"
 
 
 def _write(path: str, keys: list[str], ts0: int, points: int, rng) -> None:
+    """Write the file whole, then rename it into place: the stream never
+    lists a partly written file (a leading dot hides the temporary one)."""
     n = len(keys) * points
-    tmp = path + ".tmp"
+    tmp = os.path.join(os.path.dirname(path), "." + os.path.basename(path))
     pq.write_table(pa.table({
         "series": pa.array(keys * points, pa.string()),
         "ts": ts0 + np.arange(n, dtype=np.int64),
