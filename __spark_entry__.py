@@ -2155,7 +2155,7 @@ def q_kafka_parse(spark, sf_dir):
     availableNow. PERMISSIVE malformed handling (all-NULL struct) is part
     of the checked contract."""
     from anomalyzer_spark.sources.kafka import parse_json_values
-    from anomalyzer_spark.streaming._drain import drain, memory_sink
+    from anomalyzer_spark.streaming._drain import drain_available_now
 
     def parse(stream):
         # wire values via to_json (correct escaping of quotes/backslashes
@@ -2171,13 +2171,12 @@ def q_kafka_parse(spark, sf_dir):
             ))).cast("binary").alias("value"),
             F.col("event_id").alias("kafka_key"),
         )
-        return memory_sink(parse_json_values(
-            wire, "event_id long, event_type string, k long"),
-            "q_kafka_parse_mem")
+        return parse_json_values(
+            wire, "event_id long, event_type string, k long")
 
-    drain(spark, f"{sf_dir}/events*.parquet", parse,
-          schema=spark.read.parquet(f"{sf_dir}/events.parquet").schema)
-    return spark.table("q_kafka_parse_mem")
+    return drain_available_now(
+        spark, f"{sf_dir}/events*.parquet", parse, "q_kafka_parse_mem",
+        schema=spark.read.parquet(f"{sf_dir}/events.parquet").schema)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -23,8 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..session import conf_scope, materialize as _materialize
-from ..sources.layout import DYNAMIC_OVERWRITE, drop_emptied_partitions
+from ..session import materialize as _materialize
+from ..sources.layout import drop_emptied_partitions
 from ..streaming._drain import batch_sink
 from .similarity import (_codes_sql, _lut_sql, absmax_scale, adc_dist,
                          adc_rank_refine, checked_width, cosine,
@@ -432,8 +432,8 @@ def apply_diff_to_index(
     # materialize BEFORE the overwrite: the plan reads the very
     # partitions the write replaces (self-overwrite hazard)
     rewrite = _materialize(rewrite, reason="apply_diff_to_index.rewrite")
-    with conf_scope(spark, DYNAMIC_OVERWRITE):
-        (rewrite.write.mode("overwrite").partitionBy("cell").parquet(path))
+    (rewrite.write.mode("overwrite").partitionBy("cell")
+     .option("partitionOverwriteMode", "dynamic").parquet(path))
     # a cell whose every vector was removed has no rewrite rows
     drop_emptied_partitions(
         spark, path, "cell", affected,

@@ -158,25 +158,6 @@ def checkpoint_scope(spark: SparkSession):
                 jmap.get(k).unpersist(False)
 
 
-@contextlib.contextmanager
-def conf_scope(spark: SparkSession, settings: dict[str, str | None]):
-    """Set session confs for the body of a ``with`` block, then restore
-    each one's previous value (unset when it had none). A None value
-    leaves its key untouched."""
-    active = {k: v for k, v in settings.items() if v is not None}
-    prev = {k: spark.conf.get(k, None) for k in active}
-    for k, v in active.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
 def _build(app: str, cpus: str, shuffle_partitions: int | None):
     builder = (
         SparkSession.builder.appName(app)
@@ -187,6 +168,9 @@ def _build(app: str, cpus: str, shuffle_partitions: int | None):
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or 32))
+        # legacy fixtures store event time as INT64 TIMESTAMP(NANOS), which
+        # Spark reads only as bigint (load_table and the drains convert it)
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # local mode runs all 32 task slots in the driver JVM: an 8g heap
         # GC-thrashes once object-heavy stages (higher-order exprs, Arrow
         # batches) accumulate — benchmarks showed every query after the

@@ -1,9 +1,10 @@
 """Table loaders for the driver's parquet fixtures (TESTDATA.md).
 
 Fixture timestamp encodings have varied by round — INT64 TIMESTAMP(NANOS)
-(pre-round-3; needs ``nanosAsLong``) and TIMESTAMP(MICROS) with
-isAdjustedToUTC=false (current; Spark reads TIMESTAMP_NTZ). The loader
-handles both and exposes, for each event-time column:
+(pre-round-3; bigint under ``get_spark``'s ``nanosAsLong`` default) and
+TIMESTAMP(MICROS) with isAdjustedToUTC=false (current; Spark reads
+TIMESTAMP_NTZ). The loader handles both and exposes, for each event-time
+column:
 
   * ``<col>_ns``  — exact int64 epoch-nanoseconds (lossless; equals
     DuckDB's ``epoch_ns(col)`` — NTZ wall clock taken as UTC, see
@@ -39,10 +40,9 @@ NANO_TS_COLS: dict[str, tuple[str, ...]] = {
 }
 
 
-#: conf key for spread_partitions' bytes-per-partition divisor (the
-#: scan-spread sibling of session.COMPACT_PARTITION_BYTES)
-SPREAD_BYTES_CONF = "anomalyzer.batch.bytesPerSpreadPartition"
-_SPREAD_BYTES_DEFAULT = 256 * 1024
+#: on-disk bytes per partition of ``spread_partitions`` (the scan-spread
+#: sibling of session.COMPACT_PARTITION_BYTES)
+SPREAD_PARTITION_BYTES = 256 * 1024
 
 
 def _input_bytes(path: str) -> int:
@@ -81,17 +81,12 @@ def spread_partitions(
     on a real multi-file dataset callers pass no repartition at all
     (the scan parallelizes naturally; see load_table).
 
-    The divisor is conf-parameterised (``SPREAD_BYTES_CONF``, default
-    256 KiB of COMPRESSED parquet ≈ ~1 MiB of rows — micro-task
-    overhead amortized while tiny fixtures still spread); production
-    tunes it per cluster."""
+    The divisor defaults to ``SPREAD_PARTITION_BYTES``: 256 KiB of
+    COMPRESSED parquet ≈ ~1 MiB of rows — micro-task overhead amortized
+    while tiny fixtures still spread; ``bytes_per_partition`` overrides
+    it per call."""
     if bytes_per_partition is None:
-        try:
-            bytes_per_partition = int(
-                spark.conf.get(SPREAD_BYTES_CONF, None)
-                or _SPREAD_BYTES_DEFAULT)
-        except ValueError:
-            bytes_per_partition = _SPREAD_BYTES_DEFAULT
+        bytes_per_partition = SPREAD_PARTITION_BYTES
     try:
         size = _input_bytes(path)
     except OSError as e:
@@ -112,9 +107,9 @@ def load_table(
     is one small parquet file → one input split → compute-heavy per-row
     operators (shingling, hashing) would run single-threaded without it. On
     a real multi-file dataset the scan parallelizes naturally and callers
-    should pass None (no shuffle).
+    should pass None (no shuffle). Legacy TIMESTAMP(NANOS) columns read
+    as bigint under ``get_spark``'s ``nanosAsLong`` engine default.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     for c in NANO_TS_COLS.get(name, ()):
         dt = dict(df.dtypes).get(c)

@@ -23,11 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import conf_scope, materialize as _materialize
-
-#: session conf scoping every partial rewrite below to the partitions
-#: its frame has rows for
-DYNAMIC_OVERWRITE = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+from ..session import materialize as _materialize
 
 #: bits per dimension in the z-value; 2 dims × 21 bits = 42-bit z fits a
 #: long with room to spare, and 2^21 distinct quantiles per dimension is
@@ -44,6 +40,7 @@ def write_sized_parquet(
     compression_ratio: float = 4.0,
     sample_rows: int = 256,
     mode: str = "overwrite",
+    dynamic_overwrite: bool = False,
 ) -> int:
     """Write parquet with files targeting ``target_mb`` via
     ``maxRecordsPerFile``. Records-per-file is estimated from a BOUNDED
@@ -53,7 +50,8 @@ def write_sized_parquet(
     Returns the records-per-file used. The estimate is an upper-bound
     knob, not an exact science — the guarantee is NO pathological
     small-files explosion and NO unsplittable giants, not byte-exact
-    file sizes."""
+    file sizes. ``dynamic_overwrite`` replaces only the partitions the
+    frame has rows for; the write sets its mode whatever the session's."""
     if target_mb < 1:
         raise ValueError("target_mb must be >= 1")
     sample = df.limit(sample_rows).toPandas()
@@ -64,7 +62,9 @@ def write_sized_parquet(
         bytes_per_row = max(mem / len(sample) / compression_ratio, 1.0)
         n_per_file = max(int(target_mb * (1 << 20) / bytes_per_row), 1)
     writer = (df.write.mode(mode)
-              .option("maxRecordsPerFile", n_per_file))
+              .option("maxRecordsPerFile", n_per_file)
+              .option("partitionOverwriteMode",
+                      "dynamic" if dynamic_overwrite else "static"))
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
@@ -439,9 +439,9 @@ def refresh_shards(
         stored.where(~F.col("shard").isin(affected)).unionByName(new_man),
         reason="refresh_shards.manifest")
 
-    with conf_scope(spark, DYNAMIC_OVERWRITE):
-        write_sized_parquet(rewrite, f"{path}/data", target_mb=target_mb,
-                            partition_by=[shard_col], mode="overwrite")
+    write_sized_parquet(rewrite, f"{path}/data", target_mb=target_mb,
+                        partition_by=[shard_col], mode="overwrite",
+                        dynamic_overwrite=True)
     # an affected shard that emptied out would keep its stale files with
     # no manifest row
     drop_emptied_partitions(
@@ -522,8 +522,8 @@ def compact_shards(
             F.col(shard_col), *[F.col(c) for c in order_by])
     rewrite = _materialize(rewrite, reason="compact_shards.rewrite")
 
-    with conf_scope(spark, DYNAMIC_OVERWRITE):
-        write_sized_parquet(rewrite, f"{path}/data", target_mb=target_mb,
-                            partition_by=[shard_col], mode="overwrite",
-                            compression_ratio=compression_ratio)
+    write_sized_parquet(rewrite, f"{path}/data", target_mb=target_mb,
+                        partition_by=[shard_col], mode="overwrite",
+                        compression_ratio=compression_ratio,
+                        dynamic_overwrite=True)
     return len(affected)

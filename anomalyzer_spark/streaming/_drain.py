@@ -1,11 +1,16 @@
 """The one file-stream drain behind every ``run_*_on_dir`` runner.
 
 ``drain`` is the only entry point that turns a parquet path into a
-drained stream: schema read (only when none is given), per-trigger file
-cap, epoch-ns probe, session-conf scope, start and await.
+drained stream: private session clone, schema read (only when none is
+given), per-trigger file cap, epoch-ns probe, start and await.
 ``file_stream`` is its un-started source, ``memory_sink`` /
 ``batch_sink`` start the two sink shapes, and ``final_state`` selects
 an Update-mode memory sink's last row per key.
+
+A drain never writes the caller's session conf: it sets its confs on a
+private clone of the session, so a query planned concurrently on the
+caller never sees them. Classic sessions only (Spark Connect has no
+``cloneSession``).
 
 Each drain logs one DEBUG record on the ``anomalyzer_spark`` logger
 (computed only when DEBUG is on) summarizing ``recentProgress``:
@@ -28,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
-from ..session import LOG, conf_scope
+from ..session import LOG
 
 #: compressed input bytes per state partition of an adaptive drain
 STATE_PARTITION_BYTES = 64 * 1024 * 1024
@@ -156,8 +161,9 @@ def drain(
     started availableNow query; await it and log its progress record.
     Returns the terminated query.
 
-    Session confs set for the drain only (restored after it; the stream
-    clones the session conf at start):
+    The stream runs on a private clone of ``spark`` (``cloneSession``:
+    same conf, temp views and functions); these confs are set on the
+    clone only:
 
     * ``nanosAsLong=true``: TIMESTAMP(NANOS) inputs read as bigint for
       the ``ns_ts_cols`` probe;
@@ -169,22 +175,30 @@ def drain(
       trigger) for an Update-mode keyed aggregation with NO watermark.
       Leave it ``None`` for any watermarked/append-mode drain.
 
-    Concurrency caveat (r15 advice): the confs are SESSION-wide, so a
-    query planned CONCURRENTLY on the same SparkSession inherits them —
-    drain on a dedicated ``spark.newSession()`` in that case.
+    Once the query has ended the clone's keys go back to the caller's
+    values, so a frame read from the clone (``drain_available_now``'s
+    memory sink) plans as it would on the caller. Classic sessions only.
     """
-    parts = None if state_partitions is None else str(int(state_partitions))
-    nodata = (None if no_data_batch is None
-              else "true" if no_data_batch else "false")
+    settings = {k: str(v).lower() for k, v in {
+        "spark.sql.legacy.parquet.nanosAsLong": True,
+        "spark.sql.shuffle.partitions": state_partitions,
+        "spark.sql.streaming.noDataMicroBatches.enabled": no_data_batch,
+    }.items() if v is not None}
     t0 = time.perf_counter()
-    with conf_scope(spark, {
-            "spark.sql.legacy.parquet.nanosAsLong": "true",
-            "spark.sql.shuffle.partitions": parts,
-            "spark.sql.streaming.noDataMicroBatches.enabled": nodata}):
-        q = start(file_stream(spark, input_path, schema=schema,
-                              max_files_per_trigger=max_files_per_trigger,
-                              ns_ts_cols=ns_ts_cols))
-        q.awaitTermination()
+    clone = SparkSession(spark.sparkContext,
+                         spark._jsparkSession.cloneSession())
+    caller = {k: clone.conf.get(k, None) for k in settings}
+    for k, v in settings.items():
+        clone.conf.set(k, v)
+    q = start(file_stream(clone, input_path, schema=schema,
+                          max_files_per_trigger=max_files_per_trigger,
+                          ns_ts_cols=ns_ts_cols))
+    q.awaitTermination()
+    for k, v in caller.items():
+        if v is None:
+            clone.conf.unset(k)
+        else:
+            clone.conf.set(k, v)
     if LOG.isEnabledFor(logging.DEBUG):
         summary = progress_summary(q.recentProgress)
         LOG.debug("drain %s: %s ms=%.1f", q.name or input_path,
@@ -220,6 +234,7 @@ def drain_available_now(
     query_name: str,
     *,
     output_mode: str = "append",
+    schema=None,
     max_files_per_trigger: int | None = None,
     ns_ts_cols: tuple[str, ...] = (),
     state_partitions: int | None = None,
@@ -227,13 +242,19 @@ def drain_available_now(
 ) -> DataFrame:
     """``drain`` ``input_path`` through ``build`` into a memory sink;
     returns the sink table (every emitted row — Update-mode callers
-    select final state with ``final_state``)."""
-    drain(spark, input_path,
-          lambda s: memory_sink(build(s), query_name, output_mode),
+    select final state with ``final_state``), read from the drain's
+    session clone, where the sink is registered."""
+    streams = []
+
+    def start(stream: DataFrame) -> StreamingQuery:
+        streams.append(stream)
+        return memory_sink(build(stream), query_name, output_mode)
+
+    drain(spark, input_path, start, schema=schema,
           max_files_per_trigger=max_files_per_trigger,
           ns_ts_cols=ns_ts_cols, state_partitions=state_partitions,
           no_data_batch=no_data_batch)
-    return spark.table(query_name)
+    return streams[0].sparkSession.table(query_name)
 
 
 def final_state(updates: DataFrame, keys: Sequence[str],

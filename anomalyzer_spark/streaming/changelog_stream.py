@@ -49,8 +49,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
 from ..functions.changelog import _is_delete, latest_changes
-from ..session import conf_scope, materialize as _materialize
-from ..sources.layout import DYNAMIC_OVERWRITE, drop_emptied_partitions
+from ..session import materialize as _materialize
+from ..sources.layout import drop_emptied_partitions
 from ._drain import batch_sink, drain
 
 __all__ = ["changelog_upsert_stream", "read_snapshot", "init_snapshot",
@@ -119,10 +119,9 @@ def changelog_upsert_stream(
             store.unionByName(b), keys, sequence_col,
             tiebreak_cols=[*tiebreak_cols, "_deleted"],
         ), reason="changelog_upsert_stream.merge")  # self-overwrite hazard
-        with conf_scope(spark, DYNAMIC_OVERWRITE):
-            (merged.repartition(len(affected), F.col("_bucket"))
-             .write.mode("overwrite").partitionBy("_bucket")
-             .parquet(snap_dir))
+        (merged.repartition(len(affected), F.col("_bucket"))
+         .write.mode("overwrite").partitionBy("_bucket")
+         .option("partitionOverwriteMode", "dynamic").parquet(snap_dir))
 
     return batch_sink(changes_stream, handle, checkpoint=checkpoint_path,
                       query_name=query_name, trigger=trigger)
@@ -199,9 +198,8 @@ def vacuum_tombstones(
         .where(~dead)
         .repartition(len(affected), F.col("_bucket")),
         reason="vacuum_tombstones.keep")
-    with conf_scope(spark, DYNAMIC_OVERWRITE):
-        (keep.write.mode("overwrite").partitionBy("_bucket")
-         .parquet(snap_dir))
+    (keep.write.mode("overwrite").partitionBy("_bucket")
+     .option("partitionOverwriteMode", "dynamic").parquet(snap_dir))
     drop_emptied_partitions(
         spark, snap_dir, "_bucket", affected,
         {r["_bucket"] for r in keep.select("_bucket").distinct().collect()})

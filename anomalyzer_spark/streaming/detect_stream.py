@@ -94,7 +94,7 @@ from pyspark.sql.types import (
 from .. import oracle
 from ..config import AnomalyzerConf
 from ..operators.kernel import key_str_col
-from ._drain import drain, final_state, memory_sink
+from ._drain import drain_available_now, final_state
 
 #: state buckets per state partition, chosen on CPU per trigger. On a
 #: 4-core x86-64 host, over 6 seeds of 300 dense keys and 3 runs of a
@@ -316,15 +316,15 @@ def run_stream_on_dir(
     """Drain a parquet file/dir through ``detect_stream`` (``_drain.drain``,
     availableNow, Update-mode memory sink) and return the FINAL per-key
     rows as a batch DataFrame. ``schema`` None reads the input's parquet
-    schema inside the drain's conf scope.
+    schema in the drain's session clone.
 
     The memory sink keeps every update; the final state of each key is the
     row with the highest ``total_seen`` (strictly increasing per key).
     """
-    drain(spark, input_path,
-          lambda s: memory_sink(
-              detect_stream(s, keys, ts_col, value_col, conf, tiebreak_col),
-              query_name, "update"),
-          schema=schema, max_files_per_trigger=max_files_per_trigger)
-    return final_state(spark.table(query_name), keys,
-                       F.col("total_seen").desc())
+    res = drain_available_now(
+        spark, input_path,
+        lambda s: detect_stream(s, keys, ts_col, value_col, conf,
+                                tiebreak_col),
+        query_name, output_mode="update", schema=schema,
+        max_files_per_trigger=max_files_per_trigger)
+    return final_state(res, keys, F.col("total_seen").desc())

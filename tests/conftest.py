@@ -1,3 +1,4 @@
+import contextlib
 import os
 
 import pytest
@@ -41,6 +42,27 @@ def pytest_collection_modifyitems(config, items):
 def spark():
     s = get_spark("anomalyzer-tests", shuffle_partitions=8)
     yield s
+
+
+NANOS = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+@pytest.fixture
+def conf_unchanged(spark):
+    """A context manager asserting that its body leaves every session
+    conf as it found it. nanosAsLong is set to "false" first, against
+    the engine default, so a call that wrote that default back shows."""
+    @contextlib.contextmanager
+    def check():
+        prev = spark.conf.get(NANOS)
+        spark.conf.set(NANOS, "false")
+        try:
+            before = spark.conf.getAll
+            yield
+            assert spark.conf.getAll == before
+        finally:
+            spark.conf.set(NANOS, prev)
+    return check
 
 
 SF_DIR = "/root/testdata/sf0.001"

@@ -143,10 +143,11 @@ def test_empty_diff_touches_nothing(spark, models, tmp_path):
     assert _snapshot(spark, path) == before
 
 
-def test_emptied_cell_is_removed(spark, models, tmp_path):
+def test_emptied_cell_is_removed(spark, models, tmp_path, conf_unchanged):
     """Removing every vector of one cell must drop that cell from the
     index: the dynamic overwrite never touches a partition the rewrite
-    has no rows for, so the emptied cell needs an explicit delete."""
+    has no rows for, so the emptied cell needs an explicit delete. The
+    session conf is the same after the apply as before it."""
     e, cents, books = models
     path = str(tmp_path / "idx6")
     ann_index.build_ivfpq_index(e, path, cents, books)
@@ -157,8 +158,9 @@ def test_emptied_cell_is_removed(spark, models, tmp_path):
     diff = spark.createDataFrame([(i, "removed") for i in gone],
                                  "vec_id long, status string")
     new = e.where(~F.col("vec_id").isin(gone))
-    assert ann_index.apply_diff_to_index(
-        spark, path, diff, new, cents, books) == 1
+    with conf_unchanged():
+        assert ann_index.apply_diff_to_index(
+            spark, path, diff, new, cents, books) == 1
     fresh_path = str(tmp_path / "fresh6")
     ann_index.build_ivfpq_index(new, fresh_path, cents, books)
     assert _snapshot(spark, path) == _snapshot(spark, fresh_path)

@@ -161,16 +161,19 @@ def test_untouched_buckets_not_rewritten(spark, tmp_path):
     assert touched == 1 and same == len(stamp) - 1
 
 
-def test_init_snapshot_seeds_base(spark, tmp_path):
+def test_init_snapshot_seeds_base(spark, tmp_path, conf_unchanged):
+    """A seeded store takes the stream's changes on top; the drain and
+    its bucket overwrites leave the session conf as they found it."""
     base = spark.createDataFrame(
         [(k, f"base-{k}", 0) for k in range(10)], "k long, v string, seq long")
     store = str(tmp_path / "store")
     init_snapshot(base, store, ["k"], n_buckets=4)
     _write_batches(spark, str(tmp_path / "in"),
                    [[(3, "upd", 5, "upsert"), (4, "x", 5, "delete")]])
-    snap = run_changelog_stream_on_dir(
-        spark, str(tmp_path / "in"), store, str(tmp_path / "ckpt"),
-        ["k"], "seq", op_col="op", n_buckets=4)
+    with conf_unchanged():
+        snap = run_changelog_stream_on_dir(
+            spark, str(tmp_path / "in"), store, str(tmp_path / "ckpt"),
+            ["k"], "seq", op_col="op", n_buckets=4)
     got = {r["k"]: r["v"] for r in snap.collect()}
     assert got[3] == "upd" and 4 not in got and got[0] == "base-0"
     assert len(got) == 9

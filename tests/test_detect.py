@@ -228,18 +228,20 @@ def test_mc_kernel_blocks_match_oracle_exactly(spark, perm_spec):
     is NA by the n1 % n2 quirk but rank is not, and where diff is NA), a
     NULL key component and a two-block key, every per-test prob equals
     the per-key oracle bit for bit."""
-    from anomalyzer_spark.session import conf_scope
-
     conf = AnomalyzerConf(
         active_size=2, methods=("diff", "highrank", "lowrank", "ks"),
         perm_count=40, seed=9, perm_spec=perm_spec)
     rows = _mc_parity_rows()
     df = spark.createDataFrame(
         rows, "k1 string, k2 long, ts long, value double")
-    with conf_scope(spark, {
-            "spark.sql.execution.arrow.maxRecordsPerBatch": "8"}):
+    batch = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(batch)
+    spark.conf.set(batch, "8")
+    try:
         got = {(r["k1"], r["k2"]): r for r in
                detect_by_test(df, ["k1", "k2"], conf=conf).collect()}
+    finally:
+        spark.conf.set(batch, prev)
     exp = _mc_expected(rows, conf)
     assert set(got) == set(exp)
     for key, e in exp.items():

@@ -1,13 +1,14 @@
 """streaming._drain: the one file-stream drain of the library.
 
 Every ``run_*_on_dir`` runner and every draining entry slot goes through
-``_drain.drain``, which scopes its session confs and logs one DEBUG
-progress record per drain."""
+``_drain.drain``, which sets its confs on a private clone of the caller's
+session and logs one DEBUG progress record per drain."""
 
 import ast
 import logging
 import pathlib
 import re
+import threading
 import uuid
 
 import pyarrow as pa
@@ -17,27 +18,30 @@ from pyspark.sql.streaming.listener import StreamingQueryProgress
 
 from anomalyzer_spark.streaming import (run_minhash_stream_on_dir,
                                         run_resample_stream_on_dir)
-from anomalyzer_spark.streaming._drain import (drain_available_now,
+from anomalyzer_spark.sources import load_table
+from anomalyzer_spark.streaming._drain import (batch_sink, drain,
+                                               drain_available_now,
                                                progress_summary)
 
 REPO = pathlib.Path(__file__).resolve().parents[1]
-NANOS = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def _source_nodes():
+    """(path, node) for every AST node of the package and the entry file."""
+    files = sorted((REPO / "anomalyzer_spark").rglob("*.py")) + \
+        [REPO / "__spark_entry__.py"]
+    for path in files:
+        tree = ast.parse(path.read_text(), str(path))
+        for node in ast.walk(tree):
+            yield str(path.relative_to(REPO)), node
 
 
 def _stream_attrs():
     """(path, line, attribute) for every ``.readStream`` /
     ``.awaitTermination`` attribute in the package and the entry file."""
-    files = sorted((REPO / "anomalyzer_spark").rglob("*.py")) + \
-        [REPO / "__spark_entry__.py"]
-    out = []
-    for path in files:
-        tree = ast.parse(path.read_text(), str(path))
-        for node in ast.walk(tree):
-            if isinstance(node, ast.Attribute) and \
-                    node.attr in ("readStream", "awaitTermination"):
-                out.append((str(path.relative_to(REPO)), node.lineno,
-                            node.attr))
-    return out
+    return [(path, node.lineno, node.attr) for path, node in _source_nodes()
+            if isinstance(node, ast.Attribute)
+            and node.attr in ("readStream", "awaitTermination")]
 
 
 def test_only_drain_opens_and_awaits_file_streams():
@@ -51,6 +55,59 @@ def test_only_drain_opens_and_awaits_file_streams():
     assert sorted(c[2] for c in calls
                   if c[0] == allowed[0]) == ["awaitTermination",
                                              "readStream"]
+
+
+def test_only_the_drain_clone_writes_conf():
+    """The library never writes a caller's session conf: every
+    ``conf.set`` / ``conf.unset`` call is on the drain's private clone."""
+    calls = [(path, node.lineno, ast.unparse(node.func.value))
+             for path, node in _source_nodes()
+             if isinstance(node, ast.Call)
+             and isinstance(node.func, ast.Attribute)
+             and node.func.attr in ("set", "unset")
+             and isinstance(node.func.value, ast.Attribute)
+             and node.func.value.attr == "conf"]
+    outside = [c for c in calls
+               if c[0] != "anomalyzer_spark/streaming/_drain.py"
+               or c[2] != "clone.conf"]
+    assert outside == [], f"conf written outside the drain clone: {outside}"
+    assert calls, "the drain sets its confs through clone.conf"
+
+
+def test_drain_confs_stay_off_concurrent_plans(spark, tmp_path):
+    """A drain's ``state_partitions`` lives on its session clone: an
+    aggregate planned on the caller's session while the drain's handler
+    runs shuffles to the session's partition count, not the drain's 2."""
+    sdir = str(tmp_path / "conc_in")
+    spark.range(10).write.parquet(sdir)
+    started, release = threading.Event(), threading.Event()
+    errors = []
+
+    def handle(batch_df, batch_id):
+        started.set()
+        release.wait(120)
+
+    def run():
+        try:
+            drain(spark, sdir, lambda s: batch_sink(s, handle),
+                  state_partitions=2)
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    t = threading.Thread(target=run)
+    t.start()
+    try:
+        assert started.wait(120), "the drain's handler never ran"
+        agg = (spark.range(100).withColumn("k", F.col("id") % 7)
+               .groupBy("k").count())
+        plan = agg._jdf.queryExecution().executedPlan().toString()
+    finally:
+        release.set()
+        t.join(120)
+    assert errors == [] and not t.is_alive()
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    assert parts != "2"
+    assert re.findall(r"hashpartitioning\(k#\w+, (\d+)\)", plan) == [parts]
 
 
 def _progress(batch_id, rows, durations, state=()):
@@ -121,13 +178,13 @@ def test_drain_logs_one_progress_record(spark, tmp_path, caplog):
     assert res.count() > 0
 
 
-def test_drains_leave_nanos_as_long_unchanged(spark, tmp_path):
-    """A drain sets nanosAsLong only for its own duration. Under that
-    scope a TIMESTAMP(NANOS) input still streams (read as bigint, probed
-    as epoch-ns): its resample buckets are the epoch-aligned hours."""
-    before = spark.conf.get(NANOS, None)
-    spark.conf.set(NANOS, "false")
-    try:
+def test_drains_leave_nanos_as_long_unchanged(spark, tmp_path,
+                                              conf_unchanged):
+    """A drain sets nanosAsLong on its session clone only. There a
+    TIMESTAMP(NANOS) input still streams (read as bigint, probed as
+    epoch-ns) with the caller's nanosAsLong off: its resample buckets are
+    the epoch-aligned hours."""
+    with conf_unchanged():
         ndir = tmp_path / "nanos_in"
         ndir.mkdir()
         hour_ns = 3600 * 10**9
@@ -145,7 +202,6 @@ def test_drains_leave_nanos_as_long_unchanged(spark, tmp_path):
         b0 = t0 // hour_ns
         # the watermark (max event time) withholds the last bucket
         assert got == {(b0 + i, 2 * i + 0.5, 2) for i in range(3)}
-        assert spark.conf.get(NANOS) == "false"
 
         ddir = str(tmp_path / "mh_in")
         spark.createDataFrame(
@@ -156,12 +212,6 @@ def test_drains_leave_nanos_as_long_unchanged(spark, tmp_path):
             spark, ddir, str(tmp_path / "mh_store"),
             str(tmp_path / "mh_ckpt"), num_hashes=32, bands=8)
         assert [(r["id_a"], r["id_b"]) for r in pairs.collect()] == [(1, 2)]
-        assert spark.conf.get(NANOS) == "false"
-    finally:
-        if before is None:
-            spark.conf.unset(NANOS)
-        else:
-            spark.conf.set(NANOS, before)
 
 
 def test_continuous_curation_runs_until_stopped(spark, tmp_path):
@@ -187,23 +237,17 @@ def test_continuous_curation_runs_until_stopped(spark, tmp_path):
         q.stop()
 
 
-def test_detect_stream_slots_leave_session_conf_unchanged(spark, sf_dir):
-    """The ``detect_stream`` / ``detect_stream_mc`` entry slots read their
-    input schema inside the drain's conf scope: every session conf,
-    nanosAsLong included, is the same after the slot as before it."""
+def test_detect_stream_slots_leave_session_conf_unchanged(
+        spark, sf_dir, conf_unchanged):
+    """Every session conf, nanosAsLong included, is the same after each
+    call as before it: the ``detect_stream`` / ``detect_stream_mc`` entry
+    slots (input schema read in the drain's clone), the ``dedup_stream``
+    slot (a drain with ``state_partitions``) and ``load_table``."""
     import __spark_entry__ as entry_mod
 
-    before = spark.conf.get(NANOS, None)
-    spark.conf.set(NANOS, "false")
-    try:
-        qs = entry_mod.queries()
-        for name in ("detect_stream", "detect_stream_mc"):
-            conf0 = spark.conf.getAll
-            assert qs[name](spark, sf_dir).count() > 0
-            assert spark.conf.getAll == conf0, name
-            assert spark.conf.get(NANOS) == "false"
-    finally:
-        if before is None:
-            spark.conf.unset(NANOS)
-        else:
-            spark.conf.set(NANOS, before)
+    qs = entry_mod.queries()
+    for name in ("detect_stream", "detect_stream_mc", "dedup_stream"):
+        with conf_unchanged():
+            assert qs[name](spark, sf_dir).count() > 0, name
+    with conf_unchanged():
+        assert "ts_ns" in load_table(spark, sf_dir, "events").columns

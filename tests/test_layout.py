@@ -99,6 +99,37 @@ def test_write_sized_parquet_partition_by(spark, sf_dir, tmp_path):
     assert spark.read.parquet(out).count() == od.count()
 
 
+def test_write_sized_parquet_sets_its_own_overwrite_mode(
+        spark, sf_dir, tmp_path):
+    """The overwrite mode comes from the call, never from the session: a
+    static overwrite under a session set to dynamic still replaces the
+    whole table, and ``dynamic_overwrite`` under the default static
+    session replaces only the partitions the frame has rows for."""
+    od = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderstatus")
+    out = str(tmp_path / "modes")
+    write_sized_parquet(od, out, partition_by=["o_orderstatus"])
+    statuses = {r[0] for r in od.select("o_orderstatus").distinct().collect()}
+    assert {"F", "O"} <= statuses
+
+    def on_disk():
+        return {p.rsplit("=", 1)[1]
+                for p in glob.glob(f"{out}/o_orderstatus=*")}
+
+    mode = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(mode, "dynamic")
+    try:
+        write_sized_parquet(od.where(F.col("o_orderstatus") == "F"), out,
+                            partition_by=["o_orderstatus"])
+    finally:
+        spark.conf.unset(mode)
+    assert on_disk() == {"F"}
+    write_sized_parquet(od.where(F.col("o_orderstatus") == "O"), out,
+                        partition_by=["o_orderstatus"],
+                        dynamic_overwrite=True)
+    assert on_disk() == {"F", "O"}
+
+
 def _packed(spark, sf_dir):
     from anomalyzer_spark.functions import packing
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -336,10 +367,12 @@ def test_refresh_shards_equals_full_reexport(spark, sf_dir, tmp_path):
             spark.read.parquet(f"{inc}/manifest").collect()} == man_full
 
 
-def test_refresh_shards_deletes_emptied_shard(spark, sf_dir, tmp_path):
+def test_refresh_shards_deletes_emptied_shard(spark, sf_dir, tmp_path,
+                                              conf_unchanged):
     """An affected shard whose documents ALL disappear is deleted from
     disk (dynamic overwrite alone would leave stale files), and verify
-    stays all-ok with the remaining shards."""
+    stays all-ok with the remaining shards. The refresh sets its
+    overwrite mode on the write, never on the session."""
     from anomalyzer_spark.functions.dedup import snapshot_diff
     from anomalyzer_spark.sources.layout import assign_shards, refresh_shards
 
@@ -355,7 +388,8 @@ def test_refresh_shards_deletes_emptied_shard(spark, sf_dir, tmp_path):
     export_training_shards(
         assign_shards(old, 2, id_cols=["doc_id"], seed=5, cluster=True),
         out)
-    n = refresh_shards(new, snapshot_diff(old, new), out, 2, seed=5)
+    with conf_unchanged():
+        n = refresh_shards(new, snapshot_diff(old, new), out, 2, seed=5)
     assert n == 1
     assert glob.glob(f"{out}/data/shard=1") == []
     ver = verify_shards(spark, out)

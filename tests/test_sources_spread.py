@@ -2,17 +2,13 @@
 
 Pins the scale-adaptive contract: tiny input -> few partitions (no
 32-micro-task fan-out), growing input -> more, capped at the session's
-defaultParallelism, conf-overridable divisor, and a safe fallback when
+defaultParallelism, a constant default divisor, and a safe fallback when
 the path cannot be stat'ed.
 """
 
 import os
 
-from anomalyzer_spark.sources import (
-    SPREAD_BYTES_CONF,
-    load_table,
-    spread_partitions,
-)
+from anomalyzer_spark.sources import load_table, spread_partitions
 
 
 def _write(tmp_path, name, n_bytes):
@@ -37,11 +33,6 @@ def test_conf_override_and_default(spark, tmp_path):
     p = _write(tmp_path, "t.bin", 512 * 1024)
     # library default: 256 KiB per partition
     assert spread_partitions(spark, p) == 2
-    spark.conf.set(SPREAD_BYTES_CONF, str(128 * 1024))
-    try:
-        assert spread_partitions(spark, p) == 4
-    finally:
-        spark.conf.unset(SPREAD_BYTES_CONF)
 
 
 def test_missing_path_falls_back_to_parallelism(spark, tmp_path, caplog):
