@@ -14,6 +14,22 @@ Layout of one store, per component ``<name>``:
   ``_folded.json`` manifest recording the highest live ``batch_id`` it
   absorbed.
 
+The match step of the dedup stores (``match_batch``): each micro-batch
+is matched against the store's history in one fixed order.
+
+1. WRITE FIRST: the batch's rows go to their live ``batch_id=N``
+   directory before anything is read, so a replayed batch reads the
+   store contents the crashed attempt saw, and pairs inside one batch
+   resolve through the store read.
+2. BROADCAST THE NEW SIDE: the store's in-horizon rows are joined with
+   the re-read new rows under ``F.broadcast``, so the store is scanned
+   (and pruned by its partition column, the first join column), never
+   shuffled.
+3. DROP SELF-MATCHES and ORDER THE IDS: a row never matches itself and
+   every pair comes out as ``id_a = least``, ``id_b = greatest``, so the
+   two orientations of a same-batch pair collapse under the caller's
+   DISTINCT or aggregate.
+
 State is bounded, not append-forever:
 
 * ``retention_batches=H`` evicts state older than the horizon after
@@ -31,25 +47,30 @@ rows themselves, ``batch_id`` included. A FOLDED generation (sketch
 store) holds one merged profile with no ``batch_id`` column; readers
 attach the fold point as its ``batch_id``.
 
-Crash safety without atomic rename: a generation is published by
-writing its parquet, then its manifest, then dropping the live
+Crash safety without atomic directory rename: a generation is published
+by writing its parquet, then its manifest, then dropping the live
 directories it absorbed and every older generation. Readers take the
 newest COMPLETE generation and only read live directories NEWER than its
 fold point, so a crash anywhere in that sequence may double-store but
 never double-reads: a generation with no manifest is ignored (and
 rewritten on replay), and a crash after the manifest leaves only stale
 files that the replay's publish (which skips the write of a complete
-generation) or the next sweep deletes.
+generation) or the next sweep deletes. The JSON files (the manifest and
+the store's ``_sketch_meta.json``) are written to a ``_``-prefixed temp
+file, fsynced and renamed into place, so a crash leaves the old file or
+the new one, never a torn one.
 
 Reads pin an explicit schema: partition type inference would type an
 all-digit partition value (a hex bucket prefix, say) as int and silently
 drift a join key's type.
 
 Every filesystem call of the protocol is in this module and uses the
-local filesystem (``os``/``glob``/``shutil``). On a real cluster the
-store lives on an object store or DFS, and these calls would go through
-that filesystem's client; the layout and manifest protocol are
-filesystem-agnostic.
+local filesystem (``os``/``glob``/``shutil``): listing live directories
+and generations, the manifests, the sketch store's
+``_sketch_meta.json``, and the deletes of publish and sweep. On a real
+cluster the store lives on an object store or DFS, and these calls would
+go through that filesystem's client; the layout and manifest protocol
+are filesystem-agnostic.
 """
 
 from __future__ import annotations
@@ -58,9 +79,9 @@ import glob
 import json
 import os
 import shutil
-from collections.abc import Callable, Mapping
+from collections.abc import Callable, Mapping, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
@@ -173,9 +194,67 @@ def read_component(
     return out
 
 
+def match_batch(
+    spark: SparkSession,
+    store_dir: str,
+    name: str,
+    batch_id: int,
+    rows: DataFrame,
+    schema: StructType,
+    on: Sequence[str],
+    id_col: str,
+    min_live: int | None,
+    cols: Sequence[Column] = (),
+) -> DataFrame:
+    """The match step of a dedup store (module docstring): write
+    ``rows``, the batch's shaped rows, to ``<name>/batch_id=<batch_id>``
+    partitioned by ``on[0]``; join the component's in-horizon store
+    (alias ``s``, read with ``schema``) with the re-read new rows (alias
+    ``n``, broadcast) on ``on``; drop self-matches. Returns ``id_a`` =
+    least and ``id_b`` = greatest of the two ``id_col`` values, then
+    ``cols`` (expressions over ``s`` and ``n``)."""
+    path = batch_path(store_dir, name, batch_id)
+    rows.write.mode("overwrite").partitionBy(on[0]).parquet(path)
+    store = read_component(spark, store_dir, name, schema, min_live)
+    new = spark.read.schema(schema).parquet(path)
+    s, n = f"s.{id_col}", f"n.{id_col}"
+    return (
+        store.alias("s").join(F.broadcast(new.alias("n")), list(on))
+        .where(F.col(s) != F.col(n))
+        .select(F.least(s, n).alias("id_a"),
+                F.greatest(s, n).alias("id_b"), *cols))
+
+
+def _write_json(path: str, obj: dict) -> None:
+    """Write ``obj`` to ``path`` through a ``_``-prefixed temp file in
+    the same directory (Spark skips ``_`` files when it reads a
+    generation), fsynced, then renamed over ``path``."""
+    head, tail = os.path.split(path)
+    tmp = f"{head}/_{tail}.tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+
+
 def _write_manifest(gen_path: str, upto: int) -> None:
-    with open(f"{gen_path}/_folded.json", "w") as f:
-        json.dump({"max_folded": upto}, f)
+    _write_json(f"{gen_path}/_folded.json", {"max_folded": upto})
+
+
+def load_meta(store_dir: str) -> dict | None:
+    """The store's ``_sketch_meta.json`` parameters; None before the
+    first write."""
+    path = f"{store_dir}/_sketch_meta.json"
+    if not os.path.isfile(path):
+        return None
+    with open(path) as f:
+        return json.load(f)
+
+
+def write_meta(store_dir: str, meta: dict) -> None:
+    os.makedirs(store_dir, exist_ok=True)
+    _write_json(f"{store_dir}/_sketch_meta.json", meta)
 
 
 def publish_gen(

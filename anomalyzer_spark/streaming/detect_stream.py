@@ -12,9 +12,9 @@ Bucketed state. ``applyInPandasWithState`` pays a fixed Python cost per
 GROUP (state JSON, Arrow slice, pandas frame, state pickle), several
 times the cost of one key's merge and eval, so the stream does not make
 each key its own group: it groups by ``pmod(xxhash64(keys...),
-n_buckets)`` with ``n_buckets = BUCKETS_PER_STATE_PARTITION`` × the
-state partition count (``spark.sql.shuffle.partitions`` when the query
-is built). A bucket's state holds its member keys as parallel arrays:
+n_buckets)`` with ``n_buckets`` the state partition count
+(``spark.sql.shuffle.partitions`` when the query is built).
+A bucket's state holds its member keys as parallel arrays:
 the key values (one array per key column, of that column's type), and
 the raw bytes of one NumPy array each for the window lengths, the
 flattened (ts, tiebreak, value) windows, each key's cumulative point
@@ -30,6 +30,12 @@ same ``oracle.mc_probs`` path as the batch kernel. Results are
 bit-identical to ``oracle.eval_prob`` per key, and the MC key string is
 ``kernel.key_str_col`` computed in Spark, so batch and stream draw the
 same permutation streams for every key type.
+One bucket per state partition was chosen on CPU per trigger: on a
+4-core x86-64 host, over 6 seeds of 300 dense keys and 3 runs of a
+sparse stream (20k keys, 1% touched per trigger), it spent the least CPU
+of ×1, ×4 and ×16 buckets per partition on both. Spark hash-partitions
+the bucket ids, so some state partitions hold two buckets and others
+none; that showed in neither CPU nor latency.
 Integral and floating-point key components travel to the bucket
 function as their Spark string casts and are parsed back there: Arrow
 hands pandas a NULL in such a column as NaN, which would turn an
@@ -95,14 +101,6 @@ from .. import oracle
 from ..config import AnomalyzerConf
 from ..operators.kernel import key_str_col
 from ._drain import drain_available_now, final_state
-
-#: state buckets per state partition, chosen on CPU per trigger. On a
-#: 4-core x86-64 host, over 6 seeds of 300 dense keys and 3 runs of a
-#: sparse stream (20k keys, 1% touched per trigger), ×1 spent the least
-#: CPU of ×1, ×4 and ×16 on both (measurements in CHANGES.md). Spark
-#: hash-partitions the bucket ids, so at ×1 some state partitions hold
-#: two buckets and others none; that showed in neither CPU nor latency.
-BUCKETS_PER_STATE_PARTITION = 1
 
 #: per-key state fields after the bucket count and the key columns, each
 #: the raw bytes of one NumPy array of its dtype: a trigger pickles and
@@ -218,8 +216,7 @@ def detect_stream(
     conf = conf or AnomalyzerConf()
     from ..timeutil import epoch_us_col
 
-    n_buckets = BUCKETS_PER_STATE_PARTITION * int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_buckets = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     ts_expr = epoch_us_col(df, ts_col)
     tb_expr = (
         F.col(tiebreak_col).cast("long") if tiebreak_col else F.lit(0).cast("long")
@@ -262,9 +259,9 @@ def detect_stream(
             raise RuntimeError(
                 f"detect_stream state bucket {bucket[0]} was written with "
                 f"{state.get[0]} buckets, but this query hashes keys into "
-                f"{n_buckets} ({BUCKETS_PER_STATE_PARTITION} per state "
-                f"partition): restart with the spark.sql.shuffle.partitions "
-                f"the checkpoint was started with, or a new checkpoint")
+                f"{n_buckets}, one per state partition: restart with the "
+                f"spark.sql.shuffle.partitions the checkpoint was started "
+                f"with, or a new checkpoint")
         if state.hasTimedOut:
             state.remove()
             return

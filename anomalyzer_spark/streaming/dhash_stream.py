@@ -3,9 +3,7 @@
 Closes the image row of the dedup matrix's streaming axis: batch
 ``multimodal.dhash_pairs`` finds near-duplicate images inside one corpus;
 a crawl-shaped stream needs candidates against everything seen so far —
-the stream×history shape ``minhash_stream`` pins (foreachBatch against a
-persisted store, store written FIRST for replay idempotence, the NEW side
-broadcast so history is scanned, never shuffled).
+the stream×history match of ``_store.match_batch``.
 
 Simpler than MinHash by design: the dHash signature IS the verifier
 (``bit_count(xor)`` needs no shingle sets), so the store has ONE data
@@ -13,13 +11,15 @@ component — the ``hamming_blocks`` rows (id, dhash64, block_id,
 block_val) — plus discovered pairs. Per micro-batch:
 
   1. decode + sign the batch (``multimodal.dhash_image``; undecodable
-     payloads drop out as NULL — corrupt bytes are data, not failures),
-     explode to pigeonhole blocks, write under ``batch_id=N`` (overwrite:
-     at-least-once replays rewrite identical files);
-  2. join the (small, broadcast) batch blocks against the block store on
-     (pfx, block_id, block_val) — candidates share ≥1 exact block;
+     payloads drop out as NULL — corrupt bytes are data, not failures)
+     and explode to pigeonhole blocks;
+  2. match the blocks against the block store on (pfx, block_id,
+     block_val) — candidates share ≥1 exact block;
   3. verify with bit_count(xor) ≤ max_hamming from the signatures already
      ON the joined rows, write surviving pairs under ``batch_id=N``.
+
+Steps 1–3 are ``_match_blocks``, which the video store reuses on frame
+signatures.
 
 Final state equals batch ``dhash_pairs`` over the same corpus: a
 qualifying pair shares a block (pigeonhole), is discovered when its later
@@ -43,7 +43,8 @@ from pyspark.sql.types import LongType, StructField, StructType
 from ..functions.dedup import hamming_blocks
 from ..functions.multimodal import dhash_image
 from ._drain import batch_sink, drain
-from ._store import batch_path, bound_state, horizon, read_component
+from ._store import (batch_path, bound_state, horizon, match_batch,
+                     read_component)
 
 __all__ = ["dhash_dedup_stream", "dhash_pairs_store",
            "run_dhash_stream_on_dir"]
@@ -69,6 +70,27 @@ def _pair_schema() -> StructType:
         StructField("id_b", LongType()),
         StructField("hamming", LongType()),
     ])
+
+
+def _match_blocks(spark: SparkSession, store_dir: str, name: str,
+                  batch_id: int, sigs: DataFrame, id_col: str,
+                  max_hamming: int, min_live: int | None) -> DataFrame:
+    """Block ``sigs`` (id_col, dhash64) into component ``name`` and
+    match them against its history: the distinct (id_a, id_b, hamming)
+    pairs within ``max_hamming``."""
+    bk = hamming_blocks(sigs, "dhash64", id_col,
+                        bits=64, max_hamming=max_hamming) \
+        .withColumn("block_id", F.col("block_id").cast("long")) \
+        .withColumn("pfx", F.pmod(F.col("block_val"), F.lit(64)))
+    # both sides carry their signature, so bit_count(xor) rides the
+    # joined row
+    ham = F.bit_count(F.col("s.dhash64").bitwiseXOR(F.col("n.dhash64")))
+    return (
+        match_batch(spark, store_dir, name, batch_id, bk,
+                    _block_schema(id_col), ["pfx", "block_id", "block_val"],
+                    id_col, min_live, [ham.cast("long").alias("hamming")])
+        .where(F.col("hamming") <= max_hamming)
+        .distinct())
 
 
 def dhash_dedup_stream(
@@ -97,39 +119,14 @@ def dhash_dedup_stream(
                         content_col, id_col)
             .where(F.col("dhash64").isNotNull())
             .select(id_col, "dhash64"))
-        bk = hamming_blocks(sigs, "dhash64", id_col,
-                            bits=64, max_hamming=max_hamming) \
-            .withColumn("block_id", F.col("block_id").cast("long")) \
-            .withColumn("pfx", F.pmod(F.col("block_val"), F.lit(64)))
-        # 1. extend the store first (replay-idempotent overwrite; lets
-        #    same-batch pairs resolve through the store read)
-        (bk.write.mode("overwrite").partitionBy("pfx")
-         .parquet(batch_path(store_dir, "blocks", batch_id)))
-        block_schema = _block_schema(id_col)
-        # 2. candidates + 3. verify in one join: both sides carry their
-        #    signature, so bit_count(xor) rides the joined row
-        store_b = read_component(
-            spark, store_dir, "blocks", block_schema, min_live)
-        new_b = spark.read.schema(block_schema).parquet(
-            batch_path(store_dir, "blocks", batch_id))
-        s, n = store_b.alias("s"), F.broadcast(new_b.alias("n"))
-        ham = F.bit_count(
-            F.col("s.dhash64").bitwiseXOR(F.col("n.dhash64")))
-        pairs = (
-            s.join(n, ["pfx", "block_id", "block_val"])
-            .where(F.col(f"s.{id_col}") != F.col(f"n.{id_col}"))
-            .select(
-                F.least(f"s.{id_col}", f"n.{id_col}").alias("id_a"),
-                F.greatest(f"s.{id_col}", f"n.{id_col}").alias("id_b"),
-                ham.cast("long").alias("hamming"))
-            .where(F.col("hamming") <= max_hamming)
-            .distinct())
-        pairs.write.mode("overwrite").parquet(
-            batch_path(store_dir, "pairs", batch_id))
-        # 4. bound state: horizon eviction + generational folding
+        _match_blocks(spark, store_dir, "blocks", batch_id, sigs, id_col,
+                      max_hamming, min_live) \
+            .write.mode("overwrite").parquet(
+                batch_path(store_dir, "pairs", batch_id))
+        # bound state: horizon eviction + generational folding
         bound_state(
             spark, store_dir, batch_id,
-            {"blocks": block_schema, "pairs": _pair_schema()},
+            {"blocks": _block_schema(id_col), "pairs": _pair_schema()},
             min_live=min_live, compact_every=compact_every,
             partition_cols={"blocks": ("pfx",)})
 
@@ -145,8 +142,7 @@ def dhash_pairs_store(spark: SparkSession, store_dir: str,
     the cross-generation seam)."""
     out = read_component(spark, store_dir, "pairs", _pair_schema())
     if out is None:
-        return spark.createDataFrame(
-            [], "id_a long, id_b long, hamming long")
+        return spark.createDataFrame([], _pair_schema())
     return out.select("id_a", "id_b", "hamming").distinct()
 
 

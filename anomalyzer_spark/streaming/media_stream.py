@@ -4,9 +4,7 @@ the dedup matrix's streaming axis.
 Batch ``multimodal.audio_matches`` / ``multimodal.video_matches`` find
 near-duplicate clips inside one corpus; a crawl-shaped stream needs each
 arriving clip matched against everything seen so far — the stream×history
-shape ``minhash_stream`` pinned and ``dhash_stream`` reused (foreachBatch
-against a persisted store, store written FIRST for replay idempotence,
-the NEW side broadcast so history is scanned, never shuffled).
+match of ``_store.match_batch``.
 
 Audio store components (``audio_dedup_stream``):
   - ``fps``:   (id, n_fps, fp, pfx) — each clip's DISTINCT Haitsma-Kalker
@@ -19,7 +17,8 @@ Audio store components (``audio_dedup_stream``):
 Video store components (``video_dedup_stream``):
   - ``fblocks``:  ``hamming_blocks`` rows of per-frame dHash signatures,
     keyed by the packed frame id (clip_id·2³¹ + frame_idx — the
-    ``video_matches`` packing, range-guarded the same way).
+    ``video_matches`` packing, range-guarded the same way), matched by
+    the image store's block-and-verify step (``dhash_stream``).
   - ``clipmeta``: (id, n_frames) — decodable-frame counts, the overlap
     denominator of the clip a pair's LATER member matches against.
   - ``pairs``:    (id_a, id_b, shared_frames, overlap).
@@ -50,11 +49,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (DoubleType, LongType, StructField,
                                StructType)
 
-from ..functions.dedup import hamming_blocks
 from ..functions.multimodal import (_FRAME_ID_BITS, audio_fingerprint,
                                     dhash_image, frame_sample)
 from ._drain import batch_sink, drain
-from ._store import batch_path, bound_state, horizon, read_component
+from ._store import (batch_path, bound_state, horizon, match_batch,
+                     read_component)
+from .dhash_stream import _block_schema, _match_blocks
 
 __all__ = ["audio_dedup_stream", "audio_pairs_store",
            "run_audio_stream_on_dir",
@@ -128,30 +128,19 @@ def audio_dedup_stream(
             F.size("_fps").cast("long").alias("n_fps"),
             F.explode("_fps").alias("fp"),
         ).withColumn("pfx", F.pmod(F.col("fp"), F.lit(64)))
-        # 1. extend the store first (replay-idempotent overwrite; lets
-        #    same-batch pairs resolve through the store read)
-        (ex.write.mode("overwrite").partitionBy("pfx")
-         .parquet(batch_path(store_dir, "fps", batch_id)))
-        # 2. match the (small, broadcast) batch against history: one fp
-        #    equi-join, shared count + overlap complete at discovery
-        store = read_component(spark, store_dir, "fps", fp_schema,
-                               min_live)
-        new = spark.read.schema(fp_schema).parquet(
-            batch_path(store_dir, "fps", batch_id))
-        s, n = store.alias("s"), F.broadcast(new.alias("n"))
+        # one fp equi-join against history: shared count + overlap are
+        # complete at discovery
         pairs = (
-            s.join(n, ["pfx", "fp"])
-            .where(F.col(f"s.{id_col}") != F.col(f"n.{id_col}"))
-            .groupBy(
-                F.least(f"s.{id_col}", f"n.{id_col}").alias("id_a"),
-                F.greatest(f"s.{id_col}", f"n.{id_col}").alias("id_b"))
+            match_batch(spark, store_dir, "fps", batch_id, ex, fp_schema,
+                        ["pfx", "fp"], id_col, min_live,
+                        [F.col("fp"),
+                         F.least("s.n_fps", "n.n_fps").alias("_n")])
+            .groupBy("id_a", "id_b")
             .agg(
                 # count DISTINCT fps: a same-batch pair joins in both
                 # directions and every shared fp would double-count
                 F.count_distinct("fp").alias("shared_fps"),
-                F.round(
-                    F.count_distinct("fp")
-                    / F.first(F.least("s.n_fps", "n.n_fps")), 6)
+                F.round(F.count_distinct("fp") / F.first("_n"), 6)
                 .alias("overlap"))
             .where(F.col("shared_fps") >= min_shared))
         pairs.write.mode("overwrite").parquet(
@@ -166,11 +155,10 @@ def audio_dedup_stream(
 
 def audio_pairs_store(spark: SparkSession, store_dir: str) -> DataFrame:
     """Accumulated (id_a, id_b, shared_fps, overlap) pairs."""
-    out = read_component(spark, store_dir, "pairs",
-                         _pair_schema("shared_fps"))
+    schema = _pair_schema("shared_fps")
+    out = read_component(spark, store_dir, "pairs", schema)
     if out is None:
-        return spark.createDataFrame(
-            [], "id_a long, id_b long, shared_fps long, overlap double")
+        return spark.createDataFrame([], schema)
     return out.select("id_a", "id_b", "shared_fps", "overlap").distinct()
 
 
@@ -199,16 +187,6 @@ def run_audio_stream_on_dir(
     return audio_pairs_store(spark, store_dir)
 
 
-def _fblock_schema() -> StructType:
-    return StructType([
-        StructField("fid", LongType()),
-        StructField("dhash64", LongType()),
-        StructField("block_id", LongType()),
-        StructField("block_val", LongType()),
-        StructField("pfx", LongType()),
-    ])
-
-
 def _clipmeta_schema(id_col: str) -> StructType:
     return StructType([
         StructField(id_col, LongType()),
@@ -235,7 +213,7 @@ def video_dedup_stream(
     payload stream (``multimodal.video_matches`` semantics against
     history). Clip ids must be unique, non-negative and below 2³²
     (the packing contract — out-of-range ids raise at execution)."""
-    fb_schema = _fblock_schema()
+    fb_schema = _block_schema("fid")
     cm_schema = _clipmeta_schema(id_col)
     pair_schema = _pair_schema("shared_frames")
     schemas = {"fblocks": fb_schema, "clipmeta": cm_schema,
@@ -259,36 +237,16 @@ def video_dedup_stream(
             F.col("frame").alias("content"))
         sigs = dhash_image(fid_df, "content", "fid") \
             .where(F.col("dhash64").isNotNull()).select("fid", "dhash64")
-        # 1. extend the store first: frame blocks + per-clip decodable
-        #    frame counts (the overlap denominators)
-        bk = hamming_blocks(sigs, "dhash64", "fid",
-                            bits=64, max_hamming=max_hamming) \
-            .withColumn("block_id", F.col("block_id").cast("long")) \
-            .withColumn("pfx", F.pmod(F.col("block_val"), F.lit(64)))
-        (bk.write.mode("overwrite").partitionBy("pfx")
-         .parquet(batch_path(store_dir, "fblocks", batch_id)))
+        # the per-clip decodable frame counts (the overlap denominators)
+        # and the frame pairs batch×history; then the clip-pair
+        # aggregation — video_matches verbatim
         (sigs.select(
             F.shiftrightunsigned("fid", _FRAME_ID_BITS).alias(id_col))
          .groupBy(id_col).agg(F.count(F.lit(1)).alias("n_frames"))
          .write.mode("overwrite").parquet(
              batch_path(store_dir, "clipmeta", batch_id)))
-        # 2. frame pairs batch×history (pigeonhole blocks, bit_count
-        #    verify), 3. clip-pair aggregation — video_matches verbatim
-        store_b = read_component(spark, store_dir, "fblocks", fb_schema,
-                                 min_live)
-        new_b = spark.read.schema(fb_schema).parquet(
-            batch_path(store_dir, "fblocks", batch_id))
-        s, n = store_b.alias("s"), F.broadcast(new_b.alias("n"))
-        ham = F.bit_count(
-            F.col("s.dhash64").bitwiseXOR(F.col("n.dhash64")))
-        fp = (
-            s.join(n, ["pfx", "block_id", "block_val"])
-            .where(F.col("s.fid") != F.col("n.fid"))
-            .select(F.least("s.fid", "n.fid").alias("id_a"),
-                    F.greatest("s.fid", "n.fid").alias("id_b"),
-                    ham.alias("_h"))
-            .where(F.col("_h") <= max_hamming)
-            .select("id_a", "id_b").distinct())
+        fp = _match_blocks(spark, store_dir, "fblocks", batch_id, sigs,
+                           "fid", max_hamming, min_live)
         clip_a = F.shiftrightunsigned(F.col("id_a"), _FRAME_ID_BITS)
         clip_b = F.shiftrightunsigned(F.col("id_b"), _FRAME_ID_BITS)
         cross = fp.select(
@@ -330,11 +288,10 @@ def video_dedup_stream(
 
 def video_pairs_store(spark: SparkSession, store_dir: str) -> DataFrame:
     """Accumulated (id_a, id_b, shared_frames, overlap) clip pairs."""
-    out = read_component(spark, store_dir, "pairs",
-                         _pair_schema("shared_frames"))
+    schema = _pair_schema("shared_frames")
+    out = read_component(spark, store_dir, "pairs", schema)
     if out is None:
-        return spark.createDataFrame(
-            [], "id_a long, id_b long, shared_frames long, overlap double")
+        return spark.createDataFrame([], schema)
     return out.select("id_a", "id_b", "shared_frames",
                       "overlap").distinct()
 

@@ -10,12 +10,12 @@ pattern as ``functions.ann_index.serve_ivfpq_stream``:
 
 per micro-batch of new documents
   1. band-bucket the batch (``dedup.minhash_band_buckets`` — the SAME
-     bucket definition as the batch operator) and shingle it, and write
-     both to the store under ``batch_id=N`` subdirectories FIRST;
-  2. join the (small, broadcast) batch buckets against the full bucket
-     store — candidates are exactly the pairs with ≥1 shared band bucket
+     bucket definition as the batch operator), shingle it, and match its
+     buckets against the bucket store through ``_store.match_batch``
+     (write first, broadcast the new side, drop self-matches, order the
+     ids) — candidates are exactly the pairs with ≥1 shared band bucket
      and at least one new member;
-  3. exact-verify candidates' Jaccard from the shingle store
+  2. exact-verify candidates' Jaccard from the shingle store
      (``dedup.verify_jaccard_pairs`` — the same verification stage as the
      batch operator) and write the surviving pairs to ``batch_id=N``.
 
@@ -29,11 +29,10 @@ hash-for-hash — pinned in tests/test_streaming.py and value-hash checked
 against the batch DuckDB oracle by the ``minhash_stream`` contract query.
 
 Delivery: foreachBatch is AT-LEAST-ONCE; every write (buckets, shingles,
-pairs) overwrites its own ``batch_id=N`` directory, so a replayed batch
-rewrites identical files instead of appending duplicates. Writing the
-store BEFORE candidate generation makes the replay read the same store
-contents the crashed attempt saw (the new rows self-pair harmlessly:
-``id_a < id_b`` drops self-matches, DISTINCT drops mirror matches).
+pairs) overwrites its own ``batch_id=N`` directory and the store is
+written before it is read (``_store``), so a replayed batch rewrites
+identical files and reads what the crashed attempt read; DISTINCT drops
+the mirror matches.
 
 State at 100 TB is the corpus' band buckets (bands rows/doc) and shingle
 sets — O(in-horizon corpus) — bounded by ``retention_batches`` (a pair
@@ -41,12 +40,9 @@ whose discovery batch left the horizon references evicted documents and
 is evicted with them) and ``compact_every``, under the generational
 store protocol of ``_store`` (layout, manifests, crash safety).
 
-The per-batch join broadcasts the NEW side, so the store is scanned, never
-shuffled; the store is partitioned by a bucket prefix (``pfx``, written
-here) so broadcast-join dynamic partition pruning can skip store files
-whose prefixes the batch does not touch. Store reads pin an explicit
-schema (``pfx`` string): partition type inference would type an all-digit
-hex prefix batch as int and silently drift the join key type.
+The bucket store is partitioned by a bucket prefix (``pfx``, written
+here) so the broadcast join's dynamic partition pruning can skip store
+files whose prefixes the batch does not touch.
 """
 
 from __future__ import annotations
@@ -60,7 +56,7 @@ from ..functions.dedup import (
 )
 from ._drain import batch_sink, drain
 from ._store import (batch_path, bound_state, horizon, latest_gen,
-                     next_batch_id, publish_gen, read_component)
+                     match_batch, next_batch_id, publish_gen, read_component)
 
 _COMPONENTS = ("buckets", "shingles", "pairs")
 
@@ -92,44 +88,27 @@ def _ingest_batch(
         return
     min_live = horizon(batch_id, retention_batches)
     new = batch_df.select(F.col(id_col), F.col(text_col))
-    # 1. extend the store first (replay-idempotent batch_id overwrite;
-    #    also lets same-batch pairs resolve through the store read)
     bk = (
         minhash_band_buckets(new, text_col, id_col, k=k,
                              num_hashes=num_hashes, bands=bands)
         .withColumn("pfx", F.substring("bucket", 1, 2))
     )
     bucket_schema = bk.schema
-    # cluster by pfx before the partitioned write: without it every task
-    # writes a file into every pfx directory it touches (~tasks × 256
-    # files PER BATCH — measured 8k files for one 4.5k-doc batch, and
-    # store scans/increments paid it back as pure file overhead); with
-    # it the batch writes one file per touched pfx
-    (bk.repartition("pfx")
-     .write.mode("overwrite").partitionBy("pfx")
-     .parquet(batch_path(store_dir, "buckets", batch_id)))
+    # 1. candidates: the (small) new buckets matched against the store.
+    #    Cluster by pfx before the partitioned write: without it every
+    #    task writes a file into every pfx directory it touches (~tasks ×
+    #    256 files PER BATCH — measured 8k files for one 4.5k-doc batch,
+    #    and store scans/increments paid it back as pure file overhead);
+    #    with it the batch writes one file per touched pfx
+    cand = match_batch(
+        spark, store_dir, "buckets", batch_id, bk.repartition("pfx"),
+        bucket_schema, ["pfx", "bucket"], id_col, min_live).distinct()
     sh_new = new.select(F.col(id_col),
                         word_shingles(F.col(text_col), k).alias("sh"))
     shingle_schema = sh_new.schema
     (sh_new.write.mode("overwrite")
      .parquet(batch_path(store_dir, "shingles", batch_id)))
-    # 2. candidates: (small) new buckets broadcast against the store —
-    #    the store side is scanned, never shuffled
-    store_b = read_component(
-        spark, store_dir, "buckets", bucket_schema, min_live)
-    new_b = spark.read.schema(bucket_schema).parquet(
-        batch_path(store_dir, "buckets", batch_id))
-    cand = (
-        store_b.alias("s")
-        .join(F.broadcast(new_b.alias("n")), ["pfx", "bucket"])
-        .where(F.col(f"s.{id_col}") != F.col(f"n.{id_col}"))
-        .select(
-            F.least(f"s.{id_col}", f"n.{id_col}").alias("id_a"),
-            F.greatest(f"s.{id_col}", f"n.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
-    # 3. exact verification from the shingle store (candidate-scoped)
+    # 2. exact verification from the shingle store (candidate-scoped)
     cand_ids = (
         cand.select(F.col("id_a").alias(id_col))
         .unionByName(cand.select(F.col("id_b").alias(id_col)))
@@ -146,7 +125,7 @@ def _ingest_batch(
         .write.mode("overwrite")
         .parquet(batch_path(store_dir, "pairs", batch_id))
     )
-    # 4. bound state: evict out-of-horizon dirs; periodically fold the
+    # 3. bound state: evict out-of-horizon dirs; periodically fold the
     #    survivors into one compacted generation
     pair_schema = StructType([
         StructField("id_a", bucket_schema[id_col].dataType),

@@ -17,15 +17,12 @@ Per micro-batch of new embeddings:
 
 1. assign each vector to its ``n_assign`` nearest cells
    (``similarity.nearest_cells`` — the batch operator's assignment
-   verbatim) and write (cell, id, vector) rows to the store under
-   ``batch_id=N`` FIRST (replay-idempotent overwrite; lets same-batch
-   pairs resolve through the store read);
-2. join the (small, broadcast) batch assignment against the full store
-   by cell — candidates are exactly the within-cell pairs with at least
-   one new member;
-3. exact cosine on candidates (vectors ride the store rows — no second
-   verification component), keep >= threshold, normalize (id_a < id_b),
-   drop multi-cell duplicates, write pairs to ``batch_id=N``.
+   verbatim) and match the (cell, id, vector) rows against the store by
+   cell through ``_store.match_batch`` — candidates are exactly the
+   within-cell pairs with at least one new member;
+2. exact cosine on candidates (vectors ride the store rows — no second
+   verification component), keep >= threshold, drop multi-cell
+   duplicates, write pairs to ``batch_id=N``.
 
 Final pair state equals batch ``semantic_pairs`` with the same
 ``centroids``/``threshold``/``n_assign`` and ``max_cell_rows=None``:
@@ -52,7 +49,8 @@ from pyspark.sql import functions as F
 
 from ..functions.similarity import checked_width, cosine, nearest_cells
 from ._drain import batch_sink, drain
-from ._store import batch_path, bound_state, horizon, read_component
+from ._store import (batch_path, bound_state, horizon, match_batch,
+                     read_component)
 
 __all__ = ["semantic_dedup_stream", "semantic_pairs_store",
            "semantic_groups_store", "run_semantic_stream_on_dir"]
@@ -92,24 +90,11 @@ def semantic_dedup_stream(
                 nearest_cells(vec_col, centroids, n_assign)).alias("cell"),
         )
         vec_schema = assigned.schema
-        # 1. extend the store first (replay-idempotent overwrite)
-        (assigned.write.mode("overwrite").partitionBy("cell")
-         .parquet(batch_path(store_dir, "vectors", batch_id)))
-        # 2. candidates: broadcast the batch against the store by cell —
-        #    the store is scanned (cell-pruned), never shuffled
-        store = read_component(
-            spark, store_dir, "vectors", vec_schema, min_live)
-        new_a = spark.read.schema(vec_schema).parquet(
-            batch_path(store_dir, "vectors", batch_id))
         pairs = (
-            store.alias("s")
-            .join(F.broadcast(new_a.alias("n")), "cell")
-            .where(F.col(f"s.{id_col}") != F.col(f"n.{id_col}"))
-            .select(
-                F.least(f"s.{id_col}", f"n.{id_col}").alias("id_a"),
-                F.greatest(f"s.{id_col}", f"n.{id_col}").alias("id_b"),
-                cosine(F.col("s._v"), F.col("n._v")).alias("cos_sim"),
-            )
+            match_batch(spark, store_dir, "vectors", batch_id, assigned,
+                        vec_schema, ["cell"], id_col, min_live,
+                        [cosine(F.col("s._v"), F.col("n._v"))
+                         .alias("cos_sim")])
             .where(F.col("cos_sim") >= threshold)
             # one pair can surface through several shared cells
             # (n_assign > 1) and twice within a batch (both orientations)
@@ -119,7 +104,7 @@ def semantic_dedup_stream(
         )
         (pairs.write.mode("overwrite")
          .parquet(batch_path(store_dir, "sem_pairs", batch_id)))
-        # 3. bound state (shared eviction/compaction protocol)
+        # bound state (shared eviction/compaction protocol)
         bound_state(
             spark, store_dir, batch_id,
             {"vectors": vec_schema, "sem_pairs": pairs.schema},

@@ -31,8 +31,6 @@ touch document data.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -41,7 +39,8 @@ from ..functions.sketch import (
     merge_bottomk, merge_hll, merge_kll, mg_profile,
 )
 from ._drain import batch_sink, drain
-from ._store import batch_path, bound_state, next_batch_id, read_component
+from ._store import (batch_path, bound_state, load_meta, next_batch_id,
+                     read_component, write_meta)
 
 __all__ = ["bottomk_sketch_store", "hll_sketch_store",
            "kll_sketch_store", "mg_sketch_store",
@@ -55,16 +54,6 @@ _BK_DDL = "column string, h bigint, key string"
 _COMPONENTS = ("hll", "mg", "kll", "bk")
 
 
-def _load_meta(store_dir: str) -> dict | None:
-    import json
-
-    path = f"{store_dir}/_sketch_meta.json"
-    if not os.path.isfile(path):
-        return None
-    with open(path) as f:
-        return json.load(f)
-
-
 def _ensure_meta(store_dir: str, p: int, mg_k: int,
                  kll_k: int | None = None,
                  bk_k: int | None = None,
@@ -76,18 +65,14 @@ def _ensure_meta(store_dir: str, p: int, mg_k: int,
     would silently loosen the stated guarantee, so the store carries
     them. A store created before its first KLL/bottom-k ingest gains
     that key then (additive; never overwritten afterwards)."""
-    import json
-
-    meta = _load_meta(store_dir)
+    meta = load_meta(store_dir)
     if meta is None:
-        os.makedirs(store_dir, exist_ok=True)
         meta = {"p": p, "mg_k": mg_k, "group_ddl": group_ddl}
         if kll_k is not None:
             meta["kll_k"] = kll_k
         if bk_k is not None:
             meta["bk_k"] = bk_k
-        with open(f"{store_dir}/_sketch_meta.json", "w") as f:
-            json.dump(meta, f)
+        write_meta(store_dir, meta)
         return
     if meta.get("p") != p or meta.get("mg_k") != mg_k:
         raise ValueError(
@@ -111,8 +96,7 @@ def _ensure_meta(store_dir: str, p: int, mg_k: int,
                 f"sketch store {store_dir} holds {key}={meta[key]} "
                 f"profiles; got {key}={val}")
     if changed:
-        with open(f"{store_dir}/_sketch_meta.json", "w") as f:
-            json.dump(meta, f)
+        write_meta(store_dir, meta)
 
 
 def sketch_ingest(
@@ -198,7 +182,7 @@ def _schema(store_dir: str, name: str) -> StructType:
     included."""
     base = {"hll": _HLL_DDL, "mg": _MG_DDL, "kll": _KLL_DDL,
             "bk": _BK_DDL}[name]
-    gddl = (_load_meta(store_dir) or {}).get("group_ddl", "")
+    gddl = (load_meta(store_dir) or {}).get("group_ddl", "")
     return StructType.fromDDL(f"{gddl}, {base}" if gddl else base)
 
 
@@ -228,7 +212,7 @@ def mg_sketch_store(
     persisted ``mg_k`` (an explicit ``k`` is validated against it —
     re-compressing with a different k would silently change the stated
     guarantee). Empty store returns an empty typed frame."""
-    meta = _load_meta(store_dir)
+    meta = load_meta(store_dir)
     if meta is not None:
         if k is not None and k != meta["mg_k"]:
             raise ValueError(
@@ -250,7 +234,7 @@ def kll_sketch_store(
     persisted ``kll_k`` (an explicit ``k`` is validated against it).
     Empty store (or one ingested without ``num_cols``) returns an
     empty typed frame."""
-    meta = _load_meta(store_dir)
+    meta = load_meta(store_dir)
     if meta is not None and "kll_k" in meta:
         if k is not None and k != meta["kll_k"]:
             raise ValueError(
@@ -271,7 +255,7 @@ def bottomk_sketch_store(
     ingested (the HLL-grade exactness pin). ``k`` defaults to the
     store's persisted ``bk_k``. Empty store (or one ingested without
     ``bk_cols``) returns an empty typed frame."""
-    meta = _load_meta(store_dir)
+    meta = load_meta(store_dir)
     if meta is not None and "bk_k" in meta:
         if k is not None and k != meta["bk_k"]:
             raise ValueError(

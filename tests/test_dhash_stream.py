@@ -48,7 +48,6 @@ def _batch_pairs(spark, rows):
                   multimodal.dhash_pairs(df, max_hamming=3).collect())
 
 
-@pytest.mark.slow
 def test_stream_equals_batch_both_orders(spark, tmp_path):
     rng = np.random.default_rng(31)
     rows = _corpus(rng)

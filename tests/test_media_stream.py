@@ -99,7 +99,6 @@ def _rt(rows):
                   for r in rows)
 
 
-@pytest.mark.slow
 def test_audio_stream_equals_batch_both_orders(spark, tmp_path):
     rows = _audio_rows()
     df = spark.createDataFrame(rows, "doc_id long, content binary")
@@ -120,7 +119,6 @@ def test_audio_stream_equals_batch_both_orders(spark, tmp_path):
         assert _rt(got.collect()) == want, name
 
 
-@pytest.mark.slow
 def test_video_stream_equals_batch_both_orders(spark, tmp_path):
     rows = _video_rows()
     df = spark.createDataFrame(rows, "doc_id long, content binary")

@@ -42,7 +42,6 @@ def _want_pairs(e, cents, n_assign=1):
             max_cell_rows=None).collect())
 
 
-@pytest.mark.slow
 def test_stream_equals_batch_both_orders(spark, fixture, tmp_path):
     from anomalyzer_spark.streaming import run_semantic_stream_on_dir
 

@@ -3,7 +3,7 @@ for every store built on it: a stream that dies inside a generation
 publish and is restarted on the same checkpoint ends in the same store
 state as a run that never crashed.
 
-Two fault points, injected into ``_store``'s publish at the first
+Three fault points, injected into ``_store``'s publish at the first
 compaction tick (batch 1 of 4, ``compact_every=2``):
 
 * ``before_write``: the batch's live directories are written, the
@@ -11,12 +11,22 @@ compaction tick (batch 1 of 4, ``compact_every=2``):
   replays it;
 * ``before_manifest``: the generation's parquet (and ``_SUCCESS``) is
   written but its ``_folded.json`` manifest is not, so readers must
-  ignore it and the replay must rewrite it.
+  ignore it and the replay must rewrite it;
+* ``torn_manifest``: the manifest's file is opened but its bytes are
+  never written. A manifest written in place would be left empty and
+  fail every later read with a ``JSONDecodeError``; the store must
+  behave as at ``before_manifest``.
+
+Replay safety also rests on the match step writing the batch before it
+reads the store; that order lives once, in ``_store.match_batch``.
 """
 
 from __future__ import annotations
 
+import ast
+import json
 import os
+import pathlib
 
 import numpy as np
 import pytest
@@ -32,6 +42,27 @@ from test_dhash_stream import _corpus as _image_rows
 from test_media_stream import _audio_rows, _video_rows
 
 N_BATCHES = 4
+STREAMING = pathlib.Path(_store.__file__).parent
+
+
+def test_only_store_reads_a_live_batch_dir_back():
+    """Outside ``_store`` a live ``batch_id=N`` directory is only ever
+    written: re-reading the batch as the new side of the store join is
+    ``match_batch``'s job."""
+    reads = []
+    for path in sorted(STREAMING.glob("*.py")):
+        if path.name == "_store.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "parquet"
+                    and any(isinstance(a, ast.Call)
+                            and getattr(a.func, "id", None) == "batch_path"
+                            for a in node.args)
+                    and ".write" not in ast.unparse(node.func.value)):
+                reads.append((path.name, node.lineno))
+    assert reads == [], f"live batch dir read outside _store: {reads}"
 
 
 def _write_batches(spark, rows, ddl, sdir):
@@ -159,20 +190,45 @@ def _fail_once(monkeypatch, attr):
     monkeypatch.setattr(_store, attr, faulty)
 
 
-# the before_write half runs in the slow tier: the whole matrix takes
-# about 4.5 min on 4 cores, over the default tier's budget
-@pytest.mark.parametrize("point", [
-    pytest.param("before_write", marks=pytest.mark.slow),
-    "before_manifest"])
-@pytest.mark.parametrize("name", list(STORES))
+def _tear_manifest(monkeypatch):
+    """Make the first ``json.dump`` into a ``_folded.json`` file (or its
+    temp file) raise: the file is open, none of its bytes are written."""
+    orig = json.dump
+    fired = []
+
+    def faulty(obj, fp, *args, **kwargs):
+        if not fired and "_folded.json" in os.path.basename(fp.name):
+            fired.append(True)
+            raise RuntimeError("injected crash in json.dump")
+        return orig(obj, fp, *args, **kwargs)
+
+    monkeypatch.setattr(json, "dump", faulty)
+
+
+def _cases():
+    """(name, point) pairs. before_write and all but one torn_manifest
+    case run in the slow tier: the whole matrix takes several minutes on
+    4 cores, over the default tier's budget."""
+    for point in ("before_write", "before_manifest", "torn_manifest"):
+        for name in STORES:
+            slow = point == "before_write" or (
+                point == "torn_manifest" and name != "dhash")
+            yield pytest.param(name, point, id=f"{name}-{point}",
+                               marks=[pytest.mark.slow] if slow else [])
+
+
+@pytest.mark.parametrize(("name", "point"), list(_cases()))
 def test_restart_after_publish_crash_converges(
         spark, baseline, tmp_path, monkeypatch, name, point):
     sdir, want = baseline(name)
     assert want, "the uninterrupted run must leave state to compare"
     run, first = STORES[name][2:]
     store, ckpt = str(tmp_path / "store"), str(tmp_path / "ckpt")
-    attr = "publish_gen" if point == "before_write" else "_write_manifest"
-    _fail_once(monkeypatch, attr)
+    if point == "torn_manifest":
+        _tear_manifest(monkeypatch)
+    else:
+        _fail_once(monkeypatch, "publish_gen" if point == "before_write"
+                   else "_write_manifest")
     with pytest.raises(Exception, match="injected crash"):
         run(spark, sdir, store, ckpt)
     monkeypatch.undo()
