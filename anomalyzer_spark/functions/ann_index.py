@@ -21,14 +21,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..session import materialize as _materialize
 from ..sources.layout import drop_emptied_partitions
 from ..streaming._drain import batch_sink
-from .similarity import (_codes_sql, _lut_sql, absmax_scale, adc_dist,
-                         adc_rank_refine, checked_width, cosine,
-                         dequantize_col, nearest_cells, quantize_code_expr)
+from .similarity import (_codes_sql, _lut_sql, _top_k_by_cosine,
+                         absmax_scale, adc_dist, adc_rank_refine,
+                         checked_width, cosine, dequantize_col,
+                         nearest_cells, quantize_code_expr)
 
 
 def _encode_rows(
@@ -192,19 +192,14 @@ def search_ivfpq_index(
         # candidates
         qv = queries.select(F.col(query_id_col).alias("query_id"),
                             F.col(vec_col).alias("_qv"))
-        rescored = (
+        return _top_k_by_cosine(
             index.select("neighbor_id", "scale", "qvec")
             .join(F.broadcast(cand), "neighbor_id")
             .join(F.broadcast(qv), "query_id")
             .select("query_id", "neighbor_id",
                     cosine(F.col("_qv"),
                            dequantize_col(F.col("scale"), F.col("qvec")))
-                    .alias("cos_sim"))
-        )
-        w2 = Window.partitionBy("query_id").orderBy(
-            F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-        return rescored.withColumn("rnk", F.row_number().over(w2)).where(
-            F.col("rnk") <= k)
+                    .alias("cos_sim")), k)
 
     return adc_rank_refine(scored, k=k, refine=refine, rerank=_rerank)
 

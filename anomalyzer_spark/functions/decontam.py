@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import (_stage_word_shingles, normalized_words,
+from .dedup import (_shingles, _staged, normalized_words,
                     word_shingles_from_words)
 
 
@@ -49,9 +49,9 @@ def _grams(df: DataFrame, text_col: str, id_col: str, n: int,
     expression (HOF subtrees evaluate per reference — staging makes the
     regex normalization run once per row; CollapseProject keeps the
     stage because the alias is multiply-referenced and non-cheap), the
-    shingle chain itself is the r15 staged binary-doubling build
-    (``_stage_word_shingles`` — 3 once-per-row zip_with levels at n=8
-    instead of the left fold's 7 chained ones), and
+    shingle chain itself is the staged binary-doubling build
+    (``dedup._staged(..., _shingles, "_shg")`` — 3 once-per-row zip_with
+    levels at n=8 instead of the left fold's 7 chained ones), and
     explode_OUTER stops InferFiltersFromGenerate from pushing a
     size(grams)>0 filter into the scan that re-runs the whole shingle
     tree per row (the bm25 lesson; together measured ~2.5x warm at n=8
@@ -59,8 +59,9 @@ def _grams(df: DataFrame, text_col: str, id_col: str, n: int,
     is dropped by the callers' inner join on gram."""
     w = (F.col(words_col) if words_col
          else normalized_words(F.col(text_col)))
-    staged, sh = _stage_word_shingles(
-        df.select(F.col(id_col).alias(out_id), w.alias("_w")), "_w", n)
+    staged, sh = _staged(
+        df.select(F.col(id_col).alias(out_id), w.alias("_w")), "_w", n,
+        _shingles, "_shg")
     return staged.select(
         F.col(out_id),
         sh.alias("_g"),

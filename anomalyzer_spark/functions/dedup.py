@@ -112,96 +112,103 @@ def word_shingles(text: Column, k: int = 3) -> Column:
 
 def word_shingles_from_words(words: Column, k: int = 3) -> Column:
     """``word_shingles`` over an already-normalized word array (a
-    ``normalized_words`` column, usually persisted).
+    ``normalized_words`` column, usually persisted). Element values and
+    order are those of the word-at-a-time left fold; the chain is the
+    binary-doubling ``_doubled`` build."""
+    return _shingles(words, k)
 
-    Built by BINARY DOUBLING over shifted slices: acc_m[i] = the m words
-    starting at i space-joined, with acc_2m = zip_with(acc_m,
-    shift(acc_m, m)) and the set bits of k combined largest-first —
-    ceil(log2 k)+popcount(k)-1 zip_withs instead of the k-1 of the
-    word-at-a-time left fold (r15: higher-order functions run
-    interpreted, so per-element evaluation count dominates; the doubling
-    also copies ~2x fewer total chars at k=8 because accumulator strings
-    stop being re-copied once per appended word). String concatenation
-    is associative, zip_with pads the shorter (shifted) side with NULL
-    and concat null-propagates, so element values AND the trailing-NULL
-    pattern are bit-identical to the left fold; for k <= 3 the emitted
-    expression tree IS the old one (same plan hashes). Parity pinned in
-    tests/test_functions.py::test_word_shingles_doubling_parity.
-    """
-    n = F.size(words)
 
-    def shift(col: Column, c: int) -> Column:
-        return F.slice(col, c + 1, F.greatest(n - c, F.lit(0)))
+def _inline(m: int, level: Column) -> Column:
+    return level
 
-    def cat(a: Column, b: Column) -> Column:
-        return F.concat(a, F.lit(" "), b)
 
-    # power-of-two accumulators by doubling: acc_1=words, acc_2, acc_4, ...
-    pows = [(1, words)]
-    m, acc = 1, words
-    while m * 2 <= k:
-        acc = F.zip_with(acc, shift(acc, m), cat)
+def _doubled(first: Column, rest: Column, k: int, join, n: Column,
+             stage=_inline) -> Column:
+    """The k-gram chain of the shingle and span-gram builders: element i
+    is ``first[i] ⊕ rest[i+1] ⊕ … ⊕ rest[i+k-1]`` (``⊕`` = ``join``
+    under zip_with, ``n`` = the array size the shifts clip against).
+
+    Built by BINARY DOUBLING over shifted slices (r15): power levels
+    rest_2m = zip_with(rest_m, shift(rest_m, m)) up to p/2 (p = the top
+    power of two in k); the prefix chain is rest_p itself when ``first
+    is rest`` (word shingles) and otherwise doubles from ``first``
+    (first_2m = zip_with(first_m, shift(rest_m, m)) — span grams, whose
+    first word is ltrimmed); then the remaining set bits of k are
+    combined largest-first. O(log k) zip_withs instead of the left
+    fold's k-1: higher-order functions run interpreted, so per-element
+    evaluation count dominates, and no accumulator string is re-copied
+    once per appended word. The join is
+    associative and null-propagating over zip_with's NULL padding, so
+    element values and the trailing-NULL pattern are bit-identical to
+    the left fold; for k <= 3 the tree IS the left fold's.
+
+    ``stage(m, level)`` receives every power level of ``rest`` (and
+    rest_p when it is the prefix) and returns the column to use in its
+    place: the level itself (``_inline``), or a reference to it staged
+    as a projection (``_staged``)."""
+    def step(acc: Column, level: Column, c: int) -> Column:
+        return F.zip_with(
+            acc, F.slice(level, c + 1, F.greatest(n - c, F.lit(0))), join)
+
+    p = 1 << (k.bit_length() - 1)
+    pows = {1: rest}
+    m = 1
+    while m < (p if first is rest else p // 2):
+        pows[2 * m] = stage(2 * m, step(pows[m], pows[m], m))
         m *= 2
-        pows.append((m, acc))
-    # combine the remaining set bits of k, largest first (binary rep)
-    c, cur = m, acc
-    for pm, pacc in reversed(pows[:-1]):
-        if c + pm <= k:
-            cur = F.zip_with(cur, shift(pacc, c), cat)
-            c += pm
-    full = F.slice(cur, 1, F.greatest(n - (k - 1), F.lit(1)))
+    if first is rest:
+        acc = pows[p]
+    else:  # first_1 -> first_2 -> ... -> first_p
+        acc, m = first, 1
+        while m < p:
+            acc = step(acc, pows[m], m)
+            m *= 2
+    c = p
+    for m in sorted(pows, reverse=True):
+        if c + m <= k:
+            acc = step(acc, pows[m], c)
+            c += m
+    return acc
+
+
+def _shingles(words: Column, k: int, stage=_inline) -> Column:
+    """``word_shingles_from_words`` with a ``_doubled`` stage hook."""
+    n = F.size(words)
+    chain = _doubled(words, words, k,
+                     lambda a, b: F.concat(a, F.lit(" "), b), n, stage)
+    full = F.slice(chain, 1, F.greatest(n - (k - 1), F.lit(1)))
     return F.array_distinct(
         F.when(n >= k, full).otherwise(F.array(F.array_join(words, " ")))
     )
 
 
-def _stage_word_shingles(df: DataFrame, words_col: str, k: int
-                         ) -> tuple[DataFrame, Column]:
-    """``word_shingles_from_words`` with the binary-doubling accumulator
-    LEVELS staged as projection columns (``_shg2``, ``_shg4``, ...) —
-    returns ``(staged_df, shingle_col)``.
+def _staged(df: DataFrame, col: str, k: int, build, prefix: str
+            ) -> tuple[DataFrame, Column]:
+    """``build(F.col(col), k, stage)`` (``_shingles`` / ``_gram_hashes``)
+    with every shared doubling level staged as a projection column
+    ``<prefix><m>`` — returns ``(staged_df, built_col)``.
 
-    A Column expression is a TREE, not a DAG: the doubling build's
-    acc_2m references acc_m twice, so inside ONE column the shared level
-    is duplicated and re-evaluated per reference (the whole-tree zip
-    count is back to ~k-1). Staging each level as its own projection
-    alias evaluates it once per row — CollapseProject keeps a stage
-    whose alias is multiply-referenced and non-cheap (the house _grams
-    idiom) — for the true ceil(log2 k) evaluation count. Measured 2.3x
-    over the left fold at k=8 on the sf0.1 corpus (vs 1.25x for the
-    unstaged doubling column). For k <= 3 no level is shared: returns
-    ``df`` unchanged and the plain column (identical expression tree,
-    same plan hashes for the k=3 consumers). Values are bit-identical
-    to ``word_shingles_from_words`` (parity + plan-level zip_with
-    counts pinned in tests/test_functions.py)."""
-    w = F.col(words_col)
+    A Column expression is a TREE, not a DAG: rest_2m references rest_m
+    twice, so inside ONE column a shared level is duplicated and
+    re-evaluated per reference (the whole-tree zip count is back to
+    ~k-1). A projection alias is evaluated once per row —
+    CollapseProject keeps a stage whose alias is multiply-referenced and
+    non-cheap — for the true ~log2 k evaluation count (measured 2.3x
+    over the left fold at k=8 on the sf0.1 corpus, vs 1.25x unstaged).
+    For k <= 3 no level is shared: returns ``df`` unchanged and the
+    inline column. Values are bit-identical to the inline build (parity
+    and optimized-plan zip_with counts pinned in
+    tests/test_functions.py)."""
     if k <= 3:
-        return df, word_shingles_from_words(w, k)
-    n = F.size(w)
+        return df, build(F.col(col), k)
 
-    def shift(col: Column, c: int) -> Column:
-        return F.slice(col, c + 1, F.greatest(n - c, F.lit(0)))
+    def stage(m: int, level: Column) -> Column:
+        nonlocal df
+        df = df.withColumn(f"{prefix}{m}", level)
+        return F.col(f"{prefix}{m}")
 
-    def cat(a: Column, b: Column) -> Column:
-        return F.concat(a, F.lit(" "), b)
-
-    names = {1: words_col}
-    m = 1
-    while m * 2 <= k:
-        nxt = f"_shg{m * 2}"
-        df = df.withColumn(nxt, F.zip_with(
-            F.col(names[m]), shift(F.col(names[m]), m), cat))
-        m *= 2
-        names[m] = nxt
-    c, cur = m, F.col(names[m])
-    for pm in sorted((p for p in names if p < m), reverse=True):
-        if c + pm <= k:
-            cur = F.zip_with(cur, shift(F.col(names[pm]), c), cat)
-            c += pm
-    full = F.slice(cur, 1, F.greatest(n - (k - 1), F.lit(1)))
-    sh = F.array_distinct(
-        F.when(n >= k, full).otherwise(F.array(F.array_join(w, " "))))
-    return df, sh
+    out = build(F.col(col), k, stage)
+    return df, out
 
 
 def _shingle_exploded(
@@ -1362,7 +1369,7 @@ def _ws_exact_tokens(text: Column) -> Column:
     return F.split(F.coalesce(text, F.lit("")), _WS_BOUNDARY)
 
 
-def _gram_hashes(toks: Column, k: int) -> Column:
+def _gram_hashes(toks: Column, k: int, stage=_inline) -> Column:
     """md5 of every word k-gram of a ``_ws_exact_tokens`` array, in
     position order (``array<string>``, element i = gram starting at word
     i). The gram key is the EXACT bytes of the k words including their
@@ -1373,112 +1380,23 @@ def _gram_hashes(toks: Column, k: int) -> Column:
     gram does not (a passage at document start matches the same passage
     mid-document).
 
-    Built by BINARY DOUBLING (the word_shingles_from_words r15 scheme)
-    with TWO accumulator families — ``lt_m`` (first word ltrimmed, the
-    gram prefix) and ``raw_m`` (separator-attached raw tokens, the
-    appended suffix): lt_2m = zip_with(lt_m, shift(raw_m, m)), raw_2m =
-    zip_with(raw_m, shift(raw_m, m)), set bits of k combined largest-
-    first. ~2·log2(k) zip_withs instead of the k-1 left fold (8 vs 14
-    at the dup_spans k=15) — higher-order functions run interpreted, so
-    per-element evaluation count dominates, and the doubling stops
-    re-copying the whole accumulator string once per appended word.
-    Concat is associative and null-propagating over zip_with's NULL
-    padding, so gram bytes and the trailing-NULL pattern are
-    bit-identical to the left fold; for k <= 3 the emitted tree IS the
-    old one. Parity pinned in tests/test_functions.py::
-    test_gram_hashes_doubling_parity."""
+    The chain is the ``_doubled`` build with the ltrimmed tokens as the
+    gram prefix and the separator-attached raw tokens appended (8
+    zip_withs at the dup_spans k=15 instead of the left fold's 14);
+    ``stage`` is its hook. Parity with the left fold pinned in
+    tests/test_functions.py::test_gram_hashes_doubling_parity."""
     n = F.size(toks)
     # a trailing pure-whitespace element carries no word: exclude it from
     # the gram universe (it would otherwise corrupt the last k-1 grams)
     m = n - F.when(F.trim(F.element_at(toks, -1)) == "", 1).otherwise(0)
-
-    def shift(col: Column, c: int) -> Column:
-        return F.slice(col, c + 1, F.greatest(n - c, F.lit(0)))
-
-    # ltrim applies ONLY to each gram's first word, so strip leading
-    # whitespace up front (the lt_1 basis) and append raw tokens
+    # ltrim applies ONLY to each gram's first word
     lt = F.transform(toks, lambda t: F.regexp_replace(t, r"^\s+", ""))
-    p = 1
-    while p * 2 <= k:
-        p *= 2
-    # raw power accumulators: every set bit below the top bit of k is
-    # <= p/2, so powers 1..p/2 cover both the doubling and the combine
-    raw_pows = [(1, toks)]
-    rm, racc = 1, toks
-    while rm * 2 <= p // 2:
-        racc = F.zip_with(racc, shift(racc, rm), lambda a, b: F.concat(a, b))
-        rm *= 2
-        raw_pows.append((rm, racc))
-    for pm, pacc in raw_pows:  # lt_1 -> lt_2 -> ... -> lt_p
-        if pm * 2 <= p:
-            lt = F.zip_with(lt, shift(pacc, pm),
-                            lambda a, b: F.concat(a, b))
-    c = p
-    for pm, pacc in reversed(raw_pows):  # combine k's remaining set bits
-        if c + pm <= k:
-            lt = F.zip_with(lt, shift(pacc, c), lambda a, b: F.concat(a, b))
-            c += pm
+    chain = _doubled(lt, toks, k, lambda a, b: F.concat(a, b), n, stage)
     grams = F.transform(
-        F.slice(lt, 1, F.greatest(m - (k - 1), F.lit(0))),
+        F.slice(chain, 1, F.greatest(m - (k - 1), F.lit(0))),
         lambda g: F.md5(g.cast("binary")),
     )
     return F.when(m >= k, grams).otherwise(F.array().cast("array<string>"))
-
-
-def _stage_gram_hashes(df: DataFrame, toks_col: str, k: int
-                       ) -> tuple[DataFrame, Column]:
-    """``_gram_hashes`` with the RAW power accumulators staged as
-    projection columns (``_gmr2``, ``_gmr4``, ...) — returns
-    ``(staged_df, grams_col)``.
-
-    The _stage_word_shingles argument (a Column is a tree, not a DAG —
-    shared doubling levels re-evaluate per reference unless staged as
-    projections). Only the raw family needs staging: raw_m is referenced
-    by raw_2m (twice), by the lt doubling, and by the combine, while
-    each lt level is referenced exactly once by its successor, so the lt
-    chain + combine + md5 stay one column expression over the staged raw
-    attributes. For k <= 3 returns the plain column (identical tree).
-    Values bit-identical to ``_gram_hashes`` (parity + plan zip_with
-    counts pinned in tests/test_functions.py)."""
-    t = F.col(toks_col)
-    if k <= 3:
-        return df, _gram_hashes(t, k)
-    n = F.size(t)
-    eff = n - F.when(F.trim(F.element_at(t, -1)) == "", 1).otherwise(0)
-
-    def shift(col: Column, c: int) -> Column:
-        return F.slice(col, c + 1, F.greatest(n - c, F.lit(0)))
-
-    p = 1
-    while p * 2 <= k:
-        p *= 2
-    raw = {1: toks_col}
-    rm = 1
-    while rm * 2 <= p // 2:
-        nxt = f"_gmr{rm * 2}"
-        df = df.withColumn(nxt, F.zip_with(
-            F.col(raw[rm]), shift(F.col(raw[rm]), rm),
-            lambda a, b: F.concat(a, b)))
-        rm *= 2
-        raw[rm] = nxt
-    lt = F.transform(t, lambda x: F.regexp_replace(x, r"^\s+", ""))
-    lm = 1
-    while lm * 2 <= p:
-        lt = F.zip_with(lt, shift(F.col(raw[lm]), lm),
-                        lambda a, b: F.concat(a, b))
-        lm *= 2
-    c = p
-    for pm in sorted(raw, reverse=True):
-        if c + pm <= k:
-            lt = F.zip_with(lt, shift(F.col(raw[pm]), c),
-                            lambda a, b: F.concat(a, b))
-            c += pm
-    grams = F.transform(
-        F.slice(lt, 1, F.greatest(eff - (k - 1), F.lit(0))),
-        lambda g: F.md5(g.cast("binary")),
-    )
-    return df, F.when(eff >= k, grams).otherwise(
-        F.array().cast("array<string>"))
 
 
 def duplicate_spans(
@@ -1544,13 +1462,7 @@ def duplicate_spans(
     """
     from pyspark.sql.window import Window
 
-    if scope not in ("cross_doc", "all"):
-        raise ValueError(f"duplicate_spans: unknown scope {scope!r}")
-    if keep not in ("canonical", "none"):
-        raise ValueError(f"duplicate_spans: unknown keep {keep!r}")
-    if min_len < 2:
-        raise ValueError("duplicate_spans: min_len must be >= 2")
-
+    _check_span_args(scope, keep, min_len)
     occ = gram_occurrences(df, text_col, id_col, min_len=min_len)
     w = Window.partitionBy("gram_hash")
     occ = (
@@ -1567,22 +1479,35 @@ def duplicate_spans(
         if scope == "cross_doc"
         else (F.col("_n") > 1)
     )
-    is_canon = (F.col("_canon.i") == F.col(id_col)) & (F.col("_canon.p") == F.col("pos"))
+    return _marked_to_spans(dup, "_canon", keep, id_col, min_len)
+
+
+def _check_span_args(scope: str, keep: str, min_len: int) -> None:
+    if scope not in ("cross_doc", "all"):
+        raise ValueError(f"duplicate_spans: unknown scope {scope!r}")
+    if keep not in ("canonical", "none"):
+        raise ValueError(f"duplicate_spans: unknown keep {keep!r}")
+    if min_len < 2:
+        raise ValueError("duplicate_spans: min_len must be >= 2")
+
+
+def _marked_to_spans(dup: DataFrame, canon: str, keep: str, id_col: str,
+                     min_len: int) -> DataFrame:
+    """Mark the duplicated gram occurrences ``dup`` (``id, pos`` and the
+    gram's canonical occurrence ``canon``, a struct<i,p>) ``keep`` or
+    ``remove`` and merge them into maximal spans — the shared tail of
+    ``duplicate_spans`` and the cross-batch store path
+    (``duplicate_spans_from_gram_stats``)."""
+    from pyspark.sql.window import Window
+
+    is_canon = ((F.col(f"{canon}.i") == F.col(id_col))
+                & (F.col(f"{canon}.p") == F.col("pos")))
     kind = (
         F.when(is_canon, F.lit("keep")).otherwise(F.lit("remove"))
         if keep == "canonical"
         else F.lit("remove")
     )
     marked = dup.select(F.col(id_col), F.col("pos"), kind.alias("kind"))
-    return _marked_to_spans(marked, id_col, min_len)
-
-
-def _marked_to_spans(marked: DataFrame, id_col: str, min_len: int) -> DataFrame:
-    """Merge marked duplicated gram positions (``id, pos, kind``) into
-    maximal spans — the shared tail of ``duplicate_spans`` and the
-    cross-batch store path (``duplicate_spans_from_gram_stats``)."""
-    from pyspark.sql.window import Window
-
     # adjacent/overlapping k-gram intervals [pos, pos+k-1] merge exactly
     # when consecutive duplicated positions are <= k apart
     w2 = Window.partitionBy(id_col, "kind").orderBy("pos")
@@ -1620,18 +1545,19 @@ def gram_occurrences(
     array is STAGED as its own projection (HOF subtrees evaluate per
     reference, so inlining ran the whitespace split once per reference —
     measured 1.9x warm on the sf0.1 gram explode) and the gram chain is
-    the r15 staged binary-doubling build (``_stage_gram_hashes`` — the
-    raw power accumulators evaluate once per row as projection levels;
-    ~2·log2(k) zip_with evaluations instead of the left fold's k-1)."""
+    the staged binary-doubling build (``_staged(..., _gram_hashes,
+    "_gmr")`` — the raw-token power levels evaluate once per row as
+    projections; ~2·log2(k) zip_with evaluations instead of the left
+    fold's k-1)."""
     # plain posexplode is CORRECT here: unlike _shingle_exploded /
     # cdc_chunks, Catalyst infers NO size() > 0 filter below this
     # generate (verified against the optimized plan: 1 Generate,
     # 0 Filter nodes — an r14 review candidate claimed otherwise; the
     # outer+isNotNull variant just added a useless Filter node)
-    staged, grams = _stage_gram_hashes(
+    staged, grams = _staged(
         df.select(F.col(id_col),
                   _ws_exact_tokens(F.col(text_col)).alias("_t")),
-        "_t", min_len)
+        "_t", min_len, _gram_hashes, "_gmr")
     return staged.select(
         F.col(id_col),
         F.posexplode(grams).alias("pos", "gram_hash"),
@@ -1666,28 +1592,15 @@ def duplicate_spans_from_gram_stats(
     on ``gram_hash`` against a frame that AQE will usually broadcast —
     the same single corpus-keyed exchange the batch window pays.
     """
-    if scope not in ("cross_doc", "all"):
-        raise ValueError(f"duplicate_spans: unknown scope {scope!r}")
-    if keep not in ("canonical", "none"):
-        raise ValueError(f"duplicate_spans: unknown keep {keep!r}")
-    if min_len < 2:
-        raise ValueError("duplicate_spans: min_len must be >= 2")
+    _check_span_args(scope, keep, min_len)
     dup_stats = gram_stats.where(
         (F.col("min_id") != F.col("max_id"))
         if scope == "cross_doc"
         else (F.col("n_occ") > 1)
     ).select("gram_hash", "canon")
     occ = gram_occurrences(df, text_col, id_col, min_len=min_len)
-    joined = occ.join(dup_stats, "gram_hash")
-    is_canon = (F.col("canon.i") == F.col(id_col)) & (
-        F.col("canon.p") == F.col("pos"))
-    kind = (
-        F.when(is_canon, F.lit("keep")).otherwise(F.lit("remove"))
-        if keep == "canonical"
-        else F.lit("remove")
-    )
-    marked = joined.select(F.col(id_col), F.col("pos"), kind.alias("kind"))
-    return _marked_to_spans(marked, id_col, min_len)
+    return _marked_to_spans(occ.join(dup_stats, "gram_hash"), "canon", keep,
+                            id_col, min_len)
 
 
 def strip_duplicate_spans(

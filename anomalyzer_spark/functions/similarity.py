@@ -146,6 +146,18 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when((na > 0) & (nb > 0), dot(a, b) / (na * nb))
 
 
+def _top_k_by_cosine(scored: DataFrame, k: int) -> DataFrame:
+    """The exact searchers' rank tail over a (query_id, neighbor_id,
+    cos_sim) frame: NULL scores (a zero-norm side) dropped, then
+    ``rnk`` = row_number per query by (cos_sim desc, neighbor_id asc),
+    rnk <= k. Without the drop NULL-score rows take ranks <= k."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), F.col("neighbor_id").asc())
+    return (scored.where(F.col("cos_sim").isNotNull())
+            .withColumn("rnk", F.row_number().over(w))
+            .where(F.col("rnk") <= k))
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -179,18 +191,9 @@ def cosine_topk(
     sim = F.when(
         (F.col("_qn") > 0) & (F.col("_cn") > 0),
         dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn")))
-    scored = (
+    return _top_k_by_cosine(
         c.crossJoin(F.broadcast(q))
-        .select("query_id", "neighbor_id", sim.alias("cos_sim"))
-        .where(F.col("cos_sim").isNotNull())
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-    )
+        .select("query_id", "neighbor_id", sim.alias("cos_sim")), k)
 
 
 def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -305,13 +308,8 @@ def lsh_topk(
     sim = F.when(
         (F.col("_qn") > 0) & (F.col("_cn") > 0),
         dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn")))
-    scored = cand.select(
-        "query_id", "neighbor_id", sim.alias("cos_sim")
-    ).where(F.col("cos_sim").isNotNull())
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rnk", F.row_number().over(w)).where(F.col("rnk") <= k)
+    return _top_k_by_cosine(
+        cand.select("query_id", "neighbor_id", sim.alias("cos_sim")), k)
 
 
 def train_ivf_centroids(
@@ -432,16 +430,10 @@ def ivf_topk(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("_qv"),
         F.explode(_nearest_cells(vec_col, n_probe)).alias("cell"),
     )
-    scored = (
+    return _top_k_by_cosine(
         c_assigned.join(q_assigned, "cell")
         .select("query_id", "neighbor_id",
-                cosine(F.col("_qv"), F.col("_cv")).alias("cos_sim"))
-        .where(F.col("cos_sim").isNotNull())
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rnk", F.row_number().over(w)).where(
-        F.col("rnk") <= k)
+                cosine(F.col("_qv"), F.col("_cv")).alias("cos_sim")), k)
 
 
 def ivf_probe_params(
@@ -647,20 +639,13 @@ def _exact_rerank(
                          F.col(vec_col).alias("_cv"))
     qvec = queries.select(F.col(query_id_col).alias("query_id"),
                           F.col(vec_col).alias("_qv"))
-    scored = (
+    # degenerate (zero-norm) candidates score NULL and are dropped, or
+    # "refine >= corpus EQUALS cosine_topk" breaks
+    return _top_k_by_cosine(
         cvec.join(F.broadcast(cand), "neighbor_id")
         .join(F.broadcast(qvec), "query_id")
         .select("query_id", "neighbor_id",
-                cosine(F.col("_qv"), F.col("_cv")).alias("cos_sim"))
-        # degenerate (zero-norm) candidates score NULL — drop them like
-        # every exact searcher does, or NULL-sim rows occupy ranks <= k
-        # and "refine >= corpus EQUALS cosine_topk" breaks (r14 review)
-        .where(F.col("cos_sim").isNotNull())
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rnk", F.row_number().over(w)).where(
-        F.col("rnk") <= k)
+                cosine(F.col("_qv"), F.col("_cv")).alias("cos_sim")), k)
 
 
 def pq_topk(

@@ -49,7 +49,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
+from pyspark.sql.types import DataType, DoubleType, StructField, StructType
 
 from ..functions.dedup import (
     minhash_band_buckets, verify_jaccard_pairs, word_shingles,
@@ -61,8 +61,12 @@ from ._store import (batch_path, bound_state, horizon, latest_gen,
 _COMPONENTS = ("buckets", "shingles", "pairs")
 
 
-def _pair_ddl(id_type: str) -> str:
-    return f"id_a {id_type}, id_b {id_type}, jaccard double"
+def _pair_schema(id_type: DataType) -> StructType:
+    return StructType([
+        StructField("id_a", id_type),
+        StructField("id_b", id_type),
+        StructField("jaccard", DoubleType()),
+    ])
 
 
 def _ingest_batch(
@@ -127,15 +131,10 @@ def _ingest_batch(
     )
     # 3. bound state: evict out-of-horizon dirs; periodically fold the
     #    survivors into one compacted generation
-    pair_schema = StructType([
-        StructField("id_a", bucket_schema[id_col].dataType),
-        StructField("id_b", bucket_schema[id_col].dataType),
-        StructField("jaccard", DoubleType()),
-    ])
     compacted = bound_state(
         spark, store_dir, batch_id,
         {"buckets": bucket_schema, "shingles": shingle_schema,
-         "pairs": pair_schema},
+         "pairs": _pair_schema(bucket_schema[id_col].dataType)},
         min_live=min_live, compact_every=compact_every,
         partition_cols={"buckets": ("pfx",)})
     if compacted and materialize_groups:
@@ -208,11 +207,7 @@ def minhash_increment(
         id_col=id_col, k=k, num_hashes=num_hashes, bands=bands,
         threshold=threshold, retention_batches=retention_batches,
         compact_every=compact_every, materialize_groups=materialize_groups)
-    pair_schema = StructType([
-        StructField("id_a", docs.schema[id_col].dataType),
-        StructField("id_b", docs.schema[id_col].dataType),
-        StructField("jaccard", DoubleType()),
-    ])
+    pair_schema = _pair_schema(docs.schema[id_col].dataType)
     # read through the store, not the batch's live dir: a compaction
     # tick has already folded that dir into a generation
     pairs = read_component(spark, store_dir, "pairs", pair_schema)
@@ -308,7 +303,8 @@ def minhash_pairs_store(
     """
     pairs = read_component(spark, store_dir, "pairs", None)
     if pairs is None:
-        return spark.createDataFrame([], _pair_ddl(id_type))
+        return spark.createDataFrame(
+            [], _pair_schema(DataType.fromDDL(id_type)))
     pairs = pairs.select("id_a", "id_b", "jaccard")
     if only_ingested_ids:
         ids = read_component(spark, store_dir, "shingles", None)

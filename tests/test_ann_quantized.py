@@ -115,6 +115,33 @@ def test_quantized_refine_recall_close_on_real_embeddings(
     assert m_q > 0.8
 
 
+def test_quantized_refine_drops_null_scores(spark, grid_corpus, tmp_path):
+    """A zero-norm vector has no cosine: a zero corpus vector (scale 0,
+    dequantizes to zeros) and a zero query score NULL in the quantized
+    re-rank too, and those rows are dropped instead of taking ranks —
+    the same rows the float re-rank returns."""
+    df, cents, books = grid_corpus
+    zero = spark.createDataFrame([(999, [0.0] * 16)], df.schema)
+    corpus = df.unionByName(zero)
+    path = str(tmp_path / "qidx_zero")
+    ann_index.build_ivfpq_index(corpus, path, cents, books,
+                                quantized_refine=True)
+    q = corpus.where((F.col("vec_id") < 2) | (F.col("vec_id") == 999))
+    # every cell probed and every candidate refined: the zero vector is
+    # a candidate of each query
+    kw = dict(k=300, n_probe=len(cents), refine=300)
+    flt = ann_index.search_ivfpq_index(
+        spark, path, q, cents, books, corpus=corpus, **kw).collect()
+    qnt = ann_index.search_ivfpq_index(
+        spark, path, q, cents, books, refine_source="quantized",
+        **kw).collect()
+    assert all(r["cos_sim"] is not None for r in qnt)
+    assert sorted((r["query_id"], r["neighbor_id"], r["rnk"]) for r in qnt) \
+        == sorted((r["query_id"], r["neighbor_id"], r["rnk"]) for r in flt)
+    assert {r["query_id"] for r in qnt} == {0, 1}
+    assert len(qnt) == 2 * 200
+
+
 def test_quantized_misuse_raises(spark, grid_corpus, tmp_path):
     df, cents, books = grid_corpus
     plain = str(tmp_path / "pidx2")

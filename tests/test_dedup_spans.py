@@ -193,13 +193,18 @@ def test_partitioning_invariance(corpus):
 
 
 def test_validation(corpus):
+    from anomalyzer_spark.functions.dedup import duplicate_spans_from_gram_stats
+
     df, _ = corpus
-    with pytest.raises(ValueError, match="scope"):
-        duplicate_spans(df, scope="nope")
-    with pytest.raises(ValueError, match="keep"):
-        duplicate_spans(df, keep="nope")
-    with pytest.raises(ValueError, match="min_len"):
-        duplicate_spans(df, min_len=1)
+    # the store path takes the same arguments and checks them the same way
+    for spans in (duplicate_spans,
+                  lambda d, **kw: duplicate_spans_from_gram_stats(d, d, **kw)):
+        with pytest.raises(ValueError, match="scope"):
+            spans(df, scope="nope")
+        with pytest.raises(ValueError, match="keep"):
+            spans(df, keep="nope")
+        with pytest.raises(ValueError, match="min_len"):
+            spans(df, min_len=1)
 
 
 def test_plan_two_exchanges(spark, sf_dir):

@@ -1871,11 +1871,11 @@ def gram_edge_frame(spark):
     return spark.createDataFrame(rows, "doc_id long, ts array<string>")
 
 
-@pytest.mark.slow
 def test_gram_hashes_doubling_parity(spark, gram_edge_frame):
-    """r15: _gram_hashes' dual-accumulator doubling build is
-    bit-identical to the old k-1 left fold (gram md5s AND positions)
-    on every edge input, for every k class."""
+    """r15: _gram_hashes' doubling build (prefix from the ltrimmed
+    tokens, raw tokens appended) is bit-identical to the old k-1 left
+    fold (gram md5s AND positions) on every edge input, for every k
+    class."""
     from anomalyzer_spark.functions.dedup import _gram_hashes
 
     for k in (1, 2, 3, 4, 5, 7, 8, 14, 15, 20):
@@ -1910,51 +1910,57 @@ def test_gram_hashes_doubling_pass_count(spark):
 
 
 def test_stage_word_shingles_parity_and_plan(spark, shingle_edge_frame):
-    """r15: _stage_word_shingles (the projection-staged doubling used by
-    decontam._grams at n=8) is bit-identical to the column build, and
-    the OPTIMIZED plan keeps the staged levels: exactly ceil(log2 k)+
-    popcount(k)-1 zip_with evaluations survive CollapseProject (3 at
-    k=8 vs the left fold's 7 — a Column is a tree, not a DAG, so the
-    unstaged doubling re-evaluates shared levels per reference)."""
-    from anomalyzer_spark.functions.dedup import _stage_word_shingles
+    """r15: the projection-staged shingle build (``_staged`` over
+    ``_shingles``, used by decontam._grams at n=8) is bit-identical to
+    the column build, and the OPTIMIZED plan keeps the staged levels:
+    exactly ceil(log2 k)+popcount(k)-1 zip_with evaluations survive
+    CollapseProject (3 at k=8 vs the left fold's 7 — a Column is a
+    tree, not a DAG, so the unstaged doubling re-evaluates shared
+    levels per reference)."""
+    from anomalyzer_spark.functions.dedup import _shingles, _staged
+
+    def stage(k):
+        return _staged(shingle_edge_frame, "ws", k, _shingles, "_shg")
 
     for k in (4, 5, 6, 7, 8, 12, 15):
-        staged, sh = _stage_word_shingles(shingle_edge_frame, "ws", k)
+        staged, sh = stage(k)
         got = staged.select(
             "doc_id", sh.alias("new"),
             dedup.word_shingles_from_words(F.col("ws"), k).alias("old"),
         ).collect()
         for r in got:
             assert r["new"] == r["old"], (k, r["doc_id"])
-    staged, sh = _stage_word_shingles(shingle_edge_frame, "ws", 8)
+    staged, sh = stage(8)
     plan = staged.select("doc_id", sh.alias("g")) \
         ._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("zip_with") == 3, plan
     # k <= 3: no shared level -> frame unchanged, plain column returned
-    st, _ = _stage_word_shingles(shingle_edge_frame, "ws", 3)
+    st, _ = stage(3)
     assert st is shingle_edge_frame
 
 
 def test_stage_gram_hashes_parity_and_plan(spark, gram_edge_frame):
-    """r15: _stage_gram_hashes (used by gram_occurrences — the
-    dup_spans/span-stream gram feeder at min_len=15) is bit-identical
-    to the column build; the optimized plan keeps the staged raw power
-    accumulators (8 zip_with evaluations at k=15 vs the left fold's
-    14)."""
-    from anomalyzer_spark.functions.dedup import (_gram_hashes,
-                                                  _stage_gram_hashes)
+    """r15: the projection-staged gram build (``_staged`` over
+    ``_gram_hashes``, used by gram_occurrences — the dup_spans/
+    span-stream gram feeder at min_len=15) is bit-identical to the
+    column build; the optimized plan keeps the staged raw power levels
+    (8 zip_with evaluations at k=15 vs the left fold's 14)."""
+    from anomalyzer_spark.functions.dedup import _gram_hashes, _staged
+
+    def stage(k):
+        return _staged(gram_edge_frame, "ts", k, _gram_hashes, "_gmr")
 
     for k in (4, 5, 7, 8, 14, 15, 20):
-        staged, gr = _stage_gram_hashes(gram_edge_frame, "ts", k)
+        staged, gr = stage(k)
         got = staged.select(
             "doc_id", gr.alias("new"),
             _gram_hashes(F.col("ts"), k).alias("old"),
         ).collect()
         for r in got:
             assert r["new"] == r["old"], (k, r["doc_id"])
-    staged, gr = _stage_gram_hashes(gram_edge_frame, "ts", 15)
+    staged, gr = stage(15)
     plan = staged.select("doc_id", gr.alias("g")) \
         ._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("zip_with") == 8, plan
-    st, _ = _stage_gram_hashes(gram_edge_frame, "ts", 3)
+    st, _ = stage(3)
     assert st is gram_edge_frame

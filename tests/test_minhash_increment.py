@@ -119,3 +119,16 @@ def test_increment_at_compaction_tick_returns_its_pairs(spark, tmp_path):
     assert minhash_increment(spark, first, store, **kw).count() == 0
     got = minhash_increment(spark, second, store, **kw).collect()
     assert [(r["id_a"], r["id_b"]) for r in got] == [(1, 2)]
+
+
+def test_empty_store_pairs_typed_by_id_type(spark, tmp_path):
+    """Before any batch lands, ``minhash_pairs_store`` returns an empty
+    pair frame typed by ``id_type``, with the schema ingests write."""
+    for id_type, name in (("long", "bigint"), ("string", "string")):
+        empty = minhash_pairs_store(spark, str(tmp_path / "none"),
+                                    id_type=id_type)
+        assert empty.count() == 0
+        assert [(f.name, f.dataType.simpleString(), f.nullable)
+                for f in empty.schema.fields] == [
+            ("id_a", name, True), ("id_b", name, True),
+            ("jaccard", "double", True)]

@@ -1,26 +1,26 @@
-"""Per-stage task-metric attribution for one declared query.
+"""Per-lap Spark attribution for one declared query.
 
-Runs <query> from __spark_entry__ with the JSON event log enabled (one
-warm pass, then N timed laps), then aggregates the Spark event log into
-per-stage rows: task count, wall span, sum of executor run/CPU/deser/
-GC/shuffle times. This answers "WHERE do the cpu-seconds go" for cells
-whose cpu_s inflates with core count at an identical plan hash
-(r15 verdict item 5 — fixture over-parallelization).
+Runs <query> from __spark_entry__ with the JSON event log enabled: one
+warm lap (lap 0), then N timed laps, each written to the noop sink under
+its own ``perfbench.trace.Tracer`` span (job group ``<query>#<lap>``).
+After the session stops, ``perfbench.trace.EventLog`` aggregates the log
+per job group and one row per lap is printed: wall, jobs, stages, tasks,
+failed tasks, executor CPU, planning, union of stage intervals, shuffle
+write, input and Python bytes. This answers "WHERE do the cpu-seconds
+go" for cells whose cpu_s moves at an identical plan hash.
 
 Usage: python tools/stage_probe.py <query> [--laps 2] [--cpus N]
-Prints a per-stage table + totals to stdout. Scratch event log under
-/tmp is removed on exit.
+                                   [--sf-dir DIR]
+The scratch event log directory is removed on exit.
 """
 
 from __future__ import annotations
 
 import argparse
-import glob
-import json
 import os
 import shutil
 import sys
-import time
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -36,8 +36,7 @@ def main() -> None:
     if args.cpus:
         os.environ["SPARK_GRAFT_CPUS"] = args.cpus
 
-    logdir = f"/tmp/stage_probe_{os.getpid()}"
-    os.makedirs(logdir, exist_ok=True)
+    logdir = tempfile.mkdtemp(prefix="stage_probe_")
     os.environ["SPARK_SUBMIT_OPTS"] = (
         os.environ.get("SPARK_SUBMIT_OPTS", "")
         + f" -Dspark.eventLog.enabled=true -Dspark.eventLog.dir={logdir}"
@@ -46,107 +45,37 @@ def main() -> None:
     ).strip()
 
     import __spark_entry__ as entry_mod
-    from bench import _bench_fixtures
     from anomalyzer_spark.session import get_spark
+    from bench import _bench_fixtures
+    from perfbench.trace import EventLog, GroupStats, Tracer
 
-    spark = get_spark("stage-probe")
-    run_dir = _bench_fixtures(args.sf_dir)
-    qs = entry_mod.queries()
-    spark.read.parquet(f"{run_dir}/region.parquet").count()
+    try:
+        spark = get_spark("stage-probe")
+        run_dir = _bench_fixtures(args.sf_dir)
+        query = entry_mod.queries()[args.query]
+        tracer = Tracer(spark)
+        for lap in range(args.laps + 1):
+            with tracer.span(args.query, lap):
+                query(spark, run_dir).write.mode("overwrite").format(
+                    "noop").save()
+        spark.stop()  # flushes the event log
+        log = EventLog.from_dir(logdir)
+    finally:
+        shutil.rmtree(logdir, ignore_errors=True)
 
-    def lap():
-        t0 = time.perf_counter()
-        qs[args.query](spark, run_dir).write.mode("overwrite").format(
-            "noop").save()
-        return time.perf_counter() - t0
-
-    warm = lap()
-    spark.sparkContext.setJobDescription(f"probe:{args.query}")
-    marker = spark.sparkContext.parallelize([1], 1).count()  # job marker
-    spark.sparkContext.setJobDescription(None)
-    walls = [lap() for _ in range(args.laps)]
-    spark.stop()
-    time.sleep(1)
-
-    # ---- parse the event log (Spark 4 may write a rolling dir) ----
-    ev_files = [p for p in glob.glob(f"{logdir}/**", recursive=True)
-                if os.path.isfile(p) and "appstatus" not in p]
-    stages: dict[tuple, dict] = {}
-    marker_seen = False
-    jobs_after_marker: set[int] = set()
-    stage_to_job: dict[int, int] = {}
-    for p in ev_files:
-        with open(p) as f:
-            for line in f:
-                try:
-                    e = json.loads(line)
-                except ValueError:
-                    continue
-                ev = e.get("Event")
-                if ev == "SparkListenerJobStart":
-                    props = e.get("Properties") or {}
-                    desc = props.get("spark.job.description", "")
-                    if desc == f"probe:{args.query}" and not marker_seen:
-                        marker_seen = True
-                        continue
-                    if marker_seen:
-                        jid = e["Job ID"]
-                        jobs_after_marker.add(jid)
-                        for s in e.get("Stage Infos", []):
-                            stage_to_job[s["Stage ID"]] = jid
-                elif ev == "SparkListenerTaskEnd":
-                    sid = e["Stage ID"]
-                    if stage_to_job.get(sid) not in jobs_after_marker:
-                        continue
-                    m = e.get("Task Metrics") or {}
-                    info = e.get("Task Info") or {}
-                    key = sid
-                    st = stages.setdefault(key, {
-                        "tasks": 0, "run_ms": 0, "cpu_ms": 0,
-                        "deser_ms": 0, "gc_ms": 0, "ser_ms": 0,
-                        "sched_delay_ms": 0, "launch": [], "finish": [],
-                        "shuf_fetch_ms": 0, "shuf_write_ms": 0,
-                        "in_recs": 0, "out_recs": 0,
-                    })
-                    st["tasks"] += 1
-                    st["run_ms"] += m.get("Executor Run Time", 0)
-                    st["cpu_ms"] += m.get("Executor CPU Time", 0) // 1000000
-                    st["deser_ms"] += m.get("Executor Deserialize Time", 0)
-                    st["gc_ms"] += m.get("JVM GC Time", 0)
-                    st["ser_ms"] += m.get("Result Serialization Time", 0)
-                    st["launch"].append(info.get("Launch Time", 0))
-                    st["finish"].append(info.get("Finish Time", 0))
-                    sh = m.get("Shuffle Read Metrics") or {}
-                    st["shuf_fetch_ms"] += sh.get("Fetch Wait Time", 0)
-                    sw = m.get("Shuffle Write Metrics") or {}
-                    st["shuf_write_ms"] += sw.get("Shuffle Write Time", 0) \
-                        // 1000000
-                    inp = m.get("Input Metrics") or {}
-                    st["in_recs"] += inp.get("Records Read", 0)
-                    outp = m.get("Output Metrics") or {}
-                    st["out_recs"] += outp.get("Records Written", 0)
-    shutil.rmtree(logdir, ignore_errors=True)
-
-    print(f"query={args.query} cpus={os.environ.get('SPARK_GRAFT_CPUS', '*')}"
-          f" warm={warm:.3f}s laps={[round(w, 3) for w in walls]}"
-          f" marker={marker}")
-    hdr = (f"{'stage':>5} {'tasks':>5} {'span_ms':>8} {'run_ms':>8} "
-           f"{'cpu_ms':>8} {'deser':>6} {'gc':>5} {'fetch':>6} "
-           f"{'in_rec':>8} {'out_rec':>8}")
-    print(hdr)
-    tot = {"tasks": 0, "run_ms": 0, "cpu_ms": 0, "deser_ms": 0, "gc_ms": 0}
-    for sid in sorted(stages):
-        st = stages[sid]
-        span = (max(st["finish"]) - min(st["launch"])) if st["launch"] else 0
-        print(f"{sid:>5} {st['tasks']:>5} {span:>8} {st['run_ms']:>8} "
-              f"{st['cpu_ms']:>8} {st['deser_ms']:>6} {st['gc_ms']:>5} "
-              f"{st['shuf_fetch_ms']:>6} {st['in_recs']:>8} "
-              f"{st['out_recs']:>8}")
-        for k in tot:
-            tot[k] += st[k]
-    print(f"TOTAL tasks={tot['tasks']} run={tot['run_ms']}ms "
-          f"cpu={tot['cpu_ms']}ms deser={tot['deser_ms']}ms "
-          f"gc={tot['gc_ms']}ms over {len(stages)} stages")
+    print(f"query={args.query} "
+          f"cpus={os.environ.get('SPARK_GRAFT_CPUS', '*')} (lap 0 = warm)")
+    print(f"{'lap':>3} {'wall_s':>7} {'jobs':>4} {'stages':>6} {'tasks':>5} "
+          f"{'failed':>6} {'cpu_s':>7} {'plan_s':>6} {'stage_s':>7} "
+          f"{'shuf_wr_B':>10} {'input_B':>10} {'py_sent_B':>10} "
+          f"{'py_recv_B':>10}")
+    for s in tracer.spans:
+        g = log.groups.get(s.group, GroupStats())
+        print(f"{s.lap:>3} {s.wall_s:>7.3f} {g.jobs:>4} {g.stages:>6} "
+              f"{g.tasks:>5} {g.failed_tasks:>6} {g.executor_cpu_s:>7.3f} "
+              f"{g.plan_s:>6.3f} {g.stage_union_s():>7.3f} "
+              f"{g.shuffle_write_bytes:>10} {g.input_bytes:>10} "
+              f"{g.python_bytes_sent:>10} {g.python_bytes_received:>10}")
 
 
 if __name__ == "__main__":
