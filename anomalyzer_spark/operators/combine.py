@@ -11,9 +11,16 @@ Reproduces ``Eval``/``EvalByTest``/``getWeight``
   * dynamic weights: 0.5 base, 5.0 for magnitude/fence when their prob > 0.8;
   * weighted mean with 0 fallback when no test produced a value;
   * delay gate: 0 until the key has ``window_size`` points (when enabled).
+
+``eval_gates`` is the one definition of the two gates: ``combined_prob``
+applies them, and ``open_col`` (their negation) tells batch ``detect``
+which keys still need the Monte-Carlo tests.
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -69,12 +76,31 @@ def combined_prob(
         num = num + F.coalesce(p * w, F.lit(0.0))
         den = den + F.when(p.isNotNull(), w).otherwise(F.lit(0.0))
     prob = F.when(den > 0.0, num / den).otherwise(F.lit(0.0))
-
-    if "magnitude" in merged:
-        m = merged["magnitude"]
-        prob = F.when(m.isNotNull() & (m < F.lit(conf.sensitivity)), F.lit(0.0)).otherwise(
-            prob
-        )
-    if conf.delay:
-        prob = F.when(n_points < F.lit(conf.window_size), F.lit(0.0)).otherwise(prob)
+    for gate in eval_gates(merged.get("magnitude"), conf, n_points):
+        prob = F.when(gate, F.lit(0.0)).otherwise(prob)
     return prob
+
+
+def eval_gates(magnitude: Column | None, conf: AnomalyzerConf,
+               n_points: Column) -> list[Column]:
+    """The Eval gates, each true where it zeroes the whole combined prob
+    whatever the other tests return: a present capped ``magnitude`` prob
+    below ``sensitivity`` (anomalyze.go:173-175; pass None when the conf
+    has no magnitude test), and, under ``delay``, fewer than
+    ``window_size`` points."""
+    gates = []
+    if magnitude is not None:
+        gates.append(magnitude.isNotNull() & (magnitude < F.lit(conf.sensitivity)))
+    if conf.delay:
+        gates.append(n_points < F.lit(conf.window_size))
+    return gates
+
+
+def open_col(magnitude: Column | None, conf: AnomalyzerConf,
+             n_points: Column) -> Column:
+    """True where no ``eval_gates`` gate is shut, i.e. where the combined
+    prob can depend on the other tests; a literal true when the conf has
+    no gate. Batch ``detect`` runs the Monte-Carlo kernel only where it is
+    true."""
+    gates = eval_gates(magnitude, conf, n_points)
+    return ~reduce(operator.or_, gates) if gates else F.lit(True)

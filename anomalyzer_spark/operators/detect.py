@@ -34,7 +34,7 @@ from pyspark.sql.window import Window
 
 from ..config import AnomalyzerConf
 from . import columnar
-from .combine import combined_prob, merge_probs, weight_col
+from .combine import combined_prob, merge_probs, open_col, weight_col
 from .kernel import MC_METHODS, key_str_col, mc_probs_udf
 
 DETERMINISTIC = {"fence", "magnitude", "cdf"}
@@ -137,6 +137,7 @@ def _merged_probs(
     horizon,
     horizon_anchor,
     skew_salts: int | None,
+    gated: bool,
 ) -> tuple[DataFrame, dict[str, Column]]:
     """Shared body of ``detect`` / ``detect_by_test``: tail window → staged
     window stats → per-test probs as named ``_p_<test>`` columns → combiner
@@ -148,6 +149,10 @@ def _merged_probs(
     slice/mean per reference — measured 10-15x slower (columnar.py notes).
     The raw probs are staged too: the combiner references each several
     times (cap, weight, numerator, denominator, gate).
+
+    With ``gated`` the MC kernel gets the ``open_col`` mask, so keys an
+    Eval gate zeroes anyway skip their Monte-Carlo tests; without it every
+    key runs them (``detect_by_test`` reports every per-test prob).
     """
     tails = tail_window(
         df, keys, ts_col, value_col, conf.window_size, tiebreak_cols, horizon,
@@ -157,15 +162,15 @@ def _merged_probs(
     mc = tuple(m for m in conf.methods if m in MC_METHODS)
     staged = tails
     if mc:
-        # The MC kernel is CPU-bound per KEY (perm_count · n md5 digests
-        # and an argsort per key and test: ~0.7 ms of CPU per key at the
-        # reference defaults, blocks of equal-length keys, 4-core x86-64
-        # host), but AQE coalesces the post-agg exchange by BYTES — a few
-        # thousand tiny key rows collapse into 1 partition and the kernel
-        # runs serial (measured 7.5x slower at sf0.1). Round-robin the
-        # aggregated rows (one per key — negligible data) across the full
-        # parallelism so kernel CPU scales with cores regardless of how
-        # small the aggregated frame is.
+        # The MC kernel is CPU-bound per KEY it runs (perm_count · n md5
+        # digests and an argsort per key and test, in blocks of
+        # equal-length keys; keys an Eval gate zeroes skip it), but AQE
+        # coalesces the post-agg exchange by BYTES — a few thousand tiny
+        # key rows collapse into 1 partition and the kernel runs serial
+        # (measured 7.5x slower at sf0.1). Round-robin the aggregated rows
+        # (one per key — negligible data) across the full parallelism so
+        # kernel CPU scales with cores regardless of how small the
+        # aggregated frame is.
         staged = staged.repartition(
             tails.sparkSession.sparkContext.defaultParallelism)
     if any(m in DETERMINISTIC for m in conf.methods):
@@ -180,7 +185,12 @@ def _merged_probs(
 
     probs = columnar.staged_probs(conf)
     if mc:
-        st = mc_probs_udf(conf, mc)(F.col("vec"), key_str_col(keys))
+        need = F.lit(True)
+        if gated:
+            magnitude = (merge_probs(probs, ("magnitude",))["magnitude"]
+                         if "magnitude" in probs else None)
+            need = open_col(magnitude, conf, F.col("n_points"))
+        st = mc_probs_udf(conf, mc)(F.col("vec"), key_str_col(keys), need)
         for m in mc:
             probs[m] = st.getField(m)
     withp = staged.select(
@@ -204,11 +214,16 @@ def detect(
 
     Returns (keys..., n_points, last_ts, prob). ``skew_salts`` enables the
     two-phase tail-N for hot-key skew (see ``tail_window``).
+
+    The Monte-Carlo tests run only for keys no Eval gate zeroes (magnitude
+    present and below ``sensitivity``; fewer than ``window_size`` points
+    under ``delay``): ``prob`` is the same, the gated keys' MC work is
+    skipped. ``detect_by_test`` runs every test of every key.
     """
     conf = conf or AnomalyzerConf()
     withp, merged = _merged_probs(
         df, keys, ts_col, value_col, conf, tiebreak_cols, horizon,
-        horizon_anchor, skew_salts)
+        horizon_anchor, skew_salts, gated=True)
     prob = combined_prob(merged, conf, F.col("n_points"))
     return withp.select(*keys, "n_points", "last_ts", prob.alias("prob"))
 
@@ -264,11 +279,13 @@ def detect_by_test(
 ) -> DataFrame:
     """EvalByTest surface (anomalyze.go:195-221): per-test probs + weights
     + the combined prob, per key. Columns: prob_<entry>, weight_<entry>,
-    prob (highrank/lowrank folded into 'rank')."""
+    prob (highrank/lowrank folded into 'rank'). Every per-test prob is
+    reported, so unlike ``detect`` the Monte-Carlo tests also run for keys
+    an Eval gate zeroes; ``prob`` equals ``detect``'s."""
     conf = conf or AnomalyzerConf()
     withp, merged = _merged_probs(
         df, keys, ts_col, value_col, conf, tiebreak_cols, horizon,
-        horizon_anchor, skew_salts)
+        horizon_anchor, skew_salts, gated=False)
     cols = [*keys, "n_points", "last_ts"]
     for name, p in merged.items():
         cols.append(p.alias(f"prob_{name}"))

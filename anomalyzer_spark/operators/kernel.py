@@ -21,10 +21,17 @@ The kernel shares its math with the NumPy oracle (``anomalyzer_spark.oracle``)
 batch results are reproducible, testable, AND reproducible by the DuckDB
 correctness oracle in plain SQL.
 
+Only keys whose combined prob can still depend on the MC tests are
+digested: the kernel's third input is the ``combine.open_col`` mask, and
+rows an Eval gate zeroes anyway (magnitude below ``sensitivity``, or too
+few points under ``delay``) come back NULL. ``detect_by_test`` passes an
+all-true mask.
+
 Design note: this is a scalar ``pandas_udf`` over an already-aggregated
-array column, NOT ``applyInPandas`` — the groupBy that built the arrays is
-the only shuffle, and the UDF then rides the same partitioning (no second
-exchange, plain Arrow batch transfer).
+array column, NOT ``applyInPandas`` — no per-key grouping in Python, plain
+Arrow batch transfer. The groupBy that built the arrays is the one hash
+shuffle; ``detect`` then round-robins the aggregated rows (one per key,
+negligible bytes) so the kernel's CPU spreads over every core.
 """
 
 from __future__ import annotations
@@ -50,20 +57,26 @@ _RESULT_TYPE = StructType(
 def mc_probs_udf(conf: AnomalyzerConf, methods: tuple[str, ...]):
     """Build a pandas UDF computing the requested MC probs.
 
-    Signature: (vec array<double>, key string) -> struct<diff,highrank,
-    lowrank,ks double>. ``key`` is the '|'-joined key string feeding the
-    hash-permutation spec (oracle.perm_matrix). Methods not requested come
-    back NULL (and cost nothing).
+    Signature: (vec array<double>, key string, open boolean) ->
+    struct<diff,highrank,lowrank,ks double>. ``key`` is the '|'-joined
+    key string feeding the hash-permutation spec (oracle.perm_matrix).
+    ``open`` is the ``combine.open_col`` mask: rows where it is false come
+    back all NULL and are never digested. Methods not requested come back
+    NULL (and cost nothing).
     """
     want = tuple(m for m in MC_METHODS if m in methods)
 
     @F.pandas_udf(_RESULT_TYPE)
-    def _kernel(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.DataFrame]:
-        for vecs, keys in it:
-            probs = oracle.mc_probs(conf, want, list(vecs),
-                                    [str(k) for k in keys])
-            yield pd.DataFrame({m: probs.get(m, np.full(len(vecs), np.nan))
-                                for m in MC_METHODS})
+    def _kernel(it: Iterator[tuple[pd.Series, pd.Series, pd.Series]]
+                ) -> Iterator[pd.DataFrame]:
+        for vecs, keys, open_ in it:
+            rows = np.flatnonzero(open_.to_numpy(dtype=bool))
+            probs = oracle.mc_probs(conf, want, [vecs.iat[i] for i in rows],
+                                    [str(keys.iat[i]) for i in rows])
+            out = {m: np.full(len(vecs), np.nan) for m in MC_METHODS}
+            for m, p in probs.items():
+                out[m][rows] = p
+            yield pd.DataFrame(out)
 
     return _kernel
 

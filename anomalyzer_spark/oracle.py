@@ -186,15 +186,25 @@ def _ks_rows(ref: np.ndarray, act: np.ndarray, mn: np.ndarray,
     two empirical CDFs on n1 + n2 points evenly spaced from mn to mx
     (algorithms.go:255-288, ``interpolate`` at 312-323)."""
     n1, n2 = ref.shape[-1], act.shape[-1]
-    g = n1 + n2
-    step = (mx - mn) / (g - 1)
-    grid = mn[..., None] + step[..., None] * np.arange(g, dtype=np.float64)
+    grid = _ks_grid(mn, mx, n1 + n2)
     ref_le = sum(ref[..., j, None] <= grid for j in range(n1))
     act_le = sum(act[..., j, None] <= grid for j in range(n2))
     if nan_grid_counts_all:
         nan = np.isnan(grid)
         ref_le = np.where(nan, n1, ref_le)
         act_le = np.where(nan, n2, act_le)
+    return _ks_gap(ref_le, act_le, n1, n2)
+
+
+def _ks_grid(mn: np.ndarray, mx: np.ndarray, g: int) -> np.ndarray:
+    """``g`` points evenly spaced from mn to mx along a new last axis."""
+    step = (mx - mn) / (g - 1)
+    return mn[..., None] + step[..., None] * np.arange(g, dtype=np.float64)
+
+
+def _ks_gap(ref_le: np.ndarray, act_le: np.ndarray, n1: int,
+            n2: int) -> np.ndarray:
+    """Largest gap between the two ECDFs from their counts on the grid."""
     return np.max(np.abs(act_le / n2 - ref_le / n1), axis=-1)
 
 
@@ -358,9 +368,19 @@ def ks_block(V: np.ndarray, conf: AnomalyzerConf,
     n = V.shape[-1]
     n1, n2 = mc_window("ks", n, conf)
     obs = _ks_observed(V, n1, n2)
-    win = np.take_along_axis(V[:, None, :], perms[:, :, n - n1 - n2 :], axis=2)
-    ks = _ks_rows(win[..., :n1], win[..., n1:], win.min(axis=-1),
-                  win.max(axis=-1))
+    if n1 + n2 == n:
+        # Every replicate permutes the whole vector, so its grid is the
+        # key's own min/max grid: count the few active slots against
+        # M = (V <= grid) and take the reference counts as the rest.
+        M = V[:, :, None] <= _ks_grid(V.min(-1), V.max(-1), n)[:, None, :]
+        k = np.arange(len(V))[:, None]
+        act_le = sum(M[k, perms[:, :, j]] for j in range(n1, n))
+        ks = _ks_gap(M.sum(axis=1)[:, None, :] - act_le, act_le, n1, n2)
+    else:
+        win = np.take_along_axis(V[:, None, :], perms[:, :, n - n1 - n2 :],
+                                 axis=2)
+        ks = _ks_rows(win[..., :n1], win[..., n1:], win.min(axis=-1),
+                      win.max(axis=-1))
     significant = (ks < obs[:, None]).sum(axis=1)
     return significant / conf.perm_count
 
@@ -507,11 +527,18 @@ def get_weight(name: str, prob: float) -> float:
     return 0.5
 
 
+def _magnitude_gated(p: float | None, conf: AnomalyzerConf) -> bool:
+    """The hard gate (anomalyze.go:173-175): a present magnitude prob
+    below ``sensitivity`` zeroes the whole Eval, whatever the other tests
+    return. ``p`` is the raw or the capped prob (capping is idempotent)."""
+    return p is not None and cap(p) < conf.sensitivity
+
+
 def _weighted(probmap: dict[str, float], conf: AnomalyzerConf) -> float:
     """Magnitude sensitivity hard gate, dynamic weights, weighted mean
     (anomalyze.go:170-192)."""
-    if "magnitude" in probmap and probmap["magnitude"] < conf.sensitivity:
-        return 0.0  # hard gate, anomalyze.go:173-175
+    if _magnitude_gated(probmap.get("magnitude"), conf):
+        return 0.0
     weightmap = {m: get_weight(m, p) for m, p in probmap.items()}
     num = sum(probmap[m] * weightmap[m] for m in probmap)
     den = sum(weightmap.values())
@@ -531,19 +558,25 @@ def eval_prob(v: np.ndarray, conf: AnomalyzerConf, key: str = "") -> float:
 def eval_probs(vecs: list, conf: AnomalyzerConf,
                keys: list[str]) -> np.ndarray:
     """``eval_prob`` of many keys at once, bit-identical to one call per
-    key: the MC tests of every key run through ``mc_probs`` (one digest
-    pass and one vectorized test per block of equal-length keys), the
-    closed-form tests and the combiner per key."""
+    key: the closed-form tests per key first, then the MC tests of the
+    keys no Eval gate zeroes through one ``mc_probs`` call (one digest
+    pass and one vectorized test per block of equal-length keys), then
+    the combiner per key."""
     vecs = [np.asarray(v, dtype=np.float64) for v in vecs]
-    live = [i for i, v in enumerate(vecs)
-            if not (conf.delay and len(v) < conf.window_size)]
-    mc = mc_probs(conf, tuple(m for m in conf.methods if m in _TEST_ID),
-                  [vecs[i] for i in live], [keys[i] for i in live])
+    mc_tests = tuple(m for m in conf.methods if m in _TEST_ID)
+    closed = {i: {m: method_prob(m, v, conf)
+                  for m in conf.methods if m not in _TEST_ID}
+              for i, v in enumerate(vecs)
+              if not (conf.delay and len(v) < conf.window_size)}
+    live = [i for i, det in closed.items()
+            if not _magnitude_gated(det.get("magnitude"), conf)]
+    mc = mc_probs(conf, mc_tests, [vecs[i] for i in live],
+                  [keys[i] for i in live])
     out = np.zeros(len(vecs))
     for j, i in enumerate(live):
-        def prob_of(m, v=vecs[i], j=j):
+        def prob_of(m, det=closed[i], j=j):
             if m not in mc:
-                return method_prob(m, v, conf)
+                return det[m]
             return None if np.isnan(mc[m][j]) else float(mc[m][j])
         out[i] = _weighted(_probmap(conf, prob_of), conf)
     return out

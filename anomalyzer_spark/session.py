@@ -158,6 +158,47 @@ def checkpoint_scope(spark: SparkSession):
                 jmap.get(k).unpersist(False)
 
 
+def default_driver_memory(total_bytes: int | None) -> str:
+    """``spark.driver.memory`` unless ``SPARK_DRIVER_MEM`` is set: half of
+    the ``total_bytes`` of memory this process may use (``_usable_memory``),
+    at most 32g; 32g when the size is unknown. Local mode runs every task
+    slot in the driver JVM: an 8g heap GC-thrashes once object-heavy stages
+    (higher-order exprs, Arrow batches) accumulate — every query after the
+    kernel stage ran 3-10x slower — and 32g keeps GC flat on a 128 GiB
+    host. A heap sized past the memory there is, though, grows until the
+    OS kills the JVM (a 32g heap on a 15 GB host was killed at 15 GB
+    resident)."""
+    if not total_bytes or total_bytes // 2 >= 32 * 2**30:
+        return "32g"
+    return f"{total_bytes // 2 // 2**20}m"
+
+
+#: cgroup v2 and v1 memory limit files; "max" or a near-2**63 value is no
+#: limit
+_CGROUP_LIMITS = ("memory.max", "memory/memory.limit_in_bytes")
+
+
+def _usable_memory(cgroup_root: str = "/sys/fs/cgroup") -> int | None:
+    """Bytes of memory this process may use: the host's physical memory or
+    its container's cgroup limit, whichever is smaller; None where neither
+    is known. The limit is read at the root of the cgroup mount, which is
+    the container's own cgroup when it runs in a cgroup namespace."""
+    sizes = []
+    try:
+        sizes.append(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
+    except (AttributeError, OSError, ValueError):
+        pass
+    for name in _CGROUP_LIMITS:
+        try:
+            with open(os.path.join(cgroup_root, name)) as f:
+                limit = f.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit() and 0 < int(limit) < 2**62:
+            sizes.append(int(limit))
+    return min(sizes, default=None)
+
+
 def _build(app: str, cpus: str, shuffle_partitions: int | None):
     builder = (
         SparkSession.builder.appName(app)
@@ -171,11 +212,8 @@ def _build(app: str, cpus: str, shuffle_partitions: int | None):
         # legacy fixtures store event time as INT64 TIMESTAMP(NANOS), which
         # Spark reads only as bigint (load_table and the drains convert it)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # local mode runs all 32 task slots in the driver JVM: an 8g heap
-        # GC-thrashes once object-heavy stages (higher-order exprs, Arrow
-        # batches) accumulate — benchmarks showed every query after the
-        # kernel stage slowing 3-10x. 32g on the 128 GiB box keeps GC flat.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", os.environ.get(
+            "SPARK_DRIVER_MEM", default_driver_memory(_usable_memory())))
         # Whole-stage codegen for the wide higher-order expressions (minhash
         # fold, simhash, detect staging) emits methods past HotSpot's
         # -XX:DontCompileHugeMethods bytecode limit; whether the JIT warms

@@ -279,3 +279,93 @@ def test_mc_batch_splits_blocks_exactly(monkeypatch):
                 want = exp[key][m]
                 assert (np.isnan(got[m][i]) if want is None
                         else got[m][i] == want), (budget, key, m)
+
+
+def _gate_rows():
+    """(k, ts, value) rows whose keys straddle the Eval gates at
+    active_size=2, sensitivity 0.1: magnitude below, at and above
+    sensitivity, a NaN value, a flat key (magnitude 0), keys shorter than
+    the window and random keys."""
+    rng = np.random.default_rng(8)
+    ref = [10.0] * 8
+    series = {
+        "below": ref + [10.5, 10.5],
+        "at": ref + [11.0, 11.0],
+        "above": ref + [15.0, 15.0],
+        "nan": ref[:-1] + [float("nan"), 15.0, 15.0],
+        "flat": [0.0] * 10,
+        "short": [10.0, 10.0, 30.0, 31.0, 29.0],
+        "one": [4.0],
+    }
+    for i in range(12):
+        series[f"r{i}"] = list(np.round(rng.normal(5, 1, 6 + i % 5), 1))
+    return [(k, t, float(v)) for k, vs in series.items()
+            for t, v in enumerate(vs)]
+
+
+@pytest.mark.parametrize("conf", [
+    AnomalyzerConf(active_size=2, perm_count=60, seed=3),
+    AnomalyzerConf(active_size=2, perm_count=60, seed=3, delay=True),
+    AnomalyzerConf(active_size=2, perm_count=60, seed=3,
+                   methods=("ks", "highrank", "lowrank", "diff")),
+    AnomalyzerConf(active_size=2, perm_count=60, seed=3, delay=True,
+                   methods=("ks", "cdf")),
+    AnomalyzerConf(active_size=2, perm_count=60, seed=3, upper_bound=20.0,
+                   lower_bound=0.0, methods=("magnitude", "diff", "highrank",
+                                             "lowrank", "fence", "ks", "cdf")),
+], ids=["default", "delay", "no-gate", "delay-no-magnitude", "all-tests"])
+def test_detect_gated_kernel_prob_equals_detect_by_test(spark, conf):
+    """``detect`` skips the MC tests of keys an Eval gate zeroes;
+    ``detect_by_test`` runs every test. Their ``prob`` agree exactly, and
+    both match the NumPy oracle, for keys below, at and above
+    sensitivity, with NaN values, short keys and under delay."""
+    rows = _gate_rows()
+    df = spark.createDataFrame(rows, "k string, ts long, value double")
+    got = {r["k"]: r["prob"] for r in detect(df, ["k"], conf=conf).collect()}
+    full = {r["k"]: r["prob"] for r in
+            detect_by_test(df, ["k"], conf=conf).collect()}
+    assert got.keys() == full.keys()
+    for k in got:
+        assert got[k] == full[k] or (np.isnan(got[k]) and np.isnan(full[k])), k
+    # the oracle caps a NaN prob to NaN, Spark's least/greatest to 1.0:
+    # the NaN key is held to detect_by_test only
+    pdf = pd.DataFrame([r for r in rows if r[0] != "nan"],
+                       columns=["k", "ts", "value"])
+    exp = _expected_per_key(pdf, ["k"], conf)
+    for k, e in exp.items():
+        assert got[k] == pytest.approx(e, abs=1e-12), k
+
+
+def test_kernel_mask_skips_closed_rows(monkeypatch):
+    """The kernel function, called in-process with a mask, returns NaN for
+    every test of a masked row and ``oracle.mc_probs`` values for the
+    rest; masked rows never reach ``oracle.mc_probs``."""
+    from anomalyzer_spark.operators import kernel
+
+    conf = AnomalyzerConf(active_size=2, perm_count=40, seed=4,
+                          methods=("ks", "highrank", "diff"))
+    rng = np.random.default_rng(6)
+    vecs = pd.Series([rng.normal(3, 1, n) for n in (10, 10, 7, 10, 3, 10)])
+    keys = pd.Series([f"m{i}" for i in range(len(vecs))])
+    mask = pd.Series([True, False, True, False, True, True])
+    want = oracle.mc_probs(conf, ("diff", "highrank", "ks"),
+                           list(vecs[mask]), list(keys[mask]))
+    seen = []
+    real = oracle.mc_probs
+
+    def spy(conf_, tests, vs, ks):
+        seen.extend(ks)
+        return real(conf_, tests, vs, ks)
+
+    monkeypatch.setattr(oracle, "mc_probs", spy)
+    body = kernel.mc_probs_udf(conf, ("diff", "highrank", "ks")).func
+    (out,) = body(iter([(vecs, keys, mask)]))
+    assert seen == list(keys[mask])
+    assert list(out.columns) == list(kernel.MC_METHODS)
+    assert out[~mask.to_numpy()].isna().all().all()
+    for m in ("diff", "highrank", "ks"):
+        assert np.array_equal(out[m][mask].to_numpy(), want[m], equal_nan=True)
+    assert out["lowrank"].isna().all()
+    (unmasked,) = body(iter([(vecs, keys, pd.Series([True] * len(vecs)))]))
+    assert np.array_equal(unmasked[mask].to_numpy(), out[mask].to_numpy(),
+                          equal_nan=True)

@@ -173,3 +173,36 @@ def test_eval_probs_equals_eval_prob_per_key(monkeypatch, conf, budget):
     want = [oracle.eval_prob(v, conf, k) for v, k in zip(vecs, keys)]
     assert got.tolist() == want
     assert oracle.eval_probs([], conf, []).tolist() == []
+
+
+@pytest.mark.parametrize("delay", [False, True], ids=["no-delay", "delay"])
+def test_eval_probs_runs_mc_only_for_ungated_keys(monkeypatch, delay):
+    """``eval_probs`` runs the closed-form tests first and hands
+    ``mc_probs`` only the keys no Eval gate zeroes: magnitude present and
+    below sensitivity, or (under delay) fewer than window_size points.
+    The probs stay those of ``eval_prob`` key by key."""
+    conf = AnomalyzerConf(active_size=2, perm_count=40, delay=delay)
+    ref = [10.0] * conf.reference_size
+    vecs = {
+        "below": ref + [10.5, 10.5],   # magnitude 0.05 < 0.1: gated
+        "at": ref + [11.0, 11.0],      # magnitude 0.1: not below
+        "above": ref + [15.0, 15.0],
+        "nan": ref[:-1] + [np.nan, 15.0, 15.0],  # NaN magnitude: no gate
+        "short": [10.0, 10.0, 30.0, 31.0, 29.0],  # delay-gated only
+        "flat": [0.0] * conf.window_size,  # magnitude 0: gated
+    }
+    keys = list(vecs)
+    seen = []
+    real = oracle.mc_probs
+
+    def spy(conf_, tests, vs, ks):
+        seen.extend(ks)
+        return real(conf_, tests, vs, ks)
+
+    monkeypatch.setattr(oracle, "mc_probs", spy)
+    got = oracle.eval_probs([vecs[k] for k in keys], conf, keys)
+    monkeypatch.setattr(oracle, "mc_probs", real)
+    want = [oracle.eval_prob(np.asarray(vecs[k]), conf, k) for k in keys]
+    assert np.array_equal(got, want, equal_nan=True)
+    assert seen == ["at", "above", "nan"] + ([] if delay else ["short"])
+    assert oracle.magnitude_test(np.asarray(vecs["at"]), conf) == conf.sensitivity

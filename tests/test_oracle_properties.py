@@ -311,3 +311,36 @@ def test_perm_matrices_batch_equals_single():
         for i, k in enumerate(keys):
             single = oracle.perm_matrix(42, k, t, 30, 11)
             assert (batch[t][i] == single).all(), (t, k)
+
+
+def _ks_block_per_replicate_grid(V, conf, perms):
+    """ks_block's general path: each replicate's grid from the min and
+    max of its own permuted window."""
+    n = V.shape[-1]
+    n1, n2 = oracle.mc_window("ks", n, conf)
+    obs = oracle._ks_observed(V, n1, n2)
+    win = np.take_along_axis(V[:, None, :], perms[:, :, n - n1 - n2:], axis=2)
+    ks = oracle._ks_rows(win[..., :n1], win[..., n1:], win.min(axis=-1),
+                         win.max(axis=-1))
+    return (ks < obs[:, None]).sum(axis=1) / conf.perm_count
+
+
+def test_ks_block_one_grid_per_key_equals_per_replicate_grid():
+    """When the window spans the whole vector (n1 + n2 == n, every detect
+    and detect_stream window), ks_block counts on the key's own min/max
+    grid; the probs equal the per-replicate-grid path exactly, with tied
+    values, NaN, signed zeros and a constant key."""
+    rng = np.random.default_rng(3)
+    for act in (1, 2, 3):
+        conf = AnomalyzerConf(active_size=act, methods=("ks",), perm_count=60)
+        n = conf.window_size
+        for decimals in (0, 1, 8):
+            V = np.round(rng.normal(0, 2, (9, n)), decimals)
+            V[1, rng.integers(0, n)] = np.nan
+            V[2] = 5.0
+            V[3, :2] = (0.0, -0.0)
+            keys = [f"g{act}_{decimals}_{i}" for i in range(len(V))]
+            perms = oracle.perm_block(conf, keys, ("ks",), n)["ks"]
+            got = oracle.ks_block(V, conf, perms)
+            want = _ks_block_per_replicate_grid(V, conf, perms)
+            assert np.array_equal(got, want, equal_nan=True), (act, decimals)
