@@ -115,6 +115,16 @@ def histogram_profile(
             .withColumn("n_bins", F.lit(n_bins)))
 
 
+def _require_n_bins(profile: DataFrame, caller: str) -> None:
+    """A histogram profile carries its build-time bin count: empty
+    trailing buckets are invisible in the rows, so the count cannot be
+    recomputed from them."""
+    if "n_bins" not in profile.columns:
+        raise ValueError(
+            f"{caller}: profile has no n_bins column; build it with "
+            "histogram_profile, which records its bin count")
+
+
 def merge_profiles(profiles: list[DataFrame]) -> DataFrame:
     """Fold per-shard ``histogram_profile`` frames into one profile —
     the incremental-profiling primitive: profile each daily/shard write
@@ -123,77 +133,43 @@ def merge_profiles(profiles: list[DataFrame]) -> DataFrame:
     Exactness is free because equi-width histogram counts are
     associative-commutative sums.
 
-    All inputs must share binning — same (lo, hi) per column, i.e. they
-    were profiled with the same explicit ``bounds`` (the only sane way
-    to produce mergeable shards; derived bounds differ per shard and
-    are REJECTED here rather than silently merged into nonsense).
-    Operates purely on the profile frames: one union + one tiny
-    aggregate, kilobytes at any corpus scale."""
+    All inputs must share binning — same (lo, hi, n_bins) per column,
+    i.e. they were profiled with the same explicit ``bounds`` and
+    ``n_bins`` (the only sane way to produce mergeable shards; derived
+    bounds differ per shard and are REJECTED here rather than silently
+    merged into nonsense). Operates purely on the profile frames: one
+    union + one tiny aggregate, kilobytes at any corpus scale."""
     if not profiles:
         raise ValueError("merge_profiles needs at least one profile")
-    # schema migration: a legacy shard (pre-n_bins persistence) may be
-    # folded with a current one — align by giving legacy frames a NULL
-    # n_bins instead of letting unionByName throw an unexplained
-    # AnalysisException; the consistency check then compares only the
-    # KNOWN bin counts (an unknown legacy count is the caller's claim,
-    # exactly as it was before the column existed)
-    has_nb = any("n_bins" in p.columns for p in profiles)
-    aligned = []
     for p in profiles:
-        if has_nb and "n_bins" not in p.columns:
-            p = p.withColumn("n_bins", F.lit(None).cast("int"))
-        aligned.append(p)
-    u = aligned[0]
-    for p in aligned[1:]:
+        _require_n_bins(p, "merge_profiles")
+    u = profiles[0]
+    for p in profiles[1:]:
         u = u.unionByName(p)
-    def _ambiguous(frame):
-        return [r["column"] for r in
-                frame.distinct()
-                .groupBy("column").agg(F.count(F.lit(1)).alias("nb"))
-                .where(F.col("nb") > 1).collect()]
-
-    # bounds must agree across ALL shards; bin counts only where KNOWN
-    # (a legacy shard's count is the caller's claim, as pre-column)
-    bad = set(_ambiguous(u.select("column", "lo", "hi")))
-    if has_nb:
-        bad |= set(_ambiguous(
-            u.where(F.col("n_bins").isNotNull())
-            .select("column", "n_bins")))
-    bad = sorted(bad)
+    bad = sorted(r["column"] for r in
+                 u.select("column", "lo", "hi", "n_bins").distinct()
+                 .groupBy("column").agg(F.count(F.lit(1)).alias("nb"))
+                 .where(F.col("nb") > 1).collect())
     if bad:
         raise ValueError(
-            f"inconsistent bounds across shards for columns {sorted(bad)}; "
-            "profile shards with the same explicit bounds= (and n_bins=) "
-            "to make them mergeable")
-    aggs = [F.sum("cnt").alias("cnt"),
-            F.first("lo").alias("lo"), F.first("hi").alias("hi")]
-    if has_nb:
-        aggs.append(F.first("n_bins", ignorenulls=True).alias("n_bins"))
-    out = u.groupBy("column", "bucket").agg(*aggs)
-    if has_nb:
-        # Backfill per COLUMN, not per bucket: first(ignorenulls) runs
-        # inside each (column, bucket) group, so a bucket present ONLY
-        # in legacy pre-n_bins shards kept a NULL count even when its
-        # sibling buckets knew it — profile_quantiles then computed a
-        # NULL width for exactly that bucket and its NULL-skipping
-        # clamp silently returned the bucket's lo (ADVICE r14). The
-        # per-column consistency check above already guarantees at most
-        # one non-NULL value per column, so the window max IS it.
-        out = out.withColumn(
-            "n_bins", F.max("n_bins").over(Window.partitionBy("column")))
-    return out
+            f"inconsistent bounds or n_bins across shards for columns "
+            f"{bad}; profile shards with the same explicit bounds= and "
+            "n_bins= to make them mergeable")
+    return u.groupBy("column", "bucket").agg(
+        F.sum("cnt").alias("cnt"),
+        F.first("lo").alias("lo"), F.first("hi").alias("hi"),
+        F.first("n_bins").alias("n_bins"))
 
 
 def profile_quantiles(
     profile: DataFrame,
     quantiles: list[float],
-    *,
-    n_bins: int | None = None,
 ) -> DataFrame:
     """Approximate quantiles FROM a ``histogram_profile`` frame —
     (column, q, value), linearly interpolated inside the containing
     bucket. Error is bounded by one bucket width; precision is a
-    build-time choice (``n_bins``), not a query-time rescan.
+    build-time choice (``n_bins``), not a query-time rescan: the bucket
+    width comes from the profile's own ``n_bins`` column.
 
     This closes the monitoring loop ``merge_profiles`` opens: per-shard
     profiles merge exactly, so p50/p95/p99 of a month of data come from
@@ -213,45 +189,15 @@ def profile_quantiles(
     bad = [q for q in quantiles if not 0.0 <= q <= 1.0]
     if bad:
         raise ValueError(f"quantiles must be in [0, 1]: {bad}")
+    _require_n_bins(profile, "profile_quantiles")
     p = profile.where(F.col("bucket") != NULL_BUCKET)
-    # the frame's own build-time bin count is authoritative when it
-    # carries one (histogram_profile persists it); n_bins= is the
-    # fallback for hand-built legacy frames (default 10). Passing an
-    # explicit n_bins that CONFLICTS with the persisted count raises
-    # (the normalize_scores contract) — the argument would otherwise be
-    # silently dead and code that "worked" by passing a wrong count
-    # would keep appearing to work for a different reason. The check
-    # collects the tiny distinct set of the kilobyte profile frame.
-    if "n_bins" in profile.columns:
-        if n_bins is not None:
-            # NULL-tolerant: hand-assembled legacy+current frames may
-            # carry NULL n_bins rows; int(None) raised a raw TypeError
-            # here before (ADVICE r14). NULLs are not a conflict — the
-            # known values are.
-            built = sorted({int(r["n_bins"]) for r in
-                            profile.select("n_bins").distinct().collect()
-                            if r["n_bins"] is not None})
-            if built and built != [int(n_bins)]:
-                raise ValueError(
-                    f"profile was built with n_bins={built} but "
-                    f"n_bins={n_bins} was passed; drop the argument or "
-                    "pass the build value")
-        # per-column max backfills buckets whose n_bins is NULL (legacy
-        # shards merged by hand, bypassing merge_profiles' backfill);
-        # a column with NO known count falls back to the argument /
-        # default instead of a NULL width that poisons interpolation
-        nb_expr = F.coalesce(
-            F.max("n_bins").over(Window.partitionBy("column"))
-            .cast("double"),
-            F.lit(float(n_bins if n_bins is not None else 10)))
-    else:
-        nb_expr = F.lit(float(n_bins if n_bins is not None else 10))
     w = (Window.partitionBy("column").orderBy("bucket")
          .rowsBetween(Window.unboundedPreceding, 0))
     wt = Window.partitionBy("column")
     cum = (p.withColumn("cum", F.sum("cnt").over(w))
            .withColumn("total", F.sum("cnt").over(wt))
-           .withColumn("width", (F.col("hi") - F.col("lo")) / nb_expr))
+           .withColumn("width", (F.col("hi") - F.col("lo"))
+                       / F.col("n_bins").cast("double")))
     outs = []
     for q in quantiles:
         target = F.col("total") * F.lit(float(q))
@@ -344,37 +290,32 @@ def psi_report(
     old_profile: DataFrame,
     new_profile: DataFrame,
     *,
-    n_bins: int = 10,
     alpha: float = 0.5,
     n_buckets: int | None = None,
 ) -> DataFrame:
-    """Compare two ``histogram_profile`` frames (they must share bounds —
-    profile the new snapshot with the old profile's bounds): returns
-    (column, psi, old_rows, new_rows), psi rounded to 6 decimals.
+    """Compare two ``histogram_profile`` frames (they must share bounds
+    and ``n_bins`` — profile the new snapshot with the old profile's
+    bounds): returns (column, psi, old_rows, new_rows), psi rounded to
+    6 decimals. The Laplace denominator is each column's own
+    ``n_bins`` + 1 (the NULL bucket); a column whose two profiles carry
+    different counts fails the action with a runtime error naming it.
 
     Works for ``category_profile`` frames too (string buckets) — pass
     ``n_buckets`` = the fixed bucket universe size (vocab + OTHER +
-    NULL) so the Laplace denominator stays deterministic; numeric
-    callers leave it None (n_bins + the NULL bucket).
+    NULL) so the Laplace denominator stays deterministic.
 
     Operates purely on the tiny profiles: a full-outer join on
     (column, bucket) then one groupBy — kilobytes at any corpus scale."""
-    # Laplace denominator: explicit n_buckets wins (categorical path);
-    # else the profiles' own persisted n_bins when EITHER side carries
-    # it (a profile built with 20 bins compared under the default-10
-    # denominator would silently mis-smooth — and the primary
-    # production shape, old-persisted-baseline vs fresh-build, has the
-    # column on one side only during migration); else the n_bins param
-    has_o = n_buckets is None and "n_bins" in old_profile.columns
-    has_n = n_buckets is None and "n_bins" in new_profile.columns
+    numeric = n_buckets is None
+    if numeric:
+        _require_n_bins(old_profile, "psi_report")
+        _require_n_bins(new_profile, "psi_report")
     o = old_profile.select(
         "column", "bucket", F.col("cnt").alias("old_cnt"),
-        *([F.col("n_bins").alias("_nb_o")] if has_o else []))
+        *([F.col("n_bins").alias("_nb_o")] if numeric else []))
     n = new_profile.select(
         "column", "bucket", F.col("cnt").alias("new_cnt"),
-        *([F.col("n_bins").alias("_nb_n")] if has_n else []))
-    nb_cols = ([F.col("_nb_o")] if has_o else []) \
-        + ([F.col("_nb_n")] if has_n else [])
+        *([F.col("n_bins").alias("_nb_n")] if numeric else []))
     joined = (
         o.join(n, ["column", "bucket"], "full_outer")
         .fillna(0, subset=["old_cnt", "new_cnt"])
@@ -388,41 +329,25 @@ def psi_report(
     j = (joined
          .withColumn("old_rows", F.sum("old_cnt").over(w))
          .withColumn("new_rows", F.sum("new_cnt").over(w)))
-    if nb_cols:
-        # constant per column: a full-outer row missing the carrying
-        # side has a NULL n_bins — take the column-partition max so
-        # every bucket smooths under the same persisted denominator,
-        # falling back to the param only when NO side knows the count
-        B_core = (F.max(F.coalesce(*nb_cols).cast("double")).over(w)
-                  + F.lit(1.0))
-        if len(nb_cols) == 2:
-            # both profiles persist a count: if they DIFFER for a
-            # column the buckets are incomparable — raise instead of
-            # silently smoothing over the max (ADVICE r14; mirrors
-            # merge_profiles' inconsistent-shards contract). Checked
-            # in-plan via raise_error so the profile subtrees are not
-            # re-evaluated by a driver-side pre-collect (the
-            # single-subtree plan shape is pinned in tests); surfaces
-            # at action time as a Spark runtime error naming the column.
-            o_nb = F.max(F.col("_nb_o")).over(w).cast("double")
-            n_nb = F.max(F.col("_nb_n")).over(w).cast("double")
-            conflict = (o_nb.isNotNull() & n_nb.isNotNull()
-                        & (o_nb != n_nb))
-            B_core = F.when(
-                conflict,
-                F.raise_error(F.concat(
-                    F.lit("psi_report: profiles persist conflicting "
-                          "n_bins for column '"),
-                    F.col("column"),
-                    F.lit("' (old="), o_nb.cast("int").cast("string"),
-                    F.lit(", new="), n_nb.cast("int").cast("string"),
-                    F.lit("); rebuild one side with matching n_bins= "
-                          "or pass n_buckets= explicitly"))
-                ).cast("double")
-            ).otherwise(B_core)
-        B = F.coalesce(B_core, F.lit(float(n_bins + 1)))
+    if numeric:
+        # a full-outer row missing one side has a NULL count there, so
+        # each side's count is its column-partition max; a column in
+        # only ONE profile smooths with that side's count (coalesce).
+        # Differing counts make the buckets incomparable: checked
+        # in-plan via raise_error so the profile subtrees are not
+        # re-evaluated by a driver-side pre-collect (the single-subtree
+        # plan shape is pinned in tests).
+        o_nb = F.max("_nb_o").over(w)
+        n_nb = F.max("_nb_n").over(w)
+        B = F.when(o_nb != n_nb, F.raise_error(F.concat(
+            F.lit("psi_report: profiles persist conflicting n_bins for "
+                  "column '"), F.col("column"),
+            F.lit("' (old="), o_nb.cast("string"),
+            F.lit(", new="), n_nb.cast("string"),
+            F.lit("); rebuild one side with matching n_bins=")))
+        ).otherwise(F.coalesce(o_nb, n_nb) + 1).cast("double")
     else:
-        B = F.lit(float(n_buckets if n_buckets is not None else n_bins + 1))
+        B = F.lit(float(n_buckets))
     p = (F.col("old_cnt") + F.lit(alpha)) / \
         (F.col("old_rows") + F.lit(alpha) * B)
     q = (F.col("new_cnt") + F.lit(alpha)) / \
@@ -555,7 +480,7 @@ def psi_drift(
                 bounds[c] = (0.0, 0.0)
     op = histogram_profile(old, cols, n_bins=n_bins, bounds=bounds)
     np_ = histogram_profile(new, cols, n_bins=n_bins, bounds=bounds)
-    return psi_report(op, np_, n_bins=n_bins, alpha=alpha)
+    return psi_report(op, np_, alpha=alpha)
 
 
 def ks_from_profiles(

@@ -166,16 +166,16 @@ def normalize_scores(
       persisted CORPUS profile, built once per corpus version — and
       mergeable across shards via ``drift.merge_profiles``) to
       normalize an increment against the whole corpus without
-      rescanning it — the profile's persisted ``n_bins`` column is
-      read back as the build-time bin count (empty trailing buckets
-      are invisible in the rows, so it cannot be inferred; passing a
-      conflicting ``n_bins=`` raises). Only hand-built frames lacking
-      the column still need ``n_bins=``. Otherwise one profile pass over
-      ``df`` runs here (``bounds=`` pins the bin range, the drift
-      comparability contract). Scores at/below the profile's lo map to 0, at/above
-      hi to 1, NULLs stay NULL. Resolution is 1/n_bins of the value
-      range per bin boundary — ranking WITHIN a bin is linear in value,
-      not in mass (the documented approximation vs exact percent_rank).
+      rescanning it — the bin count is the profile's own ``n_bins``
+      column (empty trailing buckets are invisible in the rows, so it
+      cannot be inferred); a frame without it, or a conflicting
+      ``n_bins=``, raises. Otherwise one profile pass over ``df`` runs
+      here with ``n_bins`` bins (default 100; ``bounds=`` pins the bin
+      range, the drift comparability contract). Scores at/below the
+      profile's lo map to 0, at/above hi to 1, NULLs stay NULL.
+      Resolution is 1/n_bins of the value range per bin boundary —
+      ranking WITHIN a bin is linear in value, not in mass (the
+      documented approximation vs exact percent_rank).
     """
     from pyspark.sql.window import Window
 
@@ -195,11 +195,11 @@ def normalize_scores(
                  .withColumn(out_col, F.lit(None).cast("double")))
         return nn.unionByName(nulls)
     if profile is None:
-        if n_bins is None:
-            n_bins = 100
         profile = drift.histogram_profile(
-            df, [score_col], n_bins=n_bins,
+            df, [score_col], n_bins=100 if n_bins is None else n_bins,
             bounds={score_col: bounds} if bounds else None)
+    else:
+        drift._require_n_bins(profile, "normalize_scores")
     prows = profile.where(
         (F.col("column") == score_col) & (F.col("bucket") >= 0)).collect()
     rows = sorted(
@@ -209,41 +209,23 @@ def normalize_scores(
         raise ValueError(
             f"profile holds no buckets for column {score_col!r}")
     lo, hi = rows[0][2], rows[0][3]
-    # The true bin count CANNOT be inferred from occupied buckets: a
-    # profile built with bounds= (or a corpus profile whose upper range
-    # holds no data) leaves trailing buckets empty, and max(bucket)+1
-    # would recompute width too wide — every score then maps through
-    # misaligned buckets, silently. histogram_profile persists the
-    # build-time count in the frame; it is read back here (and a
-    # conflicting explicit n_bins= raises — BOTH directions, unlike the
-    # top >= nb guard, which cannot see a profile built with FEWER bins
-    # than the passed count). n_bins= remains the contract only for
-    # hand-built legacy frames lacking the column.
-    if "n_bins" in profile.columns:
-        # NULL-tolerant: legacy shards merged by hand may leave NULL
-        # n_bins on some buckets (int(None) was a raw TypeError here,
-        # ADVICE r14); NULLs are ignorance, not a conflict
-        built = {int(r["n_bins"]) for r in prows
-                 if r["n_bins"] is not None}
-        if len(built) > 1:
-            raise ValueError(
-                f"profile carries inconsistent n_bins values {sorted(built)} "
-                f"for column {score_col!r}")
-        if built:
-            nb = built.pop()
-            if n_bins is not None and n_bins != nb:
-                raise ValueError(
-                    f"profile was built with n_bins={nb} but n_bins={n_bins} "
-                    "was passed; drop the argument or pass the build value")
-        else:
-            nb = n_bins if n_bins is not None else 100
-    else:
-        nb = n_bins if n_bins is not None else 100
+    # the bin count is the profile's own: empty trailing buckets are
+    # invisible in the rows, so max(bucket)+1 would recompute the width
+    # too wide and map every score through misaligned buckets
+    built = {int(r["n_bins"]) for r in prows}
+    if len(built) > 1:
+        raise ValueError(
+            f"profile carries inconsistent n_bins values {sorted(built)} "
+            f"for column {score_col!r}")
+    nb = built.pop()
+    if n_bins is not None and n_bins != nb:
+        raise ValueError(
+            f"profile was built with n_bins={nb} but n_bins={n_bins} "
+            "was passed; drop the argument or pass the build value")
     top = max(r[0] for r in rows)
     if top >= nb:
         raise ValueError(
-            f"profile holds bucket {top} but n_bins={nb}; pass the "
-            "n_bins the profile was built with")
+            f"profile holds bucket {top} but records n_bins={nb}")
     cnts = [0] * nb
     for b, c, _, _ in rows:
         cnts[b] = c

@@ -5,10 +5,11 @@ windowed aggregation can't express: PSI needs a join to the baseline and
 per-column normalization).
 
 The monitoring contract: the BASELINE (a reference snapshot's
-``histogram_profile`` / ``category_profile`` plus its bin bounds /
-vocabularies) is FIXED up front — that is what makes per-batch PSI
-comparable across batches and immune to batch-boundary placement. Each
-micro-batch is profiled on the baseline's bins and compared; the monitor
+``histogram_profile`` / ``category_profile`` plus its vocabularies) is
+FIXED up front — that is what makes per-batch PSI comparable across
+batches and immune to batch-boundary placement. Each micro-batch is
+profiled on the baseline's own bins (its ``lo``/``hi``/``n_bins`` per
+column) and compared; the monitor
 emits ``(batch_id, column, psi, old_rows, new_rows)`` where old = the
 baseline, new = the batch. Emission is tiny by construction
 (columns × batches rows), so the in-memory result frame is bounded no
@@ -25,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.drift import (
-    category_profile, histogram_profile, psi_report)
+    _require_n_bins, category_profile, histogram_profile, psi_report)
 from ..session import materialize as _materialize
 from ._drain import batch_sink, drain
 
@@ -37,11 +38,9 @@ def run_drift_stream_on_dir(
     input_dir: str,
     cols: list[str],
     *,
-    bounds: dict,
     baseline: DataFrame | None = None,
     categories: dict | None = None,
     cat_baseline: DataFrame | None = None,
-    n_bins: int = 10,
     alpha: float = 0.5,
     schema=None,
     max_files_per_trigger: int = 1,
@@ -52,12 +51,14 @@ def run_drift_stream_on_dir(
     returns the batch report frame ``(batch_id, column, psi, old_rows,
     new_rows)``.
 
-    * ``bounds`` (required) — column -> (lo, hi) bin bounds for the
-      numeric ``cols``; MUST be the baseline snapshot's (that is the
-      comparability contract, same as offline ``psi_drift``);
-    * ``baseline`` — the reference ``histogram_profile`` computed on
-      those bounds; None profiles nothing numeric (cols may be empty
-      when only categorical columns are monitored);
+    * ``baseline`` — the reference ``histogram_profile``; each batch is
+      binned with the baseline's own (lo, hi, n_bins) per column, read
+      in one collect of that tiny frame, so the bins line up by
+      construction (the comparability contract of offline
+      ``psi_drift``). Every numeric ``cols`` entry must have rows in
+      it, and they must share one ``n_bins``. None profiles nothing
+      numeric (cols may be empty when only categorical columns are
+      monitored);
     * ``categories`` / ``cat_baseline`` — the categorical sibling:
       vocabulary dict + reference ``category_profile``.
 
@@ -75,7 +76,21 @@ def run_drift_stream_on_dir(
     # materialize the tiny baselines once — each batch joins against
     # them, free of their upstream lineage, for the monitor's lifetime
     if baseline is not None:
+        _require_n_bins(baseline, "run_drift_stream_on_dir")
         baseline = _materialize(baseline, reason="drift_stream.baseline")
+        binning = {r["column"]: r for r in baseline.select(
+            "column", "lo", "hi", "n_bins").distinct().collect()}
+        missing = [c for c in cols if c not in binning]
+        if missing:
+            raise ValueError(
+                f"baseline profile has no rows for columns {missing}")
+        bounds = {c: (binning[c]["lo"], binning[c]["hi"]) for c in cols}
+        counts = sorted({binning[c]["n_bins"] for c in cols})
+        if len(counts) > 1:
+            raise ValueError(
+                f"monitored columns carry different n_bins {counts} in "
+                "the baseline; monitor them in separate streams")
+        n_bins = counts[0]
     if cat_baseline is not None:
         cat_baseline = _materialize(cat_baseline,
                                     reason="drift_stream.cat_baseline")
@@ -87,8 +102,7 @@ def run_drift_stream_on_dir(
         if baseline is not None:
             prof = histogram_profile(batch_df, cols, n_bins=n_bins,
                                      bounds=bounds)
-            parts.append(psi_report(baseline, prof, n_bins=n_bins,
-                                    alpha=alpha))
+            parts.append(psi_report(baseline, prof, alpha=alpha))
         if cat_baseline is not None:
             cat_cols = sorted(categories)
             top_k = max(len(v) for v in categories.values())

@@ -235,53 +235,86 @@ def test_merge_profiles_equals_whole_corpus_profile(spark, sf_dir):
     assert all(r["psi"] == 0.0 for r in rep_m.collect())
 
 
-@pytest.mark.slow
 def test_r14_review_nbins_migration_regressions(spark):
-    """r14 review: (a) merging a current shard with a LEGACY shard
-    lacking the persisted n_bins column must work (the migration case
-    the docstring claims), not crash in unionByName; (b)
-    profile_quantiles raises on a conflicting explicit n_bins= like
-    normalize_scores does; (c) psi_report reads the persisted count
-    when only ONE side carries it."""
-    from anomalyzer_spark.functions.drift import (
-        histogram_profile, merge_profiles, profile_quantiles, psi_report)
+    """Shards profiled with different n_bins are rejected by
+    merge_profiles like shards with different bounds: their buckets do
+    not line up."""
+    from anomalyzer_spark.functions.drift import merge_profiles
     df = spark.range(0, 200).selectExpr("id * 1.0 AS x")
     new = histogram_profile(df, ["x"], n_bins=20,
                             bounds={"x": (0.0, 199.0)})
-    legacy = new.drop("n_bins")
-    merged = merge_profiles([new, legacy])
-    row = merged.collect()[0]
-    assert row["n_bins"] == 20  # known count carried through the fold
-    assert merged.where(F.col("bucket") == 0).collect()[0]["cnt"] == 20
-    # conflicting bin counts ACROSS known shards still rejected
     other = histogram_profile(df, ["x"], n_bins=10,
                               bounds={"x": (0.0, 199.0)})
     with pytest.raises(ValueError, match="inconsistent"):
         merge_profiles([new, other])
-    # (b) dead-argument guard
-    with pytest.raises(ValueError, match="n_bins"):
-        profile_quantiles(new, [0.5], n_bins=37)
-    q = profile_quantiles(new, [0.5], n_bins=20).collect()  # agreeing ok
-    assert q[0]["value"] is not None
-    # (c) one-sided persisted count: B must come from the carrying side
-    # (identical data, so any mis-smoothing would still give psi 0 —
-    # compare against an asymmetric shift instead)
-    shifted = df.withColumn("x", F.col("x") + 50.0)
-    pn = histogram_profile(shifted, ["x"], n_bins=20,
-                           bounds={"x": (0.0, 199.0)})
-    both = psi_report(new, pn).collect()[0]["psi"]
-    one_sided = psi_report(legacy, pn).collect()[0]["psi"]
-    assert one_sided == both  # read-back works from either side alone
+
+
+def test_profile_consumers_require_n_bins(spark):
+    """Every histogram-profile consumer reads the bin count from the
+    frame, so a frame without the n_bins column is rejected up front,
+    naming the function that builds a valid one."""
+    from anomalyzer_spark.functions.drift import (merge_profiles,
+                                                  profile_quantiles)
+    from anomalyzer_spark.functions.quality import normalize_scores
+    df = spark.range(0, 50).selectExpr("id AS doc_id", "id * 1.0 AS x")
+    cur = histogram_profile(df, ["x"], n_bins=20,
+                            bounds={"x": (0.0, 49.0)})
+    bare = cur.drop("n_bins")
+    for call in (lambda: merge_profiles([cur, bare]),
+                 lambda: profile_quantiles(bare, [0.5]),
+                 lambda: psi_report(bare, cur),
+                 lambda: psi_report(cur, bare),
+                 lambda: normalize_scores(df, "x", profile=bare)):
+        with pytest.raises(ValueError, match="histogram_profile"):
+            call()
+
+
+def test_psi_report_one_sided_column_smooths_with_its_count(spark):
+    """A column profiled on one side only, and buckets occupied on one
+    side only, smooth with the count that side persists: B = n_bins + 1
+    = 21 here, checked against PSI computed by hand from the bucket
+    counts."""
+    import math
+    bounds = {"x": (0.0, 99.0), "y": (0.0, 99.0), "z": (0.0, 99.0)}
+    old = spark.range(0, 100).selectExpr("id * 1.0 AS x", "id * 1.0 AS y")
+    new = spark.range(0, 40).selectExpr("id * 1.0 AS x", "id * 2.0 AS z")
+    po = histogram_profile(old, ["x", "y"], n_bins=20, bounds=bounds)
+    pn = histogram_profile(new, ["x", "z"], n_bins=20, bounds=bounds)
+    got = {r["column"]: r for r in psi_report(po, pn).collect()}
+
+    def counts(vals):
+        out = {}
+        for v in vals:
+            b = min(19, math.floor(v / (99.0 / 20)))
+            out[b] = out.get(b, 0) + 1
+        return out
+
+    def psi(oc, nc, alpha=0.5, B=21):
+        ot, nt = sum(oc.values()), sum(nc.values())
+        total = 0.0
+        for b in set(oc) | set(nc):
+            p = (oc.get(b, 0) + alpha) / (ot + alpha * B)
+            q = (nc.get(b, 0) + alpha) / (nt + alpha * B)
+            total += (p - q) * math.log(p / q)
+        return total
+
+    xs_old, xs_new = counts(range(100)), counts(range(40))
+    zs = counts(2.0 * i for i in range(40))
+    assert set(got) == {"x", "y", "z"}
+    assert got["x"]["psi"] == pytest.approx(psi(xs_old, xs_new), abs=1e-6)
+    assert got["y"]["psi"] == pytest.approx(psi(xs_old, {}), abs=1e-6)
+    assert got["z"]["psi"] == pytest.approx(psi({}, zs), abs=1e-6)
+    assert (got["y"]["new_rows"], got["z"]["old_rows"]) == (0, 0)
 
 
 def test_merge_profiles_rejects_inconsistent_bounds(spark):
     from anomalyzer_spark.functions.drift import merge_profiles
-    a = spark.createDataFrame([("x", 0, 5, 0.0, 1.0)],
+    a = spark.createDataFrame([("x", 0, 5, 0.0, 1.0, 10)],
                               "column string, bucket int, cnt long, "
-                              "lo double, hi double")
-    b = spark.createDataFrame([("x", 0, 5, 0.0, 2.0)],
+                              "lo double, hi double, n_bins int")
+    b = spark.createDataFrame([("x", 0, 5, 0.0, 2.0, 10)],
                               "column string, bucket int, cnt long, "
-                              "lo double, hi double")
+                              "lo double, hi double, n_bins int")
     with pytest.raises(ValueError, match="inconsistent bounds"):
         merge_profiles([a, b])
     with pytest.raises(ValueError, match="at least one"):
@@ -302,7 +335,6 @@ def test_merge_category_profiles(spark):
         == sorted(map(tuple, whole.collect()))
 
 
-@pytest.mark.slow
 def test_profile_quantiles_within_bucket_width(spark, sf_dir):
     """Quantiles interpolated from a profile land within one bucket
     width of the exact percentile, and merged-shard profiles give the
@@ -319,7 +351,7 @@ def test_profile_quantiles_within_bucket_width(spark, sf_dir):
                              bounds={col: (lo, hi)})
     qs = [0.1, 0.5, 0.95]
     got = {r["q"]: r["value"] for r in profile_quantiles(
-        prof, qs, n_bins=n_bins).collect()}
+        prof, qs).collect()}
     exact = li.approxQuantile(col, qs, 0.0)
     for q, ex in zip(qs, exact):
         assert abs(got[q] - ex) <= width, (q, got[q], ex, width)
@@ -328,15 +360,16 @@ def test_profile_quantiles_within_bucket_width(spark, sf_dir):
     merged = merge_profiles([histogram_profile(
         s, [col], n_bins=n_bins, bounds={col: (lo, hi)}) for s in shards])
     got_m = {r["q"]: r["value"] for r in profile_quantiles(
-        merged, qs, n_bins=n_bins).collect()}
+        merged, qs).collect()}
     assert got_m == got
 
 
 def test_profile_quantiles_validation_and_edges(spark):
     from anomalyzer_spark.functions.drift import profile_quantiles
     prof = spark.createDataFrame(
-        [("x", 0, 10, 0.0, 10.0), ("x", -1, 5, 0.0, 10.0)],
-        "column string, bucket int, cnt long, lo double, hi double")
+        [("x", 0, 10, 0.0, 10.0, 10), ("x", -1, 5, 0.0, 10.0, 10)],
+        "column string, bucket int, cnt long, lo double, hi double, "
+        "n_bins int")
     import pytest as _pt
     with _pt.raises(ValueError, match="at least one"):
         profile_quantiles(prof, [])
@@ -349,45 +382,19 @@ def test_profile_quantiles_validation_and_edges(spark):
     assert 0.0 <= got[0.5] <= 1.0 and got[1.0] <= 10.0
 
 
-@pytest.mark.slow
 def test_r15_advice_nbins_null_and_conflict(spark):
-    """ADVICE r15: (a) a bucket present ONLY in legacy pre-n_bins
-    shards gets its column's known n_bins backfilled by merge_profiles
-    (previously NULL -> NULL width -> profile_quantiles silently
-    returned the bucket's lo); (b) passing an explicit agreeing n_bins=
-    over such a mixed frame works instead of TypeError-ing on
-    int(None); (c) psi_report RAISES on conflicting persisted n_bins
-    instead of smoothing over the window max."""
-    from anomalyzer_spark.functions.drift import (
-        histogram_profile, merge_profiles, profile_quantiles, psi_report)
-    lo_half = spark.range(0, 100).selectExpr("id * 1.0 AS x")
-    hi_half = spark.range(100, 200).selectExpr("id * 1.0 AS x")
+    """psi_report RAISES on conflicting persisted n_bins instead of
+    smoothing over either count (checked in-plan, at action time);
+    agreeing counts give psi 0 on identical profiles; normalize_scores
+    raises on an n_bins= that conflicts with the profile's own."""
+    from anomalyzer_spark.functions.quality import normalize_scores
+    hi_half = spark.range(100, 200).selectExpr("id AS doc_id",
+                                               "id * 1.0 AS x")
     bounds = {"x": (0.0, 199.0)}
     cur = histogram_profile(hi_half, ["x"], n_bins=20, bounds=bounds)
-    legacy = histogram_profile(
-        lo_half, ["x"], n_bins=20, bounds=bounds).drop("n_bins")
-    merged = merge_profiles([cur, legacy])
-    # (a) every bucket knows the column's count, including legacy-only
-    assert all(r["n_bins"] == 20 for r in merged.collect())
-    q10 = profile_quantiles(merged, [0.1]).collect()[0]["value"]
-    assert abs(q10 - 19.9) < 199.0 / 20  # ~p10 of 0..199, one-bucket err
-    # (b) explicit agreeing n_bins= on a frame with NULL rows: no crash
-    mixed = cur.unionByName(
-        legacy.withColumn("n_bins", F.lit(None).cast("int")))
-    q2 = profile_quantiles(mixed, [0.1], n_bins=20).collect()[0]["value"]
-    assert abs(q2 - q10) < 1e-9
-    with pytest.raises(ValueError, match="n_bins"):
-        profile_quantiles(mixed, [0.1], n_bins=37)
-    # normalize_scores over the same mixed frame: NULL-tolerant read-back
-    from anomalyzer_spark.functions.quality import normalize_scores
-    both = lo_half.unionByName(hi_half).selectExpr(
-        "monotonically_increasing_id() AS doc_id", "x")
-    ns = normalize_scores(both, "x", profile=mixed)
-    vals = [r["x_norm"] for r in ns.collect()]
-    assert all(v is not None and 0.0 <= v <= 1.0 for v in vals)
-    # (c) conflicting PERSISTED counts across the two sides: raise
     cur10 = histogram_profile(hi_half, ["x"], n_bins=10, bounds=bounds)
     with pytest.raises(Exception, match="conflicting"):
         psi_report(cur, cur10).collect()
-    # agreeing persisted counts still work
     assert psi_report(cur, cur).collect()[0]["psi"] == 0.0
+    with pytest.raises(ValueError, match="n_bins"):
+        normalize_scores(hi_half, "x", profile=cur, n_bins=37)

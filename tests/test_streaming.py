@@ -1032,7 +1032,7 @@ def test_drift_stream_per_batch_equals_offline(spark, sf_dir, tmp_path):
             "overwrite" if i == 0 else "append").parquet(sdir)
 
     monitor = run_drift_stream_on_dir(
-        spark, sdir, ["o_totalprice"], bounds=bounds, baseline=baseline,
+        spark, sdir, ["o_totalprice"], baseline=baseline,
         query_name="drift_mon_test").collect()
     assert len(monitor) == 3  # 3 batches x 1 column
     assert sorted(r["batch_id"] for r in monitor) == [0, 1, 2]
@@ -1062,17 +1062,31 @@ def test_drift_stream_categorical_and_validation(spark, sf_dir, tmp_path):
     sdir = str(tmp_path / "drift_cat_in")
     orders.coalesce(1).write.parquet(sdir)
     mon = run_drift_stream_on_dir(
-        spark, sdir, [], bounds={}, categories=vocab,
+        spark, sdir, [], categories=vocab,
         cat_baseline=cat_base, query_name="drift_cat_test").collect()
     # whole table in one batch vs itself-as-baseline: psi exactly 0
     assert len(mon) == 1
     assert mon[0]["psi"] == 0.0 and mon[0]["column"] == "o_orderstatus"
 
     with pytest.raises(ValueError):
-        run_drift_stream_on_dir(spark, sdir, [], bounds={})
+        run_drift_stream_on_dir(spark, sdir, [])
     with pytest.raises(ValueError):
-        run_drift_stream_on_dir(spark, sdir, [], bounds={},
+        run_drift_stream_on_dir(spark, sdir, [],
                                 categories=vocab)  # no cat_baseline
+
+
+def test_drift_stream_rejects_column_missing_from_baseline(spark, tmp_path):
+    # the numeric bins come from the baseline profile, so a monitored
+    # column the baseline never profiled has no bins: rejected before
+    # the stream starts
+    from anomalyzer_spark.functions.drift import histogram_profile
+    from anomalyzer_spark.streaming import run_drift_stream_on_dir
+
+    df = spark.range(0, 20).selectExpr("id * 1.0 AS x", "id * 2.0 AS y")
+    baseline = histogram_profile(df, ["x"], bounds={"x": (0.0, 19.0)})
+    with pytest.raises(ValueError, match=r"baseline.*\['y'\]"):
+        run_drift_stream_on_dir(spark, str(tmp_path / "never_read"),
+                                ["x", "y"], baseline=baseline)
 
 
 def test_checks_stream_per_batch_equals_offline(spark, sf_dir, tmp_path):
